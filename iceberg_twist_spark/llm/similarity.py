@@ -866,7 +866,11 @@ def q_llm_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     them: it existed to amortize the HOF bucketing across the
     self-join's two sides, but its materialization job dominated at
     small SF (r11 verdict #6) and pinning the whole corpus is not a
-    100 TB plan; the kernel pass is cheap enough to run per side."""
+    100 TB plan. The bucketing kernel therefore runs once per join
+    side (two MapInArrow nodes, allowlisted in tools/explain_audit).
+    The numpy work is cheap; the second pass costs mostly the Python
+    worker's fixed start-up per Arrow task (PERF.md, "Per-task Python
+    cost"), which grows with the task count, not the rows."""
     emb = with_norm(
         spread(load_tables(spark, sf_dir)["embeddings"], "vec_id"), "embedding"
     ).select("vec_id", "embedding", "nrm")
@@ -931,9 +935,15 @@ def q_llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     SEMDEDUP_TAU to it; keepers are the per-near-twin canonical
     representatives. Comparisons never leave a cluster — the candidate
     join is on the cluster id (bounded Σ|cluster|², audited: no
-    all-pairs) and the centroid assignment is one broadcast pass."""
+    all-pairs) and the centroid assignment is one kernel pass: its
+    output feeds both join sides and the result, so it is lazily
+    checkpointed — without that each consumer re-runs the kernel, and
+    every Arrow task pays the Python worker's fixed start-up cost
+    (PERF.md, "Per-task Python cost")."""
     emb = with_norm(spread(load_tables(spark, sf_dir)["embeddings"], "vec_id"), "embedding")
-    clustered = ivf_assign(emb, emb.filter(F.col("vec_id") < IVF_K))
+    clustered = ivf_assign(emb, emb.filter(F.col("vec_id") < IVF_K)).localCheckpoint(
+        eager=False
+    )
     a = clustered.select(
         F.col("vec_id").alias("va"), F.col("embedding").alias("ea"),
         F.col("nrm").alias("na"), "cluster",
@@ -1013,22 +1023,29 @@ def q_llm_semdedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup with an UNCONDITIONAL candidate bound: clusters larger
     than SEMDEDUP_CAP split into ceil(|c|/CAP) sub-buckets
     (vec_id mod — deterministic, near-uniform on dense ids) and the
-    near-twin comparison joins on (cluster, sub_bucket), so candidate
-    mass is ≤ n·CAP even on a degenerate one-cluster corpus — closing
-    q_llm_semdedup's balanced-clusters assumption. The cluster-size
-    frame is ≤ K rows; at 100 TB (cluster, sub_bucket) is the
-    partition key the comparison job reads shard-by-shard."""
+    near-twin comparison runs per (cluster, sub_bucket) cell, so
+    candidate mass is ≤ n·CAP even on a degenerate one-cluster corpus
+    — closing q_llm_semdedup's balanced-clusters assumption. The
+    cluster-size frame is ≤ K rows; at 100 TB (cluster, sub_bucket) is
+    the partition key the comparison job reads shard-by-shard.
+
+    The centroid assignment runs once: its output feeds the size
+    aggregate and the sub-bucket join, so it is lazily checkpointed,
+    and each cell returns every one of its rows with ``is_kept`` — no
+    dropped-set distinct and no join back onto the assignment."""
     emb = with_norm(spread(load_tables(spark, sf_dir)["embeddings"], "vec_id"), "embedding")
-    clustered = ivf_assign(emb, emb.filter(F.col("vec_id") < IVF_K))
+    clustered = ivf_assign(emb, emb.filter(F.col("vec_id") < IVF_K)).localCheckpoint(
+        eager=False
+    )
     sizes = clustered.groupBy("cluster").agg(
         F.ceil(F.count("*") * F.lit(1.0) / SEMDEDUP_CAP).cast("long").alias("nsub")
     )
     subbed = clustered.join(sizes, "cluster").withColumn(
         "sub", F.pmod(F.col("vec_id"), F.col("nsub")).cast("long")
     )
-    # r12 (guide §8's "move heavy bytes once"): the dropped set is
-    # computed per (cluster, sub) CELL with groupBy + applyInPandas —
-    # each row's embedding crosses the shuffle and the Python boundary
+    # r12 (guide §8's "move heavy bytes once"): keep/drop is decided
+    # per (cluster, sub) CELL with groupBy + applyInPandas — each
+    # row's embedding crosses the shuffle and the Python boundary
     # exactly ONCE (≈|corpus| rows), and the |cell|² pair comparisons
     # happen in a numpy block per cell. Both the r11 JVM-HOF pair join
     # and an intermediate r12 pair kernel materialized ~|corpus|·CAP/2
@@ -1047,41 +1064,36 @@ def q_llm_semdedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    def cell_dropped(pdf: pd.DataFrame) -> pd.DataFrame:
+    def cell_rows(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"vec_id": pd.Series(dtype="int64")})
         order = np.argsort(pdf["vec_id"].to_numpy(), kind="stable")
         ids = pdf["vec_id"].to_numpy()[order]
-        mat = np.array(
-            [np.asarray(e, dtype=np.float64)
-             for e in pdf["embedding"].to_numpy()[order]]
-        )
-        nrm = pdf["nrm"].to_numpy()[order]
-        dot = np.zeros((n, n))
-        for k in range(mat.shape[1]):
-            dot += mat[:, k, None] * mat[None, :, k]
-        sims = dot / (nrm[:, None] * nrm[None, :])
-        sims = np.floor(sims * 10000.0 + 0.5) / 10000.0
-        hit = np.any(np.tril(sims >= SEMDEDUP_TAU, k=-1), axis=1)
-        return pd.DataFrame({"vec_id": ids[hit]})
+        hit = np.zeros(n, dtype=bool)
+        if n >= 2:
+            mat = np.array(
+                [np.asarray(e, dtype=np.float64)
+                 for e in pdf["embedding"].to_numpy()[order]]
+            )
+            nrm = pdf["nrm"].to_numpy()[order]
+            dot = np.zeros((n, n))
+            for k in range(mat.shape[1]):
+                dot += mat[:, k, None] * mat[None, :, k]
+            sims = dot / (nrm[:, None] * nrm[None, :])
+            sims = np.floor(sims * 10000.0 + 0.5) / 10000.0
+            hit = np.any(np.tril(sims >= SEMDEDUP_TAU, k=-1), axis=1)
+        return pd.DataFrame({
+            "vec_id": ids,
+            "cluster_id": pdf["cluster"].to_numpy(dtype=np.int64)[order],
+            "sub_bucket": pdf["sub"].to_numpy(dtype=np.int64)[order],
+            "is_kept": ~hit,
+        })
 
-    dropped = (
+    return (
         subbed.select("vec_id", "embedding", "nrm", "cluster", "sub")
         .groupBy("cluster", "sub")
-        .applyInPandas(cell_dropped, "vec_id bigint")
-        .distinct()
-    )
-    return (
-        subbed.select(
-            "vec_id",
-            F.col("cluster").cast("long").alias("cluster_id"),
-            F.col("sub").alias("sub_bucket"),
-        )
-        .join(dropped.withColumn("__d", F.lit(1)), "vec_id", "left")
-        .select(
-            "vec_id", "cluster_id", "sub_bucket",
-            F.col("__d").isNull().alias("is_kept"),
+        .applyInPandas(
+            cell_rows,
+            "vec_id bigint, cluster_id bigint, sub_bucket bigint, is_kept boolean",
         )
     )
 

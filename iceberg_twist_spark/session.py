@@ -6,8 +6,10 @@ ones that matter identically on a 1000-executor cluster:
 - AQE on (runtime shuffle-partition coalescing, skew-join splitting,
   broadcast demotion) — the 100 TB safety net.
 - Arrow on — every pandas UDF crosses Python↔JVM in columnar batches.
-- ``spark.sql.shuffle.partitions`` sized to cores locally; on a real
-  cluster this is a starting point that AQE coalesces per-stage.
+- ``spark.sql.shuffle.partitions`` a fixed DEFAULT_SHUFFLE_PARTITIONS
+  (32) unless the caller passes ``shuffle_partitions``; it is a
+  starting point that AQE coalesces per-stage, locally and on a
+  cluster alike.
 - Session timezone pinned to UTC so event-time semantics (and the
   DuckDB oracle comparisons) are wall-clock independent.
 """

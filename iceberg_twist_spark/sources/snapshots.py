@@ -475,18 +475,24 @@ class SnapshotTable:
                 )
             else:
                 df.write.mode("overwrite").parquet(stage)
-                for name in sorted(os.listdir(stage)):
-                    if not name.endswith(".parquet"):
-                        continue
+                staged = [
+                    (name, self._file_rows(os.path.join(stage, name)))
+                    for name in sorted(os.listdir(stage))
+                    if name.endswith(".parquet")
+                ]
+                if any(rows for _, rows in staged):
+                    # Spark writes a 0-row placeholder file when the
+                    # first partition is empty; it carries no zone-map
+                    # stats, so every pruned read would keep it and
+                    # apply pending deletes to it. A wholly empty df
+                    # keeps its placeholder (it records the schema).
+                    staged = [(name, rows) for name, rows in staged if rows]
+                for name, rows in staged:
                     dst = os.path.join(self._data, f"{uuid.uuid4().hex}.parquet")
                     os.replace(os.path.join(stage, name), dst)
                     files.append(dst)
                     stats[dst] = self._file_stats(dst)
-                    nfm[dst] = {
-                        "base": None,
-                        "partition": {},
-                        "rows": self._file_rows(dst),
-                    }
+                    nfm[dst] = {"base": None, "partition": {}, "rows": rows}
                 n = self.spark.read.parquet(*files).count() if files else 0
             return files, n, stats, nfm
         finally:
@@ -2902,8 +2908,9 @@ def q_iceberg_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete physically and clears it, leaving the read unchanged. Both
     the MOR read (snapshot 2) and the compacted read (snapshot 3) must
     equal the oracle; time travel to snapshot 1 still shows the
-    deleted rows (asserted in-plan). A ten-row takedown on a 100 TB
-    table costs a key file, not a table rewrite."""
+    deleted rows (both pinned by test_mor_query_equivalence). A
+    ten-row takedown on a 100 TB table costs a key file, not a table
+    rewrite."""
     tbl = _mor_table(spark, sf_dir)
     # The time-travel and MOR≡compacted equivalence invariants are
     # pinned by test_mor_query_equivalence (r12): asserting them
@@ -2963,8 +2970,8 @@ def q_iceberg_mor_pos_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     the parquet reader's ``_metadata`` (file, row-ordinal) columns,
     scoped inherently to the named files; a later compaction applies
     the delete physically and clears it, leaving the read unchanged
-    (post-compact ≡ pre-compact asserted in-plan). Time travel to
-    snapshot 1 still shows the rows. Reference parity:
+    (post-compact ≡ pre-compact and time travel to snapshot 1 pinned
+    by test_mor_query_equivalence). Reference parity:
     iceberg-twist keeps only whole-payload rewrites
     (iceberg-twist/main.py:34-103); this is the v2 delete-file form
     its users would need at lakehouse scale."""

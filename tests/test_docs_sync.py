@@ -60,6 +60,7 @@ def test_audit_allowlists_reference_registered_queries():
         BNLJ_ALLOWED,
         CARTESIAN_ALLOWED,
         GLOBAL_WINDOW_ALLOWED,
+        REPEATED_UDF_ALLOWED,
     )
 
     _load_all_modules()
@@ -68,6 +69,7 @@ def test_audit_allowlists_reference_registered_queries():
         ("BNLJ_ALLOWED", BNLJ_ALLOWED),
         ("GLOBAL_WINDOW_ALLOWED", GLOBAL_WINDOW_ALLOWED),
         ("CARTESIAN_ALLOWED", CARTESIAN_ALLOWED),
+        ("REPEATED_UDF_ALLOWED", REPEATED_UDF_ALLOWED),
     ]:
         stale = [n for n in coll if n not in REGISTRY]
         assert not stale, f"{coll_name} references unregistered queries: {stale}"

@@ -177,6 +177,33 @@ def test_file_stats_recorded_on_every_commit(spark):
         assert lo <= hi
 
 
+def test_append_with_empty_first_partition_writes_no_empty_file(spark):
+    """Spark writes a 0-row placeholder file when a DataFrame's first
+    partition is empty. It carries no zone-map stats, so every pruned
+    read kept it; the write path drops it when the write has rows, and
+    the commit plans like a one-partition append of the same rows."""
+
+    def table_after_append(batch):
+        tbl = SnapshotTable(spark, tempfile.mkdtemp(prefix="itws_emptypart_"))
+        tbl.overwrite(spark.range(0, 100, 1, 1).selectExpr("id", "id * 1.0 AS v"))
+        tbl.append(batch.selectExpr("id", "id * 1.0 AS v"))
+        return tbl
+
+    def planned_rows(tbl, skip):
+        fm = tbl._files_meta()
+        return sorted(fm[f]["rows"] for f in tbl.plan_files(skip=skip))
+
+    # ids 150..199 sit in the last of four partitions; the first is empty
+    split = table_after_append(spark.range(0, 200, 1, 4).filter("id >= 150"))
+    single = table_after_append(spark.range(150, 200, 1, 1))
+    fm = split._files_meta()
+    assert all(fm[f]["rows"] > 0 for f in split.snapshots()[-1]["files"])
+    for skip in (("v", 0.0, 10.0), ("v", 160.0, 170.0)):
+        assert planned_rows(split, skip) == planned_rows(single, skip)
+    assert planned_rows(split, ("v", 0.0, 10.0)) == [100]
+    assert split.read().count() == 150
+
+
 def test_rollback_is_metadata_only_and_history_append_only(spark, sf_dir):
     """rollback_to must reuse the target snapshot's file list verbatim
     (no data copied) and ADD a snapshot rather than rewriting history."""
@@ -1252,7 +1279,7 @@ def test_merge_not_matched_by_source_clauses(spark, tmp_path):
     assert final == {i: i * 7 for i in range(10, 20)}
 
 
-def test_mor_query_equivalence(spark):
+def test_mor_query_equivalence(spark, sf_dir):
     """The invariants q_iceberg_mor_delete / _mor_pos_delete asserted
     in-plan until r12 (every bench run paid ~4 extra full scans + two
     exceptAll shuffles for them): time travel to the pre-delete
@@ -1263,7 +1290,6 @@ def test_mor_query_equivalence(spark):
         _pos_delete_table,
     )
 
-    sf_dir = "/root/testdata/sf0.001"
     for build in (_mor_table, _pos_delete_table):
         tbl = build(spark, sf_dir)
         assert tbl.read(snapshot_id=1).count() > tbl.read(snapshot_id=2).count()

@@ -18,7 +18,14 @@ Two layers, both run over every registered query:
    (d) no explicit ``F.broadcast`` hint on an SF-growing input — every
        call site in the package must be classified sub-linear in
        ``BROADCAST_BOUNDED`` (source-level scan, since an executed
-       plan cannot distinguish a hinted broadcast from an AQE one).
+       plan cannot distinguish a hinted broadcast from an AQE one);
+   (e) no Window partitioned only by bounded-enum columns over raw
+       fact rows;
+   (f) oracle-checked output schemas are hashable;
+   (g) no Python UDF in more than one node of the executed plan
+       (each node is a separate kernel pass over its input, and every
+       Arrow task pays the Python worker's fixed start-up cost) outside
+       ``REPEATED_UDF_ALLOWED``.
 
 Run: ``python tools/explain_audit.py [sf_dir]``.
 """
@@ -28,6 +35,7 @@ from __future__ import annotations
 import os
 import re
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -360,6 +368,16 @@ GLOBAL_WINDOW_ALLOWED: dict[str, str] = {
     "q_profile_skew": "rank over |distinct keys| post-aggregate rows",
 }
 
+# A Python UDF (keyed by name + result id: q_mm_png_filters runs two
+# different functions both named ``gen``) in more than one executed-plan
+# node: the kernel runs once per node, and every Arrow task pays the
+# worker's fixed start-up cost (PERF.md, "Per-task Python cost").
+REPEATED_UDF_ALLOWED: dict[str, str] = {
+    "q_llm_ann_lsh": "bucket_batches once per self-join side: persisting "
+    "the bucketed corpus for both sides would pin every embedding in "
+    "block storage, which is not a 100 TB plan",
+}
+
 # CartesianProduct: never. (Even q_join_cross compiles to a broadcast
 # nested loop, not an unpartitioned cartesian.)
 CARTESIAN_ALLOWED: dict[str, str] = {}
@@ -658,6 +676,41 @@ def enum_partitioned_fact_windows(plan: str) -> list[str]:
     return hits
 
 
+_PY_NODE_RE = re.compile(r"(?:\*\(\d+\) )?\w*(?:Python|InPandas|InArrow)\w*\b")
+_CALL_RE = re.compile(r"(\w+)\(")
+
+
+def _udf_calls(text: str) -> set[str]:
+    """``name#id`` of every ``name(args…)#id`` call in a plan-node line."""
+    out = set()
+    for m in _CALL_RE.finditer(text):
+        depth, i = 1, m.end()
+        while depth and i < len(text):
+            depth += {"(": 1, ")": -1}.get(text[i], 0)
+            i += 1
+        rid = re.match(r"#(\d+)", text[i:])
+        if not depth and rid:
+            out.add(f"{m.group(1)}#{rid.group(1)}")
+    return out
+
+
+def repeated_python_udfs(plan: str) -> list[str]:
+    """Invariant (g): Python UDFs that appear in more than one
+    Python-evaluation node (MapInArrow, FlatMapGroupsInPandas,
+    ArrowEvalPython, …) of the plan."""
+    nodes: Counter[str] = Counter()
+    for ln in plan.splitlines():
+        body = ln.lstrip(" :+-")
+        m = _PY_NODE_RE.match(body)
+        if m:
+            nodes.update(_udf_calls(body[m.end():]))
+    return [
+        f"Python UDF {key} in {n} plan nodes"
+        for key, n in sorted(nodes.items())
+        if n > 1
+    ]
+
+
 def invariant_violations(name: str, plan: str) -> list[str]:
     errs = []
     if "CartesianProduct" in plan and name not in CARTESIAN_ALLOWED:
@@ -668,6 +721,11 @@ def invariant_violations(name: str, plan: str) -> list[str]:
         errs.append("single-partition Window")
     if name not in ENUM_WINDOW_ALLOWED:
         errs.extend(enum_partitioned_fact_windows(plan))
+    repeated = repeated_python_udfs(plan)
+    if name not in REPEATED_UDF_ALLOWED:
+        errs.extend(repeated)
+    elif not repeated:
+        errs.append("stale REPEATED_UDF_ALLOWED entry")
     return errs
 
 

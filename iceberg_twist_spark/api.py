@@ -461,41 +461,14 @@ class Engine:
         cosine compared ONLY within clusters, dropped when a
         smaller-key near-twin (cos ≥ tau) shares the cluster. Returns
         (key, cluster_id, is_kept). Same plan as q_llm_semdedup."""
-        from iceberg_twist_spark.llm.similarity import _dot, ivf_assign, with_norm
-        from iceberg_twist_spark.common import r4
+        from iceberg_twist_spark.llm.similarity import semdedup_keep, with_norm
 
         emb = with_norm(
             df.select(F.col(key_col).alias("vec_id"), F.col(vec_col).alias("embedding")),
             "embedding",
         )
         centroids = emb.orderBy("vec_id").limit(n_clusters)
-        clustered = ivf_assign(emb, centroids)
-        a = clustered.select(
-            F.col("vec_id").alias("va"), F.col("embedding").alias("ea"),
-            F.col("nrm").alias("na"), "cluster",
-        )
-        b = clustered.select(
-            F.col("vec_id").alias("vb"), F.col("embedding").alias("eb"),
-            F.col("nrm").alias("nb"), "cluster",
-        )
-        sim = r4(_dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")))
-        dropped = (
-            a.join(b, "cluster")
-            .filter(F.col("vb") < F.col("va"))
-            .withColumn("sim", sim)
-            .filter(F.col("sim") >= tau)
-            .select(F.col("va").alias("vec_id"))
-            .distinct()
-        )
-        return (
-            clustered.select("vec_id", F.col("cluster").cast("long").alias("cluster_id"))
-            .join(dropped.withColumn("__d", F.lit(1)), "vec_id", "left")
-            .select(
-                F.col("vec_id").alias(key_col),
-                "cluster_id",
-                F.col("__d").isNull().alias("is_kept"),
-            )
-        )
+        return semdedup_keep(emb, centroids, tau).withColumnRenamed("vec_id", key_col)
 
     @staticmethod
     def decontaminate(

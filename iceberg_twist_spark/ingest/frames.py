@@ -27,6 +27,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from iceberg_twist_spark.catalog import load_tables
+from iceberg_twist_spark.kernels import map_rows
 from iceberg_twist_spark.registry import register
 
 FRAME_STRUCT = T.StructType(
@@ -179,17 +180,11 @@ def split_frames_map_in_pandas(df: DataFrame, payload_col: str, delim: bytes = b
         ]
     )
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"frame_no": [], "frame": [], "frame_len": []}
-            for blob in pdf[payload_col]:
-                for i, fr in enumerate(bytes(blob).split(delim)):
-                    rows["frame_no"].append(i)
-                    rows["frame"].append(fr)
-                    rows["frame_len"].append(len(fr))
-            yield pd.DataFrame(rows)
+    def split(blob):
+        for i, fr in enumerate(bytes(blob).split(delim)):
+            yield i, fr, len(fr)
 
-    return df.select(payload_col).mapInPandas(gen, out_schema)
+    return map_rows(df, [payload_col], split, out_schema)
 
 
 _FRAMES_MIP_ORACLE = """

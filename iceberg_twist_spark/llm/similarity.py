@@ -12,10 +12,14 @@ An IVF variant would follow the same shape with learned centroids.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
+from pyspark.sql import types as T
 
+from iceberg_twist_spark import kernels as K
 from iceberg_twist_spark.catalog import load_tables
 # spread(): the per-row interpreted HOF dot products are the CPU cost
 # here; an under-partitioned corpus scan (single-row-group fixture
@@ -210,63 +214,32 @@ def q_llm_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized every a<b pair ROW through BroadcastNestedLoopJoin
     and paid one interpreted HOF dot per pair (~9 s for 125k pairs at
     sf0.01; the kernel's whole block is a few hundred ms). Arithmetic
-    is the ordered-IEEE-fold scheme of _pq_assign (dot accumulates
-    dims ascending from 0.0, sim groups as dot/(na·nb), the ≥ 0.3
-    gate compares the unrounded sim, output rounds r4), so the pair
-    set is bit-identical to the oracle's."""
-    import numpy as np
-    import pyarrow as pa
-
+    is the ordered fold of kernels.py (sim groups as dot/(na·nb), the
+    ≥ 0.3 gate compares the unrounded sim, output rounds r4), so the
+    pair set is bit-identical to the oracle's."""
     emb = with_norm(spread(load_tables(spark, sf_dir)["embeddings"], "vec_id"), "embedding")
     _guard_exact_pairs(emb.count())
-    rows = emb.select("vec_id", "embedding", "nrm").collect()  # guard-bounded
-    ids_b = np.array([r[0] for r in rows], dtype=np.int64)
-    bmat = np.array([[float(x) for x in r[1]] for r in rows], dtype=np.float64)
-    nrm_b = np.array([float(r[2]) for r in rows], dtype=np.float64)
+    ids_b, bmat, nrm_b = K.constant(emb, "vec_id", "embedding", "nrm")  # guard-bounded
+    # slice the a-side so the (slice × corpus) block stays ~32 MB
+    step = max(1, (4 << 20) // max(len(ids_b), 1))
 
-    def pair_batches(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            ida = batch.column(0).to_numpy(zero_copy_only=False)
-            e_arr = batch.column(1)
-            lens = np.diff(e_arr.offsets.to_numpy(zero_copy_only=False))
-            d = int(lens[0])
-            assert (lens == d).all(), "ragged embedding widths"
-            amat = (
-                e_arr.flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64, copy=False)
-                .reshape(n, d)
-            )
-            na = batch.column(2).to_numpy(zero_copy_only=False)
-            # slice the a-side so the (slice × corpus) block stays ~32 MB
-            step = max(1, (4 << 20) // max(len(ids_b), 1))
-            for lo in range(0, n, step):
-                hi = min(lo + step, n)
-                dot = np.zeros((hi - lo, len(ids_b)))
-                for k in range(d):
-                    dot += amat[lo:hi, k, None] * bmat[None, :, k]
-                sims = dot / (na[lo:hi, None] * nrm_b[None, :])
-                mask = (ida[lo:hi, None] < ids_b[None, :]) & (sims >= 0.3)
-                ai, bi = np.nonzero(mask)
-                if not len(ai):
-                    continue
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(ida[lo:hi][ai], type=pa.int64()),
-                        pa.array(ids_b[bi], type=pa.int64()),
-                        pa.array(
-                            np.floor(sims[ai, bi] * 10000.0 + 0.5) / 10000.0,
-                            type=pa.float64(),
-                        ),
-                    ],
-                    names=["vec_a", "vec_b", "cos_sim"],
-                )
+    def pair_batches(batch):
+        ida = batch.column(0).to_numpy(zero_copy_only=False)
+        amat = K.matrix(batch.column(1))
+        na = batch.column(2).to_numpy(zero_copy_only=False)
+        parts = [[], [], []]
+        for lo in range(0, len(ida), step):
+            a_ids, a_nrm = ida[lo:lo + step], na[lo:lo + step]
+            sims = K.dots(amat[lo:lo + step], bmat) / (a_nrm[:, None] * nrm_b[None, :])
+            ai, bi = np.nonzero((a_ids[:, None] < ids_b[None, :]) & (sims >= 0.3))
+            parts[0].append(a_ids[ai])
+            parts[1].append(ids_b[bi])
+            parts[2].append(K.rnd(sims[ai, bi], 4))
+        return [np.concatenate(p) for p in parts]
 
-    return emb.select("vec_id", "embedding", "nrm").mapInArrow(
-        pair_batches, "vec_a bigint, vec_b bigint, cos_sim double"
+    return K.map_kernel(
+        emb, ["vec_id", "embedding", "nrm"], pair_batches,
+        "vec_a bigint, vec_b bigint, cos_sim double",
     )
 
 
@@ -311,59 +284,26 @@ def q_llm_semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     crossJoin(broadcast) + groupBy form multiplied the corpus |eval|×
     and shuffled every (vec_id, s) pair through the max aggregate's
     exchange, paying |eval| interpreted HOF dots per row besides.
-    Arithmetic is the ordered-IEEE-fold scheme of _pq_assign (each
-    sim r4-rounds BEFORE the max, matching the oracle's max over
-    rounded sims), so the output is bit-identical."""
-    import numpy as np
-    import pyarrow as pa
-
+    Arithmetic is the ordered fold of kernels.py (each sim r4-rounds
+    BEFORE the max, matching the oracle's max over rounded sims), so
+    the output is bit-identical."""
     emb = with_norm(spread(load_tables(spark, sf_dir)["embeddings"], "vec_id"), "embedding")
-    probe_rows = (
-        emb.filter(F.col("vec_id") < SEMDECON_N_EVAL)
-        .select("embedding", "nrm")
-        .collect()
-    )  # bounded: the fixed eval set (the former broadcast)
-    pmat = np.array([[float(x) for x in r[0]] for r in probe_rows], dtype=np.float64)
-    pn = np.array([float(r[1]) for r in probe_rows], dtype=np.float64)
+    # bounded: the fixed eval set (the former broadcast)
+    _, pmat, pn = K.constant(
+        emb.filter(F.col("vec_id") < SEMDECON_N_EVAL), "vec_id", "embedding", "nrm"
+    )
 
-    def decon_batches(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            e_arr = batch.column(1)
-            lens = np.diff(e_arr.offsets.to_numpy(zero_copy_only=False))
-            d = int(lens[0])
-            assert (lens == d).all(), "ragged embedding widths"
-            evecs = (
-                e_arr.flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64, copy=False)
-                .reshape(n, d)
-            )
-            nrm = batch.column(2).to_numpy(zero_copy_only=False)
-            dot = np.zeros((n, pmat.shape[0]))
-            for k in range(d):
-                dot += evecs[:, k, None] * pmat[None, :, k]
-            sims = dot / (nrm[:, None] * pn[None, :])
-            sims = np.floor(sims * 10000.0 + 0.5) / 10000.0
-            mx = np.max(sims, axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0),
-                    pa.array(mx, type=pa.float64()),
-                    pa.array(mx >= SEMDECON_TAU),
-                ],
-                names=["vec_id", "max_eval_sim", "is_contaminated"],
-            )
+    def decon_batches(batch):
+        sims = K.dots(K.matrix(batch.column(1)), pmat)
+        nrm = batch.column(2).to_numpy(zero_copy_only=False)
+        mx = np.max(K.rnd(sims / (nrm[:, None] * pn[None, :]), 4), axis=1)
+        return [batch.column(0), mx, mx >= SEMDECON_TAU]
 
-    return (
-        emb.filter(F.col("vec_id") >= SEMDECON_N_EVAL)
-        .select("vec_id", "embedding", "nrm")
-        .mapInArrow(
-            decon_batches,
-            "vec_id bigint, max_eval_sim double, is_contaminated boolean",
-        )
+    return K.map_kernel(
+        emb.filter(F.col("vec_id") >= SEMDECON_N_EVAL),
+        ["vec_id", "embedding", "nrm"],
+        decon_batches,
+        "vec_id bigint, max_eval_sim double, is_contaminated boolean",
     )
 
 
@@ -394,69 +334,27 @@ def ivf_assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     interpreted HOF dot products per row with one vectorized distance
     block per batch (guide §2.4/§4.2).
 
-    Bit-compatibility with the oracle's SQL: every accumulation is an
-    explicit ordered IEEE-double loop (acc starts 0.0, dims ascending
-    — elementwise numpy ops never reassociate), cosine groups as
-    ``dot / (nrm · cn)``, rounding is ``floor(x·1e4 + 0.5)/1e4``, and
-    ties keep the LOWEST centroid id: centroids scan cid-ascending and
-    ``argmax`` keeps the first maximum — the row_number(csim DESC,
-    cid) order the previous form and the oracle both use.
+    Bit-compatibility with the oracle's SQL: the dot is the ordered
+    fold of kernels.py, cosine groups as ``dot / (nrm · cn)`` and
+    rounds r4, and ties keep the LOWEST centroid id: ``K.constant``
+    sorts the centroids by id and ``argmax`` keeps the first maximum
+    — the oracle's row_number(csim DESC, cid) order.
     """
-    import numpy as np
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    cent_rows = sorted(
-        (int(r[0]), [float(x) for x in r[1]], float(r[2]))
-        for r in centroids.select("vec_id", "embedding", "nrm").collect()
-    )  # bounded: K centroid rows (the former broadcast)
-    cids = np.array([c for c, _, _ in cent_rows], dtype=np.int64)
-    cmat = np.array([e for _, e, _ in cent_rows], dtype=np.float64)  # (K, d)
-    cn = np.array([nv for _, _, nv in cent_rows], dtype=np.float64)  # (K,)
-
-    narrow = emb.select("vec_id", "embedding", "nrm")
-    cid_type = centroids.schema["vec_id"].dataType
-    cid_pa = pa.int32() if cid_type.simpleString() == "int" else pa.int64()
+    # bounded: K centroid rows (the former broadcast)
+    cids, cmat, cn = K.constant(centroids, "vec_id", "embedding", "nrm")
+    in_cols = ["vec_id", "embedding", "nrm"]
     out_schema = T.StructType(
-        [narrow.schema[c] for c in ("vec_id", "embedding", "nrm")]
-        + [T.StructField("cluster", cid_type, True)]
+        [emb.schema[c] for c in in_cols]
+        + [T.StructField("cluster", centroids.schema["vec_id"].dataType, True)]
     )
 
-    def assign_batches(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            e_arr = batch.column(1)
-            lens = np.diff(e_arr.offsets.to_numpy(zero_copy_only=False))
-            d = int(lens[0])
-            assert (lens == d).all(), "ragged embedding widths"
-            evecs = (
-                e_arr.flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64, copy=False)
-                .reshape(n, d)
-            )
-            nrm = batch.column(2).to_numpy(zero_copy_only=False)
-            # ordered fold: acc = 0.0, one IEEE add per dim, k ascending
-            dot = np.zeros((n, cmat.shape[0]))
-            for k in range(d):
-                dot += evecs[:, k, None] * cmat[None, :, k]
-            sims = dot / (nrm[:, None] * cn[None, :])
-            sims = np.floor(sims * 10000.0 + 0.5) / 10000.0
-            best = cids[np.argmax(sims, axis=1)]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0),
-                    batch.column(1),
-                    batch.column(2),
-                    pa.array(best, type=cid_pa),
-                ],
-                names=["vec_id", "embedding", "nrm", "cluster"],
-            )
+    def assign_batches(batch):
+        nrm = batch.column(2).to_numpy(zero_copy_only=False)
+        sims = K.dots(K.matrix(batch.column(1)), cmat) / (nrm[:, None] * cn[None, :])
+        best = cids[np.argmax(K.rnd(sims, 4), axis=1)]
+        return [*batch.columns, best]
 
-    return narrow.mapInArrow(assign_batches, out_schema)
+    return K.map_kernel(emb, in_cols, assign_batches, out_schema)
 
 
 _DUCK_R4COS = (
@@ -722,53 +620,27 @@ def lsh_bucket(emb: DataFrame, dim: int = 64, n_planes: int = N_PLANES) -> DataF
     same expression-interpretation cost the r11 PQ/IVF kernels
     removed — guide §4.2) are one Arrow-batched numpy kernel. The
     sign matrix is a bounded constant (n_planes × dim literals) in
-    the task closure. Bit-compatibility: each projection accumulates
-    dims ascending from 0.0 (one IEEE add per dim — elementwise
-    numpy never reassociates), and the sign test ``proj > 0`` plus
+    the task closure. Bit-compatibility: each projection is the
+    ordered fold of kernels.py, and the sign test ``proj > 0`` plus
     the power-of-two packing are exact integer ops, so the bucket
     ids are bit-identical to the HOF's (and the oracle's). NOTE:
-    mapInArrow is opaque to column pruning — callers select the
-    narrow column set first.
+    every column of ``emb`` passes through the kernel, which is
+    opaque to column pruning — callers select the narrow column set
+    first.
     """
-    import numpy as np
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
     smat = np.array(_plane_signs(dim, n_planes), dtype=np.float64)  # (P, d)
-    in_cols = emb.columns
+    in_cols = list(emb.columns)
     e_idx = in_cols.index("embedding")
     out_schema = T.StructType(
         list(emb.schema) + [T.StructField("bucket", T.LongType(), True)]
     )
 
-    def bucket_batches(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            e_arr = batch.column(e_idx)
-            lens = np.diff(e_arr.offsets.to_numpy(zero_copy_only=False))
-            d = int(lens[0]) if n else 0
-            assert (lens == d).all(), "ragged embedding widths"
-            evecs = (
-                e_arr.flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64, copy=False)
-                .reshape(n, d)
-            )
-            bucket = np.zeros(n, dtype=np.int64)
-            for p in range(smat.shape[0]):
-                # ordered fold: acc = 0.0, one IEEE add per dim ascending
-                proj = np.zeros(n)
-                for k in range(d):
-                    proj += evecs[:, k] * smat[p, k]
-                bucket += (proj > 0).astype(np.int64) << p
-            cols = [batch.column(i) for i in range(len(in_cols))]
-            cols.append(pa.array(bucket, type=pa.int64()))
-            yield pa.RecordBatch.from_arrays(cols, names=[*in_cols, "bucket"])
+    def bucket_batches(batch):
+        signs = K.dots(K.matrix(batch.column(e_idx)), smat) > 0
+        bucket = (signs.astype(np.int64) << np.arange(len(smat))).sum(axis=1)
+        return [*batch.columns, bucket]
 
-    return emb.mapInArrow(bucket_batches, out_schema)
+    return K.map_kernel(emb, in_cols, bucket_batches, out_schema)
 
 
 def _pair_cos_kernel(
@@ -776,67 +648,33 @@ def _pair_cos_kernel(
 ) -> DataFrame:
     """Exact cosine over already-candidate pairs, as an Arrow kernel.
 
-    ``pairs`` must be exactly (ka bigint, kb bigint, ea, eb, na, nb);
+    ``pairs`` must be exactly (ka, kb, ea, eb, na, nb);
     returns (ka, kb, cos_sim double) for pairs whose similarity clears
     ``tau`` — compared on the r4-ROUNDED value when
     ``round_before_cmp`` (the SemDeDup convention) or on the unrounded
     value with r4 applied after (the LSH/all-pairs convention),
     matching each oracle exactly. Replaces one interpreted HOF dot
-    per pair (guide §4.2); arithmetic is the ordered-IEEE-fold scheme
-    of _pq_assign (dot accumulates dims ascending from 0.0, sim
-    groups as dot/(na·nb), rounding is floor(x·1e4+0.5)/1e4), so the
+    per pair (guide §4.2); arithmetic is the ordered fold of
+    kernels.py (sim groups as dot/(na·nb), rounding r4), so the
     surviving pair set is bit-identical."""
-    import numpy as np
-    import pyarrow as pa
+    ka, kb = pairs.schema[0], pairs.schema[1]
+    out_schema = T.StructType([ka, kb, T.StructField("cos_sim", T.DoubleType(), True)])
 
-    ka_name, kb_name = pairs.columns[0], pairs.columns[1]
+    def pair_batches(batch):
+        ea, eb = K.matrix(batch.column(2)), K.matrix(batch.column(3))
+        na = batch.column(4).to_numpy(zero_copy_only=False)
+        nb = batch.column(5).to_numpy(zero_copy_only=False)
+        sim = K.row_dots(ea, eb) / (na * nb)
+        if round_before_cmp:
+            sim = K.rnd(sim, 4)
+        mask = sim >= tau
+        if not mask.any():
+            return None
+        out = sim[mask] if round_before_cmp else K.rnd(sim[mask], 4)
+        keep = pa.array(mask)
+        return [batch.column(0).filter(keep), batch.column(1).filter(keep), out]
 
-    def pair_batches(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            mats = []
-            for ci in (2, 3):
-                arr = batch.column(ci)
-                lens = np.diff(arr.offsets.to_numpy(zero_copy_only=False))
-                d = int(lens[0]) if n else 0
-                assert (lens == d).all(), "ragged embedding widths"
-                mats.append(
-                    arr.flatten()
-                    .to_numpy(zero_copy_only=False)
-                    .astype(np.float64, copy=False)
-                    .reshape(n, d)
-                )
-            ea, eb = mats
-            na = batch.column(4).to_numpy(zero_copy_only=False)
-            nb = batch.column(5).to_numpy(zero_copy_only=False)
-            dot = np.zeros(n)
-            for k in range(ea.shape[1]):
-                dot += ea[:, k] * eb[:, k]
-            sim = dot / (na * nb)
-            if round_before_cmp:
-                sim = np.floor(sim * 10000.0 + 0.5) / 10000.0
-                mask = sim >= tau
-                out = sim[mask]
-            else:
-                mask = sim >= tau
-                out = np.floor(sim[mask] * 10000.0 + 0.5) / 10000.0
-            if not mask.any():
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0).filter(pa.array(mask)),
-                    batch.column(1).filter(pa.array(mask)),
-                    pa.array(out, type=pa.float64()),
-                ],
-                names=[ka_name, kb_name, "cos_sim"],
-            )
-
-    return pairs.mapInArrow(
-        pair_batches,
-        f"{ka_name} bigint, {kb_name} bigint, cos_sim double",
-    )
+    return K.map_kernel(pairs, pairs.columns, pair_batches, out_schema)
 
 
 _LSH_ORACLE = f"""
@@ -941,9 +779,15 @@ def q_llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     every Arrow task pays the Python worker's fixed start-up cost
     (PERF.md, "Per-task Python cost")."""
     emb = with_norm(spread(load_tables(spark, sf_dir)["embeddings"], "vec_id"), "embedding")
-    clustered = ivf_assign(emb, emb.filter(F.col("vec_id") < IVF_K)).localCheckpoint(
-        eager=False
-    )
+    return semdedup_keep(emb, emb.filter(F.col("vec_id") < IVF_K), SEMDEDUP_TAU)
+
+
+def semdedup_keep(emb: DataFrame, centroids: DataFrame, tau: float) -> DataFrame:
+    """(vec_id, cluster_id, is_kept) for ``emb`` = (vec_id, embedding,
+    nrm): the SemDeDup body shared by q_llm_semdedup and
+    Engine.semdedup. The assignment feeds both join sides and the
+    result, so it is lazily checkpointed and its kernel runs once."""
+    clustered = ivf_assign(emb, centroids).localCheckpoint(eager=False)
     a = clustered.select(
         F.col("vec_id").alias("va"), F.col("embedding").alias("ea"),
         F.col("nrm").alias("na"), "cluster",
@@ -961,7 +805,7 @@ def q_llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("va", "vb", "ea", "eb", "na", "nb")
     )
     dropped = (
-        _pair_cos_kernel(pairs, tau=SEMDEDUP_TAU, round_before_cmp=True)
+        _pair_cos_kernel(pairs, tau=tau, round_before_cmp=True)
         .select(F.col("va").alias("vec_id"))
         .distinct()
     )
@@ -1044,7 +888,7 @@ def q_llm_semdedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sub", F.pmod(F.col("vec_id"), F.col("nsub")).cast("long")
     )
     # r12 (guide §8's "move heavy bytes once"): keep/drop is decided
-    # per (cluster, sub) CELL with groupBy + applyInPandas — each
+    # per (cluster, sub) CELL with groupBy + applyInArrow — each
     # row's embedding crosses the shuffle and the Python boundary
     # exactly ONCE (≈|corpus| rows), and the |cell|² pair comparisons
     # happen in a numpy block per cell. Both the r11 JVM-HOF pair join
@@ -1053,49 +897,48 @@ def q_llm_semdedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     # kernel, through Arrow): at the 100k-vector corpus twin that is
     # ~13 GB of pair payload vs ~30 MB of row payload here — measured
     # 11.3 s (HOF) / 12.0 s (pair kernel) / 4.4 s (this form), same
-    # dropped set on all three. Per-group memory is bounded by
-    # construction: a cell is ≤ ~CAP rows (CAP·dim doubles). The
-    # uncapped q_llm_semdedup keeps the streaming pair kernel — a
-    # degenerate mega-cluster must not have to fit in one worker.
-    # Bit-compatibility: same ordered-IEEE scheme (dot accumulates
-    # dims ascending; sims r4-round BEFORE the ≥ τ gate; a vector
-    # drops when ANY smaller-id cell-mate clears τ — np.tril(k=-1)
-    # over ids sorted ascending).
-    import numpy as np
-    import pandas as pd
-
-    def cell_rows(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        order = np.argsort(pdf["vec_id"].to_numpy(), kind="stable")
-        ids = pdf["vec_id"].to_numpy()[order]
-        hit = np.zeros(n, dtype=bool)
-        if n >= 2:
-            mat = np.array(
-                [np.asarray(e, dtype=np.float64)
-                 for e in pdf["embedding"].to_numpy()[order]]
-            )
-            nrm = pdf["nrm"].to_numpy()[order]
-            dot = np.zeros((n, n))
-            for k in range(mat.shape[1]):
-                dot += mat[:, k, None] * mat[None, :, k]
-            sims = dot / (nrm[:, None] * nrm[None, :])
-            sims = np.floor(sims * 10000.0 + 0.5) / 10000.0
-            hit = np.any(np.tril(sims >= SEMDEDUP_TAU, k=-1), axis=1)
-        return pd.DataFrame({
-            "vec_id": ids,
-            "cluster_id": pdf["cluster"].to_numpy(dtype=np.int64)[order],
-            "sub_bucket": pdf["sub"].to_numpy(dtype=np.int64)[order],
-            "is_kept": ~hit,
+    # dropped set on all three. The uncapped q_llm_semdedup keeps the
+    # streaming pair kernel — a degenerate mega-cluster must not have
+    # to fit in one worker.
+    def cell_rows(cell: pa.Table) -> pa.Table:
+        ids = cell["vec_id"].to_numpy()
+        order = np.argsort(ids, kind="stable")
+        kept = semdedup_cell_kept(
+            K.matrix(cell["embedding"])[order],
+            cell["nrm"].to_numpy()[order],
+            SEMDEDUP_TAU,
+        )
+        return pa.table({
+            "vec_id": pa.array(ids[order], pa.int64()),
+            "cluster_id": cell["cluster"].cast(pa.int64()).take(order),
+            "sub_bucket": cell["sub"].cast(pa.int64()).take(order),
+            "is_kept": pa.array(kept),
         })
 
     return (
         subbed.select("vec_id", "embedding", "nrm", "cluster", "sub")
         .groupBy("cluster", "sub")
-        .applyInPandas(
+        .applyInArrow(
             cell_rows,
             "vec_id bigint, cluster_id bigint, sub_bucket bigint, is_kept boolean",
         )
     )
+
+
+def semdedup_cell_kept(vecs: np.ndarray, nrm: np.ndarray, tau: float) -> np.ndarray:
+    """is_kept per row of one SemDeDup cell, rows sorted by id: a row
+    drops when any earlier (smaller-id) row's r4-rounded cosine to it
+    is ≥ ``tau``. The a-side is tiled to ~1M doubles per block — a
+    block of rows [lo, hi) only needs columns [0, hi) — so a skewed or
+    non-dense-id cell that grows to a whole cluster stays bounded."""
+    n = len(vecs)
+    hit = np.zeros(n, dtype=bool)
+    step = max(1, (1 << 20) // max(n, 1))
+    for lo in range(1, n, step):
+        hi = min(lo + step, n)
+        sims = K.dots(vecs[lo:hi], vecs[:hi]) / (nrm[lo:hi, None] * nrm[None, :hi])
+        hit[lo:hi] = np.tril(K.rnd(sims, 4) >= tau, k=lo - 1).any(axis=1)
+    return ~hit
 
 
 # ------------------------------------------------ product quantization
@@ -1261,96 +1104,55 @@ def _pq_assign(
     task closure.
 
     Arithmetic is bit-compatible with the oracle's
-    ``dot(a,a) − 2·dot(a,b) + dot(b,b)``: every accumulation is an
-    explicit ordered loop over the subspace dims (acc starts 0.0,
-    k ascending — one IEEE-double add per step, elementwise numpy ops
-    never reassociate), |cw|² is pre-summed in Python left-to-right
-    (same fold), d2 groups as ``(sv2 − 2·dot) + c2`` and rounds as
-    ``floor(d2·1e4 + 0.5)/1e4`` — the identical operation sequence
-    both engines execute, so equal inputs give bit-equal distances.
-    Ties keep the LOWEST code: codewords scan code-ascending and
-    ``argmin`` keeps the first minimum — the oracle's (d2, code)
-    row_number order. ``keys`` lets IVF-PQ carry the cluster id
-    through the assignment instead of re-joining it afterwards."""
-    import numpy as np
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    per_m: dict[int, list] = {}
-    for r in cb.collect():  # bounded: the constant codebook
-        cw = [float(x) for x in r.cw]
-        c2 = 0.0
-        for v in cw:
-            c2 += v * v
-        per_m.setdefault(int(r.m), []).append((int(r.code), cw, c2))
+    ``dot(a,a) − 2·dot(a,b) + dot(b,b)``: every dot (|cw|² included)
+    is the ordered fold of kernels.py, d2 groups as
+    ``(sv2 − 2·dot) + c2`` and rounds r4 — the identical operation
+    sequence both engines execute, so equal inputs give bit-equal
+    distances. Ties keep the LOWEST code: ``K.constant`` sorts the
+    codewords by code and ``argmin`` keeps the first minimum — the
+    oracle's (d2, code) row_number order. ``keys`` lets IVF-PQ carry
+    the cluster id through the assignment instead of re-joining it
+    afterwards."""
+    # bounded: the constant codebook, code-ascending within each m
+    codes, cws, cb_m = K.constant(cb, "code", "cw", "m")
+    c2s = K.row_dots(cws, cws)
+    per_m = {
+        int(m): (codes[cb_m == m], cws[cb_m == m], c2s[cb_m == m])
+        for m in np.unique(cb_m)
+    }
     assert sorted(per_m) == list(range(len(per_m))), "non-contiguous m"
-    cb_np: dict[int, tuple] = {}
-    for m, entries in per_m.items():
-        entries.sort()  # code-ascending: argmin's first-min = lowest code
-        cb_np[m] = (
-            np.array([e[0] for e in entries], dtype=np.int32),
-            np.array([e[1] for e in entries], dtype=np.float64),  # (K, d)
-            np.array([e[2] for e in entries], dtype=np.float64),  # (K,)
-        )
 
-    narrow = sub.select(*keys, "m", "sv")
+    in_cols = [*keys, "m", "sv"]
     n_key = len(keys)
-    out_fields = [narrow.schema[k] for k in (*keys, "m")] + [
+    out_fields = [sub.schema[k] for k in (*keys, "m")] + [
         T.StructField("code", T.IntegerType(), True)
     ]
     if carry_sv:
-        out_fields.append(narrow.schema["sv"])
-    out_schema = T.StructType(out_fields)
+        out_fields.append(sub.schema["sv"])
 
-    def assign_batches(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
+    def assign_batches(batch):
+        m_col = batch.column(n_key).to_numpy(zero_copy_only=False)
+        sv = K.matrix(batch.column(n_key + 1))
+        sv2 = K.row_dots(sv, sv)
+        # -1 = "no codebook covered this row's m"; checked below so an
+        # uncovered subspace fails loudly instead of emitting an
+        # uninitialized code (the Catalyst fold it replaced nulled)
+        code_out = np.full(len(sv), -1, dtype=np.int32)
+        for m, (m_codes, m_cws, m_c2s) in per_m.items():
+            mask = m_col == m
+            if not mask.any():
                 continue
-            m_col = batch.column(n_key).to_numpy(zero_copy_only=False)
-            sv_arr = batch.column(n_key + 1)
-            lens = np.diff(sv_arr.offsets.to_numpy(zero_copy_only=False))
-            d = int(lens[0]) if n else 0
-            assert (lens == d).all(), "ragged subvector widths"
-            sv = (
-                sv_arr.flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64, copy=False)
-                .reshape(n, d)
-            )
-            # ordered folds: acc = 0.0, then one add per dim, k ascending
-            sv2 = np.zeros(n)
-            for k in range(d):
-                sv2 += sv[:, k] * sv[:, k]
-            # -1 = "no codebook covered this row's m"; asserted below so
-            # an uncovered subspace fails loudly instead of emitting an
-            # uninitialized code (the Catalyst fold it replaced nulled)
-            code_out = np.full(n, -1, dtype=np.int32)
-            for m, (codes, cws, c2s) in cb_np.items():
-                mask = m_col == m
-                if not mask.any():
-                    continue
-                svm = sv[mask]
-                dot = np.zeros((svm.shape[0], codes.shape[0]))
-                for k in range(d):
-                    dot += svm[:, k, None] * cws[None, :, k]
-                d2 = (sv2[mask][:, None] - 2.0 * dot) + c2s[None, :]
-                d2 = np.floor(d2 * 10000.0 + 0.5) / 10000.0
-                code_out[mask] = codes[np.argmin(d2, axis=1)]
-            assert n == 0 or (code_out >= 0).all(), (
+            d2 = (sv2[mask][:, None] - 2.0 * K.dots(sv[mask], m_cws)) + m_c2s[None, :]
+            code_out[mask] = m_codes[np.argmin(K.rnd(d2, 4), axis=1)]
+        if (code_out < 0).any():
+            raise ValueError(
                 "subvector m values not covered by the codebook: "
                 f"{sorted(set(m_col[code_out < 0].tolist()))}"
             )
-            cols = [batch.column(i) for i in range(n_key + 1)]
-            cols.append(pa.array(code_out, type=pa.int32()))
-            names = [*keys, "m", "code"]
-            if carry_sv:
-                cols.append(sv_arr)
-                names.append("sv")
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+        cols = [*batch.columns[:n_key + 1], code_out]
+        return [*cols, batch.column(n_key + 1)] if carry_sv else cols
 
-    return narrow.mapInArrow(assign_batches, out_schema)
+    return K.map_kernel(sub, in_cols, assign_batches, T.StructType(out_fields))
 
 
 def _lloyd_update(codes0: DataFrame, sub: DataFrame) -> DataFrame:
@@ -2241,70 +2043,30 @@ def _km_assign(
     zip_with/aggregate folds per row. Here nothing shuffles and the
     scan stays narrow (guide §2.4/§4.2).
 
-    Bit-compatibility: dist2 accumulates as an explicit ordered
-    IEEE-double loop over dims (acc starts 0.0, (x−y)·(x−y) per
-    element — the zip_with + fold order), rounds as
-    ``floor(x·1e8 + 0.5)/1e8``, and ties keep the LOWEST candidate:
-    centroids scan cand-ascending and ``argmin`` keeps the first
-    minimum — the oracle's row_number(dist2, cand) order. (The
+    Bit-compatibility: dist2 is the ordered ``sq_dists`` fold of
+    kernels.py (the zip_with + fold order), rounds r8, and ties keep
+    the LOWEST candidate: ``K.constant`` sorts the centroids by cand
+    and ``argmin`` keeps the first minimum — the oracle's
+    row_number(dist2, cand) order. (The
     oracle's own sum is an unordered SQL aggregate; the r8 rounding
     that made the previous fold match it covers this kernel
     identically.)"""
-    import numpy as np
-    import pyarrow as pa
-
-    from pyspark.sql import types as T
-
-    rows = sorted(
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in cent.select("cand", "c").collect()
-    )  # bounded: k centroid rows (the former broadcast)
-    cands = np.array([c for c, _ in rows], dtype=np.int64)
-    cmat = np.array([v for _, v in rows], dtype=np.float64)  # (k, d)
-    cand_type = cent.schema["cand"].dataType
-    cand_pa = pa.int32() if cand_type.simpleString() == "int" else pa.int64()
-
-    narrow = df.select(*keys, "e")
-    nk = len(keys)
+    # bounded: k centroid rows (the former broadcast)
+    cands, cmat = K.constant(cent, "cand", "c")
     out_schema = T.StructType(
-        [narrow.schema[k] for k in keys]
+        [df.schema[k] for k in keys]
         + [
             T.StructField("cand", cent.schema["cand"].dataType, True),
             T.StructField("dist2", T.DoubleType(), True),
         ]
     )
 
-    def assign_batches(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            e_arr = batch.column(nk)
-            lens = np.diff(e_arr.offsets.to_numpy(zero_copy_only=False))
-            d = int(lens[0])
-            assert (lens == d).all(), "ragged vector widths"
-            evecs = (
-                e_arr.flatten()
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64, copy=False)
-                .reshape(n, d)
-            )
-            acc = np.zeros((n, cmat.shape[0]))
-            for k in range(d):
-                diff = evecs[:, k, None] - cmat[None, :, k]
-                acc += diff * diff
-            acc = np.floor(acc * 100_000_000.0 + 0.5) / 100_000_000.0
-            idx = np.argmin(acc, axis=1)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(nk)]
-                + [
-                    pa.array(cands[idx], type=cand_pa),
-                    pa.array(acc[np.arange(n), idx], type=pa.float64()),
-                ],
-                names=[*keys, "cand", "dist2"],
-            )
+    def assign_batches(batch):
+        dist2 = K.rnd(K.sq_dists(K.matrix(batch.column(len(keys))), cmat), 8)
+        idx = np.argmin(dist2, axis=1)
+        return [*batch.columns[:len(keys)], cands[idx], dist2[np.arange(len(idx)), idx]]
 
-    return narrow.mapInArrow(assign_batches, out_schema)
+    return K.map_kernel(df, [*keys, "e"], assign_batches, out_schema)
 
 
 @register("q_ml_kmeans_step", oracle=_KMEANS_ORACLE, tags=("llm", "similarity", "agg"))

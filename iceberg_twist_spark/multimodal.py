@@ -26,13 +26,13 @@ channels int8 | payload bytes (derived from document text).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from iceberg_twist_spark.catalog import load_tables
 from iceberg_twist_spark.common import r4
+from iceberg_twist_spark.kernels import map_rows
 from iceberg_twist_spark.registry import register
 
 MAGIC = "ITW1"
@@ -148,18 +148,16 @@ def extract_byte_features(media_df: DataFrame) -> DataFrame:
     audio-fingerprint stage plugs into — swap the numpy body for the
     codec call."""
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "mean_byte": [], "max_byte": [], "n_distinct_bytes": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                payload = np.frombuffer(bytes(blob), dtype=np.uint8)[HEADER_LEN:]
-                out["doc_id"].append(doc_id)
-                out["mean_byte"].append(float(payload.mean()) if payload.size else 0.0)
-                out["max_byte"].append(int(payload.max()) if payload.size else 0)
-                out["n_distinct_bytes"].append(int(np.unique(payload).size))
-            yield pd.DataFrame(out)
+    def byte_features(doc_id, blob):
+        payload = np.frombuffer(bytes(blob), dtype=np.uint8)[HEADER_LEN:]
+        yield (
+            doc_id,
+            float(payload.mean()) if payload.size else 0.0,
+            int(payload.max()) if payload.size else 0,
+            int(np.unique(payload).size),
+        )
 
-    return media_df.select("doc_id", "media").mapInPandas(gen, _FEATURE_SCHEMA)
+    return map_rows(media_df, ["doc_id", "media"], byte_features, _FEATURE_SCHEMA)
 
 
 _BYTE_FEATURES_ORACLE = """
@@ -246,21 +244,15 @@ def resize_decimate(media_df: DataFrame, out_bytes: int = RESIZE_OUT_BYTES) -> D
     downstream embedding model needs. Deterministic, exact-tested.
     """
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "resized_hex": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                payload = np.frombuffer(bytes(blob), dtype=np.uint8)[HEADER_LEN:]
-                if payload.size:
-                    idx = (np.arange(out_bytes) * payload.size) // out_bytes
-                    resized = payload[idx]
-                else:
-                    resized = np.zeros(out_bytes, dtype=np.uint8)
-                out["doc_id"].append(doc_id)
-                out["resized_hex"].append(resized.tobytes().hex().upper())
-            yield pd.DataFrame(out)
+    def resize(doc_id, blob):
+        payload = np.frombuffer(bytes(blob), dtype=np.uint8)[HEADER_LEN:]
+        if payload.size:
+            resized = payload[(np.arange(out_bytes) * payload.size) // out_bytes]
+        else:
+            resized = np.zeros(out_bytes, dtype=np.uint8)
+        yield doc_id, resized.tobytes().hex().upper()
 
-    return media_df.select("doc_id", "media").mapInPandas(gen, _RESIZE_SCHEMA)
+    return map_rows(media_df, ["doc_id", "media"], resize, _RESIZE_SCHEMA)
 
 
 _RESIZE_ORACLE = f"""
@@ -308,24 +300,13 @@ def audio_energy(
     window, vectorized numpy body) is unchanged.
     """
 
-    def gen(batches):
-        for pdf in batches:
-            out = {"doc_id": [], "win_no": [], "rms": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                payload = np.frombuffer(bytes(blob), dtype=np.uint8)[HEADER_LEN:]
-                samples = payload.astype(np.float64)
-                w = 0
-                for start in range(0, max(samples.size, 1), hop):
-                    chunk = samples[start : start + win]
-                    if chunk.size == 0:
-                        break
-                    out["doc_id"].append(doc_id)
-                    out["win_no"].append(w)
-                    out["rms"].append(float(np.sqrt(np.mean(chunk**2))))
-                    w += 1
-            yield pd.DataFrame(out)
+    def energy(doc_id, blob):
+        samples = np.frombuffer(bytes(blob), dtype=np.uint8)[HEADER_LEN:].astype(np.float64)
+        for w, start in enumerate(range(0, samples.size, hop)):
+            chunk = samples[start : start + win]
+            yield doc_id, w, float(np.sqrt(np.mean(chunk**2)))
 
-    return media_df.select("doc_id", "media").mapInPandas(gen, _ENERGY_SCHEMA)
+    return map_rows(media_df, ["doc_id", "media"], energy, _ENERGY_SCHEMA)
 
 
 _AUDIO_ENERGY_ORACLE = f"""
@@ -385,20 +366,13 @@ def decode_image_real(media_df: DataFrame) -> DataFrame:
         ]
     )
 
-    def gen(batches):  # pragma: no cover - needs PIL
+    def pil_decode(doc_id, blob):  # pragma: no cover - needs PIL
         from PIL import Image
 
-        for pdf in batches:
-            rows = {"doc_id": [], "height": [], "width": [], "mode": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                img = Image.open(io.BytesIO(bytes(blob)[HEADER_LEN:]))
-                rows["doc_id"].append(doc_id)
-                rows["height"].append(img.height)
-                rows["width"].append(img.width)
-                rows["mode"].append(img.mode)
-            yield pd.DataFrame(rows)
+        img = Image.open(io.BytesIO(bytes(blob)[HEADER_LEN:]))
+        yield doc_id, img.height, img.width, img.mode
 
-    return media_df.select("doc_id", "media").mapInPandas(gen, schema)
+    return map_rows(media_df, ["doc_id", "media"], pil_decode, schema)
 
 
 # ---------------------------------------------------------- real codec
@@ -462,29 +436,19 @@ def decode_ppm(media_df: DataFrame) -> DataFrame:
 
     header_re = re.compile(rb"^P6\s+(\d+)\s+(\d+)\s+(\d+)\s")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "width", "height", "mean_r", "mean_g", "mean_b")}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                raw = bytes(blob)
-                m = header_re.match(raw)
-                if m is None:
-                    continue  # not a P6 image — skip, don't crash the task
-                w, h, maxval = (int(g) for g in m.groups())
-                px = np.frombuffer(raw[m.end():], dtype=np.uint8)
-                if maxval != 255 or px.size != w * h * 3:
-                    continue
-                img = px.reshape(h, w, 3).astype(np.float64)
-                means = img.mean(axis=(0, 1))
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["mean_r"].append(float(means[0]))
-                rows["mean_g"].append(float(means[1]))
-                rows["mean_b"].append(float(means[2]))
-            yield pd.DataFrame(rows)
+    def ppm_stats(doc_id, blob):
+        raw = bytes(blob)
+        m = header_re.match(raw)
+        if m is None:
+            return  # not a P6 image — skip, don't crash the task
+        w, h, maxval = (int(g) for g in m.groups())
+        px = np.frombuffer(raw[m.end():], dtype=np.uint8)
+        if maxval != 255 or px.size != w * h * 3:
+            return
+        means = px.reshape(h, w, 3).astype(np.float64).mean(axis=(0, 1))
+        yield doc_id, w, h, float(means[0]), float(means[1]), float(means[2])
 
-    return media_df.select("doc_id", "media").mapInPandas(gen, _PPM_SCHEMA)
+    return map_rows(media_df, ["doc_id", "media"], ppm_stats, _PPM_SCHEMA)
 
 
 _PPM_ORACLE = """
@@ -583,31 +547,23 @@ def decode_phash(media_df: DataFrame) -> DataFrame:
 
     header_re = re.compile(rb"^P6\s+(\d+)\s+(\d+)\s+(\d+)\s")
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "h1": [], "h2": []}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                raw = bytes(blob)
-                m = header_re.match(raw)
-                if m is None:
-                    continue
-                w, h, _ = (int(g) for g in m.groups())
-                px = np.frombuffer(raw[m.end():], dtype=np.uint8)
-                n = w * h * 3
-                if px.size != n:
-                    continue
-                idx = (np.arange(PHASH_BITS) * n) // PHASH_BITS
-                sampled = px[idx].astype(np.int64)
-                mean = int(sampled.sum()) // PHASH_BITS
-                bits = sampled > mean
-                h1 = int(sum(1 << i for i in range(32) if bits[i]))
-                h2 = int(sum(1 << (i - 32) for i in range(32, 64) if bits[i]))
-                rows["doc_id"].append(doc_id)
-                rows["h1"].append(h1)
-                rows["h2"].append(h2)
-            yield pd.DataFrame(rows)
+    def phash(doc_id, blob):
+        raw = bytes(blob)
+        m = header_re.match(raw)
+        if m is None:
+            return
+        w, h, _ = (int(g) for g in m.groups())
+        px = np.frombuffer(raw[m.end():], dtype=np.uint8)
+        n = w * h * 3
+        if px.size != n:
+            return
+        sampled = px[(np.arange(PHASH_BITS) * n) // PHASH_BITS].astype(np.int64)
+        bits = sampled > int(sampled.sum()) // PHASH_BITS
+        h1 = int(sum(1 << i for i in range(32) if bits[i]))
+        h2 = int(sum(1 << (i - 32) for i in range(32, 64) if bits[i]))
+        yield doc_id, h1, h2
 
-    return media_df.select("doc_id", "media").mapInPandas(gen, _PHASH_SCHEMA)
+    return map_rows(media_df, ["doc_id", "media"], phash, _PHASH_SCHEMA)
 
 
 # the oracle recomputes the perturbed stream and the aHash from first
@@ -788,44 +744,31 @@ def decode_wav(media_df: DataFrame) -> DataFrame:
     peak. Arrow-batched ``mapInPandas``; the exact plumbing a real
     audio-feature stage (VAD, fingerprint, mel filterbank) plugs into."""
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "n_channels", "sample_rate", "n_samples",
-                "duration_ms", "rms", "peak",
-            )}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                raw = bytes(blob)
-                if len(raw) < 44 or raw[0:4] != b"RIFF" or raw[8:12] != b"WAVE":
-                    continue  # not a WAV — skip, don't crash the task
-                audio_format = int(np.frombuffer(raw[20:22], "<u2")[0])
-                n_channels = int(np.frombuffer(raw[22:24], "<u2")[0])
-                sample_rate = int(np.frombuffer(raw[24:28], "<u4")[0])
-                bits = int(np.frombuffer(raw[34:36], "<u2")[0])
-                data_size = int(np.frombuffer(raw[40:44], "<u4")[0])
-                if audio_format != 1 or bits != 16 or raw[36:40] != b"data":
-                    continue
-                # A truncated data chunk (header claims more bytes than the
-                # blob holds, or an odd byte count) must skip like the other
-                # malformed-blob guards, not crash the task on a misaligned
-                # int16 view.
-                data_size = min(data_size, len(raw) - 44) & ~1
-                samples = np.frombuffer(
-                    raw[44 : 44 + data_size], dtype="<i2"
-                ).astype(np.float64)
-                n = samples.size // max(n_channels, 1)
-                rows["doc_id"].append(doc_id)
-                rows["n_channels"].append(n_channels)
-                rows["sample_rate"].append(sample_rate)
-                rows["n_samples"].append(n)
-                rows["duration_ms"].append(n * 1000.0 / sample_rate)
-                rows["rms"].append(
-                    float(np.sqrt(np.mean(samples**2))) if samples.size else 0.0
-                )
-                rows["peak"].append(int(np.abs(samples).max()) if samples.size else 0)
-            yield pd.DataFrame(rows)
+    def wav_stats(doc_id, blob):
+        raw = bytes(blob)
+        if len(raw) < 44 or raw[0:4] != b"RIFF" or raw[8:12] != b"WAVE":
+            return  # not a WAV — skip, don't crash the task
+        audio_format = int(np.frombuffer(raw[20:22], "<u2")[0])
+        n_channels = int(np.frombuffer(raw[22:24], "<u2")[0])
+        sample_rate = int(np.frombuffer(raw[24:28], "<u4")[0])
+        bits = int(np.frombuffer(raw[34:36], "<u2")[0])
+        data_size = int(np.frombuffer(raw[40:44], "<u4")[0])
+        if audio_format != 1 or bits != 16 or raw[36:40] != b"data":
+            return
+        # A truncated data chunk (header claims more bytes than the
+        # blob holds, or an odd byte count) must skip like the other
+        # malformed-blob guards, not crash the task on a misaligned
+        # int16 view.
+        data_size = min(data_size, len(raw) - 44) & ~1
+        samples = np.frombuffer(raw[44 : 44 + data_size], dtype="<i2").astype(np.float64)
+        n = samples.size // max(n_channels, 1)
+        yield (
+            doc_id, n_channels, sample_rate, n, n * 1000.0 / sample_rate,
+            float(np.sqrt(np.mean(samples**2))) if samples.size else 0.0,
+            int(np.abs(samples).max()) if samples.size else 0,
+        )
 
-    return media_df.select("doc_id", "media").mapInPandas(gen, _WAV_SCHEMA)
+    return map_rows(media_df, ["doc_id", "media"], wav_stats, _WAV_SCHEMA)
 
 
 _WAV_ORACLE = f"""
@@ -1153,24 +1096,15 @@ def decode_png_stats(media_df: DataFrame) -> DataFrame:
     (doc_id, width, height, per-channel means) — same shape as the
     PPM decoder so the oracles are shared."""
 
-    def gen(batches):
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "width", "height", "mean_r", "mean_g", "mean_b")}
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                dec = decode_png_blob(bytes(blob))
-                if dec is None:
-                    continue  # invalid PNG — skip, don't crash the task
-                w, h, img = dec
-                means = img.astype(np.float64).mean(axis=(0, 1))
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["mean_r"].append(float(means[0]))
-                rows["mean_g"].append(float(means[1]))
-                rows["mean_b"].append(float(means[2]))
-            yield pd.DataFrame(rows)
+    def png_stats(doc_id, blob):
+        dec = decode_png_blob(bytes(blob))
+        if dec is None:
+            return  # invalid PNG — skip, don't crash the task
+        w, h, img = dec
+        means = img.astype(np.float64).mean(axis=(0, 1))
+        yield doc_id, w, h, float(means[0]), float(means[1]), float(means[2])
 
-    return media_df.select("doc_id", "media").mapInPandas(gen, _PNG_SCHEMA)
+    return map_rows(media_df, ["doc_id", "media"], png_stats, _PNG_SCHEMA)
 
 
 @register("q_mm_png_decode", oracle=_PPM_ORACLE, tags=("multimodal", "udf"))
@@ -1201,26 +1135,20 @@ def build_png_filtered_table(docs: DataFrame) -> DataFrame:
     zlib-compressed. hashlib.md5 hex == Spark md5 == DuckDB md5, so
     the oracle arithmetic is unchanged."""
 
-    def gen(batches):
+    def png_encode(doc_id, n_chars):
         import hashlib
 
-        for pdf in batches:
-            out = {"doc_id": [], "media": []}
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                w = 8 + int(doc_id) % 8
-                h = 8 + int(n_chars) % 8
-                n_px = w * h * 3
-                hx = hashlib.md5(str(int(doc_id)).encode()).hexdigest()
-                stream = (hx * -(-n_px // 32))[:n_px].encode("ascii")
-                px = np.frombuffer(stream, dtype=np.uint8).reshape(h, w, 3)
-                out["doc_id"].append(int(doc_id))
-                out["media"].append(encode_png(px))
-            yield pd.DataFrame(out)
+        w = 8 + int(doc_id) % 8
+        h = 8 + int(n_chars) % 8
+        n_px = w * h * 3
+        hx = hashlib.md5(str(int(doc_id)).encode()).hexdigest()
+        stream = (hx * -(-n_px // 32))[:n_px].encode("ascii")
+        yield int(doc_id), encode_png(np.frombuffer(stream, dtype=np.uint8).reshape(h, w, 3))
 
     schema = T.StructType(
         [T.StructField("doc_id", T.LongType()), T.StructField("media", T.BinaryType())]
     )
-    return docs.select("doc_id", "n_chars").mapInPandas(gen, schema)
+    return map_rows(docs, ["doc_id", "n_chars"], png_encode, schema)
 
 
 @register("q_mm_png_filters", oracle=_PPM_ORACLE, tags=("multimodal", "udf"))

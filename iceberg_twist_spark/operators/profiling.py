@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 
 from iceberg_twist_spark.catalog import load_tables
 from iceberg_twist_spark.common import duck_r4, duck_ts_str, r4, ts_str
@@ -69,9 +70,12 @@ def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs, not scan rows — and one merge aggregate per column derives
     rows (Σcnt), nulls (Σcnt where value null), exact NDV
     (count(value) over the deduped pairs), and min/max (min/max over
-    the distinct values ≡ min/max over all values, computed on the
-    NATIVE type before the string cast so ordering is never
-    lexicographic on numbers). The Expand multiplier drops from
+    the distinct values ≡ min/max over all values). Stacking needs one
+    type per family, so numbers run as double and strings as string,
+    both before the string cast of min/max, so ordering is never
+    lexicographic on numbers. The double family is lossless only for
+    double columns: any other numeric column raises ``TypeError``
+    rather than being coerced. The Expand multiplier drops from
     ×(|cols|+1) on every scan row to ×|family| with only (name,
     value) carried, the second full scan and its group-less
     SortAggregate disappear, and min/max ride the same shuffle.
@@ -81,6 +85,12 @@ def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_tables(spark, sf_dir)["lineitem"]
     num_cols = [c for c, num in _PROFILE_COLS if num]
     str_cols = [c for c, num in _PROFILE_COLS if not num]
+    for c in num_cols:
+        if li.schema[c].dataType != DoubleType():
+            raise TypeError(
+                f"q_profile_table profiles numeric columns as double; "
+                f"{c} is {li.schema[c].dataType.simpleString()}"
+            )
 
     def long_profile(cols: list[str], cast: str) -> DataFrame:
         stack = ", ".join(f"'{c}', cast(`{c}` as {cast})" for c in cols)

@@ -126,6 +126,18 @@ def test_semdedup_helper_matches_registered(spark, sf_dir):
     assert generic.count() == registered.count()
 
 
+def test_semdedup_helper_runs_each_kernel_in_one_plan_node(spark, sf_dir):
+    """Engine.semdedup shares q_llm_semdedup's body: the assignment is
+    checkpointed, so no Python UDF repeats across executed-plan nodes."""
+    from iceberg_twist_spark.api import Engine
+    from tools.explain_audit import repeated_python_udfs
+
+    generic = Engine.semdedup(Engine(spark, sf_dir).table("embeddings"), "embedding", "vec_id")
+    plan = generic._jdf.queryExecution().executedPlan().toString()
+    assert repeated_python_udfs(plan) == []
+    assert "pair_batches" in plan
+
+
 def test_perceptual_hash_helper(spark, sf_dir):
     from iceberg_twist_spark.api import Engine
     from iceberg_twist_spark.multimodal import build_phash_media
@@ -239,6 +251,21 @@ def test_profile_matches_registered(spark, sf_dir):
     assert {tuple(r) for r in generic.collect()} == {
         tuple(r) for r in registered.collect()
     }
+
+
+def test_profile_table_refuses_non_double_numeric_columns(spark, sf_dir, monkeypatch):
+    """q_profile_table stacks numeric columns as double; a column of
+    another numeric type is refused instead of silently coerced."""
+    import pytest
+
+    from iceberg_twist_spark.operators import profiling
+    from iceberg_twist_spark.registry import REGISTRY
+
+    monkeypatch.setattr(
+        profiling, "_PROFILE_COLS", profiling._PROFILE_COLS + (("l_orderkey", True),)
+    )
+    with pytest.raises(TypeError, match="l_orderkey is bigint"):
+        REGISTRY["q_profile_table"].builder(spark, sf_dir)
 
 
 def test_ann_index_facade_matches_brute_force(spark, sf_dir):

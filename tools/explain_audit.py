@@ -368,8 +368,8 @@ GLOBAL_WINDOW_ALLOWED: dict[str, str] = {
     "q_profile_skew": "rank over |distinct keys| post-aggregate rows",
 }
 
-# A Python UDF (keyed by name + result id: q_mm_png_filters runs two
-# different functions both named ``gen``) in more than one executed-plan
+# A Python UDF (keyed by name + result id, so two different functions
+# that share a name are not a repeat) in more than one executed-plan
 # node: the kernel runs once per node, and every Arrow task pays the
 # worker's fixed start-up cost (PERF.md, "Per-task Python cost").
 REPEATED_UDF_ALLOWED: dict[str, str] = {

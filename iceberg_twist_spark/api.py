@@ -164,29 +164,71 @@ class Engine:
         is what makes DAILY incremental dedup linear in the increment:
         a new batch's bands join against these stored rows instead of
         re-signing (or re-reading) the corpus. Banding metadata rides
-        along so queries/appends cannot use a mismatched band count."""
+        along so queries/appends cannot use a mismatched band count,
+        and so do the bands' and arrays' schemas, so readers never
+        infer them from the files."""
         import json
 
-        from iceberg_twist_spark.llm.dedup import (
-            band_rows,
-            lsh_params,
-            minhash_signatures,
-            shingle_arrays,
-        )
+        from iceberg_twist_spark.llm.dedup import lsh_params
+
+        n_bands, _ = lsh_params(tau)
+        base = path.rstrip("/")
+        bands, arrs = Engine._index_batch(df, text_col, key_col, n_bands)
+        bands.write.mode("overwrite").parquet(base + "/bands")
+        arrs.write.mode("overwrite").parquet(base + "/arrays")
+        meta = {
+            "n_bands": n_bands,
+            "tau": tau,
+            "schemas": {"bands": bands.schema.json(), "arrays": arrs.schema.json()},
+        }
+        df.sparkSession.createDataFrame(
+            [(json.dumps(meta),)], "meta string"
+        ).coalesce(1).write.mode("overwrite").parquet(base + "/meta")
+        return base
+
+    @staticmethod
+    def _index_batch(
+        df: DataFrame, text_col: str, key_col: str, n_bands: int
+    ) -> tuple[DataFrame, DataFrame]:
+        """A batch's (banding rows, shingle arrays). The arrays are
+        computed once (lazy checkpoint) and signed directly, so the
+        batch is spread and shingled once for both outputs."""
+        from iceberg_twist_spark.llm.dedup import band_rows, shingle_arrays, signatures_of
 
         docs = df.select(
             F.col(key_col).alias("doc_id"), F.col(text_col).alias("text")
         )
-        n_bands, _ = lsh_params(tau)
-        base = path.rstrip("/")
-        band_rows(minhash_signatures(docs), n_bands=n_bands).write.mode(
-            "overwrite"
-        ).parquet(base + "/bands")
-        shingle_arrays(docs, 3).write.mode("overwrite").parquet(base + "/arrays")
-        df.sparkSession.createDataFrame(
-            [(json.dumps({"n_bands": n_bands, "tau": tau}),)], "meta string"
-        ).coalesce(1).write.mode("overwrite").parquet(base + "/meta")
-        return base
+        arrs = shingle_arrays(docs, 3).localCheckpoint(eager=False)
+        return band_rows(signatures_of(arrs, "shs"), n_bands=n_bands), arrs
+
+    @staticmethod
+    def _index_meta(base: str) -> dict:
+        """A ``build_minhash_index`` layout's metadata, read on the
+        driver with pyarrow (one tiny file — no Spark job)."""
+        import json
+
+        import pyarrow.parquet as pq
+
+        return json.loads(pq.read_table(base + "/meta").column("meta")[0].as_py())
+
+    @staticmethod
+    def _read_component(
+        spark: SparkSession, base: str, sub: str, meta: dict
+    ) -> DataFrame:
+        """A MinHash index's stored ``bands`` or ``arrays``, schema
+        pinned from ``meta`` (layouts built before meta recorded schemas
+        infer it), tombstones honored."""
+        import json
+
+        from pyspark.sql.types import StructType
+
+        schema = meta.get("schemas", {}).get(sub)
+        reader = spark.read
+        if schema:
+            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        return Engine._without_tombstones(
+            spark, reader.parquet(f"{base}/{sub}"), base + "/tombstones", "doc_id"
+        )
 
     @staticmethod
     def minhash_index_append(
@@ -195,25 +237,11 @@ class Engine:
         """Append a new batch's banding rows + shingle arrays to an
         existing ``build_minhash_index`` layout (band count read from
         the stored metadata — appends cannot drift from the build)."""
-        import json
-
-        from iceberg_twist_spark.llm.dedup import (
-            band_rows,
-            minhash_signatures,
-            shingle_arrays,
-        )
-
         base = path.rstrip("/")
-        meta = json.loads(
-            df.sparkSession.read.parquet(base + "/meta").head()[0]
-        )
-        docs = df.select(
-            F.col(key_col).alias("doc_id"), F.col(text_col).alias("text")
-        )
-        band_rows(minhash_signatures(docs), n_bands=meta["n_bands"]).write.mode(
-            "append"
-        ).parquet(base + "/bands")
-        shingle_arrays(docs, 3).write.mode("append").parquet(base + "/arrays")
+        meta = Engine._index_meta(base)
+        bands, arrs = Engine._index_batch(df, text_col, key_col, meta["n_bands"])
+        bands.write.mode("append").parquet(base + "/bands")
+        arrs.write.mode("append").parquet(base + "/arrays")
         return base
 
     # -- index retraction -------------------------------------------
@@ -243,12 +271,14 @@ class Engine:
     def _without_tombstones(
         spark: SparkSession, df: DataFrame, ts_path: str, key_col: str
     ) -> DataFrame:
-        """Anti-join a stored tombstone set (if any) out of ``df``."""
+        """Anti-join a stored tombstone set (if any) out of ``df``.
+        Tombstones are always ``_normalize_keys`` frames (``key
+        long``), so the read is schema-pinned."""
         import os
 
         if not os.path.isdir(ts_path):
             return df
-        ts = spark.read.parquet(ts_path).select(
+        ts = spark.read.schema("key long").parquet(ts_path).select(
             F.col("key").alias(key_col)
         )
         return df.join(F.broadcast(ts), key_col, "left_anti")
@@ -343,10 +373,9 @@ class Engine:
         ts = base + "/tombstones"
         if not os.path.isdir(ts):
             return base
+        meta = Engine._index_meta(base)
         for sub in ("bands", "arrays"):
-            live = Engine._without_tombstones(
-                spark, spark.read.parquet(f"{base}/{sub}"), ts, "doc_id"
-            )
+            live = Engine._read_component(spark, base, sub, meta)
             Engine._swap_rewrite(live, f"{base}/{sub}")
         shutil.rmtree(ts, ignore_errors=True)
         return base
@@ -356,10 +385,7 @@ class Engine:
         """The stored banding rows, tombstones honored — the one read
         path every consumer of the index's bands shares."""
         base = path.rstrip("/")
-        return Engine._without_tombstones(
-            spark, spark.read.parquet(base + "/bands"),
-            base + "/tombstones", "doc_id",
-        )
+        return Engine._read_component(spark, base, "bands", Engine._index_meta(base))
 
     @staticmethod
     def near_dup_pairs_against_index(
@@ -386,19 +412,14 @@ class Engine:
         — the fixed-banding bug class). Querying with tau below
         ``meta['tau']`` raises instead of silently under-recalling;
         rebuild the index at the lower tau."""
-        import json
-
         from iceberg_twist_spark.llm.dedup import (
             _verify_jaccard_arrays,
             band_pairs_from_rows,
-            band_rows,
-            minhash_signatures,
-            shingle_arrays,
         )
 
         base = path.rstrip("/")
         sp = df.sparkSession
-        meta = json.loads(sp.read.parquet(base + "/meta").head()[0])
+        meta = Engine._index_meta(base)
         if tau is not None and tau < meta["tau"]:
             raise ValueError(
                 f"tau={tau} is below the index's build tau={meta['tau']}: "
@@ -408,16 +429,11 @@ class Engine:
                 f"{tau}) instead."
             )
         tau = meta["tau"] if tau is None else tau
-        docs = df.select(
-            F.col(key_col).alias("doc_id"), F.col(text_col).alias("text")
-        )
-        sig = minhash_signatures(docs)
+        bands, new_arrs = Engine._index_batch(df, text_col, key_col, meta["n_bands"])
         # new-batch banding feeds the cross join AND the within-batch
-        # self-join from ONE checkpoint — band_pairs(sig) here would
-        # rebuild its own banding from the un-checkpointed sig and run
-        # the dominant shingle+permutation pipeline a second time
-        nb = band_rows(sig, n_bands=meta["n_bands"]).localCheckpoint(eager=False)
-        stored = Engine.read_minhash_bands(sp, base)
+        # self-join from ONE checkpoint, so the batch is signed once
+        nb = bands.localCheckpoint(eager=False)
+        stored = Engine._read_component(sp, base, "bands", meta)
         cross = (
             nb.alias("n")
             .join(
@@ -432,10 +448,7 @@ class Engine:
             .filter(F.col("doc_a") != F.col("doc_b"))
             .distinct()
         )
-        new_arrs = shingle_arrays(docs, 3).localCheckpoint(eager=False)
-        stored_arrs = Engine._without_tombstones(
-            sp, sp.read.parquet(base + "/arrays"), base + "/tombstones", "doc_id"
-        )
+        stored_arrs = Engine._read_component(sp, base, "arrays", meta)
         both_arrs = stored_arrs.unionByName(new_arrs)
         within = band_pairs_from_rows(nb)
         return _verify_jaccard_arrays(

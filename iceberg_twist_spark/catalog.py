@@ -12,7 +12,7 @@ cluster.
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Mapping
+from collections.abc import Iterable, Iterator, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,9 +86,13 @@ def load_tables(spark: SparkSession, sf_dir: str) -> Mapping[str, DataFrame]:
     return _LazyTables(spark, sf_dir)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> Mapping[str, DataFrame]:
-    """Load tables and register each as a temp view (for spark.sql)."""
+def register_views(
+    spark: SparkSession, sf_dir: str, names: Iterable[str] = TABLES
+) -> Mapping[str, DataFrame]:
+    """Load tables and register each of ``names`` (default: all of
+    TABLES) as a temp view for spark.sql. Each registered view costs
+    one read, so a builder names only the tables its SQL queries."""
     dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
+    for name in names:
+        dfs[name].createOrReplaceTempView(name)
     return dfs

@@ -284,6 +284,17 @@ def minhash_signatures(docs: DataFrame, k: int = 3, n_perm: int = N_MINHASH) -> 
         .filter(F.size(w) >= k)
         .withColumn("sh_arr", word_shingles(w, k))
     )
+    return signatures_of(base, "sh_arr", n_perm)
+
+
+def signatures_of(frame: DataFrame, arr_col: str, n_perm: int = N_MINHASH) -> DataFrame:
+    """(doc_id, mh0..mh{n_perm-1}) MinHash signatures of a frame that
+    already holds each document's shingle array in ``arr_col`` — the
+    signing half of ``minhash_signatures``. A caller holding
+    ``shingle_arrays`` output signs its ``shs`` directly instead of
+    shingling the documents a second time: the min over the distinct
+    set equals the min over the multiset, so the signatures are the
+    same."""
     n_chunks = (n_perm + 1) // 2
 
     # Factory closures, NOT `lambda s, c=c:` default-arg captures — a
@@ -291,7 +302,7 @@ def minhash_signatures(docs: DataFrame, k: int = 3, n_perm: int = N_MINHASH) -> 
     # "captured" second arg silently rebinds to the array index column.
     def _chunk(c: int):
         return F.transform(
-            "sh_arr", lambda s: F.md5(F.concat(F.lit(f"{c}:"), s))
+            arr_col, lambda s: F.md5(F.concat(F.lit(f"{c}:"), s))
         ).alias(f"hx{c}")
 
     def _half(i: int):
@@ -302,7 +313,7 @@ def minhash_signatures(docs: DataFrame, k: int = 3, n_perm: int = N_MINHASH) -> 
             )
         ).alias(f"mh{i}")
 
-    hashed = base.select("doc_id", *[_chunk(c) for c in range(n_chunks)])
+    hashed = frame.select("doc_id", *[_chunk(c) for c in range(n_chunks)])
     return hashed.select("doc_id", *[_half(i) for i in range(n_perm)])
 
 

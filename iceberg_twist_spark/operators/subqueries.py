@@ -33,7 +33,7 @@ WHERE o_orderkey IN (
 @register("q_subq_in", oracle=_IN_SQL, tags=("subquery",))
 def q_subq_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN + grouped HAVING subquery (TPC-H Q18 shape) → left-semi join."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("orders", "lineitem"))
     return spark.sql(_IN_SQL)
 
 
@@ -50,7 +50,7 @@ WHERE EXISTS (
 @register("q_subq_exists", oracle=_EXISTS_SQL, tags=("subquery",))
 def q_subq_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS → left-semi join after decorrelation."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("customer", "orders"))
     return spark.sql(_EXISTS_SQL)
 
 
@@ -80,7 +80,7 @@ GROUP BY c.c_mktsegment
 @register("q_subq_not_exists", oracle=_NOT_EXISTS_ORACLE, tags=("subquery",))
 def q_subq_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar + NOT EXISTS (TPC-H Q22 shape) → anti join."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("customer", "orders"))
     return spark.sql(_NOT_EXISTS_SQL)
 
 
@@ -94,7 +94,7 @@ WHERE p_retailprice > 5.0 + (SELECT avg(p_retailprice) FROM part)
 @register("q_subq_scalar", oracle=_SCALAR_SQL, tags=("subquery",))
 def q_subq_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar subquery — folds to a one-row broadcast."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("part",))
     return spark.sql(_SCALAR_SQL)
 
 
@@ -115,7 +115,7 @@ def q_subq_corr_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Decorrelates to a per-partkey aggregate joined back to the probe —
     the aggregate shuffles |distinct parts|, not |lineitem| rows.
     """
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("lineitem", "part"))
     return spark.sql(_CORR_SCALAR_SQL)
 
 
@@ -140,5 +140,5 @@ def q_cte_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     The rounded revenue makes the max-equality exact on both engines:
     equal long numerators ÷ 1e4 give bit-equal doubles.
     """
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("lineitem", "supplier"))
     return spark.sql(_CTE_SQL)

@@ -514,6 +514,39 @@ def test_minhash_index_incremental_dedup(spark, tmp_path):
     assert (11, 20) in got_c and (12, 20) in got_c
 
 
+def test_minhash_index_without_recorded_schemas_answers_identically(spark, tmp_path):
+    """An index whose meta predates the recorded bands/arrays schemas
+    (readers fall back to inference) answers a lookup exactly like one
+    that has them."""
+    import json
+
+    from iceberg_twist_spark.api import Engine
+
+    base = " ".join(f"w{i}" for i in range(40))
+    near = " ".join(f"w{i}" if i != 20 else "CHANGED" for i in range(40))
+    rows = [(1, base), (2, " ".join(f"z{i}" for i in range(40))), (3, near)]
+    path = Engine.build_minhash_index(
+        spark.createDataFrame(rows, "k long, text string"), "text", "k", str(tmp_path / "mh")
+    )
+    Engine.minhash_index_remove(spark, path, [2])
+    edited = " ".join(f"w{i}" if i != 7 else "EDIT" for i in range(40))
+    dfb = spark.createDataFrame([(10, edited), (11, near)], "k long, text string")
+
+    def lookup():
+        out = Engine.near_dup_pairs_against_index(dfb, "text", "k", path)
+        return out.dtypes, sorted(tuple(r) for r in out.collect())
+
+    want = lookup()
+    assert {(a, b) for a, b, _ in want[1]} >= {(1, 10), (1, 11), (3, 10)}
+    meta = Engine._index_meta(path)
+    assert set(meta.pop("schemas")) == {"bands", "arrays"}
+    spark.createDataFrame([(json.dumps(meta),)], "meta string").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path + "/meta")
+    assert "schemas" not in Engine._index_meta(path)
+    assert lookup() == want
+
+
 def test_mixture_sample_facade(spark):
     """Every group downsamples toward the rarest group's count; the
     rarest group survives whole; the result is key-deterministic."""

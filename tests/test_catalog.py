@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql.types import TimestampNTZType, TimestampType
 
-from iceberg_twist_spark.catalog import TABLES, load_tables
+from iceberg_twist_spark.catalog import TABLES, load_tables, register_views
 
 
 def _jobs_launched(spark, fn):
@@ -65,3 +65,23 @@ def test_engine_registers_every_view(spark, sf_dir):
     Engine(spark, sf_dir)
     views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
     assert set(TABLES) <= views
+
+
+def test_register_views_registers_only_the_named_tables(spark, sf_dir):
+    for t in TABLES:
+        spark.catalog.dropTempView(t)
+    _, n_jobs = _jobs_launched(spark, lambda: register_views(spark, sf_dir, ("part", "nation")))
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    assert views & set(TABLES) == {"part", "nation"}
+    assert n_jobs <= 2
+
+
+def test_subquery_builder_reads_only_its_tables(spark, sf_dir):
+    """q_subq_scalar queries ``part`` alone: one table read, where
+    registering every view cost ten."""
+    from iceberg_twist_spark.registry import REGISTRY, _load_all_modules
+
+    _load_all_modules()
+    df, n_jobs = _jobs_launched(spark, lambda: REGISTRY["q_subq_scalar"].builder(spark, sf_dir))
+    assert df.columns == ["p_partkey", "p_retailprice"]
+    assert n_jobs <= 1

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from iceberg_twist_spark.sources.snapshots import SnapshotTable
 from tests.conftest import SF_DIR
+from tests.test_catalog import _jobs_launched
 
 
 @pytest.fixture(scope="module")
@@ -1297,3 +1298,143 @@ def test_mor_query_equivalence(spark, sf_dir):
         compacted = tbl.read(snapshot_id=3)
         assert mor.exceptAll(compacted).isEmpty()
         assert compacted.exceptAll(mor).isEmpty()
+
+
+def test_orphan_query_keeps_the_stage_readable(spark, sf_dir):
+    """What q_iceberg_orphan asserted in-plan with a full count of the
+    staged snapshot on every run: after the query's reclaim passes, the
+    unpublished (but manifested) stage still reads all of its rows."""
+    from iceberg_twist_spark.catalog import load_tables
+    from iceberg_twist_spark.sources.snapshots import _orphan_table, q_iceberg_orphan
+
+    q_iceberg_orphan(spark, sf_dir)
+    tbl, staged, _ = _orphan_table(spark, sf_dir)
+    orders = load_tables(spark, sf_dir)["orders"]
+    want = orders.filter(F.col("o_orderkey") % 3 == 1).count()
+    assert want > 0
+    assert tbl.read(snapshot_id=staged).count() == want
+
+
+# ---- fixed Spark work per verb -------------------------------------------
+# Schemas and row counts of engine-written files come from metadata, so a
+# verb launches only the jobs its data needs.
+
+
+def test_unpartitioned_append_launches_one_job(spark, tmp_path):
+    """The write is the only job: the row count comes from the footers
+    the write left, and the files' schema is not inferred back."""
+    tbl = SnapshotTable(spark, str(tmp_path / "t"))
+    tbl.create(spark.range(20).selectExpr("id", "id % 3 AS g"))
+    batch = spark.createDataFrame([(100 + i, i % 3) for i in range(10)], "id long, g long")
+    _, n_jobs = _jobs_launched(spark, lambda: tbl.append(batch))
+    assert n_jobs == 1
+    assert tbl._manifest(tbl.current_snapshot_id())["n_records"] == 30
+    assert tbl.read().count() == 30
+
+
+def test_pruned_read_with_pending_eq_delete_plans_without_jobs(spark, tmp_path):
+    """Building a pruned read over data files plus a pending equality
+    delete reads both schemas from metadata: no job before the action."""
+    tbl = SnapshotTable(spark, str(tmp_path / "t"))
+    tbl.create(spark.range(100).selectExpr("id", "id * 2 AS v").repartition(4, "id"))
+    tbl.delete_keys(spark.createDataFrame([(3,), (50,), (90,)], "id long"), "id")
+    df, n_jobs = _jobs_launched(spark, lambda: tbl.read(skip=("id", 0, 60)))
+    assert n_jobs == 0
+    assert sorted(r.id for r in df.collect()) == [i for i in range(61) if i not in (3, 50)]
+
+
+def test_merge_evaluates_its_source_once(spark, tmp_path):
+    """The merge source feeds the file-locating semi join, the
+    survivors' anti join and the union; a UDF in it must see each
+    source row once, not once per consumer."""
+    from pyspark.sql.types import LongType
+
+    tbl = SnapshotTable(spark, str(tmp_path / "t"))
+    tbl.create(spark.range(40).selectExpr("id", "id * 10 AS v").repartition(4, "id"))
+    seen = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        seen.add(1)
+        return x
+
+    tick_udf = F.udf(tick, LongType())
+    source = spark.range(30, 50).select(
+        tick_udf("id").alias("id"), (F.col("id") * 100).alias("v")
+    )
+    tbl.merge(source, "id")
+    assert seen.value == 20
+    rows = {r.id: r.v for r in tbl.read().collect()}
+    assert len(rows) == 50 and rows[5] == 50 and rows[35] == 3500 and rows[45] == 4500
+
+
+def test_entries_without_recorded_schemas_read_identically(spark, tmp_path):
+    """Sidecar entries and equality-delete entries written before
+    schemas were recorded fall back to inference. Reads pin each file's
+    WRITTEN schema; the field-id projection still renames and casts to
+    the current one, so both forms return the same rows and types."""
+    import json
+
+    tbl = SnapshotTable(spark, str(tmp_path / "t"))
+    cols = ("id", "cast(id AS int) AS k", "concat('r', id) AS tag")
+    tbl.create(spark.range(50).selectExpr(*cols).repartition(3, "id"))
+    tbl.append(spark.range(50, 70).selectExpr(*cols))
+    tbl.delete_keys(spark.createDataFrame([(3,), (55,)], "id long"), "id")
+    tbl.delete_where_positional(F.col("id") == 10)
+    tbl.rename_column("tag", "label")
+    tbl.widen_column("k", "long")
+
+    def snapshot():
+        df = tbl.read()
+        return df.dtypes, sorted(tuple(r) for r in df.collect())
+
+    want = snapshot()
+    assert len(want[1]) == 67 and want[0][1] == ("k", "bigint")
+    fm = tbl._files_meta()
+    assert all(e.get("schema") for e in fm.values())
+    for e in fm.values():
+        del e["schema"]
+    with open(tbl._files_meta_path(), "w") as f:
+        json.dump(fm, f)
+    sid = tbl.current_snapshot_id()
+    m = tbl._manifest(sid)
+    assert all("schema" in d for d in m["eq_deletes"])
+    for d in m["eq_deletes"]:
+        del d["schema"]
+    with open(os.path.join(tbl._meta, f"v{sid}.json"), "w") as f:
+        json.dump(m, f)
+    assert snapshot() == want
+
+
+def test_only_pinned_helpers_read_parquet():
+    """Source guard: in snapshots.py every parquet read goes through
+    ``SnapshotTable._scan`` (schema pinned; basePath discovery for
+    hive-partitioned groups, inference only for legacy entries), and
+    the MinHash index verbs read their components only through
+    ``Engine._read_component`` (tombstones: a pinned ``key long``)."""
+    import ast
+    import re
+
+    import iceberg_twist_spark.api as api_mod
+    import iceberg_twist_spark.sources.snapshots as snap_mod
+
+    bare = re.compile(r"(\.read|\breader)\.parquet\(")
+
+    def reads_by_function(mod):
+        with open(mod.__file__, encoding="utf-8") as f:
+            src = f.read()
+        funcs = [n for n in ast.walk(ast.parse(src)) if isinstance(n, ast.FunctionDef)]
+        out = []
+        for i, ln in enumerate(src.splitlines(), 1):
+            if bare.search(ln):
+                owners = [fn for fn in funcs if fn.lineno <= i <= fn.end_lineno]
+                out.append(max(owners, key=lambda fn: fn.lineno).name if owners else None)
+        return out
+
+    assert set(reads_by_function(snap_mod)) == {"_scan"}
+    minhash_verbs = {
+        "build_minhash_index", "minhash_index_append", "minhash_index_remove",
+        "minhash_index_compact", "read_minhash_bands", "near_dup_pairs_against_index",
+        "_index_batch", "_index_meta", "_read_component", "_without_tombstones",
+    }
+    in_verbs = [fn for fn in reads_by_function(api_mod) if fn in minhash_verbs]
+    assert in_verbs == ["_read_component"]

@@ -40,6 +40,11 @@ from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 from iceberg_twist_spark.catalog import load_tables
 from iceberg_twist_spark.registry import register
+from iceberg_twist_spark.sources.snapshots import (
+    _TABLE_CACHE,
+    SnapshotTable,
+    _changelog_table,
+)
 
 
 def _manifest(path: str, snap: int) -> dict:
@@ -207,10 +212,7 @@ def q_stream_snapshot_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    from iceberg_twist_spark.sources.snapshots import SnapshotTable  # noqa: F401
     from iceberg_twist_spark.streaming.jobs import _state_partitions
-
-    from iceberg_twist_spark.sources.snapshots import _TABLE_CACHE
 
     register_snapshot_tail(spark)
     cache_key = f"snaptail::{sf_dir}"
@@ -287,11 +289,6 @@ def q_stream_snapshot_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 # implement streamReader and hand each commit's file set to executors
 # as input partitions — the offset model and per-commit planning are
 # identical, and they are what this module verifies.
-
-_NO_CHANGE_OPS = frozenset({
-    "rewrite", "add-column", "rename-column", "drop-column",
-    "widen-column", "set-partition-spec",
-})
 
 
 def _fmeta(path: str) -> dict:
@@ -425,7 +422,7 @@ def _commit_change_rows(path: str, prev_id: int, sid: int, to_meta: list):
     fm = _fmeta(path)
     op = m["operation"]
     out = []  # (pdf_under_own_meta, own_meta, kind)
-    if op in _NO_CHANGE_OPS:
+    if op in SnapshotTable._NO_CHANGE_OPS:
         pass
     elif op == "append":
         base = set(pm["files"])
@@ -597,10 +594,6 @@ def q_stream_changelog_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    from iceberg_twist_spark.sources.snapshots import (
-        _TABLE_CACHE,
-        _changelog_table,
-    )
     from iceberg_twist_spark.streaming.jobs import _state_partitions
 
     register_changelog_tail(spark)

@@ -46,9 +46,12 @@ swapping is a one-line change per call site.
 from __future__ import annotations
 
 import json
+import operator
 import os
 import tempfile
 import uuid
+from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -201,6 +204,13 @@ class SnapshotTable:
     def _manifest(self, snapshot_id: int) -> dict:
         with open(os.path.join(self._meta, f"v{snapshot_id}.json")) as f:
             return json.load(f)
+
+    def _head(self) -> tuple[int, dict]:
+        """(current snapshot id, its manifest); raises on an empty table."""
+        cur_id = self.current_snapshot_id()
+        if cur_id == 0:
+            raise ValueError(f"no snapshots in {self.path}")
+        return cur_id, self._manifest(cur_id)
 
     def snapshots(self) -> list[dict]:
         """The COMMITTED history, oldest first (the ``.snapshots``
@@ -497,13 +507,12 @@ class SnapshotTable:
                     for name in sorted(os.listdir(stage))
                     if name.endswith(".parquet")
                 ]
-                if any(rows for _, rows in staged):
-                    # Spark writes a 0-row placeholder file when the
-                    # first partition is empty; it carries no zone-map
-                    # stats, so every pruned read would keep it and
-                    # apply pending deletes to it. A wholly empty df
-                    # keeps its placeholder (it records the schema).
-                    staged = [(name, rows) for name, rows in staged if rows]
+                # Spark writes a 0-row placeholder file when the first
+                # partition (or the whole df) is empty; it carries no
+                # zone-map stats, so every pruned read would keep it and
+                # apply pending deletes to it. Drop it: the manifest's
+                # schema_meta records the schema.
+                staged = [(name, rows) for name, rows in staged if rows]
                 for name, rows in staged:
                     dst = os.path.join(self._data, f"{uuid.uuid4().hex}.parquet")
                     os.replace(os.path.join(stage, name), dst)
@@ -796,10 +805,7 @@ class SnapshotTable:
     # ---- schema evolution (metadata-only, field-id resolved) -----------
     def _metadata_commit(self, operation: str, schema_meta: list,
                          partition_spec: list[str] | None = None) -> int:
-        cur_id = self.current_snapshot_id()
-        if cur_id == 0:
-            raise ValueError(f"no snapshots in {self.path}")
-        cur = self._manifest(cur_id)
+        _, cur = self._head()
         return self._commit(
             cur["files"], cur["n_records"], operation,
             file_stats=cur.get("file_stats", {}),
@@ -1393,36 +1399,32 @@ class SnapshotTable:
             return p[5:]
         return p
 
-    def merge(self, source: DataFrame, key: str) -> int:
-        """Copy-on-write MERGE INTO, file-pruned exactly like
-        Iceberg's: WHEN MATCHED UPDATE SET * / WHEN NOT MATCHED
-        INSERT * — the source row wins for every key it carries.
+    def _rewrite(
+        self,
+        cur_id: int,
+        cur: dict,
+        operation: str,
+        locate: Callable[[DataFrame], DataFrame],
+        rewrite: Callable[[DataFrame], DataFrame],
+    ) -> int:
+        """The copy-on-write commit behind ``merge``, ``update_where``,
+        ``merge_into`` and ``delete_where``, file-pruned like Iceberg's.
 
-        Plan shape: ONE metadata pass (broadcast-friendly semi join on
-        the merge key against ``_metadata.file_path``) locates the
-        data files containing matched keys; only THOSE files rewrite
-        (their non-matched rows anti-join the source keys, then union
-        every source row — updates and inserts both land in the
-        replacement files), and every untouched file carries into the
-        new manifest verbatim with its sequence number and zone maps.
-        A ten-row MERGE into a 100 TB table rewrites the files holding
-        those ten keys, never the table. Readers of older snapshots
-        are untouched (tested: snapshot isolation in
-        tests/test_snapshots.py).
-
-        The source feeds the semi join, the survivors' anti join and
-        the union, so it is lazily checkpointed: the first of them
-        evaluates it once and the others read the checkpoint.
-        """
-        cur_id = self.current_snapshot_id()
-        if cur_id == 0:
-            raise ValueError(f"no snapshots in {self.path}")
-        cur = self._manifest(cur_id)
-        source = source.localCheckpoint(eager=False)
-        keys_df = source.select(key)
+        ONE metadata pass locates the files to rewrite: ``locate`` maps
+        the live snapshot ``cur_id``, read with ``_metadata.file_path``,
+        to the rows that force their file's rewrite, and the distinct
+        paths are collected. Only THOSE files are read back; ``rewrite``
+        maps their rows to the replacement rows, written under the
+        table's partition spec with this commit's sequence number (their
+        changes are already applied). Every untouched file carries into
+        the new manifest verbatim with its sequence number (pending MOR
+        deletes stay correctly scoped), zone maps and sidecar row count,
+        so a ten-row MERGE into a 100 TB table rewrites the files holding
+        those ten keys, never the table. Readers of older snapshots are
+        untouched (tested: snapshot isolation in tests/test_snapshots.py).
+        The commit keeps ``cur``'s schema."""
         hits = (
-            self.read(snapshot_id=cur_id, keep_meta=True)
-            .join(keys_df, on=key, how="left_semi")
+            locate(self.read(snapshot_id=cur_id, keep_meta=True))
             .select("_file_path")
             .distinct()
             .collect()  # bounded by the manifest's file count
@@ -1430,31 +1432,50 @@ class SnapshotTable:
         hit_paths = {self._norm_uri(r._file_path) for r in hits}
         untouched = [f for f in cur["files"] if f not in hit_paths]
         to_rewrite = [f for f in cur["files"] if f in hit_paths]
-        survivors = self._read_files(cur, to_rewrite).join(
-            keys_df, on=key, how="left_anti"
-        )
-        # column order follows the TABLE schema; a source with same
-        # names but different order/nullability must not redefine it
-        merged = survivors.unionByName(
-            source.select(*[f[1] for f in cur["schema_meta"]])
-        )
-        spec = self.partition_spec()
-        files, n_new, st, nfm = self._write_files(merged, spec or None)
-        n_keep = self._rows_of(untouched)
+        out = rewrite(self._read_files(cur, to_rewrite))
+        spec = cur.get("partition_spec", [])
+        files, n_new, st, nfm = self._write_files(out, spec or None)
+        kept = set(untouched)
         kept_stats = {
-            f: s for f, s in cur.get("file_stats", {}).items() if f in set(untouched)
+            f: s for f, s in cur.get("file_stats", {}).items() if f in kept
         }
         return self._commit(
             untouched + files,
-            n_keep + n_new,
-            "merge",
-            merged.schema.json(),
+            self._rows_of(untouched) + n_new,
+            operation,
+            out.schema.json(),
             {**kept_stats, **st},
             eq_deletes=cur.get("eq_deletes", []),
             pos_deletes=cur.get("pos_deletes", []),
             new_file_meta=nfm,
             schema_meta=cur["schema_meta"],
             parent=cur_id,
+        )
+
+    def merge(self, source: DataFrame, key: str) -> int:
+        """Copy-on-write MERGE INTO (see ``_rewrite``): WHEN MATCHED
+        UPDATE SET * / WHEN NOT MATCHED INSERT * — the source row wins
+        for every key it carries. A semi join on the merge key locates
+        the files holding matched keys; their non-matched rows
+        anti-join the source keys, then union every source row, so
+        updates and inserts both land in the replacement files.
+
+        The source feeds the semi join, the survivors' anti join and
+        the union, so it is lazily checkpointed: the first of them
+        evaluates it once and the others read the checkpoint.
+        """
+        cur_id, cur = self._head()
+        source = source.localCheckpoint(eager=False)
+        keys_df = source.select(key)
+        # column order follows the TABLE schema; a source with same
+        # names but different order/nullability must not redefine it
+        source_rows = source.select(*[f[1] for f in cur["schema_meta"]])
+        return self._rewrite(
+            cur_id,
+            cur,
+            "merge",
+            lambda live: live.join(keys_df, on=key, how="left_semi"),
+            lambda base: base.join(keys_df, on=key, how="left_anti").unionByName(source_rows),
         )
 
     def snapshot_as_of(self, ts: float) -> int:
@@ -1475,59 +1496,30 @@ class SnapshotTable:
         return best
 
     def update_where(self, condition, assignments: dict) -> int:
-        """Copy-on-write UPDATE, file-pruned like DELETE/MERGE: one
-        ``_metadata.file_path`` pass locates the files containing rows
-        where ``condition`` is TRUE; only those rewrite, with
-        ``assignments`` (column name → Column expression) applied to
-        the matching rows and every other row carried bit-identical;
-        untouched files carry into the new manifest verbatim. SQL
-        UPDATE semantics: a NULL condition updates nothing."""
-        cur_id = self.current_snapshot_id()
-        if cur_id == 0:
-            raise ValueError(f"no snapshots in {self.path}")
-        cur = self._manifest(cur_id)
+        """Copy-on-write UPDATE (see ``_rewrite``): the files containing
+        rows where ``condition`` is TRUE rewrite, with ``assignments``
+        (column name → Column expression) applied to the matching rows
+        and every other row carried bit-identical. SQL UPDATE
+        semantics: a NULL condition updates nothing."""
+        cur_id, cur = self._head()
         names = [f[1] for f in cur["schema_meta"]]
         unknown = [c for c in assignments if c not in names]
         if unknown:
             raise ValueError(f"assignments target unknown columns: {unknown}")
-        hits = (
-            self.read(snapshot_id=cur_id, keep_meta=True)
-            .filter(condition)
-            .select("_file_path")
-            .distinct()
-            .collect()  # bounded by the manifest's file count
-        )
-        hit_paths = {self._norm_uri(r._file_path) for r in hits}
-        untouched = [f for f in cur["files"] if f not in hit_paths]
-        to_rewrite = [f for f in cur["files"] if f in hit_paths]
-        base = self._read_files(cur, to_rewrite)
-        updated = base.select(
-            *[
-                (
-                    F.when(condition, assignments[c]).otherwise(F.col(c)).alias(c)
-                    if c in assignments
-                    else F.col(c)
-                )
-                for c in names
-            ]
-        )
-        spec = self.partition_spec()
-        files, n_new, st, nfm = self._write_files(updated, spec or None)
-        n_keep = self._rows_of(untouched)
-        kept_stats = {
-            f: s for f, s in cur.get("file_stats", {}).items() if f in set(untouched)
-        }
-        return self._commit(
-            untouched + files,
-            n_keep + n_new,
+        updated = [
+            (
+                F.when(condition, assignments[c]).otherwise(F.col(c)).alias(c)
+                if c in assignments
+                else F.col(c)
+            )
+            for c in names
+        ]
+        return self._rewrite(
+            cur_id,
+            cur,
             "update",
-            updated.schema.json(),
-            {**kept_stats, **st},
-            eq_deletes=cur.get("eq_deletes", []),
-            pos_deletes=cur.get("pos_deletes", []),
-            new_file_meta=nfm,
-            schema_meta=cur["schema_meta"],
-            parent=cur_id,
+            lambda live: live.filter(condition),
+            lambda base: base.select(*updated),
         )
 
     def row_count(self, snapshot_id: int | None = None) -> int:
@@ -1560,10 +1552,7 @@ class SnapshotTable:
         serves this from manifest entries the same way). Files written
         under a spec that did not partition on a column report a NULL
         for it."""
-        cur_id = self.current_snapshot_id()
-        if cur_id == 0:
-            raise ValueError(f"no snapshots in {self.path}")
-        m = self._manifest(cur_id)
+        _, m = self._head()
         fm = self._files_meta()
         agg: dict[tuple, dict] = {}
         for p in m["files"]:
@@ -1589,7 +1578,7 @@ class SnapshotTable:
         not_matched_by_source_delete: str | bool | None = None,
     ) -> int:
         """Full conditional MERGE INTO (Iceberg/SQL:2003 clause set),
-        file-pruned like ``merge``:
+        copy-on-write like ``merge`` (see ``_rewrite``):
 
         - WHEN MATCHED [AND ``matched_delete``] THEN DELETE
         - WHEN MATCHED THEN UPDATE SET ``matched_update``
@@ -1604,19 +1593,16 @@ class SnapshotTable:
           ``not_matched_by_source_update`` (column → expression over
           ``t.<col>``; delete clause wins where both apply)
 
-        File pruning covers BOTH sides: one metadata pass finds the
-        files containing matched keys, a second (only when a
-        NOT-MATCHED-BY-SOURCE clause is present) finds files holding
-        not-matched rows that satisfy the clause conditions — the
-        union rewrites, every other file carries verbatim. A bounded
-        sync clause (``t.k < cutoff``) therefore touches only the
-        files covering that key range, never the table. Duplicate
-        source keys raise (SQL MERGE cardinality violation), checked
-        with one aggregate over the SOURCE only — the small side."""
-        cur_id = self.current_snapshot_id()
-        if cur_id == 0:
-            raise ValueError(f"no snapshots in {self.path}")
-        cur = self._manifest(cur_id)
+        File pruning covers BOTH sides in the one locate pass: the
+        files containing matched keys, unioned (only when a
+        NOT-MATCHED-BY-SOURCE clause is present) with the files holding
+        not-matched rows that satisfy the clause conditions, rewrite;
+        every other file carries verbatim. A bounded sync clause
+        (``t.k < cutoff``) therefore touches only the files covering
+        that key range, never the table. Duplicate source keys raise
+        (SQL MERGE cardinality violation), checked with one aggregate
+        over the SOURCE only — the small side."""
+        cur_id, cur = self._head()
         names = [f[1] for f in cur["schema_meta"]]
         dup = (
             source.groupBy(key).count().filter(F.col("count") > 1).limit(1).count()
@@ -1627,158 +1613,110 @@ class SnapshotTable:
                 f"values of {key!r} (each target row may match at most one)"
             )
         keys_df = source.select(key)
-        hits = (
-            self.read(snapshot_id=cur_id, keep_meta=True)
-            .join(keys_df, on=key, how="left_semi")
-            .select("_file_path")
-            .distinct()
-            .collect()  # bounded by the manifest's file count
-        )
-        hit_paths = {self._norm_uri(r._file_path) for r in hits}
-        nmbs_conds: list[str | bool] = []
+        if matched_update is None:
+            matched_update = {c: F.col(f"s.{c}") for c in names if c != key}
+        nmbs_update = not_matched_by_source_update or {}
+        # the NOT MATCHED BY SOURCE clauses' conditions over t.<col>
+        # (None: clause absent); a clause without one applies to all
+        nmbs_dcond = nmbs_ucond = None
         if not_matched_by_source_delete is not None:
-            nmbs_conds.append(not_matched_by_source_delete)
-        if not_matched_by_source_update is not None:
-            nmbs_conds.append(
-                True
-                if not_matched_by_source_update_cond is None
-                else not_matched_by_source_update_cond
-            )
-        if nmbs_conds:
-            extra = (
-                self.read(snapshot_id=cur_id, keep_meta=True)
-                .alias("t")
-                .join(keys_df, on=key, how="left_anti")
-            )
-            if not any(c is True for c in nmbs_conds):
-                extra = extra.filter(
-                    F.expr(" OR ".join(f"({c})" for c in nmbs_conds))
-                )
-            hit_paths |= {
-                self._norm_uri(r._file_path)
-                for r in extra.select("_file_path").distinct().collect()
-            }
-        untouched = [f for f in cur["files"] if f not in hit_paths]
-        to_rewrite = [f for f in cur["files"] if f in hit_paths]
-        t = self._read_files(cur, to_rewrite).alias("t")
-        s = source.alias("s")
-        joined = t.join(
-            s, F.col(f"t.{key}") == F.col(f"s.{key}"), "left"
-        )
-        matched = F.col(f"s.{key}").isNotNull()
-        if matched_delete is not None:
-            joined = joined.filter(
-                ~(matched & F.coalesce(matched_delete, F.lit(False)))
-            )
-        if not_matched_by_source_delete is not None:
-            dcond = (
+            nmbs_dcond = (
                 F.lit(True)
                 if not_matched_by_source_delete is True
                 else F.expr(not_matched_by_source_delete)
             )
-            joined = joined.filter(
-                ~(~matched & F.coalesce(dcond, F.lit(False)))
+        if not_matched_by_source_update is not None:
+            nmbs_ucond = (
+                F.lit(True)
+                if not_matched_by_source_update_cond is None
+                else F.expr(not_matched_by_source_update_cond)
             )
-        if matched_update is None:
-            matched_update = {c: F.col(f"s.{c}") for c in names if c != key}
-        nmbs_update = not_matched_by_source_update or {}
-        nmbs_ucond = (
-            F.lit(True)
-            if not_matched_by_source_update_cond is None
-            else F.expr(not_matched_by_source_update_cond)
-        )
+        nmbs_conds = [c for c in (nmbs_dcond, nmbs_ucond) if c is not None]
 
-        def _out_col(c: str):
-            expr = None
-            if c in matched_update:
-                expr = F.when(matched, matched_update[c])
-            if c in nmbs_update:
-                branch = ~matched & F.coalesce(nmbs_ucond, F.lit(False))
-                expr = (
-                    F.when(branch, nmbs_update[c])
-                    if expr is None
-                    else expr.when(branch, nmbs_update[c])
+        def locate(live: DataFrame) -> DataFrame:
+            hits = live.join(keys_df, on=key, how="left_semi")
+            if not nmbs_conds:
+                return hits
+            extra = live.alias("t").join(keys_df, on=key, how="left_anti")
+            return hits.unionByName(extra.filter(reduce(operator.or_, nmbs_conds)))
+
+        def rewrite(base: DataFrame) -> DataFrame:
+            t = base.alias("t")
+            s = source.alias("s")
+            joined = t.join(
+                s, F.col(f"t.{key}") == F.col(f"s.{key}"), "left"
+            )
+            matched = F.col(f"s.{key}").isNotNull()
+            if matched_delete is not None:
+                joined = joined.filter(
+                    ~(matched & F.coalesce(matched_delete, F.lit(False)))
                 )
-            if expr is None:
-                return F.col(f"t.{c}").alias(c)
-            return expr.otherwise(F.col(f"t.{c}")).alias(c)
+            if nmbs_dcond is not None:
+                joined = joined.filter(
+                    ~(~matched & F.coalesce(nmbs_dcond, F.lit(False)))
+                )
 
-        survivors = joined.select(*[_out_col(c) for c in names])
-        out = survivors
-        if insert_not_matched:
+            def _out_col(c: str):
+                expr = None
+                if c in matched_update:
+                    expr = F.when(matched, matched_update[c])
+                if c in nmbs_update:
+                    branch = ~matched & F.coalesce(nmbs_ucond, F.lit(False))
+                    expr = (
+                        F.when(branch, nmbs_update[c])
+                        if expr is None
+                        else expr.when(branch, nmbs_update[c])
+                    )
+                if expr is None:
+                    return F.col(f"t.{c}").alias(c)
+                return expr.otherwise(F.col(f"t.{c}")).alias(c)
+
+            survivors = joined.select(*[_out_col(c) for c in names])
+            if not insert_not_matched:
+                return survivors
             inserts = s.join(
                 t.select(key), on=key, how="left_anti"
             ).select(*names)
-            out = survivors.unionByName(inserts)
-        spec = self.partition_spec()
-        files, n_new, st, nfm = self._write_files(out, spec or None)
-        n_keep = self._rows_of(untouched)
-        kept_stats = {
-            f: stt for f, stt in cur.get("file_stats", {}).items()
-            if f in set(untouched)
-        }
-        return self._commit(
-            untouched + files,
-            n_keep + n_new,
-            "merge",
-            out.schema.json(),
-            {**kept_stats, **st},
-            eq_deletes=cur.get("eq_deletes", []),
-            pos_deletes=cur.get("pos_deletes", []),
-            new_file_meta=nfm,
-            schema_meta=cur["schema_meta"],
-            parent=cur_id,
-        )
+            return survivors.unionByName(inserts)
+
+        return self._rewrite(cur_id, cur, "merge", locate, rewrite)
 
     def delete_where(self, condition) -> int:
-        """Copy-on-write DELETE, file-pruned exactly like Iceberg's:
-        one scan locates the data files that CONTAIN matching rows
-        (via ``_metadata.file_path``), only THOSE files are rewritten
-        without their matches, and every untouched file is carried
-        into the new manifest verbatim — at 100 TB a delete touching
-        one day's partition rewrites that day, never the table.
-        Untouched files keep their sequence numbers, so pending MOR
-        deletes stay correctly scoped; rewritten files take the new
-        commit's sequence (their matches are already applied).
+        """Copy-on-write DELETE (see ``_rewrite``): the files that
+        CONTAIN rows where ``condition`` is TRUE rewrite without them —
+        at 100 TB a delete touching one day's partition rewrites that
+        day, never the table.
 
         SQL DELETE semantics: rows where ``condition`` is NULL are
         NOT deleted (``WHERE`` three-valued logic)."""
-        cur_id = self.current_snapshot_id()
-        if cur_id == 0:
-            raise ValueError(f"no snapshots in {self.path}")
-        cur = self._manifest(cur_id)
-        hits = (
-            self.read(snapshot_id=cur_id, keep_meta=True)
-            .filter(condition)
-            .select("_file_path")
-            .distinct()
-            .collect()  # bounded by the manifest's file count
+        cur_id, cur = self._head()
+        return self._rewrite(
+            cur_id,
+            cur,
+            "delete",
+            lambda live: live.filter(condition),
+            lambda base: base.filter(~F.coalesce(condition, F.lit(False))),
         )
 
-        hit_paths = {self._norm_uri(r._file_path) for r in hits}
-        untouched = [f for f in cur["files"] if f not in hit_paths]
-        to_rewrite = [f for f in cur["files"] if f in hit_paths]
-        survivors = self._read_files(cur, to_rewrite).filter(
-            ~F.coalesce(condition, F.lit(False))
-        )
-        spec = self.partition_spec()
-        files, n_new, st, nfm = self._write_files(survivors, spec or None)
-        n_keep = self._rows_of(untouched)
-        kept_stats = {
-            f: s for f, s in cur.get("file_stats", {}).items() if f in set(untouched)
-        }
-        return self._commit(
-            untouched + files,
-            n_keep + n_new,
-            "delete",
-            survivors.schema.json(),
-            {**kept_stats, **st},
-            eq_deletes=cur.get("eq_deletes", []),
-            pos_deletes=cur.get("pos_deletes", []),
-            new_file_meta=nfm,
-            schema_meta=cur["schema_meta"],
-            parent=cur_id,
-        )
+    def _write_delete_file(self, df: DataFrame) -> str:
+        """Write ``df`` as one parquet file under ``deletes/`` (staged
+        then renamed in, so a failed write leaves nothing there);
+        return its path."""
+        import shutil
+
+        ddir = os.path.join(self.path, "deletes")
+        os.makedirs(ddir, exist_ok=True)
+        stage = tempfile.mkdtemp(prefix="itws_delstage_")
+        try:
+            df.coalesce(1).write.mode("overwrite").parquet(stage)
+            part = next(
+                f for f in sorted(os.listdir(stage)) if f.endswith(".parquet")
+            )
+            dst = os.path.join(ddir, f"{uuid.uuid4().hex}.parquet")
+            os.replace(os.path.join(stage, part), dst)
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+        return dst
 
     def delete_keys(self, keys: DataFrame, key_col: str) -> int:
         """MERGE-ON-READ equality DELETE (Iceberg v2 delete files):
@@ -1798,30 +1736,14 @@ class SnapshotTable:
         Iceberg's per-file accounting. Time travel to a pre-delete
         snapshot still shows the rows — deletes are snapshot metadata,
         not mutations."""
-        import shutil
-
-        cur_id = self.current_snapshot_id()
-        if cur_id == 0:
-            raise ValueError(f"no snapshots in {self.path}")
-        cur = self._manifest(cur_id)
+        cur_id, cur = self._head()
         fid = next(
             (int(f[0]) for f in cur["schema_meta"] if f[1] == key_col), None
         )
         if fid is None:
             raise ValueError(f"no such column: {key_col!r}")
-        ddir = os.path.join(self.path, "deletes")
-        os.makedirs(ddir, exist_ok=True)
-        stage = tempfile.mkdtemp(prefix="itws_delstage_")
-        try:
-            key_df = keys.select(F.col(key_col)).distinct()
-            key_df.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = next(
-                f for f in sorted(os.listdir(stage)) if f.endswith(".parquet")
-            )
-            dst = os.path.join(ddir, f"{uuid.uuid4().hex}.parquet")
-            os.replace(os.path.join(stage, part), dst)
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+        key_df = keys.select(F.col(key_col)).distinct()
+        dst = self._write_delete_file(key_df)
         eq = list(cur.get("eq_deletes", [])) + [
             # seq stamped by _commit
             {"key": key_col, "fid": fid, "path": dst, "schema": key_df.schema.json()}
@@ -1845,12 +1767,7 @@ class SnapshotTable:
         and stable per file); readers anti-join on (file, pos), scoped
         inherently because the delete names exact files. Compaction
         applies and clears them like equality deletes."""
-        import shutil
-
-        cur_id = self.current_snapshot_id()
-        if cur_id == 0:
-            raise ValueError(f"no snapshots in {self.path}")
-        cur = self._manifest(cur_id)
+        cur_id, cur = self._head()
         matches = (
             self.read(snapshot_id=cur_id, keep_meta=True)
             .filter(condition)
@@ -1859,18 +1776,7 @@ class SnapshotTable:
                 F.col("_pos").alias("row_index"),
             )
         )
-        ddir = os.path.join(self.path, "deletes")
-        os.makedirs(ddir, exist_ok=True)
-        stage = tempfile.mkdtemp(prefix="itws_posdelstage_")
-        try:
-            matches.coalesce(1).write.mode("overwrite").parquet(stage)
-            part = next(
-                f for f in sorted(os.listdir(stage)) if f.endswith(".parquet")
-            )
-            dst = os.path.join(ddir, f"{uuid.uuid4().hex}.parquet")
-            os.replace(os.path.join(stage, part), dst)
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+        dst = self._write_delete_file(matches)
         # the files this delete touches — bounded by the manifest's
         # file count, which is already driver-held metadata
         touched = [

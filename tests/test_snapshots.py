@@ -181,8 +181,8 @@ def test_file_stats_recorded_on_every_commit(spark):
 def test_append_with_empty_first_partition_writes_no_empty_file(spark):
     """Spark writes a 0-row placeholder file when a DataFrame's first
     partition is empty. It carries no zone-map stats, so every pruned
-    read kept it; the write path drops it when the write has rows, and
-    the commit plans like a one-partition append of the same rows."""
+    read kept it; the write path drops it, and the commit plans like a
+    one-partition append of the same rows."""
 
     def table_after_append(batch):
         tbl = SnapshotTable(spark, tempfile.mkdtemp(prefix="itws_emptypart_"))
@@ -791,7 +791,7 @@ def test_delete_where_rewrites_only_matching_files(spark, tmp_path):
     after = tbl._manifest(s2)["files"]
     carried = set(before) & set(after)
     assert carried, "no file was carried — delete rewrote the world"
-    assert set(after) - set(before), "matching files were not rewritten"
+    assert set(before) - set(after), "matching files did not leave the manifest"
     assert len(carried) >= 5, (before, after)
     got = {r.id for r in tbl.read().collect()}
     assert got == set(range(25, 100))
@@ -1438,3 +1438,47 @@ def test_only_pinned_helpers_read_parquet():
     }
     in_verbs = [fn for fn in reads_by_function(api_mod) if fn in minhash_verbs]
     assert in_verbs == ["_read_component"]
+
+
+def test_copy_on_write_verbs_share_one_rewrite_core():
+    """Source guard: in snapshots.py the ``_file_path`` locate pass
+    (``.distinct().collect()``) lives only in ``SnapshotTable._rewrite``,
+    and no copy-on-write verb writes or commits files on its own."""
+    import ast
+
+    import iceberg_twist_spark.sources.snapshots as snap_mod
+
+    with open(snap_mod.__file__, encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    cls = next(n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "SnapshotTable")
+    defs = {
+        n.name: ast.unparse(n)
+        for n in tree.body + cls.body
+        if isinstance(n, ast.FunctionDef)
+    }
+    locate = ".select('_file_path').distinct().collect()"
+    assert [name for name, src in defs.items() if locate in src] == ["_rewrite"]
+    for verb in ("merge", "update_where", "merge_into", "delete_where"):
+        assert "self._rewrite(" in defs[verb], verb
+        assert "self._commit(" not in defs[verb], verb
+        assert "self._write_files(" not in defs[verb], verb
+
+
+def test_copy_on_write_commits_leave_no_empty_files(spark, tmp_path):
+    """A copy-on-write commit that writes no rows (nothing matched, or
+    whole files deleted) adds no data file: a 0-row file carries no
+    zone maps, so every pruned read would keep it."""
+    tbl = SnapshotTable(spark, str(tmp_path / "t"))
+    # four files: ids 0-9, 10-19, 20-29, 30-39
+    tbl.create(spark.range(0, 40, 1, 4).selectExpr("id", "id * 10 AS v"))
+    tbl.delete_where(F.col("id") > 1000)
+    tbl.update_where(F.col("id") > 1000, {"v": F.lit(0)})
+    tbl.delete_where(F.col("id") < 20)
+    source = spark.createDataFrame([(500, 1)], "id long, v long")
+    tbl.merge_into(source, "id", insert_not_matched=False)
+    m = tbl._manifest(tbl.current_snapshot_id())
+    fm = tbl._files_meta()
+    assert len(m["files"]) == 2
+    assert all(fm[f]["rows"] > 0 and m["file_stats"].get(f) for f in m["files"])
+    assert m["n_records"] == 20
+    assert sorted(r.id for r in tbl.read().collect()) == list(range(20, 40))

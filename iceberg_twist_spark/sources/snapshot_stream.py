@@ -1,27 +1,33 @@
-"""Streaming SOURCE over a snapshot table: tail the commit log.
+"""Streaming SOURCES over a snapshot table: tail the commit log.
 
 The dual of ``q_stream_iceberg_sink`` (snapshots.py writes one atomic
 snapshot per micro-batch): here ``spark.readStream`` TAILS a
-``SnapshotTable``, one-or-more APPEND commits per micro-batch, so a
+``SnapshotTable``, one-or-more commits per micro-batch, so a
 downstream job consumes exactly the committed increments — never a
 half-written file (files only become visible when their manifest's
 pointer swap lands), never a re-read of the base.
 
 Offsets are SNAPSHOT IDS — the natural exactly-once cursor for a
-table whose commits are atomic: restart/replay re-reads precisely the
-manifest file-set difference between two ids (the same arithmetic as
-``SnapshotTable.read_incremental``). Non-append commits in the tailed
-range RAISE, mirroring Iceberg's streaming-read default (an overwrite
-makes "files added" ≠ "rows added"; a consumer that wants those must
-switch to ``read_changelog``).
+table whose commits are atomic — and they step along the committed
+parent chain (``SnapshotTable._chain_segment``). Both sources execute
+the table's own metadata-only plans on pyarrow: ``itws_snaptail``
+reads ``SnapshotTable.added_files`` (the ``read_incremental`` plan;
+non-append commits in the tailed range RAISE, mirroring Iceberg's
+streaming-read default — an overwrite makes "files added" ≠ "rows
+added"), and ``itws_cdctail`` reads ``SnapshotTable.changelog_plan``
+(the ``read_changelog`` plan, every commit shape). ``_arrow_read`` is
+``SnapshotTable._read_files`` on pyarrow, over the same
+``_scan_groups`` plan. The readers run in a Python worker without a
+session, so they hold a ``SnapshotTable(None, path)``: the plan
+methods read metadata only.
 
 Scale notes: this is the ``SimpleDataSourceStreamReader`` face —
 rows surface through the driver-side prefetcher, which is the right
 tool for the CHECKED fixture (bounded increments, exact offsets). A
 100 TB tail would implement ``streamReader`` instead (partition-
-planned: each micro-batch's added FILES become input partitions read
-by executors); the offset model — snapshot ids, file-set difference —
-is identical, and that is the part this module verifies.
+planned: each micro-batch's plan steps become input partitions read
+by executors); the offset model and the plan are identical, and they
+are what this module verifies.
 
 Reference parity: the reference tails a serial port into satellite
 messages (`iceberg-twist/serial_streaming.lua:129-382`); the engine
@@ -32,7 +38,7 @@ lakehouse commit log.
 from __future__ import annotations
 
 import json
-import os
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,77 +52,125 @@ from iceberg_twist_spark.sources.snapshots import (
     _changelog_table,
 )
 
-
-def _manifest(path: str, snap: int) -> dict:
-    with open(os.path.join(path, "metadata", f"v{snap}.json")) as f:
-        return json.load(f)
-
-
-def _current_id(path: str) -> int:
-    hint = os.path.join(path, "metadata", "version-hint.text")
-    if not os.path.exists(hint):
-        return 0
-    with open(hint) as f:
-        return int(f.read().strip())
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"  # a null identity partition value
 
 
 def _committed_above(path: str, lo: int) -> list[int]:
     """Snapshot ids on the COMMITTED chain strictly above ``lo``,
-    ascending — derived by walking ``parent_id`` pointers down from
-    the current pointer, never by id arithmetic: ids are allocated to
-    staged WAP snapshots and CAS-conflict orphans too, and those must
-    neither be emitted as committed rows nor wedge the tail."""
-    cur = _current_id(path)
-    chain: list[int] = []
-    i = cur
-    while i and i != lo:
-        chain.append(i)
-        i = _manifest(path, i).get("parent_id") or 0
-    if i != lo and lo != 0:
-        raise ValueError(f"snapshot {lo} is not an ancestor of {cur}")
-    chain.reverse()
-    return chain
+    ascending — walked down the parent pointers from the current one,
+    never by id arithmetic: ids are allocated to staged WAP snapshots
+    and CAS-conflict orphans too, and those must neither be emitted as
+    committed rows nor wedge the tail."""
+    table = SnapshotTable(None, path)
+    return [m["snapshot_id"] for m in table._chain_segment(lo, table.current_snapshot_id())]
 
 
-def _added_files(path: str, lo: int, hi: int) -> list[str]:
-    """Files added by the append chain (lo, hi]; raises on non-append
-    commits (Iceberg's streaming-scan restriction)."""
-    if hi <= lo:
-        return []
-    segment = []  # hi → exclusive lo, newest first
-    i = hi
-    while i and i != lo:
-        m = _manifest(path, i)
-        segment.append(m)
-        i = m.get("parent_id") or 0
-    if i != lo and lo != 0:
-        raise ValueError(f"snapshot {lo} is not an ancestor of {hi}")
-    # every commit in the range must be an append — except that when
-    # tailing from 0 the chain's FIRST (table-creating) commit may be
-    # the initial overwrite
-    creating = segment[-1]["snapshot_id"] if (segment and lo == 0) else None
-    non_append = [
-        m["snapshot_id"]
-        for m in segment
-        if m["operation"] != "append" and m["snapshot_id"] != creating
-    ]
-    if non_append:
-        raise ValueError(
-            f"snapshot tail crossed non-append commits {sorted(non_append)}: "
-            "files-added no longer equals rows-added (use read_changelog)"
-        )
-    base = set(_manifest(path, lo)["files"]) if lo else set()
-    return [f for f in _manifest(path, hi)["files"] if f not in base]
+def _by_id(t, name_by_id: dict, meta: list):
+    """Arrow table ``t`` projected to schema ``meta`` BY FIELD ID: each
+    field reads the column ``name_by_id`` maps its id to, cast to the
+    field's arrow type; fields without one read NULL."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(SnapshotTable._struct_from_meta(meta))
+    cols = []
+    for f, field in zip(meta, schema):
+        src = name_by_id.get(int(f[0]))
+        if src in t.column_names:
+            cols.append(t[src].cast(field.type))
+        else:
+            cols.append(pa.nulls(t.num_rows, field.type))
+    return pa.Table.from_arrays(cols, schema=schema)
+
+
+def _align(t, from_meta: list, to_meta: list):
+    """A read under ``from_meta`` projected to ``to_meta`` by field id
+    (``SnapshotTable._align_to`` on pyarrow)."""
+    return _by_id(t, {int(f[0]): f[1] for f in from_meta}, to_meta)
+
+
+def _named(t, deletes: list[dict]):
+    """Mask of the rows of ``t`` (read ``with_pos``) that the position
+    delete files ``deletes`` name."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pairs = set()
+    for d in deletes:
+        named = pq.read_table(d["path"])
+        paths = map(SnapshotTable._norm_uri, named["file_path"].to_pylist())
+        pairs.update(zip(paths, named["row_index"].to_pylist()))
+    keys = zip(t["_file_path"].to_pylist(), t["_pos"].to_pylist())
+    return pa.array([k in pairs for k in keys], pa.bool_())
+
+
+def _keyed(t, d: dict, key: str):
+    """Mask of the rows of ``t`` whose ``key`` is in equality delete
+    ``d``'s key file (a NULL key matches nothing, as in a join)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    keys = pq.read_table(d["path"]).column(0).combine_chunks()
+    return pc.is_in(t[key], value_set=keys.cast(t[key].type), skip_nulls=True)
+
+
+def _with_pos(t, path: str | None):
+    """``t`` (one data file's rows) plus their ``_file_path`` and
+    physical ordinal ``_pos``, the pair a position delete names."""
+    import pyarrow as pa
+
+    n = t.num_rows
+    t = t.append_column("_file_path", pa.array([path] * n, pa.string()))
+    return t.append_column("_pos", pa.array(range(n), pa.int64()))
+
+
+def _arrow_read(table: SnapshotTable, m: dict, files: list[str], with_pos: bool = False):
+    """``SnapshotTable._read_files`` on pyarrow, over the same
+    ``_scan_groups`` plan: ``files`` under manifest ``m``'s schema —
+    columns resolved by field id and cast to the schema's arrow types,
+    identity partition values restored from the sidecar and cast, the
+    manifest's position deletes and sequence-scoped equality deletes
+    applied. ``with_pos`` keeps each row's ``_file_path`` and physical
+    ordinal ``_pos``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    meta = m["schema_meta"]
+    fm = table._files_meta()
+    parts = []
+    for _schema, name_by_id, _base, eq, pos, group in table._scan_groups(m, files):
+        reads = []
+        for f in group:
+            raw = pq.read_table(f)
+            for k, v in fm.get(f, {}).get("partition", {}).items():
+                if k not in raw.column_names:
+                    val = None if v == _HIVE_NULL else v
+                    raw = raw.append_column(k, pa.array([val] * raw.num_rows, pa.string()))
+            reads.append(_with_pos(_by_id(raw, name_by_id, meta), f))
+        t = pa.concat_tables(reads)
+        if pos:
+            t = t.filter(pc.invert(_named(t, pos)))
+        for d, key in eq:
+            t = t.filter(pc.invert(_keyed(t, d, key)))
+        parts.append(t)
+    t = pa.concat_tables(parts or [_with_pos(_by_id(pa.table({}), {}, meta), None)])
+    return t if with_pos else t.drop_columns(["_file_path", "_pos"])
+
+
+def _tuples(t, columns: list[str]) -> list[tuple]:
+    return list(zip(*(t[c].to_pylist() for c in columns)))
 
 
 class _SnapshotTailReader(SimpleDataSourceStreamReader):
     """Micro-batch pull from the commit log: each ``read`` advances
     the snapshot-id offset by up to ``snapshots_per_batch`` committed
-    appends and emits the added files' rows. Offsets are snapshot
-    ids, so checkpoint replay re-reads the exact manifest diff."""
+    appends and emits the added files' rows (``read_incremental``'s).
+    Offsets are snapshot ids, so checkpoint replay re-reads the exact
+    manifest diff."""
 
     def __init__(self, options: dict):
-        self.path = options["path"]
+        self.table = SnapshotTable(None, options["path"])
         self.per_batch = int(options.get("snapshots_per_batch", 1))
         self.start_snap = int(options.get("from_snapshot", 0))
         self.columns = [
@@ -126,16 +180,11 @@ class _SnapshotTailReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"snapshot": self.start_snap}
 
-    def _rows(self, files: list[str]):
-        import pyarrow.parquet as pq
-
-        out = []
-        for f in files:
-            tbl = pq.read_table(f, columns=self.columns)
-            out.extend(
-                tuple(d[c] for c in self.columns) for d in tbl.to_pylist()
-            )
-        return out
+    def _rows(self, lo: int, hi: int) -> list[tuple]:
+        if hi <= lo:
+            return []
+        files = self.table.added_files(lo, hi)
+        return _tuples(_arrow_read(self.table, self.table._manifest(hi), files), self.columns)
 
     def read(self, start: dict):
         lo = int(start["snapshot"])
@@ -143,20 +192,15 @@ class _SnapshotTailReader(SimpleDataSourceStreamReader):
         # NOT lo + per_batch: staged/orphaned manifests own ids too,
         # and stepping onto one would leak unaudited data then wedge
         # the query on 'not an ancestor' (r10 advice)
-        ahead = _committed_above(self.path, lo)
+        ahead = _committed_above(self.table.path, lo)
         if not ahead:
             return iter([]), {"snapshot": lo}
         hi = ahead[min(self.per_batch, len(ahead)) - 1]
-        rows = self._rows(_added_files(self.path, lo, hi))
         # iter(list) — survives the prefetch cache's copy + next probe
-        return iter(rows), {"snapshot": hi}
+        return iter(self._rows(lo, hi)), {"snapshot": hi}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        return iter(
-            self._rows(
-                _added_files(self.path, int(start["snapshot"]), int(end["snapshot"]))
-            )
-        )
+        return iter(self._rows(int(start["snapshot"]), int(end["snapshot"])))
 
 
 class SnapshotTailDataSource(DataSource):
@@ -275,208 +319,18 @@ def q_stream_snapshot_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---- changelog tail: stream the CDC feed, not just appends -----------
-# The generalization the r10 verdict asked for: where the snapshot
-# tail RAISES on non-append commits (files-added ≠ rows-added), this
-# source emits read_changelog's (row, _change_type,
-# _commit_snapshot_id) rows for EVERY commit shape — append,
-# eq-delete, pos-delete, and content rewrites — one committed
-# snapshot per micro-batch, aligned by field id. The computation here
-# is the pyarrow twin of SnapshotTable.read_changelog (same per-op
-# planning, same sequence scoping); the batch scan is the oracle it
-# is hash-checked against. Like the plain tail, this is the
+# Where the snapshot tail RAISES on non-append commits (files-added ≠
+# rows-added), this source emits read_changelog's (row, _change_type,
+# _commit_snapshot_id) rows for EVERY commit shape — append, eq-delete,
+# pos-delete, and content rewrites — one committed snapshot per
+# micro-batch, aligned by field id. It executes the table's own
+# SnapshotTable.changelog_plan on pyarrow (read_changelog executes the
+# same plan on Spark), and the batch scan is the oracle it is
+# hash-checked against. Like the plain tail, this is the
 # SimpleDataSourceStreamReader face: rows surface driver-side, which
 # is right for the checked fixture; a cluster-scale deployment would
-# implement streamReader and hand each commit's file set to executors
-# as input partitions — the offset model and per-commit planning are
-# identical, and they are what this module verifies.
-
-
-def _fmeta(path: str) -> dict:
-    p = os.path.join(path, "metadata", "files.json")
-    if not os.path.exists(p):
-        return {}
-    with open(p) as f:
-        return json.load(f)
-
-
-def _read_file_pdf(fpath: str, info: dict, schema_meta: list):
-    """One data file → pandas frame under ``schema_meta`` (identity
-    partition values restored from the sidecar, columns resolved by
-    FIELD ID exactly like SnapshotTable._read_files)."""
-    import pandas as pd
-    import pyarrow.parquet as pq
-
-    pdf = pq.read_table(fpath).to_pandas()
-    fids = info.get("field_ids", {})
-    type_by_fid = {int(f[0]): f[2] for f in schema_meta}
-    for k, v in (info.get("partition") or {}).items():
-        if k in pdf.columns or k not in fids:
-            continue  # transform-derived dirs never re-enter the data
-        t = type_by_fid.get(int(fids[k]), "string")
-        if t in ("long", "integer", "int", "bigint"):
-            val = int(v)
-        elif t in ("double", "float"):
-            val = float(v)
-        else:
-            val = v
-        pdf[k] = val
-    by_fid = {int(fid): name for name, fid in fids.items()}
-    cols = {}
-    for f in schema_meta:
-        fid, name = int(f[0]), f[1]
-        w = by_fid.get(fid)
-        if w is not None and w in pdf.columns:
-            cols[name] = pdf[w]
-        else:
-            cols[name] = pd.Series([None] * len(pdf), index=pdf.index)
-    return pd.DataFrame(cols)
-
-
-def _align_pdf(pdf, from_meta: list, to_meta: list):
-    """Field-id alignment between two schema vintages (the pandas twin
-    of SnapshotTable._align_to)."""
-    import pandas as pd
-
-    name_by_fid = {int(f[0]): f[1] for f in from_meta}
-    cols = {}
-    for f in to_meta:
-        fid, name = int(f[0]), f[1]
-        src = name_by_fid.get(fid)
-        if src is not None and src in pdf.columns:
-            cols[name] = pdf[src]
-        else:
-            cols[name] = pd.Series([None] * len(pdf), index=pdf.index)
-    return pd.DataFrame(cols)
-
-
-def _live_pdf(path: str, snap: int):
-    """MOR read of a snapshot as pandas: all data files, position
-    deletes dropped by (file, ordinal), equality deletes anti-joined
-    with Iceberg v2 SEQUENCE scoping (a delete applies only to
-    lower-sequence files), columns under the snapshot's schema."""
-    import pandas as pd
-    import pyarrow.parquet as pq
-
-    m = _manifest(path, snap)
-    fm = _fmeta(path)
-    meta = m["schema_meta"]
-    pos_drop: dict[str, set] = {}
-    for d in m.get("pos_deletes", []):
-        t = pq.read_table(d["path"]).to_pandas()
-        for fp, ix in zip(t.iloc[:, 0], t.iloc[:, 1]):
-            pos_drop.setdefault(os.path.basename(str(fp)), set()).add(int(ix))
-    name_by_fid = {int(f[0]): f[1] for f in meta}
-    eq = []
-    for d in m.get("eq_deletes", []):
-        kname = name_by_fid.get(d["fid"]) if "fid" in d else d["key"]
-        if kname is None:
-            continue  # key column since dropped — strict by-id skip
-        keys = set(pq.read_table(d["path"]).to_pandas().iloc[:, 0])
-        eq.append((d.get("seq", 1 << 62), kname, keys))
-    frames = []
-    for f in m["files"]:
-        info = fm.get(f, {})
-        drop = pos_drop.get(os.path.basename(f))
-        pdf = _read_file_pdf(f, info, meta)
-        if drop:
-            pdf = pdf.iloc[[i for i in range(len(pdf)) if i not in drop]]
-        fseq = info.get("seq", 0)
-        for dseq, kname, keys in eq:
-            if dseq > fseq and kname in pdf.columns:
-                pdf = pdf[~pdf[kname].isin(keys)]
-        frames.append(pdf)
-    names = [f[1] for f in meta]
-    if not frames:
-        return pd.DataFrame(columns=names)
-    return pd.concat(frames, ignore_index=True)
-
-
-def _multiset_diff(a, b):
-    """Rows of ``a`` not matched by ``b``, WITH multiplicity — the
-    pandas twin of DataFrame.exceptAll."""
-    import pandas as pd
-
-    if not len(a):
-        return a
-    cols = list(a.columns)
-    na = a.groupby(cols, dropna=False).size()
-    nb = b.groupby(cols, dropna=False).size() if len(b) else None
-    rows = []
-    for key, n in na.items():
-        n2 = int(nb.get(key, 0)) if nb is not None else 0
-        extra = int(n) - n2
-        if extra > 0:
-            rows.extend([key if isinstance(key, tuple) else (key,)] * extra)
-    return pd.DataFrame(rows, columns=cols)
-
-
-def _commit_change_rows(path: str, prev_id: int, sid: int, to_meta: list):
-    """The change rows one commit contributes, as a pandas frame under
-    ``to_meta`` plus (_change_type, _commit_snapshot_id) — mirroring
-    read_changelog's per-op planning."""
-    import pandas as pd
-    import pyarrow.parquet as pq
-
-    m = _manifest(path, sid)
-    pm = _manifest(path, prev_id)
-    fm = _fmeta(path)
-    op = m["operation"]
-    out = []  # (pdf_under_own_meta, own_meta, kind)
-    if op in SnapshotTable._NO_CHANGE_OPS:
-        pass
-    elif op == "append":
-        base = set(pm["files"])
-        added = [f for f in m["files"] if f not in base]
-        frames = [_read_file_pdf(f, fm.get(f, {}), m["schema_meta"]) for f in added]
-        if frames:
-            out.append((pd.concat(frames, ignore_index=True), m["schema_meta"], "insert"))
-    elif op == "eq-delete":
-        prev_names = {int(f[0]): f[1] for f in pm["schema_meta"]}
-        seen = {x["path"] for x in pm.get("eq_deletes", [])}
-        new_entries = [d for d in m.get("eq_deletes", []) if d["path"] not in seen]
-        prev = None
-        for d in new_entries:
-            kname = prev_names.get(d["fid"]) if "fid" in d else d["key"]
-            if kname is None:
-                continue
-            if prev is None:
-                prev = _live_pdf(path, prev_id)
-            keys = set(pq.read_table(d["path"]).to_pandas().iloc[:, 0])
-            gone = prev[prev[kname].isin(keys)]
-            out.append((gone, pm["schema_meta"], "delete"))
-    elif op == "pos-delete":
-        seen = {x["path"] for x in pm.get("pos_deletes", [])}
-        new_entries = [d for d in m.get("pos_deletes", []) if d["path"] not in seen]
-        for d in new_entries:
-            t = pq.read_table(d["path"]).to_pandas()
-            by_file: dict[str, set] = {}
-            for fp, ix in zip(t.iloc[:, 0], t.iloc[:, 1]):
-                by_file.setdefault(os.path.basename(str(fp)), set()).add(int(ix))
-            for f in pm["files"]:
-                hit = by_file.get(os.path.basename(f))
-                if not hit:
-                    continue
-                pdf = _read_file_pdf(f, fm.get(f, {}), pm["schema_meta"])
-                out.append((pdf.iloc[sorted(hit)], pm["schema_meta"], "delete"))
-    else:  # overwrite / CoW delete / update / merge / rollback
-        cur = _live_pdf(path, sid)
-        prev = _live_pdf(path, prev_id)
-        cur_a = _align_pdf(cur, m["schema_meta"], to_meta)
-        prev_a = _align_pdf(prev, pm["schema_meta"], to_meta)
-        ins = _multiset_diff(cur_a, prev_a)
-        dele = _multiset_diff(prev_a, cur_a)
-        out.append((ins, to_meta, "insert"))
-        out.append((dele, to_meta, "delete"))
-    frames = []
-    for pdf, own_meta, kind in out:
-        a = _align_pdf(pdf, own_meta, to_meta)
-        a["_change_type"] = kind
-        a["_commit_snapshot_id"] = sid
-        frames.append(a)
-    names = [f[1] for f in to_meta] + ["_change_type", "_commit_snapshot_id"]
-    if not frames:
-        return pd.DataFrame(columns=names)
-    return pd.concat(frames, ignore_index=True)
+# implement streamReader and hand each plan step's files to executors
+# as input partitions — the offset model and the plan are identical.
 
 
 class _ChangelogTailReader(SimpleDataSourceStreamReader):
@@ -488,37 +342,44 @@ class _ChangelogTailReader(SimpleDataSourceStreamReader):
     deterministic change set."""
 
     def __init__(self, options: dict):
-        self.path = options["path"]
+        self.table = SnapshotTable(None, options["path"])
         self.per_batch = int(options.get("snapshots_per_batch", 1))
         self.start_snap = int(options["from_snapshot"])
-        if self.start_snap < 1:
-            raise ValueError(
-                "changelog tail requires from_snapshot >= 1: bootstrap a "
-                "consumer with read(snapshot_id=first) and tail from there"
-            )
         self.columns = [c.strip() for c in options["columns"].split(",")]
 
     def initialOffset(self) -> dict:
         return {"snapshot": self.start_snap}
 
-    def _rows(self, lo: int, hi: int):
-        # ids are allocated monotonically, so the committed chain above
-        # lo is ascending and truncates cleanly at hi
-        chain = [lo] + [
-            s for s in _committed_above(self.path, lo) if s <= hi
-        ]
-        to_meta = _manifest(self.path, hi)["schema_meta"]
+    def _rows(self, lo: int, hi: int) -> list[tuple]:
+        to_meta = self.table._manifest(hi)["schema_meta"]
+        # whole rows: a diff compares every column, as exceptAll does
+        names = [f[1] for f in to_meta]
+        picked = [names.index(c) for c in self.columns]
         rows = []
-        for prev_id, sid in zip(chain, chain[1:]):
-            pdf = _commit_change_rows(self.path, prev_id, sid, to_meta)
-            cols = self.columns + ["_change_type", "_commit_snapshot_id"]
-            for t in pdf[cols].itertuples(index=False, name=None):
-                rows.append(t)
+        for sid, shape, m, files, arg in self.table.changelog_plan(lo, hi):
+            t = _arrow_read(self.table, m, files, with_pos=shape == "pos")
+            if shape == "pos":
+                t = t.filter(_named(t, [arg]))
+            elif shape == "eq":
+                t = t.filter(_keyed(t, *arg))
+            cur = _tuples(_align(t, m["schema_meta"], to_meta), names)
+            if shape == "diff":
+                prev = _arrow_read(self.table, arg, arg["files"])
+                prev = _tuples(_align(prev, arg["schema_meta"], to_meta), names)
+                changes = [
+                    (list((Counter(cur) - Counter(prev)).elements()), "insert"),
+                    (list((Counter(prev) - Counter(cur)).elements()), "delete"),
+                ]
+            else:
+                changes = [(cur, "insert" if shape == "insert" else "delete")]
+            rows += [
+                (*(r[i] for i in picked), kind, sid) for part, kind in changes for r in part
+            ]
         return rows
 
     def read(self, start: dict):
         lo = int(start["snapshot"])
-        ahead = _committed_above(self.path, lo)
+        ahead = _committed_above(self.table.path, lo)
         if not ahead:
             return iter([]), {"snapshot": lo}
         hi = ahead[min(self.per_batch, len(ahead)) - 1]

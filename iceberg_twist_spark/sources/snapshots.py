@@ -995,6 +995,55 @@ class SnapshotTable:
         files are always (file_path, row_index)."""
         return self._scan([d["path"]], d.get("schema") if "key" in d else _POS_DELETE_SCHEMA)
 
+    @staticmethod
+    def _eq_key(schema_meta: list, d: dict) -> str | None:
+        """The column equality delete ``d`` keys on under ``schema_meta``,
+        resolved strictly by field id when the entry carries one: after
+        drop_column the id maps to nothing (None: the delete removes
+        nothing), and a later same-named re-add gets a FRESH id, so the
+        old delete can never latch onto the unrelated column."""
+        if "fid" not in d:
+            return d["key"]
+        return next((f[1] for f in schema_meta if int(f[0]) == d["fid"]), None)
+
+    def _scan_groups(self, m: dict, files: list[str]) -> list[tuple]:
+        """The scan plan of ``files`` under manifest ``m``, metadata only:
+        files GROUPED by everything that changes the scan or its joins,
+        as ``(schema_json, name_by_id, base, eq, pos, files)`` — the
+        written schema, each field id's written name, the hive basePath,
+        the equality deletes that apply (``(entry, key name)`` pairs,
+        scoped to data files with a LOWER sequence number than the
+        delete) and the position deletes naming a file of the group.
+        One group per commit vintage, not per file."""
+        fm = self._files_meta()
+        eq_deletes = m.get("eq_deletes", [])
+        pos_deletes = m.get("pos_deletes", [])
+        named = [{self._norm_uri(x) for x in d.get("files", [])} for d in pos_deletes]
+        groups: dict[tuple, list[str]] = {}
+        for p in files:
+            info = fm.get(p, {})
+            seq = info.get("seq", 0)
+            key = (
+                info.get("schema") or "",
+                json.dumps(info.get("field_ids", {}), sort_keys=True),
+                info.get("base"),
+                tuple(i for i, d in enumerate(eq_deletes) if d.get("seq", 1 << 62) > seq),
+                tuple(i for i, n in enumerate(named) if p in n),
+            )
+            groups.setdefault(key, []).append(p)
+        out = []
+        for (schema_json, fid_json, base, eq_ids, pos_ids), fl in groups.items():
+            keys = [(eq_deletes[i], self._eq_key(m["schema_meta"], eq_deletes[i])) for i in eq_ids]
+            out.append((
+                schema_json,
+                {int(i): n for n, i in json.loads(fid_json).items()},
+                base,
+                [(d, k) for d, k in keys if k is not None],
+                [pos_deletes[i] for i in pos_ids],
+                fl,
+            ))
+        return out
+
     def _read_files(
         self,
         m: dict,
@@ -1009,12 +1058,12 @@ class SnapshotTable:
         anti-joins scoped to data files with a LOWER sequence number
         than the delete (delete-then-reinsert reads correctly).
 
-        Files are GROUPED by (written schema, field binding, base,
-        applicable deletes) — one scan per vintage, not per file, so a
-        long append history with no pending deletes is a single scan.
-        Each scan is pinned to the vintage's written schema from the
-        sidecar (``_scan``), so planning a read launches no Spark job;
-        the field-id projection then casts to the current schema.
+        One scan per group of ``_scan_groups`` — per vintage, not per
+        file, so a long append history with no pending deletes is a
+        single scan. Each scan is pinned to the vintage's written
+        schema from the sidecar (``_scan``), so planning a read
+        launches no Spark job; the field-id projection then casts to
+        the current schema.
         """
         schema_meta = m["schema_meta"]
         struct = self._struct_from_meta(schema_meta)
@@ -1027,47 +1076,17 @@ class SnapshotTable:
         )
         if not files:
             return self.spark.createDataFrame([], empty_struct)
-        fm = self._files_meta()
-        eq_deletes = m.get("eq_deletes", [])
-        pos_deletes = m.get("pos_deletes", [])
-        cur_name_by_id = {int(f[0]): f[1] for f in schema_meta}
-
-        norm = self._norm_uri  # URI form → plain manifest path
-
-        # group files by everything that changes the scan or its joins
-        groups: dict[tuple, list[str]] = {}
-        for p in files:
-            info = fm.get(p, {})
-            seq = info.get("seq", 0)
-            eq_ids = tuple(
-                i for i, d in enumerate(eq_deletes) if d.get("seq", 1 << 62) > seq
-            )
-            pos_ids = tuple(
-                i
-                for i, d in enumerate(pos_deletes)
-                if p in {norm(x) for x in d.get("files", [])}
-            )
-            key = (
-                info.get("schema") or "",
-                json.dumps(info.get("field_ids", {}), sort_keys=True),
-                info.get("base"),
-                eq_ids,
-                pos_ids,
-            )
-            groups.setdefault(key, []).append(p)
-
         parts: list[DataFrame] = []
-        for (schema_json, fid_json, base, eq_ids, pos_ids), fl in groups.items():
+        for schema_json, name_by_id, base, eq, pos, fl in self._scan_groups(m, files):
             df = self._scan(fl, schema_json, base)
-            need_meta = keep_meta or bool(pos_ids)
-            if need_meta:
+            if keep_meta or pos:
                 df = df.select(
                     "*",
                     F.col("_metadata.file_path").alias("_file_path"),
                     F.col("_metadata.row_index").alias("_pos"),
                 )
-            for i in pos_ids:
-                dk = self._read_delete(pos_deletes[i]).select(
+            for d in pos:
+                dk = self._read_delete(d).select(
                     F.col("file_path").alias("_file_path"),
                     F.col("row_index").alias("_pos"),
                 )
@@ -1077,9 +1096,6 @@ class SnapshotTable:
             # field-id projection: resolve each CURRENT field to the
             # column this vintage physically wrote (by id), cast to
             # the current type; absent ids read NULL
-            name_by_id = {
-                int(i): n for n, i in json.loads(fid_json or "{}").items()
-            }
             have = set(df.columns)
             cols = []
             for f in schema_meta:
@@ -1095,17 +1111,7 @@ class SnapshotTable:
             df = df.select(*cols)
             # sequence-scoped equality deletes (post-projection: keys
             # compare under current names/types)
-            for i in eq_ids:
-                d = eq_deletes[i]
-                # resolve strictly by field id when the entry carries
-                # one: after drop_column the id maps to nothing (skip),
-                # and a later same-named re-add gets a FRESH id, so the
-                # old delete can never latch onto the unrelated column
-                kname = (
-                    cur_name_by_id.get(d["fid"]) if "fid" in d else d["key"]
-                )
-                if kname is None:
-                    continue  # delete targets a since-dropped column
+            for d, kname in eq:
                 dk = self._read_delete(d)
                 dk = dk.select(F.col(dk.columns[0]).alias(kname))
                 df = df.join(F.broadcast(dk), kname, "left_anti")
@@ -1163,7 +1169,8 @@ class SnapshotTable:
     # ---- incremental (changelog) reads ----------------------------------
     def _chain_segment(self, from_id: int, to_id: int) -> list[dict]:
         """Manifests strictly after ``from_id`` up to ``to_id``,
-        oldest first; raises unless ``from_id`` is an ancestor."""
+        oldest first; raises unless ``from_id`` is an ancestor (0: the
+        whole chain). Metadata only."""
         segment: list[dict] = []
         i = to_id
         while i and i != from_id:
@@ -1185,21 +1192,28 @@ class SnapshotTable:
         incremental-read restriction: an overwrite/rollback in between
         means 'files added' no longer equals 'rows added', so raise
         instead of silently returning wrong increments (use
-        ``read_changelog`` for the general insert/delete feed)."""
+        ``read_changelog`` for the general insert/delete feed).
+        ``from_snapshot_id=0`` tails the table from its start: the
+        table-creating commit (whatever its operation) counts as
+        adding all its files. Metadata only."""
         to_id = (
             to_snapshot_id
             if to_snapshot_id is not None
             else self.current_snapshot_id()
         )
         segment = self._chain_segment(from_snapshot_id, to_id)
-        non_append = [m["snapshot_id"] for m in segment if m["operation"] != "append"]
+        non_append = [
+            m["snapshot_id"]
+            for m in segment[0 if from_snapshot_id else 1:]
+            if m["operation"] != "append"
+        ]
         if non_append:
             raise ValueError(
                 f"cannot read incrementally across non-append snapshots "
                 f"{non_append}: files-added no longer equals rows-added "
                 "(Iceberg's incremental-scan restriction; see read_changelog)"
             )
-        base = set(self._manifest(from_snapshot_id)["files"])
+        base = set(self._manifest(from_snapshot_id)["files"]) if from_snapshot_id else set()
         return [f for f in self._manifest(to_id)["files"] if f not in base]
 
     def read_incremental(
@@ -1244,6 +1258,69 @@ class SnapshotTable:
         "widen-column", "set-partition-spec",
     })
 
+    def changelog_plan(self, from_id: int, to_id: int) -> list[tuple]:
+        """The change sets of the commits in (``from_id``, ``to_id``],
+        metadata only: one ``(sid, shape, manifest, files, arg)`` step
+        per change set, oldest first. A step's rows are ``files`` read
+        under ``manifest`` (its schema and pending deletes, as
+        ``_read_files``); ``shape`` says which of them changed in commit
+        ``sid``, scale-ranked:
+
+        - ``insert`` (append): the files the commit added, by manifest
+          set difference — never the base. ``arg`` is None;
+        - ``pos`` (position delete): the parent's files the NEW delete
+          file names; its (file, ordinal) pairs are the deleted rows.
+          ``arg`` is the delete entry;
+        - ``eq`` (equality delete): the parent snapshot; rows whose key
+          is in the NEW delete file are deleted. ``arg`` is ``(entry,
+          key)``, the key resolved strictly by field id under the
+          parent's schema (a delete whose key column was dropped before
+          the commit removes nothing and yields no step);
+        - ``diff`` (overwrite, CoW delete, update, merge, rollback): the
+          commit's snapshot; its multiset difference with ``arg``, the
+          parent manifest read in full, is the inserts, and the reverse
+          difference the deletes. The one genuinely expensive shape;
+          Iceberg's own changelog has the same cost there, and a
+          consumer that needs cheap increments should write appends +
+          MOR deletes (the shapes above).
+
+        Rewrite, schema and spec commits provably change no row and
+        yield no step. ``read_changelog`` executes this plan on Spark,
+        the ``itws_cdctail`` stream source on pyarrow."""
+        if from_id < 1:
+            raise ValueError(
+                "a changelog requires an existing FROM snapshot (>= 1): "
+                "bootstrap a consumer with read(snapshot_id=first) and tail "
+                "changes from there"
+            )
+
+        def new_deletes(m: dict, pm: dict, kind: str) -> list[dict]:
+            seen = {d["path"] for d in pm.get(kind, [])}
+            return [d for d in m.get(kind, []) if d["path"] not in seen]
+
+        steps: list[tuple] = []
+        # a from_id off the chain raises before its manifest is read
+        segment = self._chain_segment(from_id, to_id)
+        pm = self._manifest(from_id)
+        for m in segment:
+            sid, op = m["snapshot_id"], m["operation"]
+            if op == "append":
+                base = set(pm["files"])
+                steps.append((sid, "insert", m, [f for f in m["files"] if f not in base], None))
+            elif op == "pos-delete":
+                for d in new_deletes(m, pm, "pos_deletes"):
+                    named = {self._norm_uri(x) for x in d.get("files", [])}
+                    steps.append((sid, "pos", pm, [f for f in pm["files"] if f in named], d))
+            elif op == "eq-delete":
+                for d in new_deletes(m, pm, "eq_deletes"):
+                    key = self._eq_key(pm["schema_meta"], d)
+                    if key is not None:
+                        steps.append((sid, "eq", pm, pm["files"], (d, key)))
+            elif op not in self._NO_CHANGE_OPS:
+                steps.append((sid, "diff", m, m["files"], pm))
+            pm = m
+        return steps
+
     def read_changelog(
         self, from_snapshot_id: int, to_snapshot_id: int | None = None
     ) -> DataFrame:
@@ -1253,34 +1330,17 @@ class SnapshotTable:
         ``_commit_snapshot_id``). Updates surface as delete+insert
         pairs, exactly like Iceberg's changelog scan.
 
-        Per-commit planning, scale-ranked:
-        - append → reads ONLY the added files (manifest set
-          difference; never touches the base);
-        - eq-delete → reads the parent snapshot semi-joined to the NEW
-          delete key files (broadcast; O(live ∩ keys));
-        - pos-delete → reads ONLY the files the delete names,
-          semi-joined to its (file, ordinal) pairs (broadcast);
-        - rewrite / schema / spec commits → no rows by construction;
-        - overwrite / CoW delete / merge / rollback →
-          full symmetric difference of the two adjacent snapshots
-          (``exceptAll`` both ways). This is the one genuinely
-          expensive shape; Iceberg's own changelog has the same cost
-          there, and a consumer that needs cheap increments should
-          write appends + MOR deletes (the fast paths above).
-        Schema evolution mid-segment is handled by field-id alignment.
+        Executes ``changelog_plan`` (per-commit planning, scale-ranked)
+        on Spark: broadcast semi joins for the delete shapes,
+        ``exceptAll`` both ways for a diff. Schema evolution
+        mid-segment is handled by field-id alignment.
         """
         to_id = (
             to_snapshot_id
             if to_snapshot_id is not None
             else self.current_snapshot_id()
         )
-        if from_snapshot_id == 0:
-            raise ValueError(
-                "read_changelog requires an existing FROM snapshot (>= 1): "
-                "bootstrap a consumer with read(snapshot_id=first) and tail "
-                "changes from there"
-            )
-        segment = self._chain_segment(from_snapshot_id, to_id)
+        steps = self.changelog_plan(from_snapshot_id, to_id)
         to_meta = self._manifest(to_id)["schema_meta"]
         struct = self._struct_from_meta(to_meta)
         out_struct = T.StructType(
@@ -1299,89 +1359,30 @@ class SnapshotTable:
             )
 
         parts: list[DataFrame] = []
-        prev_id = from_snapshot_id
-        for m in segment:
-            sid, op = m["snapshot_id"], m["operation"]
-            pm = self._manifest(prev_id)
-            if op in self._NO_CHANGE_OPS:
-                prev_id = sid
-                continue
-            if op == "append":
-                added = [
-                    f for f in m["files"] if f not in set(pm["files"])
-                ]
-                ins = self._align_to(
-                    self._read_files(m, added), m["schema_meta"], to_meta
+        for sid, shape, m, files, arg in steps:
+            rows = self._read_files(m, files, keep_meta=shape == "pos")
+            if shape == "pos":
+                dk = self._read_delete(arg).select(
+                    F.col("file_path").alias("_file_path"),
+                    F.col("row_index").alias("_pos"),
                 )
-                parts.append(tag(ins, "insert", sid))
-            elif op == "pos-delete":
-                # fast path: the delete file NAMES its (file, ordinal)
-                # pairs — read just those files under the parent's
-                # semantics and semi-join the pairs; never a snapshot
-                # diff
-                prev_cols = [f[1] for f in pm["schema_meta"]]
-                new_entries = [
-                    d
-                    for d in m.get("pos_deletes", [])
-                    if d["path"]
-                    not in {x["path"] for x in pm.get("pos_deletes", [])}
-                ]
-                for d in new_entries:
-                    named = {self._norm_uri(x) for x in d.get("files", [])}
-                    sub_files = [f for f in pm["files"] if f in named]
-                    sub = self._read_files(pm, sub_files, keep_meta=True)
-                    dk = self._read_delete(d).select(
-                        F.col("file_path").alias("_file_path"),
-                        F.col("row_index").alias("_pos"),
-                    )
-                    gone = sub.join(
-                        F.broadcast(dk), ["_file_path", "_pos"], "left_semi"
-                    ).select(*prev_cols)
-                    parts.append(
-                        tag(
-                            self._align_to(gone, pm["schema_meta"], to_meta),
-                            "delete",
-                            sid,
-                        )
-                    )
-            elif op == "eq-delete":
-                prev_read = self.read(snapshot_id=prev_id)
-                prev_names = {int(f[0]): f[1] for f in pm["schema_meta"]}
-                new_entries = [
-                    d
-                    for d in m.get("eq_deletes", [])
-                    if d["path"]
-                    not in {x["path"] for x in pm.get("eq_deletes", [])}
-                ]
-                for d in new_entries:
-                    # strict by-id resolution (mirrors read()): a delete
-                    # whose key column was dropped before this commit
-                    # removes nothing and must not bind by name
-                    kname = (
-                        prev_names.get(d["fid"]) if "fid" in d else d["key"]
-                    )
-                    if kname is None:
-                        continue
-                    dk = self._read_delete(d)
-                    dk = dk.select(F.col(dk.columns[0]).alias(kname))
-                    gone = prev_read.join(F.broadcast(dk), kname, "left_semi")
-                    parts.append(
-                        tag(
-                            self._align_to(gone, pm["schema_meta"], to_meta),
-                            "delete",
-                            sid,
-                        )
-                    )
+                rows = rows.join(
+                    F.broadcast(dk), ["_file_path", "_pos"], "left_semi"
+                ).select(*[f[1] for f in m["schema_meta"]])
+            elif shape == "eq":
+                d, key = arg
+                dk = self._read_delete(d)
+                dk = dk.select(F.col(dk.columns[0]).alias(key))
+                rows = rows.join(F.broadcast(dk), key, "left_semi")
+            rows = self._align_to(rows, m["schema_meta"], to_meta)
+            if shape == "diff":
+                prev = self._align_to(
+                    self._read_files(arg, arg["files"]), arg["schema_meta"], to_meta
+                )
+                parts.append(tag(rows.exceptAll(prev), "insert", sid))
+                parts.append(tag(prev.exceptAll(rows), "delete", sid))
             else:
-                cur_df = self._align_to(
-                    self.read(snapshot_id=sid), m["schema_meta"], to_meta
-                )
-                prev_df = self._align_to(
-                    self.read(snapshot_id=prev_id), pm["schema_meta"], to_meta
-                )
-                parts.append(tag(cur_df.exceptAll(prev_df), "insert", sid))
-                parts.append(tag(prev_df.exceptAll(cur_df), "delete", sid))
-            prev_id = sid
+                parts.append(tag(rows, "insert" if shape == "insert" else "delete", sid))
         if not parts:
             return self.spark.createDataFrame([], out_struct)
         out = parts[0]
@@ -1601,8 +1602,14 @@ class SnapshotTable:
         (``t.k < cutoff``) therefore touches only the files covering
         that key range, never the table. Duplicate source keys raise
         (SQL MERGE cardinality violation), checked with one aggregate
-        over the SOURCE only — the small side."""
+        over the SOURCE only — the small side.
+
+        The source feeds that aggregate, the locate pass, the rewrite's
+        join and the inserts' anti join, so it is lazily checkpointed
+        like ``merge``'s: evaluated once, and a nondeterministic source
+        cannot pass the cardinality check and then insert other rows."""
         cur_id, cur = self._head()
+        source = source.localCheckpoint(eager=False)
         names = [f[1] for f in cur["schema_meta"]]
         dup = (
             source.groupBy(key).count().filter(F.col("count") > 1).limit(1).count()

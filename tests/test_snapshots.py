@@ -1343,10 +1343,13 @@ def test_pruned_read_with_pending_eq_delete_plans_without_jobs(spark, tmp_path):
     assert sorted(r.id for r in df.collect()) == [i for i in range(61) if i not in (3, 50)]
 
 
-def test_merge_evaluates_its_source_once(spark, tmp_path):
+@pytest.mark.parametrize("verb", ["merge", "merge_into", "merge_into_nmbs_delete"])
+def test_merge_evaluates_its_source_once(spark, tmp_path, verb):
     """The merge source feeds the file-locating semi join, the
-    survivors' anti join and the union; a UDF in it must see each
-    source row once, not once per consumer."""
+    survivors' anti join and the union (``merge_into`` also its
+    cardinality aggregate, and with a NOT MATCHED BY SOURCE clause a
+    second locate branch); a UDF in it must see each source row once,
+    not once per consumer."""
     from pyspark.sql.types import LongType
 
     tbl = SnapshotTable(spark, str(tmp_path / "t"))
@@ -1361,7 +1364,12 @@ def test_merge_evaluates_its_source_once(spark, tmp_path):
     source = spark.range(30, 50).select(
         tick_udf("id").alias("id"), (F.col("id") * 100).alias("v")
     )
-    tbl.merge(source, "id")
+    if verb == "merge":
+        tbl.merge(source, "id")
+    elif verb == "merge_into":
+        tbl.merge_into(source, "id")
+    else:
+        tbl.merge_into(source, "id", not_matched_by_source_delete="t.id >= 30")
     assert seen.value == 20
     rows = {r.id: r.v for r in tbl.read().collect()}
     assert len(rows) == 50 and rows[5] == 50 and rows[35] == 3500 and rows[45] == 4500

@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -681,6 +682,60 @@ def test_snapshot_tail_offsets_walk_committed_chain(spark, tmp_path):
     assert [n for _, n in seen] == [5, 3, 2], seen
 
 
+@pytest.mark.parametrize("part", ["g", "flag", "day"])
+def test_snapshot_tail_reads_partitioned_appends(spark, tmp_path, part):
+    """Tailing from a partition-spec commit over appends to the
+    partitioned table returns read_incremental's rows: identity
+    partition values live in the directory layout, not the data files,
+    and come back under the table's types."""
+    from iceberg_twist_spark.sources.snapshot_stream import _SnapshotTailReader
+    from iceberg_twist_spark.sources.snapshots import SnapshotTable
+
+    cols = ["id", "id % 4 AS g", *_PART_COLS.values()]
+    tbl = SnapshotTable(spark, str(tmp_path / "ptail"))
+    tbl.create(spark.range(10).selectExpr(*cols))
+    spec = tbl.set_partition_spec([part])
+    tbl.append(spark.range(10, 20).selectExpr(*cols))
+    last = tbl.append(spark.range(20, 26).selectExpr(*cols))
+    names = ["id", "g", "flag", "day"]
+    rdr = _SnapshotTailReader(
+        {"path": tbl.path, "columns": ",".join(names), "from_snapshot": str(spec)}
+    )
+    off = rdr.initialOffset()
+    streamed = []
+    for _ in range(4):
+        rows, off = rdr.read(off)
+        streamed.extend(rows)
+    assert off == {"snapshot": last}
+    want = sorted(tuple(r) for r in tbl.read_incremental(spec, last).select(*names).collect())
+    assert len(want) == 16
+    assert sorted(streamed) == want
+
+
+def test_stream_sources_execute_the_tables_plans():
+    """Source guard: the stream sources hold no manifest reader, chain
+    walk, delete bookkeeping or pandas of their own; changelog planning
+    lives in ``SnapshotTable.changelog_plan`` alone, and the plan
+    methods never touch the session (the readers run without one)."""
+    import ast
+
+    import iceberg_twist_spark.sources.snapshot_stream as stream_mod
+    import iceberg_twist_spark.sources.snapshots as snap_mod
+
+    with open(stream_mod.__file__, encoding="utf-8") as f:
+        stream_src = f.read()
+    for banned in ("version-hint", "v{", "parent_id", "_NO_CHANGE_OPS",
+                   "eq_deletes", "pos_deletes", "import pandas"):
+        assert banned not in stream_src, banned
+    with open(snap_mod.__file__, encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    cls = next(n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "SnapshotTable")
+    defs = {n.name: ast.unparse(n) for n in cls.body if isinstance(n, ast.FunctionDef)}
+    assert [name for name, src in defs.items() if "_NO_CHANGE_OPS" in src] == ["changelog_plan"]
+    for name in ("_chain_segment", "added_files", "changelog_plan"):
+        assert "self.spark" not in defs[name], name
+
+
 def test_iceberg_sink_exactly_once_under_checkpoint_restart(spark, sf_dir, tmp_path):
     """r10 verdict #1: foreachBatch is at-least-once — a crash AFTER
     the snapshot commit but BEFORE the checkpoint's write-ahead record
@@ -745,27 +800,44 @@ def test_iceberg_sink_exactly_once_under_checkpoint_restart(spark, sf_dir, tmp_p
     assert batch_ids == sorted(set(batch_ids)), batch_ids
 
 
-def test_changelog_tail_matches_batch_scan_all_commit_shapes(spark, tmp_path):
-    """The streaming CDC source must be a faithful twin of the batch
-    read_changelog across EVERY commit shape — append, eq-delete,
-    position delete, rewrite (no rows), CoW delete — and its
-    readBetweenOffsets replay must be deterministic (checkpoint
-    recovery recomputes identical change rows)."""
+# identity partition columns whose values the hive layout stores as
+# strings: a tail must restore them under the table's types
+_PART_COLS = {
+    "flag": "id % 2 = 0 AS flag",
+    "day": "date_add(DATE'2024-01-01', CAST(id % 3 AS INT)) AS day",
+}
+
+
+@pytest.mark.parametrize("part", ["unpartitioned", "flag", "day"])
+def test_changelog_tail_matches_batch_scan_all_commit_shapes(spark, tmp_path, part):
+    """The streaming CDC source must return the batch read_changelog's
+    rows across EVERY commit shape — append, eq-delete, position
+    delete, rewrite (no rows), CoW delete; on a boolean or date
+    identity partition also a spec change with an append and a CoW
+    delete after it — and its readBetweenOffsets replay must be
+    deterministic (checkpoint recovery recomputes identical change
+    rows)."""
     from pyspark.sql import functions as F
 
     from iceberg_twist_spark.sources.snapshot_stream import _ChangelogTailReader
     from iceberg_twist_spark.sources.snapshots import SnapshotTable
 
+    cols = ["id", "id % 4 AS g"] + ([_PART_COLS[part]] if part in _PART_COLS else [])
     tbl = SnapshotTable(spark, str(tmp_path / "cdct"))
-    s1 = tbl.create(spark.range(24).selectExpr("id", "id % 4 AS g"))
-    tbl.append(spark.range(24, 30).selectExpr("id", "id % 4 AS g"))
+    s1 = tbl.create(spark.range(24).selectExpr(*cols))
+    tbl.append(spark.range(24, 30).selectExpr(*cols))
     tbl.delete_keys(spark.createDataFrame([(2,), (25,)], "id long"), "id")
     tbl.delete_where_positional(F.col("id") % 9 == 0)
     tbl.rewrite_data_files()  # changelog-silent commit
+    if part in _PART_COLS:
+        tbl.set_partition_spec([part])
+        tbl.append(spark.range(30, 40).selectExpr(*cols))
+        tbl.delete_where(F.col("id") % 5 == 1)
     last = tbl.delete_where(F.col("g") == 3)
+    names = [c.split(" AS ")[-1] for c in cols]
 
     rdr = _ChangelogTailReader(
-        {"path": tbl.path, "columns": "id,g", "from_snapshot": str(s1)}
+        {"path": tbl.path, "columns": ",".join(names), "from_snapshot": str(s1)}
     )
     off = rdr.initialOffset()
     streamed = []
@@ -776,7 +848,7 @@ def test_changelog_tail_matches_batch_scan_all_commit_shapes(spark, tmp_path):
     batch = sorted(
         tuple(r)
         for r in tbl.read_changelog(s1, last)
-        .select("id", "g", "_change_type", "_commit_snapshot_id")
+        .select(*names, "_change_type", "_commit_snapshot_id")
         .collect()
     )
     assert sorted(streamed) == batch

@@ -12,6 +12,17 @@ ones that matter identically on a 1000-executor cluster:
   cluster alike.
 - Session timezone pinned to UTC so event-time semantics (and the
   DuckDB oracle comparisons) are wall-clock independent.
+- The driver JVM's C2 (tier-4) compile thresholds raised to 5x the
+  JDK 17 defaults (``DRIVER_JIT_POLICY``). A session runs hundreds of
+  small plans, so thousands of framework methods each cross the default
+  thresholds once and C2 compiles them for a few more calls; that
+  compile CPU outweighed the task threads (PERF.md, "JVM compilation
+  policy"). C1 is unchanged and truly hot loops still reach C2. It is
+  set through ``spark.driver.defaultJavaOptions``, which the launcher
+  prepends to ``extraJavaOptions``, so a caller's own options still
+  apply. Executors keep the JVM defaults: on a cluster they are
+  long-lived and run the hot loops (in ``local[N]`` the driver JVM runs
+  the tasks too).
 """
 
 from __future__ import annotations
@@ -21,6 +32,12 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+# JDK 17 defaults: 5000 / 600 / 15000 / 40000
+DRIVER_JIT_POLICY = (
+    "-XX:Tier4InvocationThreshold=25000 -XX:Tier4MinInvocationThreshold=3000 "
+    "-XX:Tier4CompileThreshold=75000 -XX:Tier4BackEdgeThreshold=200000"
+)
 
 
 def get_spark(
@@ -44,6 +61,7 @@ def get_spark(
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_POLICY)
         # big-twin sweeps (sf3: full-scan queries return 18M rows ≈
         # 1.5 GB of Arrow batches) exceed the 1g default; the driver
         # heap above is sized to hold this

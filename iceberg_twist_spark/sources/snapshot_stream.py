@@ -345,16 +345,21 @@ class _ChangelogTailReader(SimpleDataSourceStreamReader):
         self.table = SnapshotTable(None, options["path"])
         self.per_batch = int(options.get("snapshots_per_batch", 1))
         self.start_snap = int(options["from_snapshot"])
-        self.columns = [c.strip() for c in options["columns"].split(",")]
+        # the columns resolve to field ids once, against the schema in
+        # force when the stream starts, and every batch aligns by field
+        # id to that one schema: a rename inside the tailed range keeps
+        # feeding the renamed column
+        self.meta = self.table._head()[1]["schema_meta"]
+        names = [f[1] for f in self.meta]
+        self.picked = [names.index(c.strip()) for c in options["columns"].split(",")]
 
     def initialOffset(self) -> dict:
         return {"snapshot": self.start_snap}
 
     def _rows(self, lo: int, hi: int) -> list[tuple]:
-        to_meta = self.table._manifest(hi)["schema_meta"]
+        to_meta, picked = self.meta, self.picked
         # whole rows: a diff compares every column, as exceptAll does
         names = [f[1] for f in to_meta]
-        picked = [names.index(c) for c in self.columns]
         rows = []
         for sid, shape, m, files, arg in self.table.changelog_plan(lo, hi):
             t = _arrow_read(self.table, m, files, with_pos=shape == "pos")

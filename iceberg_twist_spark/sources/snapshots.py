@@ -1407,6 +1407,7 @@ class SnapshotTable:
         operation: str,
         locate: Callable[[DataFrame], DataFrame],
         rewrite: Callable[[DataFrame], DataFrame],
+        inserts: bool = False,
     ) -> int:
         """The copy-on-write commit behind ``merge``, ``update_where``,
         ``merge_into`` and ``delete_where``, file-pruned like Iceberg's.
@@ -1423,7 +1424,12 @@ class SnapshotTable:
         so a ten-row MERGE into a 100 TB table rewrites the files holding
         those ten keys, never the table. Readers of older snapshots are
         untouched (tested: snapshot isolation in tests/test_snapshots.py).
-        The commit keeps ``cur``'s schema."""
+        The commit keeps ``cur``'s schema.
+
+        ``inserts`` says ``rewrite`` can add rows that no located row
+        maps to (MERGE's inserts). Without it, a locate pass that hits
+        no file leaves nothing to write, so the write job is skipped;
+        the commit still lands, with the same files."""
         hits = (
             locate(self.read(snapshot_id=cur_id, keep_meta=True))
             .select("_file_path")
@@ -1434,8 +1440,11 @@ class SnapshotTable:
         untouched = [f for f in cur["files"] if f not in hit_paths]
         to_rewrite = [f for f in cur["files"] if f in hit_paths]
         out = rewrite(self._read_files(cur, to_rewrite))
-        spec = cur.get("partition_spec", [])
-        files, n_new, st, nfm = self._write_files(out, spec or None)
+        if to_rewrite or inserts:
+            spec = cur.get("partition_spec", [])
+            files, n_new, st, nfm = self._write_files(out, spec or None)
+        else:
+            files, n_new, st, nfm = [], 0, {}, {}
         kept = set(untouched)
         kept_stats = {
             f: s for f, s in cur.get("file_stats", {}).items() if f in kept
@@ -1477,6 +1486,7 @@ class SnapshotTable:
             "merge",
             lambda live: live.join(keys_df, on=key, how="left_semi"),
             lambda base: base.join(keys_df, on=key, how="left_anti").unionByName(source_rows),
+            inserts=True,
         )
 
     def snapshot_as_of(self, ts: float) -> int:
@@ -1686,7 +1696,9 @@ class SnapshotTable:
             ).select(*names)
             return survivors.unionByName(inserts)
 
-        return self._rewrite(cur_id, cur, "merge", locate, rewrite)
+        return self._rewrite(
+            cur_id, cur, "merge", locate, rewrite, inserts=insert_not_matched
+        )
 
     def delete_where(self, condition) -> int:
         """Copy-on-write DELETE (see ``_rewrite``): the files that

@@ -1,0 +1,72 @@
+"""The driver JVM's compilation policy, and the per-thread CPU split
+that measures it (iceberg_twist_spark/runstats.py)."""
+
+from __future__ import annotations
+
+from pyspark.sql import SparkSession
+
+from iceberg_twist_spark import runstats
+from iceberg_twist_spark.session import get_spark
+
+# thread names as /proc/<pid>/task/*/stat shows them (15 characters)
+_NAMES = {
+    "C2 CompilerThre": "jit_c2",
+    "C1 CompilerThre": "jit_c1",
+    "GC Thread#0": "gc",
+    "GC Thread#3": "gc",
+    "G1 Conc#0": "gc",
+    "G1 Main Marker": "gc",
+    "G1 Refine#1": "gc",
+    "G1 Service": "gc",
+    "Executor task l": "task",
+    "VM Thread": "other",
+    "Thread-3": "other",
+    "dag-scheduler-e": "other",
+    "process reaper": "other",
+}
+
+
+def test_thread_names_classify():
+    assert {n: runstats.classify(n) for n in _NAMES} == _NAMES
+
+
+def test_a_query_spends_task_and_jit_cpu(spark):
+    """A scan-and-aggregate over a new expression runs in the task
+    threads, and its generated code is compiled by the JIT."""
+    _, split = runstats.thread_cpu_during(
+        spark,
+        lambda: spark.range(20_000_000)
+        .selectExpr("sum(hash(id * 31 + 7, id % 1013)) AS h")
+        .collect(),
+    )
+    assert set(split) == set(runstats.GROUPS)
+    assert split["task"] > 0
+    assert split["jit_c1"] + split["jit_c2"] > 0
+    total = runstats.thread_cpu(spark)
+    assert total["task"] >= split["task"] and total["jit_c1"] > 0
+
+
+def test_driver_jit_policy_is_in_force(spark):
+    """Read the flags the JVM runs with, not its command line: Spark
+    launches the driver with -XX:+IgnoreUnrecognizedVMOptions, so a
+    misspelled flag would be dropped silently."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    want = {
+        "Tier4InvocationThreshold": 25000,
+        "Tier4MinInvocationThreshold": 3000,
+        "Tier4CompileThreshold": 75000,
+        "Tier4BackEdgeThreshold": 200000,
+    }
+    assert {k: int(bean.getVMOption(k).getValue()) for k in want} == want
+
+
+def test_caller_java_options_keep_the_policy(monkeypatch):
+    """A caller's extraJavaOptions (perfbench sets them) apply beside
+    the policy: the launcher prepends defaultJavaOptions to them."""
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: dict(self._options))
+    conf = get_spark(extra_conf={"spark.driver.extraJavaOptions": "-XX:-UsePerfData"})
+    assert conf["spark.driver.extraJavaOptions"] == "-XX:-UsePerfData"
+    assert "-XX:Tier4InvocationThreshold=25000" in conf["spark.driver.defaultJavaOptions"]

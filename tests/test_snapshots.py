@@ -1343,6 +1343,40 @@ def test_pruned_read_with_pending_eq_delete_plans_without_jobs(spark, tmp_path):
     assert sorted(r.id for r in df.collect()) == [i for i in range(61) if i not in (3, 50)]
 
 
+@pytest.mark.parametrize("verb", ["delete_where", "update_where"])
+def test_no_hit_rewrite_runs_only_the_locate_job(spark, tmp_path, verb):
+    """A copy-on-write verb whose condition matches no row runs the
+    locate pass and writes nothing; it still commits a snapshot that
+    lists the same files."""
+    tbl = SnapshotTable(spark, str(tmp_path / "t"))
+    tbl.create(spark.range(40).selectExpr("id", "id * 10 AS v").repartition(4, "id"))
+    before = tbl._manifest(tbl.current_snapshot_id())
+    assert len(before["files"]) == 4
+    miss = F.col("id") > 1000
+    if verb == "delete_where":
+        sid, n_jobs = _jobs_launched(spark, lambda: tbl.delete_where(miss))
+    else:
+        sid, n_jobs = _jobs_launched(
+            spark, lambda: tbl.update_where(miss, {"v": F.lit(0)})
+        )
+    assert n_jobs == 1
+    m = tbl._manifest(sid)
+    assert sid == tbl.current_snapshot_id() == before["snapshot_id"] + 1
+    assert m["operation"] == verb.split("_")[0]
+    assert m["files"] == before["files"] and m["n_records"] == 40
+    assert tbl.read().count() == 40
+
+
+def test_no_hit_merge_still_writes_its_inserts(spark, tmp_path):
+    tbl = SnapshotTable(spark, str(tmp_path / "t"))
+    tbl.create(spark.range(40).selectExpr("id", "id * 10 AS v").repartition(4, "id"))
+    new = spark.range(100, 103).selectExpr("id", "id * 10 AS v")
+    tbl.merge(new, "id")
+    tbl.merge_into(new.selectExpr("id + 10 AS id", "v"), "id")
+    rows = {r.id: r.v for r in tbl.read().collect()}
+    assert len(rows) == 46 and rows[101] == 1010 and rows[112] == 1020
+
+
 @pytest.mark.parametrize("verb", ["merge", "merge_into", "merge_into_nmbs_delete"])
 def test_merge_evaluates_its_source_once(spark, tmp_path, verb):
     """The merge source feeds the file-locating semi join, the

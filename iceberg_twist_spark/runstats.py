@@ -9,10 +9,13 @@ threads into groups:
 - ``gc``: G1's parallel and concurrent GC threads;
 - ``task``: the executor's task launch workers (in ``local[N]`` the
   driver JVM runs the tasks);
-- ``other``: every other live thread (Py4J, the scheduler, the VM
+- ``other``: every other thread (Py4J, the scheduler, the VM
   thread, ...);
-- ``exited``: threads that are gone; their CPU stays in the process
-  total but no longer has a name;
+- ``exited``: CPU that threads spent after they were last seen; it
+  stays in the process total but no longer has a name. While a query
+  runs, the threads are sampled every ``_POLL_S`` seconds, so a thread
+  that exits (HotSpot's on-demand compiler threads do) keeps its CPU
+  up to its last sample in its own group;
 - ``python_workers``: the JVM's child processes (the PySpark daemon and
   the workers it forks), reaped children included.
 
@@ -30,10 +33,13 @@ from __future__ import annotations
 
 import os
 import sys
+import threading
 import time
 from typing import Callable, TypeVar
 
 GROUPS = ("jit_c2", "jit_c1", "gc", "task", "other", "exited", "python_workers")
+
+_POLL_S = 0.2  # thread sampling period while a measured call runs
 
 # 15-character thread-name prefixes, as /proc truncates them
 _PREFIXES = (
@@ -87,9 +93,9 @@ def _descendants(pid: int) -> list[int]:
     return out
 
 
-def _sample(pid: int) -> tuple[int, dict[int, tuple[str, int]], int]:
-    """(process total, {tid: (group, ticks)} of the live threads,
-    Python worker ticks) of JVM ``pid``."""
+def _sample(pid: int) -> tuple[int, dict[int, tuple[str, int]]]:
+    """(process total, {tid: (group, ticks)} of the live threads) of
+    JVM ``pid``."""
     total = _ticks(_stat(f"/proc/{pid}/stat")[1])
     threads = {}
     for tid in os.listdir(f"/proc/{pid}/task"):
@@ -98,24 +104,37 @@ def _sample(pid: int) -> tuple[int, dict[int, tuple[str, int]], int]:
         except OSError:  # the thread exited while listing
             continue
         threads[int(tid)] = (classify(name), _ticks(fields))
-    workers = 0
+    return total, threads
+
+
+def _workers(pid: int) -> int:
+    """Ticks of JVM ``pid``'s descendant processes, reaped children
+    included."""
+    ticks = 0
     for child in _descendants(pid):
         try:
-            workers += _ticks(_stat(f"/proc/{child}/stat")[1], reaped=True)
+            ticks += _ticks(_stat(f"/proc/{child}/stat")[1], reaped=True)
         except OSError:
             continue
-    return total, threads, workers
+    return ticks
 
 
-def _split(before, after) -> dict[str, float]:
-    """CPU-seconds per group between two ``_sample``s; a thread that
-    exited in between counts in ``exited``."""
-    (t0, th0, w0), (t1, th1, w1) = before, after
+def _split(samples: list, workers: int = 0) -> dict[str, float]:
+    """CPU-seconds per group over a sequence of ``_sample``s, the first
+    the baseline and the last the end. Each thread counts the ticks it
+    gained between the first sample and the last one it appears in,
+    under the group it had there; the process ticks no live or sampled
+    thread accounts for are ``exited``. ``workers``: the Python worker
+    ticks spent meanwhile."""
+    (t0, th0), (t1, _) = samples[0], samples[-1]
+    last: dict[int, tuple[str, int]] = {}
+    for _, threads in samples:
+        last.update(threads)
     out = dict.fromkeys(GROUPS, 0)
-    for tid, (group, ticks) in th1.items():
+    for tid, (group, ticks) in last.items():
         out[group] += ticks - th0.get(tid, (group, 0))[1]
     out["exited"] = (t1 - t0) - sum(out[g] for g in GROUPS[:5])
-    out["python_workers"] = w1 - w0
+    out["python_workers"] = workers
     hz = os.sysconf("SC_CLK_TCK")
     return {g: v / hz for g, v in out.items()}
 
@@ -128,17 +147,34 @@ def jvm_pid(spark) -> int:
 def thread_cpu(spark) -> dict[str, float]:
     """CPU-seconds per group (``GROUPS``) that the session's JVM and
     its Python workers have spent since the JVM started."""
-    return _split((0, {}, 0), _sample(jvm_pid(spark)))
+    pid = jvm_pid(spark)
+    return _split([(0, {}), _sample(pid)], _workers(pid))
 
 
 def thread_cpu_during(spark, fn: Callable[[], T]) -> tuple[T, dict[str, float]]:
     """``fn()``'s result and the CPU-seconds per group spent while it
-    ran. Each thread is compared with itself, so a thread that exits
-    takes only the CPU it spent during ``fn`` into ``exited``."""
+    ran. Each thread is compared with itself, and a background thread
+    samples the JVM's threads every ``_POLL_S`` seconds meanwhile, so a
+    thread that exits during ``fn`` takes into ``exited`` only the CPU
+    it spent after its last sample."""
     pid = jvm_pid(spark)
-    before = _sample(pid)
-    out = fn()
-    return out, _split(before, _sample(pid))
+    w0 = _workers(pid)
+    samples = [_sample(pid)]
+    done = threading.Event()
+
+    def poll() -> None:
+        while not done.wait(_POLL_S):
+            samples.append(_sample(pid))
+
+    poller = threading.Thread(target=poll, name="runstats-poll", daemon=True)
+    poller.start()
+    try:
+        out = fn()
+    finally:
+        done.set()
+        poller.join()
+    samples.append(_sample(pid))
+    return out, _split(samples, _workers(pid) - w0)
 
 
 def _print_split(label: str, split: dict[str, float]) -> None:

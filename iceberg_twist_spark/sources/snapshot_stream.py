@@ -128,7 +128,8 @@ def _arrow_read(table: SnapshotTable, m: dict, files: list[str], with_pos: bool 
     """``SnapshotTable._read_files`` on pyarrow, over the same
     ``_scan_groups`` plan: ``files`` under manifest ``m``'s schema —
     columns resolved by field id and cast to the schema's arrow types,
-    identity partition values restored from the sidecar and cast, the
+    identity partition values restored from the files' manifest
+    entries as the recorded strings and cast, the
     manifest's position deletes and sequence-scoped equality deletes
     applied. ``with_pos`` keeps each row's ``_file_path`` and physical
     ordinal ``_pos``."""
@@ -137,13 +138,12 @@ def _arrow_read(table: SnapshotTable, m: dict, files: list[str], with_pos: bool 
     import pyarrow.parquet as pq
 
     meta = m["schema_meta"]
-    fm = table._files_meta()
     parts = []
     for _schema, name_by_id, _base, eq, pos, group in table._scan_groups(m, files):
         reads = []
         for f in group:
             raw = pq.read_table(f)
-            for k, v in fm.get(f, {}).get("partition", {}).items():
+            for k, v in m["files"][f]["partition"].items():
                 if k not in raw.column_names:
                     val = None if v == _HIVE_NULL else v
                     raw = raw.append_column(k, pa.array([val] * raw.num_rows, pa.string()))
@@ -349,7 +349,7 @@ class _ChangelogTailReader(SimpleDataSourceStreamReader):
         # force when the stream starts, and every batch aligns by field
         # id to that one schema: a rename inside the tailed range keeps
         # feeding the renamed column
-        self.meta = self.table._head()[1]["schema_meta"]
+        self.meta = self.table._head()["schema_meta"]
         names = [f[1] for f in self.meta]
         self.picked = [names.index(c.strip()) for c in options["columns"].split(",")]
 

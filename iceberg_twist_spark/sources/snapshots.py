@@ -17,8 +17,8 @@ Layout (mirrors Iceberg's hadoop-catalog layout, simplified):
     <table>/metadata/v<N>.json               snapshot manifest
     <table>/metadata/version-hint.text       current-version pointer
 
-Each manifest lists the snapshot's complete data-file set plus
-operation, parent, schema, and record count. A commit writes data
+Each manifest lists the snapshot's complete data-file set, one entry
+per file, plus operation, parent, schema, and record count. A commit writes data
 files first, then the new manifest, then atomically swaps the version
 hint (``os.replace``) — readers see the old or the new snapshot, never
 a partial one. This is exactly Iceberg's optimistic-concurrency commit
@@ -45,12 +45,14 @@ swapping is a one-line change per call site.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import operator
 import os
 import tempfile
+import time
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -151,20 +153,24 @@ class SnapshotTable:
 
     Iceberg v2 semantics carried by three metadata structures:
 
-    - the per-snapshot MANIFEST (``metadata/v<N>.json``): complete
-      data-file list, current schema as FIELD-ID'd columns
+    - the per-snapshot MANIFEST (``metadata/v<N>.json``): one ENTRY
+      per data file (``files``: ``{path: entry}``), the written
+      schemas those entries use (``schemas``, each stored once under
+      its id), the current schema as FIELD-ID'd columns
       (``schema_meta``: ``[field_id, name, type]`` triples — names are
       labels, ids are identity, so rename/drop/widen are metadata-only
       and old files keep reading correctly), the partition spec in
-      force, and the snapshot's pending equality/position deletes;
-    - the per-FILE sidecar (``metadata/files.json``): immutable facts
-      recorded once when a file is first committed — its data
-      SEQUENCE NUMBER (the commit that added it), the schema it was
-      physically written with (reads hand it to the parquet reader,
-      so no scan infers a schema from footers), its row count,
-      its name→field-id binding, and its partition tuple. This is
-      what Iceberg keeps per manifest entry;
-    - the atomic version pointer (``version-hint.text``).
+      force, and the snapshot's pending equality/position deletes. An
+      entry holds everything the table knows about its file, fixed
+      when the file is first committed and carried verbatim after:
+      its data SEQUENCE NUMBER (the commit that added it), the id of
+      the schema it was physically written with, partition columns
+      included (reads hand it to the parquet reader, so no scan
+      infers a schema or a partition value's type), its name→field-id
+      binding, its hive base, partition tuple and spec, its row count
+      and its zone map — Iceberg's manifest entry;
+    - the atomic version pointer (``version-hint.text``);
+    - the named refs (``refs.json``): tags and branches.
 
     Equality deletes are SEQUENCE-SCOPED exactly as in Iceberg v2: a
     delete applies only to data files whose sequence number is LOWER
@@ -180,9 +186,9 @@ class SnapshotTable:
     no pending deletes still plans as a single scan. Column pruning
     and predicate pushdown reach the footers as in any parquet read;
     nothing is driver-bound except the manifest itself. Schemas (data
-    files: the sidecar; equality deletes: their entry) and record
-    counts (footers at write time) come from metadata, so a verb
-    launches only the Spark jobs its data needs.
+    files and equality deletes: their entries) and record counts
+    (footers at write time) come from metadata, so a verb launches
+    only the Spark jobs its data needs.
     """
 
     def __init__(self, spark: SparkSession, path: str) -> None:
@@ -205,12 +211,17 @@ class SnapshotTable:
         with open(os.path.join(self._meta, f"v{snapshot_id}.json")) as f:
             return json.load(f)
 
-    def _head(self) -> tuple[int, dict]:
-        """(current snapshot id, its manifest); raises on an empty table."""
+    def _current(self) -> dict:
+        """The current snapshot's manifest; ``{}`` before the first commit."""
         cur_id = self.current_snapshot_id()
-        if cur_id == 0:
+        return self._manifest(cur_id) if cur_id else {}
+
+    def _head(self) -> dict:
+        """The current snapshot's manifest; raises on an empty table."""
+        m = self._current()
+        if not m:
             raise ValueError(f"no snapshots in {self.path}")
-        return cur_id, self._manifest(cur_id)
+        return m
 
     def snapshots(self) -> list[dict]:
         """The COMMITTED history, oldest first (the ``.snapshots``
@@ -227,31 +238,6 @@ class SnapshotTable:
             chain.append(m)
             i = m.get("parent_id") or 0
         return list(reversed(chain))
-
-    # ---- per-file sidecar ----------------------------------------------
-    # Immutable per-file facts, recorded once at first commit: data
-    # sequence number, written schema, name→field-id binding, hive
-    # basePath (partitioned commits) and partition tuple. Real Iceberg
-    # stores these per manifest ENTRY; a table-level sidecar is
-    # equivalent because data files are immutable and never re-added
-    # under a different identity.
-
-    def _files_meta_path(self) -> str:
-        return os.path.join(self._meta, "files.json")
-
-    def _files_meta(self) -> dict:
-        if not os.path.exists(self._files_meta_path()):
-            return {}
-        with open(self._files_meta_path()) as f:
-            return json.load(f)
-
-    def _register_files(self, entries: dict) -> None:
-        fm = self._files_meta()
-        fm.update(entries)
-        tmp = os.path.join(self._meta, f".files.{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(fm, f)
-        os.replace(tmp, self._files_meta_path())
 
     # ---- named refs (tags / branches) ---------------------------------
     # Iceberg's ref surface: named pointers stored beside the version
@@ -359,22 +345,10 @@ class SnapshotTable:
             raise ValueError(f"no such ref: {name!r}")
         if refs[name]["type"] != "branch":
             raise ValueError(f"{name!r} is a tag (immutable); write to a branch")
-        head = refs[name]["snapshot_id"]
-        prev = self._manifest(head)
-        files, n, st, nfm = self._write_files(df)
+        head = self._manifest(refs[name]["snapshot_id"])
         snap = self._commit(
-            prev["files"] + files,
-            prev["n_records"] + n,
-            "append",
-            df.schema.json(),
-            {**prev.get("file_stats", {}), **st},
-            update_hint=False,
-            staged=True,
-            parent=head,
-            eq_deletes=prev.get("eq_deletes", []),
-            pos_deletes=prev.get("pos_deletes", []),
-            new_file_meta=nfm,
-            schema_mode="append",
+            "append", head, self._write_files(df),
+            schema_json=df.schema.json(), schema_mode="append", staged=True,
         )
         refs = self.refs()
         refs[name]["snapshot_id"] = snap
@@ -383,12 +357,15 @@ class SnapshotTable:
 
     # ---- commits -----------------------------------------------------
     @staticmethod
-    def _file_stats(path: str) -> dict[str, list]:
-        """Per-column [min, max] for one data file, read from the
-        parquet FOOTER (row-group statistics — no data scan). This is
-        the zone-map Iceberg keeps per data file in its manifests; it
-        is what lets a filtered read skip files without opening them.
-        Only JSON-representable primitive stats are kept."""
+    def _footer(path: str) -> dict:
+        """Row count and per-column [min, max] of one data file, read
+        from the parquet FOOTER (row-group statistics — no data scan).
+        The min/max map is the zone map Iceberg keeps per data file in
+        its manifests; it is what lets a filtered read skip files
+        without opening them. Only JSON-representable primitive stats
+        are kept."""
+        import decimal
+
         import pyarrow.parquet as pq
 
         md = pq.ParquetFile(path).metadata
@@ -408,119 +385,78 @@ class SnapshotTable:
                         mn, mx = mn.decode("utf-8"), mx.decode("utf-8")
                     except UnicodeDecodeError:
                         continue
-                import decimal
-
                 if isinstance(mn, decimal.Decimal):
                     mn, mx = float(mn), float(mx)
                 if not isinstance(mn, (int, float, str)) or isinstance(mn, bool):
                     continue
                 mins[name] = mn if name not in mins else min(mins[name], mn)
                 maxs[name] = mx if name not in maxs else max(maxs[name], mx)
-        return {k: [mins[k], maxs[k]] for k in mins}
+        return {"rows": int(md.num_rows), "stats": {k: [mins[k], maxs[k]] for k in mins}}
 
-    @staticmethod
-    def _file_rows(path: str) -> int:
-        """Exact record count from the parquet footer (no data scan)."""
-        import pyarrow.parquet as pq
-
-        return int(pq.ParquetFile(path).metadata.num_rows)
-
-    def _rows(self, p: str, fm: dict) -> int:
-        """Record count of committed data file ``p`` from its sidecar
-        row fact (``fm`` is ``_files_meta()``); entries that predate
-        it fall back to a footer read. Never a Spark job."""
-        rows = fm.get(p, {}).get("rows")
-        return self._file_rows(p) if rows is None else rows
-
-    def _rows_of(self, files: list[str]) -> int:
-        """Total record count of committed data files (see ``_rows``)."""
-        fm = self._files_meta()
-        return sum(self._rows(p, fm) for p in files)
-
-    def _write_files(
-        self, df: DataFrame, partition_spec: list[str] | None = None
-    ) -> tuple[list[str], int, dict, dict]:
-        """Stage df as immutable parquet files; return (paths,
-        n_records, per-file column stats, per-file sidecar facts).
+    def _write_files(self, df: DataFrame, partition_spec: list[str] | None = None) -> dict:
+        """Stage df as immutable parquet files; return their manifest
+        entries, ``{path: entry}``, each with the written schema JSON,
+        hive base, partition tuple, spec, row count and zone map
+        (``_commit`` stamps the rest).
 
         With a partition spec the stage write is hive-partitioned and
         the files keep their ``col=value`` directory layout under one
         commit directory (``data/<uuid>/``), so the read side restores
-        partition columns with a single basePath scan and the manifest
-        records each file's partition tuple for pruning."""
+        partition columns with a single basePath scan and the entries
+        record each file's partition tuple for pruning. The written
+        schema is the frame partitionBy wrote, hidden transform columns
+        included, so that scan pins every partition column's type."""
         import shutil
         import urllib.parse
 
+        # derive hidden partition columns for transform entries
+        # (identity entries partition on the source column itself);
+        # partitionBy moves all of them out of the data files and into
+        # the directory layout
+        pdf, pnames = df, []
+        for entry in partition_spec or []:
+            kind, col, param, pname = parse_spec_entry(entry)
+            if kind != "identity":
+                pdf = pdf.withColumn(
+                    pname, transform_expr(kind, col, param, df.schema[col].dataType)
+                )
+            pnames.append(pname)
+        base = os.path.join(self._data, uuid.uuid4().hex) if pnames else self._data
+        schema_json = pdf.schema.json()
         stage = tempfile.mkdtemp(prefix="itws_snapstage_")
         try:
-            files, stats, nfm = [], {}, {}
-            if partition_spec:
-                # derive hidden partition columns for transform entries
-                # (identity entries partition on the source column
-                # itself); partitionBy moves all of them out of the
-                # data files and into the directory layout
-                pdf, pnames = df, []
-                for entry in partition_spec:
-                    kind, col, param, pname = parse_spec_entry(entry)
-                    if kind == "identity":
-                        pnames.append(col)
-                    else:
-                        pdf = pdf.withColumn(
-                            pname,
-                            transform_expr(
-                                kind, col, param, df.schema[col].dataType
-                            ),
-                        )
-                        pnames.append(pname)
-                pdf.write.partitionBy(*pnames).mode("overwrite").parquet(stage)
-                base = os.path.join(self._data, uuid.uuid4().hex)
-                for root, _dirs, names in os.walk(stage):
-                    for name in sorted(names):
-                        if not name.endswith(".parquet"):
-                            continue
-                        rel = os.path.relpath(root, stage)
-                        part = {}
-                        for seg in rel.split(os.sep):
-                            if "=" in seg:
-                                k, _, v = seg.partition("=")
-                                part[k] = urllib.parse.unquote(v)
-                        ddir = os.path.join(base, rel) if rel != "." else base
-                        os.makedirs(ddir, exist_ok=True)
-                        dst = os.path.join(ddir, f"{uuid.uuid4().hex}.parquet")
-                        os.replace(os.path.join(root, name), dst)
-                        files.append(dst)
-                        stats[dst] = self._file_stats(dst)
-                        nfm[dst] = {
-                            "base": base,
-                            "partition": part,
-                            # the spec the file was written under — what
-                            # lets the planner evaluate transform
-                            # pruning per-spec after spec evolution
-                            "spec": list(partition_spec),
-                            "rows": self._file_rows(dst),
-                        }
-                n = sum(nfm[f]["rows"] for f in files)
-            else:
-                df.write.mode("overwrite").parquet(stage)
-                staged = [
-                    (name, self._file_rows(os.path.join(stage, name)))
-                    for name in sorted(os.listdir(stage))
-                    if name.endswith(".parquet")
-                ]
-                # Spark writes a 0-row placeholder file when the first
-                # partition (or the whole df) is empty; it carries no
-                # zone-map stats, so every pruned read would keep it and
-                # apply pending deletes to it. Drop it: the manifest's
-                # schema_meta records the schema.
-                staged = [(name, rows) for name, rows in staged if rows]
-                for name, rows in staged:
-                    dst = os.path.join(self._data, f"{uuid.uuid4().hex}.parquet")
-                    os.replace(os.path.join(stage, name), dst)
-                    files.append(dst)
-                    stats[dst] = self._file_stats(dst)
-                    nfm[dst] = {"base": None, "partition": {}, "rows": rows}
-                n = sum(rows for _, rows in staged)
-            return files, n, stats, nfm
+            pdf.write.partitionBy(*pnames).mode("overwrite").parquet(stage)
+            out = {}
+            for root, _dirs, names in os.walk(stage):
+                rel = os.path.relpath(root, stage)
+                part = {
+                    k: urllib.parse.unquote(v)
+                    for k, _, v in (seg.partition("=") for seg in rel.split(os.sep) if "=" in seg)
+                }
+                for name in sorted(n for n in names if n.endswith(".parquet")):
+                    footer = self._footer(os.path.join(root, name))
+                    # Spark writes a 0-row placeholder file when the
+                    # first partition (or the whole df) is empty; it
+                    # carries no zone map, so every pruned read would
+                    # keep it and apply pending deletes to it. Drop it:
+                    # the manifest's schema_meta records the schema.
+                    if not footer["rows"]:
+                        continue
+                    ddir = os.path.normpath(os.path.join(base, rel))
+                    os.makedirs(ddir, exist_ok=True)
+                    dst = os.path.join(ddir, f"{uuid.uuid4().hex}.parquet")
+                    os.replace(os.path.join(root, name), dst)
+                    out[dst] = {
+                        "schema": schema_json,
+                        "base": base if pnames else None,
+                        "partition": part,
+                        # the spec the file was written under — what
+                        # lets the planner evaluate transform pruning
+                        # per-spec after spec evolution
+                        "spec": list(partition_spec or []),
+                        **footer,
+                    }
+            return out
         finally:
             shutil.rmtree(stage, ignore_errors=True)
 
@@ -600,106 +536,104 @@ class SnapshotTable:
 
     def _commit(
         self,
-        files: list[str],
-        n_records: int,
         operation: str,
+        parent: dict,
+        added: dict | None = None,
+        dropped: Iterable[str] = (),
+        deletes: Iterable[dict] = (),
+        *,
         schema_json: str | None = None,
-        file_stats: dict | None = None,
-        update_hint: bool = True,
-        staged: bool = False,
-        parent: int | None = None,
-        eq_deletes: list | None = None,
-        pos_deletes: list | None = None,
-        new_file_meta: dict | None = None,
         schema_meta: list | None = None,
         schema_mode: str = "content",
         partition_spec: list[str] | None = None,
+        staged: bool = False,
         summary: dict | None = None,
     ) -> int:
-        parent = self.current_snapshot_id() if parent is None else parent
-        pm = self._manifest(parent) if parent else None
+        """Commit the snapshot that ``parent`` (a manifest; ``{}`` for
+        the first commit) becomes after the verb's change: its entries
+        and deletes minus the ``dropped`` paths (data or delete files),
+        plus the ``added`` entries (``{path: entry}`` with the written
+        schema JSON, as ``_write_files`` returns them) and the added
+        ``deletes`` (equality entries carry a ``key``). The schema
+        evolves from the written ``schema_json``, is ``schema_meta``
+        when given, or stays the parent's. ``staged`` commits (WAP
+        stages, branch writes) leave the pointer alone."""
+        parent_id = parent.get("snapshot_id", 0)
         # allocate past EVERY existing manifest (staged WAP snapshots
         # live beyond the pointer; a later commit must not collide)
         ids = self._all_manifest_ids()
         snap = (ids[-1] if ids else 0) + 1
-        # field-id'd schema: explicit for metadata-only ops, otherwise
-        # derived from the written schema against the parent's fields
-        next_fid = (pm or {}).get("next_field_id", 1)
-        if schema_meta is None:
+        # field-id'd schema: derived from the written schema against
+        # the parent's fields, explicit for metadata-only ops and
+        # rollbacks, otherwise the parent's
+        next_fid = parent.get("next_field_id", 1)
+        if schema_json is not None:
             written_fields = [
                 (f["name"], f["type"])
                 for f in json.loads(schema_json)["fields"]
             ]
             schema_meta, next_fid = self._evolve_meta(
-                (pm or {}).get("schema_meta", []), next_fid,
+                parent.get("schema_meta", []), next_fid,
                 written_fields, schema_mode,
             )
         else:
+            schema_meta = parent["schema_meta"] if schema_meta is None else schema_meta
             next_fid = max(
                 [next_fid] + [int(f[0]) + 1 for f in schema_meta]
             )
         if partition_spec is None:
-            partition_spec = (pm or {}).get("partition_spec", [])
-        # deletes: carried entries keep their sequence; entries born in
-        # this commit are stamped with ITS sequence number, which is
-        # what scopes them to strictly-older data files
-        eq_deletes = [
-            d if d.get("seq") is not None else {**d, "seq": snap}
-            for d in (eq_deletes or [])
-        ]
-        pos_deletes = [
-            d if d.get("seq") is not None else {**d, "seq": snap}
-            for d in (pos_deletes or [])
-        ]
-        # sidecar: record immutable facts for files first seen here
-        fm = self._files_meta()
-        fresh = {}
+            partition_spec = parent.get("partition_spec", [])
+        # carried entries and deletes keep their sequence numbers;
+        # those born in this commit are stamped with ITS number, which
+        # is what scopes a delete to strictly-older data files. New
+        # entries also bind their written names to this schema's field
+        # ids. Each written schema is stored once, under a content id.
+        dropped = set(dropped)
         ids_by_name = {f[1]: int(f[0]) for f in schema_meta}
-        written_names = (
-            [f["name"] for f in json.loads(schema_json)["fields"]]
-            if schema_json
-            else [f[1] for f in schema_meta]
-        )
-        for p in files:
-            if p in fm or p in fresh:
-                continue
-            extra = (new_file_meta or {}).get(p, {"base": None, "partition": {}})
-            fresh[p] = {
-                "seq": snap,
-                "schema": schema_json,
-                "field_ids": {
-                    n: ids_by_name[n] for n in written_names if n in ids_by_name
-                },
-                "base": extra.get("base"),
-                "partition": extra.get("partition", {}),
-                # spec the file was written under (None = identity-only
-                # legacy entries) — required to evaluate transform
-                # pruning per-spec after spec evolution
-                "spec": extra.get("spec"),
-                "rows": extra.get("rows"),
-            }
-        if fresh:
-            self._register_files(fresh)
-        import time as _time
-
+        schemas = dict(parent.get("schemas", {}))
+        files = {p: e for p, e in parent.get("files", {}).items() if p not in dropped}
+        for p, e in (added or {}).items():
+            sid = hashlib.sha1(e["schema"].encode()).hexdigest()[:12]
+            schemas[sid] = e["schema"]
+            if "seq" not in e:
+                names = [f["name"] for f in json.loads(e["schema"])["fields"]]
+                fids = {n: ids_by_name[n] for n in names if n in ids_by_name}
+                e = {**e, "seq": snap, "field_ids": fids}
+            files[p] = {**e, "schema": sid}
+        # a carried delete stays only while it applies to a listed file:
+        # an equality delete to one older than itself, a position delete
+        # to the files it names (it keeps naming only those still listed)
+        oldest = min((e["seq"] for e in files.values()), default=snap)
+        carried = []
+        for d in parent.get("eq_deletes", []) + parent.get("pos_deletes", []):
+            if "key" in d:
+                live = d["seq"] > oldest
+            else:
+                d = {**d, "files": [x for x in d["files"] if self._norm_uri(x) in files]}
+                live = bool(d["files"])
+            if live and d["path"] not in dropped:
+                carried.append(d)
+        deletes = carried + [d if "seq" in d else {**d, "seq": snap} for d in deletes]
         manifest = {
             "snapshot_id": snap,
-            "parent_id": parent or None,
+            "parent_id": parent_id or None,
             "operation": operation,
             # commit wall-clock — the FOR TIMESTAMP AS OF anchor
-            "committed_at": _time.time(),
+            "committed_at": time.time(),
+            # one entry per data file: {"seq", "schema" (an id of
+            # "schemas"), "field_ids", "base", "partition", "spec",
+            # "rows", "stats" ({col: [min, max]}: a column without one
+            # can't be pruned)}
             "files": files,
             "n_files": len(files),
-            "n_records": n_records,
+            "n_records": sum(e["rows"] for e in files.values()),
+            "schemas": {e["schema"]: schemas[e["schema"]] for e in files.values()},
             # current schema, field-id'd; "schema" kept as the plain
             # struct json for external consumers
             "schema_meta": schema_meta,
             "next_field_id": next_fid,
             "schema": self._struct_from_meta(schema_meta).json(),
             "partition_spec": partition_spec,
-            # per-file zone maps ({path: {col: [min, max]}}) — absent
-            # entries simply can't be pruned (backward compatible)
-            "file_stats": file_stats or {},
             # WAP stage marker — cleared by publish(); expire retains
             # staged snapshots regardless of id ordering until they
             # are explicitly abandoned or age out (real Iceberg keeps
@@ -708,14 +642,15 @@ class SnapshotTable:
             # the moment any unrelated commit lands)
             "staged": staged,
             # merge-on-read deletes. Equality: [{"key": col, "fid":
-            # field-id, "path": p, "seq": s}] — applies to data files
-            # with sequence < s (Iceberg v2 scoping; delete-then-
-            # reinsert shows the reinserted row). Position: [{"path":
-            # p, "seq": s, "files": [data files]}] with (file_path,
-            # row_index) rows — scoped inherently by naming files.
-            # Compaction applies both physically and clears the lists.
-            "eq_deletes": eq_deletes,
-            "pos_deletes": pos_deletes,
+            # field-id, "schema": key file schema, "path": p, "seq": s}]
+            # — applies to data files with sequence < s (Iceberg v2
+            # scoping; delete-then-reinsert shows the reinserted row).
+            # Position: [{"path": p, "seq": s, "files": [data files]}]
+            # with (file_path, row_index) rows — scoped inherently by
+            # naming files. Compaction applies both physically and
+            # clears the lists.
+            "eq_deletes": [d for d in deletes if "key" in d],
+            "pos_deletes": [d for d in deletes if "key" not in d],
             # free-form commit summary (Iceberg's snapshot summary
             # map) — e.g. the streaming sink stamps its micro-batch id
             # here, which is what makes checkpoint-restart idempotent
@@ -724,7 +659,7 @@ class SnapshotTable:
         mpath = os.path.join(self._meta, f"v{snap}.json")
         with open(mpath, "w") as f:
             json.dump(manifest, f)
-        if update_hint:
+        if not staged:
             # optimistic concurrency: the snapshot this commit was
             # built against must STILL be current at the swap —
             # Iceberg's compare-and-swap against the catalog pointer.
@@ -733,9 +668,9 @@ class SnapshotTable:
             # swapping anyway would silently drop their commit from
             # the history chain (lost update).
             now = self.current_snapshot_id()
-            if now != (parent or 0):
+            if now != parent_id:
                 raise ValueError(
-                    f"commit conflict: built against snapshot {parent or 0} "
+                    f"commit conflict: built against snapshot {parent_id} "
                     f"but {now} is now current — retry against the new head"
                 )
             # atomic pointer swap — the commit point
@@ -752,11 +687,11 @@ class SnapshotTable:
         return self.overwrite(df, summary=summary)
 
     def overwrite(self, df: DataFrame, summary: dict | None = None) -> int:
-        spec = self.partition_spec()
-        files, n, st, nfm = self._write_files(df, spec or None)
+        added = self._write_files(df, self.partition_spec())
+        cur = self._current()
         return self._commit(
-            files, n, "overwrite", df.schema.json(), st, new_file_meta=nfm,
-            summary=summary,
+            "overwrite", cur, added, self._paths(cur),
+            schema_json=df.schema.json(), summary=summary,
         )
 
     def last_streaming_batch_id(self) -> int:
@@ -777,55 +712,28 @@ class SnapshotTable:
         return -1
 
     def append(self, df: DataFrame, summary: dict | None = None) -> int:
-        spec = self.partition_spec()
-        files, n, st, nfm = self._write_files(df, spec or None)
-        cur = self.current_snapshot_id()
-        prev = (
-            self._manifest(cur)
-            if cur
-            else {"files": [], "n_records": 0, "file_stats": {}}
-        )
+        added = self._write_files(df, self.partition_spec())
+        # pending merge-on-read deletes still apply to the old files —
+        # and ONLY to them: the new files carry this commit's higher
+        # sequence number
         return self._commit(
-            prev["files"] + files,
-            prev["n_records"] + n,
-            "append",
-            df.schema.json(),
-            {**prev.get("file_stats", {}), **st},
-            # pending merge-on-read deletes still apply to the old
-            # files — and ONLY to them: the new files carry this
-            # commit's higher sequence number
-            eq_deletes=prev.get("eq_deletes", []),
-            pos_deletes=prev.get("pos_deletes", []),
-            new_file_meta=nfm,
-            schema_mode="append",
-            parent=cur or None,
-            summary=summary,
+            "append", self._current(), added,
+            schema_json=df.schema.json(), schema_mode="append", summary=summary,
         )
 
     # ---- schema evolution (metadata-only, field-id resolved) -----------
     def _metadata_commit(self, operation: str, schema_meta: list,
                          partition_spec: list[str] | None = None) -> int:
-        _, cur = self._head()
         return self._commit(
-            cur["files"], cur["n_records"], operation,
-            file_stats=cur.get("file_stats", {}),
-            eq_deletes=cur.get("eq_deletes", []),
-            pos_deletes=cur.get("pos_deletes", []),
-            schema_meta=schema_meta,
-            partition_spec=(
-                partition_spec
-                if partition_spec is not None
-                else cur.get("partition_spec", [])
-            ),
+            operation, self._head(),
+            schema_meta=schema_meta, partition_spec=partition_spec,
         )
 
     def schema_meta(self) -> list:
-        cur = self.current_snapshot_id()
-        return self._manifest(cur)["schema_meta"] if cur else []
+        return self._current().get("schema_meta", [])
 
     def partition_spec(self) -> list[str]:
-        cur = self.current_snapshot_id()
-        return self._manifest(cur).get("partition_spec", []) if cur else []
+        return self._current().get("partition_spec", [])
 
     def add_column(self, name: str, dtype: str = "string") -> int:
         """Metadata-only ADD COLUMN: allocates a fresh field id; no
@@ -837,8 +745,7 @@ class SnapshotTable:
         T.StructField.fromJson(
             {"name": name, "type": dtype, "nullable": True, "metadata": {}}
         )
-        cur = self._manifest(self.current_snapshot_id())
-        fid = cur.get("next_field_id", len(meta) + 1)
+        fid = self._head()["next_field_id"]
         return self._metadata_commit("add-column", meta + [[fid, name, dtype]])
 
     def rename_column(self, old: str, new: str) -> int:
@@ -891,7 +798,7 @@ class SnapshotTable:
         """Partition-spec EVOLUTION: change the spec for FUTURE writes
         without rewriting a single existing file. Old files keep their
         old layout (their partition tuples AND the spec they were
-        written under stay in the sidecar); the scan merges both
+        written under stay in their manifest entries); the scan merges both
         layouts and pruning applies per-spec — files predating the
         spec simply can't be pruned on the new partition column (they
         still prune via zone maps). Entries are identity columns or
@@ -932,34 +839,26 @@ class SnapshotTable:
         snap = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
         if snap == 0:
             raise ValueError(f"no snapshots in {self.path}")
-        m = self._manifest(snap)
-        files = m["files"]
+        entries = self._manifest(snap)["files"]
+        files = list(entries)
         if skip is not None:
             col, lo, hi = skip
-            fstats = m.get("file_stats", {})
 
             def may_contain(path: str) -> bool:
-                rng = fstats.get(path, {}).get(col)
+                rng = entries[path]["stats"].get(col)
                 return rng is None or (rng[0] <= hi and rng[1] >= lo)
 
             files = [f for f in files if may_contain(f)]
         if partition_eq is not None:
             pcol, pval = partition_eq
-            fm = self._files_meta()
 
             def part_match(path: str) -> bool:
-                info = fm.get(path, {})
-                part = info.get("partition", {})
-                spec = info.get("spec")
-                if spec is None:
-                    # pre-transform sidecar entries recorded identity
-                    # tuples only
-                    return pcol not in part or part[pcol] == str(pval)
                 # hidden partitioning: an equality predicate on the
                 # SOURCE column prunes via every transform of that
                 # column in the file's spec — transform(pval) must
                 # equal the file's recorded partition value
-                for entry in spec:
+                part = entries[path]["partition"]
+                for entry in entries[path]["spec"]:
                     kind, col, param, pname = parse_spec_entry(entry)
                     if col != pcol or pname not in part:
                         continue
@@ -970,40 +869,33 @@ class SnapshotTable:
             files = [f for f in files if part_match(f)]
         return files
 
-    def _scan(
-        self, paths: list[str], schema_json: str | None, base: str | None = None
-    ) -> DataFrame:
+    def _scan(self, paths: list[str], schema_json: str, base: str | None = None) -> DataFrame:
         """Parquet scan of files this table wrote. The reader gets the
-        schema the files were written with (``schema_json``, from the
-        sidecar or a delete entry) instead of inferring it from their
-        footers, which costs a Spark job per scan — Iceberg likewise
-        reads schemas from metadata, never from data files.
-        Hive-partitioned groups (``base`` set) keep ``basePath``
-        discovery: the recorded schema lacks the hidden transform
-        columns that discovery restores. Entries written before schemas
-        were recorded infer."""
-        reader = self.spark.read
+        schema the files were written with (``schema_json``, from their
+        manifest entries or a delete entry) instead of inferring it from
+        their footers, which costs a Spark job per scan — Iceberg
+        likewise reads schemas from metadata, never from data files.
+        Hive-partitioned groups (``base`` set) restore their partition
+        columns by ``basePath`` discovery, typed by the same pinned
+        schema: a string partition value "01" reads back "01"."""
+        reader = self.spark.read.schema(T.StructType.fromJson(json.loads(schema_json)))
         if base:
             reader = reader.option("basePath", base)
-        elif schema_json:
-            reader = reader.schema(T.StructType.fromJson(json.loads(schema_json)))
         return reader.parquet(*paths)
 
     def _read_delete(self, d: dict) -> DataFrame:
         """A delete file of a manifest's ``eq_deletes``/``pos_deletes``:
         equality entries record their key file's schema, position
         files are always (file_path, row_index)."""
-        return self._scan([d["path"]], d.get("schema") if "key" in d else _POS_DELETE_SCHEMA)
+        return self._scan([d["path"]], d["schema"] if "key" in d else _POS_DELETE_SCHEMA)
 
     @staticmethod
     def _eq_key(schema_meta: list, d: dict) -> str | None:
         """The column equality delete ``d`` keys on under ``schema_meta``,
-        resolved strictly by field id when the entry carries one: after
-        drop_column the id maps to nothing (None: the delete removes
-        nothing), and a later same-named re-add gets a FRESH id, so the
-        old delete can never latch onto the unrelated column."""
-        if "fid" not in d:
-            return d["key"]
+        resolved strictly by field id: after drop_column the id maps to
+        nothing (None: the delete removes nothing), and a later
+        same-named re-add gets a FRESH id, so the old delete can never
+        latch onto the unrelated column."""
         return next((f[1] for f in schema_meta if int(f[0]) == d["fid"]), None)
 
     def _scan_groups(self, m: dict, files: list[str]) -> list[tuple]:
@@ -1015,27 +907,26 @@ class SnapshotTable:
         scoped to data files with a LOWER sequence number than the
         delete) and the position deletes naming a file of the group.
         One group per commit vintage, not per file."""
-        fm = self._files_meta()
-        eq_deletes = m.get("eq_deletes", [])
-        pos_deletes = m.get("pos_deletes", [])
-        named = [{self._norm_uri(x) for x in d.get("files", [])} for d in pos_deletes]
+        entries = m["files"]
+        eq_deletes = m["eq_deletes"]
+        pos_deletes = m["pos_deletes"]
+        named = [{self._norm_uri(x) for x in d["files"]} for d in pos_deletes]
         groups: dict[tuple, list[str]] = {}
         for p in files:
-            info = fm.get(p, {})
-            seq = info.get("seq", 0)
+            e = entries[p]
             key = (
-                info.get("schema") or "",
-                json.dumps(info.get("field_ids", {}), sort_keys=True),
-                info.get("base"),
-                tuple(i for i, d in enumerate(eq_deletes) if d.get("seq", 1 << 62) > seq),
+                e["schema"],
+                json.dumps(e["field_ids"], sort_keys=True),
+                e["base"],
+                tuple(i for i, d in enumerate(eq_deletes) if d["seq"] > e["seq"]),
                 tuple(i for i, n in enumerate(named) if p in n),
             )
             groups.setdefault(key, []).append(p)
         out = []
-        for (schema_json, fid_json, base, eq_ids, pos_ids), fl in groups.items():
+        for (sid, fid_json, base, eq_ids, pos_ids), fl in groups.items():
             keys = [(eq_deletes[i], self._eq_key(m["schema_meta"], eq_deletes[i])) for i in eq_ids]
             out.append((
-                schema_json,
+                m["schemas"][sid],
                 {int(i): n for n, i in json.loads(fid_json).items()},
                 base,
                 [(d, k) for d, k in keys if k is not None],
@@ -1061,9 +952,9 @@ class SnapshotTable:
         One scan per group of ``_scan_groups`` — per vintage, not per
         file, so a long append history with no pending deletes is a
         single scan. Each scan is pinned to the vintage's written
-        schema from the sidecar (``_scan``), so planning a read
-        launches no Spark job; the field-id projection then casts to
-        the current schema.
+        schema from its manifest entries (``_scan``), so planning a
+        read launches no Spark job; the field-id projection then casts
+        to the current schema.
         """
         schema_meta = m["schema_meta"]
         struct = self._struct_from_meta(schema_meta)
@@ -1402,7 +1293,6 @@ class SnapshotTable:
 
     def _rewrite(
         self,
-        cur_id: int,
         cur: dict,
         operation: str,
         locate: Callable[[DataFrame], DataFrame],
@@ -1413,54 +1303,35 @@ class SnapshotTable:
         ``merge_into`` and ``delete_where``, file-pruned like Iceberg's.
 
         ONE metadata pass locates the files to rewrite: ``locate`` maps
-        the live snapshot ``cur_id``, read with ``_metadata.file_path``,
-        to the rows that force their file's rewrite, and the distinct
-        paths are collected. Only THOSE files are read back; ``rewrite``
-        maps their rows to the replacement rows, written under the
-        table's partition spec with this commit's sequence number (their
-        changes are already applied). Every untouched file carries into
-        the new manifest verbatim with its sequence number (pending MOR
-        deletes stay correctly scoped), zone maps and sidecar row count,
-        so a ten-row MERGE into a 100 TB table rewrites the files holding
-        those ten keys, never the table. Readers of older snapshots are
-        untouched (tested: snapshot isolation in tests/test_snapshots.py).
-        The commit keeps ``cur``'s schema.
+        the live snapshot ``cur`` (a manifest), read with
+        ``_metadata.file_path``, to the rows that force their file's
+        rewrite, and the distinct paths are collected. Only THOSE files
+        are read back; ``rewrite`` maps their rows to the replacement
+        rows, written under the table's partition spec with this
+        commit's sequence number (their changes are already applied).
+        Every untouched file's entry carries into the new manifest
+        verbatim — sequence number (pending MOR deletes stay correctly
+        scoped), zone map and row count — so a ten-row MERGE into a
+        100 TB table rewrites the files holding those ten keys, never
+        the table. Readers of older snapshots are untouched (tested:
+        snapshot isolation in tests/test_snapshots.py). The commit
+        keeps ``cur``'s schema.
 
         ``inserts`` says ``rewrite`` can add rows that no located row
         maps to (MERGE's inserts). Without it, a locate pass that hits
         no file leaves nothing to write, so the write job is skipped;
         the commit still lands, with the same files."""
         hits = (
-            locate(self.read(snapshot_id=cur_id, keep_meta=True))
+            locate(self.read(snapshot_id=cur["snapshot_id"], keep_meta=True))
             .select("_file_path")
             .distinct()
             .collect()  # bounded by the manifest's file count
         )
         hit_paths = {self._norm_uri(r._file_path) for r in hits}
-        untouched = [f for f in cur["files"] if f not in hit_paths]
         to_rewrite = [f for f in cur["files"] if f in hit_paths]
         out = rewrite(self._read_files(cur, to_rewrite))
-        if to_rewrite or inserts:
-            spec = cur.get("partition_spec", [])
-            files, n_new, st, nfm = self._write_files(out, spec or None)
-        else:
-            files, n_new, st, nfm = [], 0, {}, {}
-        kept = set(untouched)
-        kept_stats = {
-            f: s for f, s in cur.get("file_stats", {}).items() if f in kept
-        }
-        return self._commit(
-            untouched + files,
-            self._rows_of(untouched) + n_new,
-            operation,
-            out.schema.json(),
-            {**kept_stats, **st},
-            eq_deletes=cur.get("eq_deletes", []),
-            pos_deletes=cur.get("pos_deletes", []),
-            new_file_meta=nfm,
-            schema_meta=cur["schema_meta"],
-            parent=cur_id,
-        )
+        added = self._write_files(out, cur["partition_spec"]) if to_rewrite or inserts else {}
+        return self._commit(operation, cur, added, to_rewrite)
 
     def merge(self, source: DataFrame, key: str) -> int:
         """Copy-on-write MERGE INTO (see ``_rewrite``): WHEN MATCHED
@@ -1474,14 +1345,13 @@ class SnapshotTable:
         the union, so it is lazily checkpointed: the first of them
         evaluates it once and the others read the checkpoint.
         """
-        cur_id, cur = self._head()
+        cur = self._head()
         source = source.localCheckpoint(eager=False)
         keys_df = source.select(key)
         # column order follows the TABLE schema; a source with same
         # names but different order/nullability must not redefine it
         source_rows = source.select(*[f[1] for f in cur["schema_meta"]])
         return self._rewrite(
-            cur_id,
             cur,
             "merge",
             lambda live: live.join(keys_df, on=key, how="left_semi"),
@@ -1512,7 +1382,7 @@ class SnapshotTable:
         (column name → Column expression) applied to the matching rows
         and every other row carried bit-identical. SQL UPDATE
         semantics: a NULL condition updates nothing."""
-        cur_id, cur = self._head()
+        cur = self._head()
         names = [f[1] for f in cur["schema_meta"]]
         unknown = [c for c in assignments if c not in names]
         if unknown:
@@ -1526,7 +1396,6 @@ class SnapshotTable:
             for c in names
         ]
         return self._rewrite(
-            cur_id,
             cur,
             "update",
             lambda live: live.filter(condition),
@@ -1535,11 +1404,9 @@ class SnapshotTable:
 
     def row_count(self, snapshot_id: int | None = None) -> int:
         """Total DATA-FILE rows at a snapshot, served from the
-        manifest + per-file sidecar facts without any data scan (the
-        same bookkeeping ``.partitions`` serves — Iceberg's
-        total-records snapshot summary). Files recorded before the
-        sidecar grew row facts fall back to a driver-side parquet
-        footer read. NOTE: this is the pre-merge-on-read total — it
+        manifest's entries without any data scan (the same bookkeeping
+        ``.partitions`` serves — Iceberg's total-records snapshot
+        summary). NOTE: this is the pre-merge-on-read total — it
         does not subtract pending equality/position deletes; on
         append-only tables (the streaming-sink ledger this serves) it
         equals ``read().count()`` exactly, without the full scan that
@@ -1548,33 +1415,28 @@ class SnapshotTable:
         if sid == 0:
             return 0
         m = self._manifest(sid)
-        if m.get("eq_deletes") or m.get("pos_deletes"):
+        if m["eq_deletes"] or m["pos_deletes"]:
             raise ValueError(
                 f"row_count() at snapshot {sid} of {self.path}: pending "
                 "merge-on-read deletes make the data-file total diverge "
                 "from read().count(); use read().count() on MOR tables"
             )
-        return self._rows_of(m["files"])
+        return m["n_records"]
 
     def partitions_metadata(self) -> list[dict]:
         """The ``.partitions`` metadata table, computed WITHOUT any
         data scan: per partition tuple, file count and record count,
-        straight from the manifest + per-file sidecar facts (Iceberg
-        serves this from manifest entries the same way). Files written
-        under a spec that did not partition on a column report a NULL
-        for it."""
-        _, m = self._head()
-        fm = self._files_meta()
+        straight from the manifest's entries (Iceberg serves it from
+        manifest entries the same way). Files written under a spec that
+        did not partition on a column report a NULL for it."""
         agg: dict[tuple, dict] = {}
-        for p in m["files"]:
-            info = fm.get(p, {})
-            part = info.get("partition", {}) or {}
-            key = tuple(sorted(part.items()))
+        for e in self._head()["files"].values():
             slot = agg.setdefault(
-                key, {"partition": dict(part), "n_files": 0, "n_records": 0}
+                tuple(sorted(e["partition"].items())),
+                {"partition": dict(e["partition"]), "n_files": 0, "n_records": 0},
             )
             slot["n_files"] += 1
-            slot["n_records"] += self._rows(p, fm)
+            slot["n_records"] += e["rows"]
         return sorted(agg.values(), key=lambda s: sorted(s["partition"].items()))
 
     def merge_into(
@@ -1618,7 +1480,7 @@ class SnapshotTable:
         join and the inserts' anti join, so it is lazily checkpointed
         like ``merge``'s: evaluated once, and a nondeterministic source
         cannot pass the cardinality check and then insert other rows."""
-        cur_id, cur = self._head()
+        cur = self._head()
         source = source.localCheckpoint(eager=False)
         names = [f[1] for f in cur["schema_meta"]]
         dup = (
@@ -1697,7 +1559,7 @@ class SnapshotTable:
             return survivors.unionByName(inserts)
 
         return self._rewrite(
-            cur_id, cur, "merge", locate, rewrite, inserts=insert_not_matched
+            cur, "merge", locate, rewrite, inserts=insert_not_matched
         )
 
     def delete_where(self, condition) -> int:
@@ -1708,9 +1570,8 @@ class SnapshotTable:
 
         SQL DELETE semantics: rows where ``condition`` is NULL are
         NOT deleted (``WHERE`` three-valued logic)."""
-        cur_id, cur = self._head()
+        cur = self._head()
         return self._rewrite(
-            cur_id,
             cur,
             "delete",
             lambda live: live.filter(condition),
@@ -1755,7 +1616,7 @@ class SnapshotTable:
         Iceberg's per-file accounting. Time travel to a pre-delete
         snapshot still shows the rows — deletes are snapshot metadata,
         not mutations."""
-        cur_id, cur = self._head()
+        cur = self._head()
         fid = next(
             (int(f[0]) for f in cur["schema_meta"] if f[1] == key_col), None
         )
@@ -1763,17 +1624,9 @@ class SnapshotTable:
             raise ValueError(f"no such column: {key_col!r}")
         key_df = keys.select(F.col(key_col)).distinct()
         dst = self._write_delete_file(key_df)
-        eq = list(cur.get("eq_deletes", [])) + [
-            # seq stamped by _commit
-            {"key": key_col, "fid": fid, "path": dst, "schema": key_df.schema.json()}
-        ]
-        return self._commit(
-            cur["files"], cur["n_records"], "eq-delete", cur["schema"],
-            cur.get("file_stats", {}), eq_deletes=eq,
-            pos_deletes=cur.get("pos_deletes", []),
-            schema_meta=cur["schema_meta"],
-            parent=cur_id,
-        )
+        # seq stamped by _commit
+        entry = {"key": key_col, "fid": fid, "path": dst, "schema": key_df.schema.json()}
+        return self._commit("eq-delete", cur, deletes=[entry])
 
     def delete_where_positional(self, condition) -> int:
         """MERGE-ON-READ position DELETE (Iceberg v2 position delete
@@ -1786,9 +1639,9 @@ class SnapshotTable:
         and stable per file); readers anti-join on (file, pos), scoped
         inherently because the delete names exact files. Compaction
         applies and clears them like equality deletes."""
-        cur_id, cur = self._head()
+        cur = self._head()
         matches = (
-            self.read(snapshot_id=cur_id, keep_meta=True)
+            self.read(snapshot_id=cur["snapshot_id"], keep_meta=True)
             .filter(condition)
             .select(
                 F.col("_file_path").alias("file_path"),
@@ -1802,17 +1655,9 @@ class SnapshotTable:
             r.file_path
             for r in self._scan([dst], _POS_DELETE_SCHEMA).select("file_path").distinct().collect()
         ]
-        pos = list(cur.get("pos_deletes", [])) + [
-            {"path": dst, "files": touched}  # seq stamped by _commit
-        ]
-        return self._commit(
-            cur["files"], cur["n_records"], "pos-delete", cur["schema"],
-            cur.get("file_stats", {}),
-            eq_deletes=cur.get("eq_deletes", []),
-            pos_deletes=pos,
-            schema_meta=cur["schema_meta"],
-            parent=cur_id,
-        )
+        # seq stamped by _commit
+        entry = {"path": dst, "files": touched}
+        return self._commit("pos-delete", cur, deletes=[entry])
 
     # ---- maintenance ---------------------------------------------------
     def rollback_to(self, snapshot_id: int) -> int:
@@ -1823,13 +1668,12 @@ class SnapshotTable:
         the version-hint swap, never mid-scan. No data is copied: at
         100 TB a rollback is a metadata-only operation."""
         m = self._manifest(snapshot_id)
+        cur = self._head()
+        # the target's entries, with their own written schemas
+        entries = {p: {**e, "schema": m["schemas"][e["schema"]]} for p, e in m["files"].items()}
         return self._commit(
-            m["files"], m["n_records"], "rollback", m["schema"],
-            m.get("file_stats", {}),
-            eq_deletes=m.get("eq_deletes", []),
-            pos_deletes=m.get("pos_deletes", []),
-            schema_meta=m["schema_meta"],
-            partition_spec=m.get("partition_spec", []),
+            "rollback", cur, entries, self._paths(cur), m["eq_deletes"] + m["pos_deletes"],
+            schema_meta=m["schema_meta"], partition_spec=m["partition_spec"],
         )
 
     def rollback_to_timestamp(self, ts: float) -> int:
@@ -1841,10 +1685,10 @@ class SnapshotTable:
         return self.rollback_to(self.snapshot_as_of(ts))
 
     @staticmethod
-    def _delete_paths(m: dict) -> list[str]:
-        return [d["path"] for d in m.get("eq_deletes", [])] + [
-            d["path"] for d in m.get("pos_deletes", [])
-        ]
+    def _paths(m: dict) -> list[str]:
+        """Every file manifest ``m`` references: data and delete files."""
+        deletes = m.get("eq_deletes", []) + m.get("pos_deletes", [])
+        return [*m.get("files", {}), *(d["path"] for d in deletes)]
 
     def expire_snapshots(
         self,
@@ -1931,14 +1775,10 @@ class SnapshotTable:
         ]
         kept_files: set[str] = set()
         for i in retained | pending:
-            km = self._manifest(i)
-            kept_files.update(km["files"])
-            kept_files.update(self._delete_paths(km))
+            kept_files.update(self._paths(self._manifest(i)))
         deleted = 0
         for i in expired:
-            em = self._manifest(i)
-            reclaim = em["files"] + self._delete_paths(em)
-            for fpath in reclaim:
+            for fpath in self._paths(self._manifest(i)):
                 if fpath not in kept_files and os.path.exists(fpath):
                     os.remove(fpath)
                     deleted += 1
@@ -1953,11 +1793,11 @@ class SnapshotTable:
         for auditing; main readers are untouched. At 100 TB this is
         how an ingest pipeline validates a day's batch (row counts,
         null keys, dedup rates) before any consumer can see it."""
-        spec = self.partition_spec()
-        files, n, st, nfm = self._write_files(df, spec or None)
+        added = self._write_files(df, self.partition_spec())
+        cur = self._current()
         return self._commit(
-            files, n, operation, df.schema.json(), st,
-            update_hint=False, staged=True, new_file_meta=nfm,
+            operation, cur, added, self._paths(cur),
+            schema_json=df.schema.json(), staged=True,
         )
 
     def publish(self, snapshot_id: int, reparent: bool = False) -> None:
@@ -2023,9 +1863,7 @@ class SnapshotTable:
         are expire_snapshots' job. Returns the count deleted."""
         referenced: set[str] = set()
         for i in self._all_manifest_ids():
-            m = self._manifest(i)
-            referenced.update(m["files"])
-            referenced.update(self._delete_paths(m))
+            referenced.update(self._paths(self._manifest(i)))
         deleted = 0
         scan_dirs = [self._data]
         ddir = os.path.join(self.path, "deletes")
@@ -2059,22 +1897,16 @@ class SnapshotTable:
         of data skipping. At 100 TB, compacting a day's ingest sorted
         on the query-predicate column is what turns "scan the day"
         into "scan the handful of files that can match"."""
-        cur = self._manifest(self.current_snapshot_id())
+        cur = self._head()
         total = sum(os.path.getsize(p) for p in cur["files"])
         n_out = max(1, -(-total // target_bytes))  # ceil
+        df = self.read(snapshot_id=cur["snapshot_id"])
         if sort_by:
-            df = self.read().repartitionByRange(
-                int(n_out), *sort_by
-            ).sortWithinPartitions(*sort_by)
+            df = df.repartitionByRange(int(n_out), *sort_by).sortWithinPartitions(*sort_by)
         else:
-            df = self.read().repartition(int(n_out))
-        spec = self.partition_spec()
-        files, n, st, nfm = self._write_files(df, spec or None)
-        return self._commit(
-            files, n, "rewrite", df.schema.json(), st, new_file_meta=nfm,
-            schema_meta=cur["schema_meta"],
-            partition_spec=cur.get("partition_spec", []),
-        )
+            df = df.repartition(int(n_out))
+        added = self._write_files(df, cur["partition_spec"])
+        return self._commit("rewrite", cur, added, self._paths(cur))
 
 
 # --------------------------------------------------------------------------
@@ -2534,7 +2366,7 @@ def _orphan_table(spark: SparkSession, sf_dir: str) -> tuple[SnapshotTable, int,
     tbl.overwrite(orders.filter(F.col("o_orderkey") % 3 == 0))
     staged = tbl.stage(orders.filter(F.col("o_orderkey") % 3 == 1))
     # the crash: files land in data/, no manifest ever references them
-    debris, _, _, _ = tbl._write_files(
+    debris = tbl._write_files(
         orders.filter(F.col("o_orderkey") % 3 == 2).repartition(3)
     )
     result = (tbl, staged, len(debris))
@@ -3255,8 +3087,8 @@ FROM orders WHERE o_orderkey % 3 = 1 GROUP BY o_orderstatus
 )
 def q_iceberg_partitions_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ``.partitions`` metadata table, served WITHOUT a data scan:
-    per partition tuple, record counts straight from the manifest +
-    per-file sidecar facts (footer row counts recorded at write time)
+    per partition tuple, record counts straight from the manifest's
+    entries (footer row counts recorded at write time)
     — on the spec-evolved table, the pre-evolution files report a
     NULL partition value and the hive-partitioned appends report per-
     status counts. The oracle recomputes both groups from the source
@@ -3645,11 +3477,11 @@ def q_iceberg_merge_full_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewritten = set(before["files"]) - set(after["files"])
     assert carried and rewritten, (len(carried), len(rewritten))
     # every carried file's key band lies wholly above the sync cutoff
-    stats = before["file_stats"]
+    stats = {f: e["stats"] for f, e in before["files"].items()}
     assert all(
         stats[f]["o_orderkey"][0] >= tbl._sync_cutoff
         for f in carried
-        if "o_orderkey" in stats.get(f, {})
+        if "o_orderkey" in stats[f]
     )
     return tbl.read().select(
         "o_orderkey",

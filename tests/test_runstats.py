@@ -3,6 +3,8 @@ that measures it (iceberg_twist_spark/runstats.py)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
 
 from iceberg_twist_spark import runstats
@@ -28,6 +30,29 @@ _NAMES = {
 
 def test_thread_names_classify():
     assert {n: runstats.classify(n) for n in _NAMES} == _NAMES
+
+
+def test_split_keeps_an_exited_threads_cpu_in_its_group():
+    """A thread that vanishes between samples keeps the ticks it gained
+    up to its last sample, in its own group; only the process ticks
+    after that land in ``exited``."""
+    samples = [
+        (100, {1: ("task", 50), 2: ("gc", 5)}),
+        # a C2 thread starts; thread 2 is last seen here
+        (130, {1: ("task", 60), 2: ("gc", 9), 3: ("jit_c2", 8)}),
+        (150, {1: ("task", 70), 3: ("jit_c2", 11)}),
+        # the C2 thread exits
+        (170, {1: ("task", 75)}),
+    ]
+    hz = os.sysconf("SC_CLK_TCK")
+    split = {g: round(v * hz) for g, v in runstats._split(samples, workers=6).items()}
+    assert split == {
+        "jit_c2": 11, "jit_c1": 0, "gc": 4, "task": 25, "other": 0,
+        "exited": 70 - 11 - 4 - 25, "python_workers": 6,
+    }
+    # the two end samples alone put both vanished threads in exited
+    ends = {g: round(v * hz) for g, v in runstats._split([samples[0], samples[-1]]).items()}
+    assert ends["exited"] == 70 - 25 and ends["gc"] == ends["jit_c2"] == 0
 
 
 def test_a_query_spends_task_and_jit_cpu(spark):

@@ -151,18 +151,21 @@ def test_zone_map_pruning_skips_files(spark, sf_dir):
 
 
 def test_zone_map_absent_stats_are_conservative(spark):
-    """A manifest without stats for a file must keep it (no false
-    negatives on old commits or unstatted columns)."""
+    """An entry without a zone map for a column must keep its file (no
+    false negatives on unstatted columns)."""
     import json
 
     tbl = SnapshotTable(spark, tempfile.mkdtemp(prefix="itws_prune_"))
-    tbl.overwrite(spark.range(100).selectExpr("id", "id * 1.0 AS v"))
-    # simulate a pre-stats manifest by dropping file_stats
+    tbl.overwrite(spark.range(0, 100, 1, 4).selectExpr("id", "id * 1.0 AS v"))
+    assert len(tbl.plan_files(skip=("v", 5.0, 6.0))) == 1
+    # drop one entry's zone map: the file holding ids 50..74
     mpath = os.path.join(tbl._meta, "v1.json")
     m = json.load(open(mpath))
-    m["file_stats"] = {}
+    [unstatted] = [p for p, e in m["files"].items() if e["stats"]["v"][0] == 50.0]
+    m["files"][unstatted]["stats"] = {}
     json.dump(m, open(mpath, "w"))
-    assert tbl.plan_files(skip=("v", 5.0, 6.0)) == tbl.plan_files()
+    planned = tbl.plan_files(skip=("v", 5.0, 6.0))
+    assert len(planned) == 2 and unstatted in planned
     assert tbl.read(skip=("v", 5.0, 6.0)).count() == 2
 
 
@@ -171,8 +174,9 @@ def test_file_stats_recorded_on_every_commit(spark):
     tbl.overwrite(spark.range(50).selectExpr("id", "id * 2.0 AS v"))
     tbl.append(spark.range(50, 100).selectExpr("id", "id * 2.0 AS v"))
     m = tbl.snapshots()[-1]
-    assert set(m["file_stats"]) == set(m["files"])
-    for st in m["file_stats"].values():
+    assert m["files"]
+    for e in m["files"].values():
+        st = e["stats"]
         assert "id" in st and "v" in st
         lo, hi = st["v"]
         assert lo <= hi
@@ -191,14 +195,13 @@ def test_append_with_empty_first_partition_writes_no_empty_file(spark):
         return tbl
 
     def planned_rows(tbl, skip):
-        fm = tbl._files_meta()
-        return sorted(fm[f]["rows"] for f in tbl.plan_files(skip=skip))
+        entries = tbl.snapshots()[-1]["files"]
+        return sorted(entries[f]["rows"] for f in tbl.plan_files(skip=skip))
 
     # ids 150..199 sit in the last of four partitions; the first is empty
     split = table_after_append(spark.range(0, 200, 1, 4).filter("id >= 150"))
     single = table_after_append(spark.range(150, 200, 1, 1))
-    fm = split._files_meta()
-    assert all(fm[f]["rows"] > 0 for f in split.snapshots()[-1]["files"])
+    assert all(e["rows"] > 0 for e in split.snapshots()[-1]["files"].values())
     for skip in (("v", 0.0, 10.0), ("v", 160.0, 170.0)):
         assert planned_rows(split, skip) == planned_rows(single, skip)
     assert planned_rows(split, ("v", 0.0, 10.0)) == [100]
@@ -244,6 +247,79 @@ def test_expire_reclaims_only_unreferenced_files(spark, sf_dir):
     # idempotent: a second expire finds nothing new to reclaim
     res = tbl.expire_snapshots(keep_last=2)
     assert res == {"expired": [], "deleted_files": 0}
+
+
+def test_expiry_leaves_no_metadata_naming_deleted_files(spark, tmp_path):
+    """Every fact about a data file lives in the manifests that list it,
+    so once expiry and orphan removal delete a data or delete file, no
+    file under metadata/ still names it."""
+    tbl = SnapshotTable(spark, str(tmp_path / "t"))
+    tbl.create(spark.range(0, 40, 1, 4).selectExpr("id", "id * 10 AS v"))
+    tbl.append(spark.range(40, 50).selectExpr("id", "id * 10 AS v"))
+    tbl.delete_keys(spark.createDataFrame([(3,), (45,)], "id long"), "id")
+    tbl.merge(spark.createDataFrame([(5, 0), (60, 600)], "id long, v long"), "id")
+    tbl.rewrite_data_files()
+
+    def on_disk():
+        return {
+            os.path.join(root, name)
+            for sub in ("data", "deletes")
+            for root, _dirs, names in os.walk(os.path.join(tbl.path, sub))
+            for name in names
+            if name.endswith(".parquet")
+        }
+
+    before = on_disk()
+    tbl.expire_snapshots(keep_last=1)
+    tbl.remove_orphan_files()
+    gone = before - on_disk()
+    assert any("/deletes/" in p for p in gone) and len(gone) > 2
+    for name in os.listdir(tbl._meta):
+        with open(os.path.join(tbl._meta, name)) as f:
+            text = f.read()
+        assert not [p for p in gone if p in text], name
+    rows = {r.id: r.v for r in tbl.read().collect()}
+    assert len(rows) == 49 and rows[5] == 0 and rows[60] == 600 and 3 not in rows
+
+
+def test_deletes_leave_with_the_files_they_apply_to(spark, tmp_path):
+    """A carried merge-on-read delete stays in the manifest only while
+    it applies to a listed file: a position delete while a file it
+    names is listed, an equality delete while a file older than it is.
+    Once copy-on-write commits rewrite those files the delete leaves
+    the manifest, and expiry reclaims its file."""
+    tbl = SnapshotTable(spark, str(tmp_path / "t"))
+    tbl.create(spark.range(0, 40, 1, 4).selectExpr("id", "id * 10 AS v"))
+    tbl.delete_where_positional(F.col("id") == 3)
+    tbl.delete_keys(spark.createDataFrame([(15,)], "id long"), "id")
+    # rewrites the one file the position delete names
+    tbl.delete_where(F.col("id") < 10)
+    m = tbl._manifest(tbl.current_snapshot_id())
+    assert m["pos_deletes"] == [] and len(m["eq_deletes"]) == 1
+    # rewrites every file older than the equality delete
+    tbl.update_where(F.lit(True), {"v": F.col("v") + 1})
+    assert tbl._manifest(tbl.current_snapshot_id())["eq_deletes"] == []
+    tbl.expire_snapshots(keep_last=1)
+    assert os.listdir(os.path.join(tbl.path, "deletes")) == []
+    rows = {r.id: r.v for r in tbl.read().collect()}
+    assert sorted(rows) == [i for i in range(10, 40) if i != 15] and rows[20] == 201
+
+
+def test_manifest_stores_each_written_schema_once(spark, tmp_path):
+    """A 16-file overwrite's manifest holds its written schema once, not
+    once per file entry."""
+    import json
+
+    tbl = SnapshotTable(spark, str(tmp_path / "t"))
+    # range's id is NOT NULL, so the written schema differs from the
+    # table schema the manifest also carries (all columns nullable)
+    df = spark.range(0, 160, 1, 16).selectExpr("id", "cast(id AS string) AS s")
+    tbl.create(df)
+    with open(os.path.join(tbl._meta, "v1.json")) as f:
+        text = f.read()
+    m = json.loads(text)
+    assert len(m["files"]) == 16 and list(m["schemas"].values()) == [df.schema.json()]
+    assert text.count(json.dumps(df.schema.json())) == 1
 
 
 def test_wap_failed_stage_invisible_until_maintenance(spark, sf_dir):
@@ -729,15 +805,33 @@ def test_partition_spec_evolution_prunes_per_spec(spark, tmp_path):
     planned = tbl.plan_files(s3, partition_eq=("bucket", "1"))
     assert len(planned) < len(all_files), "no partition pruning happened"
     assert old_files <= set(planned), "pre-evolution files must be kept"
-    fm = tbl._files_meta()
+    entries = tbl._manifest(s3)["files"]
     for f in set(all_files) - set(planned):
-        assert fm[f]["partition"]["bucket"] != "1"
+        assert entries[f]["partition"]["bucket"] != "1"
     # read correctness: residual filter covers old-spec files
     got = {r.id for r in tbl.read(partition_eq=("bucket", "1")).collect()}
     assert got == {i for i in range(90) if i % 3 == 1}
     # full read restores partition columns from the hive layout
     assert tbl.read().count() == 90
     assert dict(tbl.read().dtypes)["bucket"] == "string"
+
+
+def test_string_partition_values_read_back_verbatim(spark, tmp_path):
+    """An identity partition on a string column whose values look like
+    integers reads back as written ("01", not "1"): each entry records
+    its partition column's type, so the basePath scan pins it instead
+    of inferring it from the directory names, and planning the read
+    runs no Spark job."""
+    tbl = SnapshotTable(spark, str(tmp_path / "t"))
+    rows = [(1, "01"), (2, "007"), (3, "01"), (4, "01"), (5, "007"), (6, "10")]
+    tbl.create(spark.createDataFrame(rows[:3], "id long, g string"))
+    tbl.set_partition_spec(["g"])
+    tbl.append(spark.createDataFrame(rows[3:], "id long, g string"))
+    df, n_jobs = _jobs_launched(spark, tbl.read)
+    assert n_jobs == 0
+    assert dict(df.dtypes)["g"] == "string"
+    assert sorted((r.id, r.g) for r in df.collect()) == rows
+    assert sorted(r.id for r in tbl.read(partition_eq=("g", "01")).collect()) == [1, 3, 4]
 
 
 def test_long_append_history_plans_single_scan(spark, tmp_path):
@@ -956,10 +1050,7 @@ def test_commit_conflict_detection(spark, tmp_path):
     s2 = tbl.append(spark.range(10, 15).selectExpr("id"))
     # the stale committer (built against s1) must conflict
     with pytest.raises(ValueError, match="commit conflict"):
-        tbl._commit(
-            m1["files"], m1["n_records"], "overwrite", m1["schema"],
-            schema_meta=m1["schema_meta"], parent=s1,
-        )
+        tbl._commit("overwrite", m1)
     # history is intact and a fresh retry (against the new head) lands
     assert tbl.current_snapshot_id() == s2
     s3 = tbl.append(spark.range(20, 22).selectExpr("id"))
@@ -1215,7 +1306,7 @@ def test_partition_transforms_prune_and_evolve(spark, tmp_path):
     assert old_files <= set(planned)
     kept_new = set(planned) - old_files
     assert kept_new and kept_new < new_files
-    fm = tbl._files_meta()
+    fm = tbl._manifest(tbl.current_snapshot_id())["files"]
     assert all(fm[f]["partition"]["id_trunc"] == "1000" for f in kept_new)
     assert tbl.read(partition_eq=("id", 1050)).count() == 1
     # days pruning with a timestamp probe value
@@ -1409,48 +1500,10 @@ def test_merge_evaluates_its_source_once(spark, tmp_path, verb):
     assert len(rows) == 50 and rows[5] == 50 and rows[35] == 3500 and rows[45] == 4500
 
 
-def test_entries_without_recorded_schemas_read_identically(spark, tmp_path):
-    """Sidecar entries and equality-delete entries written before
-    schemas were recorded fall back to inference. Reads pin each file's
-    WRITTEN schema; the field-id projection still renames and casts to
-    the current one, so both forms return the same rows and types."""
-    import json
-
-    tbl = SnapshotTable(spark, str(tmp_path / "t"))
-    cols = ("id", "cast(id AS int) AS k", "concat('r', id) AS tag")
-    tbl.create(spark.range(50).selectExpr(*cols).repartition(3, "id"))
-    tbl.append(spark.range(50, 70).selectExpr(*cols))
-    tbl.delete_keys(spark.createDataFrame([(3,), (55,)], "id long"), "id")
-    tbl.delete_where_positional(F.col("id") == 10)
-    tbl.rename_column("tag", "label")
-    tbl.widen_column("k", "long")
-
-    def snapshot():
-        df = tbl.read()
-        return df.dtypes, sorted(tuple(r) for r in df.collect())
-
-    want = snapshot()
-    assert len(want[1]) == 67 and want[0][1] == ("k", "bigint")
-    fm = tbl._files_meta()
-    assert all(e.get("schema") for e in fm.values())
-    for e in fm.values():
-        del e["schema"]
-    with open(tbl._files_meta_path(), "w") as f:
-        json.dump(fm, f)
-    sid = tbl.current_snapshot_id()
-    m = tbl._manifest(sid)
-    assert all("schema" in d for d in m["eq_deletes"])
-    for d in m["eq_deletes"]:
-        del d["schema"]
-    with open(os.path.join(tbl._meta, f"v{sid}.json"), "w") as f:
-        json.dump(m, f)
-    assert snapshot() == want
-
-
 def test_only_pinned_helpers_read_parquet():
     """Source guard: in snapshots.py every parquet read goes through
     ``SnapshotTable._scan`` (schema pinned; basePath discovery for
-    hive-partitioned groups, inference only for legacy entries), and
+    hive-partitioned groups, typed by the pinned schema), and
     the MinHash index verbs read their components only through
     ``Engine._read_component`` (tombstones: a pinned ``key long``)."""
     import ast
@@ -1519,8 +1572,7 @@ def test_copy_on_write_commits_leave_no_empty_files(spark, tmp_path):
     source = spark.createDataFrame([(500, 1)], "id long, v long")
     tbl.merge_into(source, "id", insert_not_matched=False)
     m = tbl._manifest(tbl.current_snapshot_id())
-    fm = tbl._files_meta()
     assert len(m["files"]) == 2
-    assert all(fm[f]["rows"] > 0 and m["file_stats"].get(f) for f in m["files"])
+    assert all(e["rows"] > 0 and e["stats"] for e in m["files"].values())
     assert m["n_records"] == 20
     assert sorted(r.id for r in tbl.read().collect()) == list(range(20, 40))

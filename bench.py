@@ -170,7 +170,7 @@ SHUFFLE_CEILING_SF01 = {  # bytes at sf0.1: measured (r4 calibration) → ceilin
                                       # metadata ops + plain scans
     "q_stream_iceberg_sink": 200_000,      # 708 B — per-micro-batch appends,
                                       # read back as one grouped scan
-    "q_llm_minhash_index_remove": 100_000,  # 9.1 KB — tombstone anti-joins
+    "q_llm_minhash_index_remove": 100_000,  # 9.1 KB — delete-file anti-joins
                                       # on the stored bands
 }
 

@@ -21,6 +21,7 @@ in the native PySpark API, and Catalyst sees one uninterrupted plan.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,6 +29,7 @@ from pyspark.sql import functions as F
 from iceberg_twist_spark.catalog import TABLES, register_views
 from iceberg_twist_spark.registry import REGISTRY, _load_all_modules
 from iceberg_twist_spark.session import get_spark
+from iceberg_twist_spark.sources.snapshots import SnapshotTable
 
 
 class Engine:
@@ -71,8 +73,6 @@ class Engine:
         read_incremental/read_changelog, schema and partition-spec
         evolution, compaction (plain or sort-order), expiry, WAP,
         branches/tags. See sources/snapshots.SnapshotTable."""
-        from iceberg_twist_spark.sources.snapshots import SnapshotTable
-
         return SnapshotTable(self.spark, path)
 
     # -- LLM-pipeline helpers (generic over user DataFrames) -------------
@@ -153,6 +153,61 @@ class Engine:
         cand = band_pairs(minhash_signatures(docs), n_bands=n_bands)
         return _verify_jaccard(cand, docs, tau)
 
+    # -- indexes: one SnapshotTable each ----------------------------------
+    # Every Engine index is one SnapshotTable at its path, and every index
+    # verb is one snapshot commit: build is ``create`` (the build
+    # parameters in the commit summary; IVF first sets its ``cluster``
+    # partition spec), append is ``append``, remove is ``delete_keys`` on
+    # the key column (merge-on-read: O(|keys|), no data rewrite,
+    # sequence-scoped like any equality delete) and compaction applies
+    # the pending deletes physically. A crash before the commit leaves
+    # readers on the previous snapshot and the staged files for
+    # ``remove_orphan_files``. The components share the table under a
+    # ``component`` column; a write of their union puts each component in
+    # files of its own, so the manifest's zone maps narrow a read to one
+    # component (a compacted file may mix them; the read's residual
+    # filter then keeps the component's rows). Frozen rows (the MinHash
+    # meta row, PQ codewords, IVF centroids) carry a null key, so no
+    # remove can retract them.
+
+    @staticmethod
+    def _components(**frames: DataFrame) -> DataFrame:
+        """The union of an index's component frames, each tagged with
+        its ``component`` name; columns a component lacks read null."""
+        return reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [f.withColumn("component", F.lit(name)) for name, f in frames.items()],
+        )
+
+    @staticmethod
+    def _component(t: SnapshotTable, name: str) -> DataFrame:
+        """One component of index table ``t``, pending deletes applied;
+        the zone maps on ``component`` prune the other components'
+        files."""
+        return t.read(skip=("component", name, name))
+
+    @staticmethod
+    def _remove(spark: SparkSession, path: str, keys, key_col: str) -> None:
+        """The remove verbs' one commit: an equality delete on
+        ``key_col`` of ``keys`` (a 1-column DataFrame or an iterable of
+        ids)."""
+        if isinstance(keys, DataFrame):
+            keys = keys.select(F.col(keys.columns[0]).cast("long").alias(key_col))
+        else:
+            keys = spark.createDataFrame([(int(k),) for k in keys], f"{key_col} long")
+        SnapshotTable(spark, path).delete_keys(keys, key_col)
+
+    @staticmethod
+    def _compact(spark: SparkSession, path: str) -> str:
+        """MinHash and PQ compaction: when removes are pending, rewrite
+        the index without them and expire the older snapshots, so the
+        removed rows leave the disk too."""
+        t = SnapshotTable(spark, path)
+        if t._head()["eq_deletes"]:
+            t.rewrite_data_files()
+            t.expire_snapshots(keep_last=1)
+        return path.rstrip("/")
+
     @staticmethod
     def build_minhash_index(
         df: DataFrame, text_col: str, key_col: str, path: str, tau: float = 0.2
@@ -163,28 +218,22 @@ class Engine:
         distinct shingle array for exact verification. At 100 TB this
         is what makes DAILY incremental dedup linear in the increment:
         a new batch's bands join against these stored rows instead of
-        re-signing (or re-reading) the corpus. Banding metadata rides
-        along so queries/appends cannot use a mismatched band count,
-        and so do the bands' and arrays' schemas, so readers never
-        infer them from the files."""
-        import json
-
+        re-signing (or re-reading) the corpus. A ``meta`` row keeps the
+        banding (n_bands, tau) so queries/appends cannot use a
+        mismatched band count; compaction keeps it, where the build
+        commit's summary would expire."""
         from iceberg_twist_spark.llm.dedup import lsh_params
 
         n_bands, _ = lsh_params(tau)
-        base = path.rstrip("/")
         bands, arrs = Engine._index_batch(df, text_col, key_col, n_bands)
-        bands.write.mode("overwrite").parquet(base + "/bands")
-        arrs.write.mode("overwrite").parquet(base + "/arrays")
-        meta = {
-            "n_bands": n_bands,
-            "tau": tau,
-            "schemas": {"bands": bands.schema.json(), "arrays": arrs.schema.json()},
-        }
-        df.sparkSession.createDataFrame(
-            [(json.dumps(meta),)], "meta string"
-        ).coalesce(1).write.mode("overwrite").parquet(base + "/meta")
-        return base
+        meta = df.sparkSession.createDataFrame(
+            [(n_bands, float(tau))], "n_bands int, tau double"
+        )
+        SnapshotTable(df.sparkSession, path).create(
+            Engine._components(bands=bands, arrays=arrs, meta=meta),
+            summary={"n_bands": n_bands, "tau": tau},
+        )
+        return path.rstrip("/")
 
     @staticmethod
     def _index_batch(
@@ -202,190 +251,57 @@ class Engine:
         return band_rows(signatures_of(arrs, "shs"), n_bands=n_bands), arrs
 
     @staticmethod
-    def _index_meta(base: str) -> dict:
-        """A ``build_minhash_index`` layout's metadata, read on the
-        driver with pyarrow (one tiny file — no Spark job)."""
-        import json
-
-        import pyarrow.parquet as pq
-
-        return json.loads(pq.read_table(base + "/meta").column("meta")[0].as_py())
-
-    @staticmethod
-    def _read_component(
-        spark: SparkSession, base: str, sub: str, meta: dict
-    ) -> DataFrame:
-        """A MinHash index's stored ``bands`` or ``arrays``, schema
-        pinned from ``meta`` (layouts built before meta recorded schemas
-        infer it), tombstones honored."""
-        import json
-
-        from pyspark.sql.types import StructType
-
-        schema = meta.get("schemas", {}).get(sub)
-        reader = spark.read
-        if schema:
-            reader = reader.schema(StructType.fromJson(json.loads(schema)))
-        return Engine._without_tombstones(
-            spark, reader.parquet(f"{base}/{sub}"), base + "/tombstones", "doc_id"
-        )
+    def _minhash_meta(t: SnapshotTable) -> dict:
+        """A MinHash index's banding, ``{"n_bands", "tau"}``: the zone
+        map of the file holding its meta row (the only row with these
+        columns set), read from the manifest — no Spark job."""
+        stats = next(e["stats"] for e in t._head()["files"].values() if "tau" in e["stats"])
+        return {"n_bands": stats["n_bands"][0], "tau": stats["tau"][0]}
 
     @staticmethod
     def minhash_index_append(
         df: DataFrame, text_col: str, key_col: str, path: str
     ) -> str:
         """Append a new batch's banding rows + shingle arrays to an
-        existing ``build_minhash_index`` layout (band count read from
-        the stored metadata — appends cannot drift from the build)."""
-        base = path.rstrip("/")
-        meta = Engine._index_meta(base)
-        bands, arrs = Engine._index_batch(df, text_col, key_col, meta["n_bands"])
-        bands.write.mode("append").parquet(base + "/bands")
-        arrs.write.mode("append").parquet(base + "/arrays")
-        return base
-
-    # -- index retraction -------------------------------------------
-    # The third lifecycle verb. A real 100 TB corpus takes deletions
-    # (takedowns, licence revocations) that must propagate to stored
-    # bands / codes / vectors. Deletes are O(|keys|): the keys land in
-    # a tombstone set next to the index and every reader anti-joins it
-    # (broadcast — takedown sets are tiny vs the corpus). Physical
-    # reclamation is a separate offline COMPACT pass (rewrite minus
-    # tombstones, clear the set), the same cadence as PQ retraining:
-    # compact per snapshot, tombstone between snapshots. If the
-    # tombstone set ever outgrows a broadcast, that is the signal the
-    # compact pass is overdue.
-
-    @staticmethod
-    def _normalize_keys(spark: SparkSession, keys) -> DataFrame:
-        """``keys`` as a 1-column DataFrame or an iterable of ids →
-        canonical single-column ``key long`` frame."""
-        if isinstance(keys, DataFrame):
-            col = keys.columns[0]
-            return keys.select(F.col(col).cast("long").alias("key")).distinct()
-        return spark.createDataFrame(
-            [(int(k),) for k in keys], "key long"
-        ).distinct()
-
-    @staticmethod
-    def _without_tombstones(
-        spark: SparkSession, df: DataFrame, ts_path: str, key_col: str
-    ) -> DataFrame:
-        """Anti-join a stored tombstone set (if any) out of ``df``.
-        Tombstones are always ``_normalize_keys`` frames (``key
-        long``), so the read is schema-pinned."""
-        import os
-
-        if not os.path.isdir(ts_path):
-            return df
-        ts = spark.read.schema("key long").parquet(ts_path).select(
-            F.col("key").alias(key_col)
+        existing ``build_minhash_index`` layout, both in one commit (band
+        count read from the stored meta row — appends cannot drift from
+        the build)."""
+        t = SnapshotTable(df.sparkSession, path)
+        bands, arrs = Engine._index_batch(
+            df, text_col, key_col, Engine._minhash_meta(t)["n_bands"]
         )
-        return df.join(F.broadcast(ts), key_col, "left_anti")
-
-    @staticmethod
-    def _sweep_compact_debris(root: str) -> None:
-        """Clean leftover ``.compact_*`` staging directories from an
-        interrupted ``_swap_rewrite`` under ``root`` (recursive: the
-        IVF form stages next to cluster partition dirs).
-
-        A crash between ``_swap_rewrite``'s two renames leaves the
-        target ABSENT with ``.<name>.compact_old`` holding the only
-        copy of the data — in that window the old dir is restored
-        (renamed back to the target), never deleted; ``.compact_tmp``
-        dirs and superseded ``.compact_old`` dirs (target present) are
-        plain debris and are removed."""
-        import os
-        import shutil
-
-        for dirpath, dirnames, _ in os.walk(root):
-            for d in list(dirnames):
-                full = os.path.join(dirpath, d)
-                if d.startswith(".") and d.endswith(".compact_old"):
-                    target = os.path.join(
-                        dirpath, d[1 : -len(".compact_old")]
-                    )
-                    if os.path.exists(target):
-                        shutil.rmtree(full, ignore_errors=True)
-                    else:  # mid-swap crash: old holds the only copy
-                        os.rename(full, target)
-                    dirnames.remove(d)
-                elif ".compact_tmp" in d or ".compact_old" in d:
-                    shutil.rmtree(full, ignore_errors=True)
-                    dirnames.remove(d)
-
-    @staticmethod
-    def _swap_rewrite(df: DataFrame, target: str) -> None:
-        """Rewrite ``target`` with ``df``'s rows via write-new + atomic
-        rename — the reader-safe compact pattern (at cluster scale the
-        rename is a metastore/manifest pointer swap).
-
-        Staging dirs are DOT-PREFIXED siblings of the target
-        (``.<name>.compact_tmp``): parquet partition discovery ignores
-        hidden directories, so when the target is a ``cluster=N``
-        partition inside an IVF dataset, a crash mid-compact can never
-        leave a directory that discovery parses as a bogus partition
-        value (r9 advice). Leftover debris is swept by the compaction
-        entry points before they read."""
-        import os
-        import shutil
-
-        parent, name = os.path.split(target.rstrip("/"))
-        tmp = os.path.join(parent, f".{name}.compact_tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        df.write.mode("overwrite").parquet(tmp)
-        old = os.path.join(parent, f".{name}.compact_old")
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(target, old)
-        os.rename(tmp, target)
-        shutil.rmtree(old, ignore_errors=True)
+        t.append(Engine._components(bands=bands, arrays=arrs))
+        return path.rstrip("/")
 
     @staticmethod
     def minhash_index_remove(
         spark: SparkSession, path: str, keys, compact: bool = False
     ) -> str:
-        """Retract documents from a ``build_minhash_index`` layout:
-        append their ids to the index's tombstone set (O(|keys|) — no
-        data rewrite), so ``near_dup_pairs_against_index`` and the
-        stored-band readers stop seeing their bands and shingle
-        arrays. ``compact=True`` additionally rewrites bands/arrays
-        minus all tombstoned keys and clears the set (physical
+        """Retract documents from a ``build_minhash_index`` layout: one
+        equality delete of their ids (O(|keys|) — no data rewrite), so
+        ``near_dup_pairs_against_index`` and the stored-band readers
+        stop seeing their bands and shingle arrays. ``compact=True``
+        additionally runs ``minhash_index_compact`` (physical
         reclamation — run per snapshot). Guarantee, either way:
         remove(append(build(base), delta), delta) ≡ build(base)."""
-        base = path.rstrip("/")
-        ts = base + "/tombstones"
-        Engine._normalize_keys(spark, keys).write.mode("append").parquet(ts)
-        if compact:
-            Engine.minhash_index_compact(spark, path)
-        return base
+        Engine._remove(spark, path, keys, "doc_id")
+        return Engine.minhash_index_compact(spark, path) if compact else path.rstrip("/")
 
     @staticmethod
     def minhash_index_compact(spark: SparkSession, path: str) -> str:
-        """Physically reclaim tombstoned documents: rewrite the bands
-        and shingle-array partitions without them, then clear the
-        tombstone set. Readers before/after the swap see the same
+        """Physically reclaim removed documents: rewrite the index
+        without them (``rewrite_data_files``) and expire the older
+        snapshots and their files. Readers before/after see the same
         live rows."""
-        import os
-        import shutil
-
-        base = path.rstrip("/")
-        Engine._sweep_compact_debris(base)
-        ts = base + "/tombstones"
-        if not os.path.isdir(ts):
-            return base
-        meta = Engine._index_meta(base)
-        for sub in ("bands", "arrays"):
-            live = Engine._read_component(spark, base, sub, meta)
-            Engine._swap_rewrite(live, f"{base}/{sub}")
-        shutil.rmtree(ts, ignore_errors=True)
-        return base
+        return Engine._compact(spark, path)
 
     @staticmethod
     def read_minhash_bands(spark: SparkSession, path: str) -> DataFrame:
-        """The stored banding rows, tombstones honored — the one read
+        """The stored banding rows, removes applied — the one read
         path every consumer of the index's bands shares."""
-        base = path.rstrip("/")
-        return Engine._read_component(spark, base, "bands", Engine._index_meta(base))
+        return Engine._component(SnapshotTable(spark, path), "bands").select(
+            "doc_id", "band_idx", "band_hash"
+        )
 
     @staticmethod
     def near_dup_pairs_against_index(
@@ -409,17 +325,16 @@ class Engine:
         derived from the build-time tau, so its S-curve bounds recall
         for any lower threshold (an index built at tau=0.9 uses 4×4
         bands, which detect a true J=0.2 pair with probability ~0.006
-        — the fixed-banding bug class). Querying with tau below
-        ``meta['tau']`` raises instead of silently under-recalling;
+        — the fixed-banding bug class). Querying with tau below the
+        build tau raises instead of silently under-recalling;
         rebuild the index at the lower tau."""
         from iceberg_twist_spark.llm.dedup import (
             _verify_jaccard_arrays,
             band_pairs_from_rows,
         )
 
-        base = path.rstrip("/")
-        sp = df.sparkSession
-        meta = Engine._index_meta(base)
+        t = SnapshotTable(df.sparkSession, path)
+        meta = Engine._minhash_meta(t)
         if tau is not None and tau < meta["tau"]:
             raise ValueError(
                 f"tau={tau} is below the index's build tau={meta['tau']}: "
@@ -433,7 +348,7 @@ class Engine:
         # new-batch banding feeds the cross join AND the within-batch
         # self-join from ONE checkpoint, so the batch is signed once
         nb = bands.localCheckpoint(eager=False)
-        stored = Engine._read_component(sp, base, "bands", meta)
+        stored = Engine._component(t, "bands")
         cross = (
             nb.alias("n")
             .join(
@@ -448,7 +363,7 @@ class Engine:
             .filter(F.col("doc_a") != F.col("doc_b"))
             .distinct()
         )
-        stored_arrs = Engine._read_component(sp, base, "arrays", meta)
+        stored_arrs = Engine._component(t, "arrays").select("doc_id", "shs")
         both_arrs = stored_arrs.unionByName(new_arrs)
         within = band_pairs_from_rows(nb)
         return _verify_jaccard_arrays(
@@ -632,12 +547,13 @@ class Engine:
     ) -> str:
         """Materialize a cluster-partitioned ANN index for ``df``:
         vectors assigned to deterministic IVF centroids (smallest
-        ``n_clusters`` keys), written once with precomputed norms,
-        ``partitionBy("cluster")`` — so ``ann_search`` prunes unread
-        directories via PartitionFilters (same layout as
-        q_llm_ann_ivf_indexed). Run it offline per corpus snapshot;
-        at 100 TB every subsequent probe reads ~nprobe/n_clusters of
-        the files."""
+        ``n_clusters`` keys), written once with precomputed norms under
+        partition spec ``cluster`` — so ``ann_search`` prunes unread
+        partitions via PartitionFilters (same layout as
+        q_llm_ann_ivf_indexed). The centroids ride along as ``centroid``
+        rows (their id in ``cluster``), so ``ann_search`` needs only the
+        index path. Run it offline per corpus snapshot; at 100 TB every
+        subsequent probe reads ~nprobe/n_clusters of the files."""
         from iceberg_twist_spark.llm.similarity import ivf_assign, with_norm
 
         emb = with_norm(
@@ -645,11 +561,25 @@ class Engine:
             "embedding",
         )
         centroids = emb.orderBy("vec_id").limit(n_clusters)
-        clustered = ivf_assign(emb, centroids)
-        clustered.write.mode("overwrite").partitionBy("cluster").parquet(path)
-        # centroids ride along so ann_search needs only the index path
-        centroids.write.mode("overwrite").parquet(path.rstrip("/") + "_centroids")
+        t = SnapshotTable(df.sparkSession, path)
+        t.set_partition_spec(["cluster"])
+        t.create(
+            Engine._components(
+                data=ivf_assign(emb, centroids),
+                centroid=centroids.select(
+                    "embedding", "nrm", F.col("vec_id").alias("cluster")
+                ),
+            ),
+            summary={"n_clusters": n_clusters},
+        )
         return path
+
+    @staticmethod
+    def _centroids(t: SnapshotTable) -> DataFrame:
+        """An IVF index's frozen centroids as (vec_id, embedding, nrm)."""
+        return Engine._component(t, "centroid").select(
+            F.col("cluster").alias("vec_id"), "embedding", "nrm"
+        )
 
     @staticmethod
     def ann_index_append(
@@ -658,14 +588,15 @@ class Engine:
         """Append NEW vectors to an existing ``build_ann_index``
         layout: assign them to the index's FROZEN centroids (no
         re-clustering — the same snapshot/increment trade as
-        ``pq_index_append``) and append into the cluster-partitioned
-        directories, so ``ann_search``'s PartitionFilters pruning
+        ``pq_index_append``) and append them under the ``cluster``
+        partition spec, so ``ann_search``'s PartitionFilters pruning
         keeps working over the grown corpus. Dimensionality is
         validated against a stored centroid (a mismatched width would
         silently zip-truncate into wrong assignments)."""
         from iceberg_twist_spark.llm.similarity import ivf_assign, with_norm
 
-        centroids = df.sparkSession.read.parquet(path.rstrip("/") + "_centroids")
+        t = SnapshotTable(df.sparkSession, path)
+        centroids = Engine._centroids(t)
         cdim = len(centroids.select("embedding").head()[0])
         emb = with_norm(
             df.select(F.col(key_col).alias("vec_id"), F.col(vec_col).alias("embedding")),
@@ -676,8 +607,7 @@ class Engine:
             raise ValueError(
                 f"vector dim {dim} does not match the index's centroid dim {cdim}"
             )
-        clustered = ivf_assign(emb, centroids)
-        clustered.write.mode("append").partitionBy("cluster").parquet(path)
+        t.append(Engine._components(data=ivf_assign(emb, centroids)))
         return path
 
     @staticmethod
@@ -691,28 +621,24 @@ class Engine:
         """Top-k cosine neighbors of a literal probe vector against a
         ``build_ann_index`` layout: score the stored centroids, keep
         the ``nprobe`` best cluster ids (bounded driver scalars), and
-        scan ONLY those partition directories — the literal IN-list
-        reaches the scan's PartitionFilters. Returns (vec_id,
-        cos_sim) ordered best-first."""
+        scan ONLY those partitions — the literal IN-list reaches the
+        scan's PartitionFilters. Returns (vec_id, cos_sim) ordered
+        best-first."""
         from iceberg_twist_spark.common import r4
         from iceberg_twist_spark.llm.similarity import _dot, _norm
 
+        t = SnapshotTable(spark, path)
         p = F.array(*[F.lit(float(x)) for x in probe])
-        cent = spark.read.parquet(path.rstrip("/") + "_centroids")
         csim = r4(_dot(F.col("embedding"), p) / (F.col("nrm") * _norm(p)))
         cids = [
             r.cid
-            for r in cent.select(F.col("vec_id").alias("cid"), csim.alias("csim"))
+            for r in Engine._centroids(t)
+            .select(F.col("vec_id").alias("cid"), csim.alias("csim"))
             .orderBy(F.col("csim").desc(), F.col("cid"))
             .limit(nprobe)
             .collect()
         ]
-        idx = Engine._without_tombstones(
-            spark,
-            spark.read.parquet(path).filter(F.col("cluster").isin(cids)),
-            path.rstrip("/") + "_tombstones",
-            "vec_id",
-        )
+        idx = Engine._component(t, "data").filter(F.col("cluster").isin(cids))
         sim = r4(_dot(F.col("embedding"), p) / (F.col("nrm") * _norm(p)))
         return (
             idx.select(F.col("vec_id"), sim.alias("cos_sim"))
@@ -728,7 +654,7 @@ class Engine:
         train a 1-Lloyd-round codebook (sample-init on the PQ_K
         smallest keys), encode every vector as PQ_M small codes (~2%
         of the embedding bytes), and write codes + codebook + the raw
-        vectors (with norms, for exact re-ranking) once. Run it
+        vectors (with norms, for exact re-ranking) in one commit. Run it
         offline per corpus snapshot; ``pq_ann_search`` then pays only
         LUT + integer-ADC scan + a constant-size exact re-rank — the
         same split that took the registered q_llm_ann_pq query from
@@ -762,14 +688,20 @@ class Engine:
             "code", "m", F.col("sv").alias("cw")
         )
         cb1 = S._lloyd_update(S._pq_assign(sub, cb0, carry_sv=True), sub)
-        codes = S._pq_assign(sub, cb1)
-        base = path.rstrip("/")
-        codes.write.mode("overwrite").parquet(base + "/codes")
-        cb1.write.mode("overwrite").parquet(base + "/codebook")
-        S.with_norm(emb, "embedding").write.mode("overwrite").parquet(
-            base + "/vectors"
+        SnapshotTable(df.sparkSession, path).create(
+            Engine._components(
+                codes=S._pq_assign(sub, cb1),
+                vectors=S.with_norm(emb, "embedding"),
+                codebook=cb1,
+            ),
+            summary={"n_sub": S.PQ_M, "sub_dim": sub_dim},
         )
-        return base
+        return path.rstrip("/")
+
+    @staticmethod
+    def _pq_geometry(cb: DataFrame) -> tuple[int, int]:
+        """A PQ codebook's (subspace count, codeword width)."""
+        return cb.agg(F.max("m")).head()[0] + 1, len(cb.select("cw").head()[0])
 
     @staticmethod
     def pq_index_append(
@@ -777,20 +709,19 @@ class Engine:
     ) -> str:
         """Append NEW vectors to an existing ``build_pq_ann_index``
         layout: encode them with the index's FROZEN codebook (no
-        retraining) and append codes + norm-carrying vectors — the
-        incremental-maintenance path that keeps a 100 TB index
-        serving while the corpus grows. The quantization error for a
-        drifting distribution is the documented trade: appended
+        retraining) and append codes + norm-carrying vectors in one
+        commit — the incremental-maintenance path that keeps a 100 TB
+        index serving while the corpus grows. The quantization error
+        for a drifting distribution is the documented trade: appended
         vectors are coded against the snapshot's codebook, so rebuild
         the index (retrain) per major corpus snapshot, append between
         snapshots. The exact re-rank in ``pq_ann_search`` is
         unaffected either way — it reads raw vectors."""
         from iceberg_twist_spark.llm import similarity as S
 
-        base = path.rstrip("/")
-        cb = df.sparkSession.read.parquet(base + "/codebook")
-        sub_dim = len(cb.select("cw").head()[0])
-        n_sub = cb.agg(F.max("m")).head()[0] + 1
+        t = SnapshotTable(df.sparkSession, path)
+        cb = Engine._component(t, "codebook").select("code", "m", "cw")
+        n_sub, sub_dim = Engine._pq_geometry(cb)
         emb = df.select(
             F.col(key_col).alias("vec_id"), F.col(vec_col).alias("embedding")
         )
@@ -804,100 +735,66 @@ class Engine:
                 f"({n_sub} subspaces × {sub_dim} dims = {n_sub * sub_dim})"
             )
         sub = S._pq_subspaces(emb, sub=sub_dim)
-        S._pq_assign(sub, cb).write.mode("append").parquet(base + "/codes")
-        S.with_norm(emb, "embedding").write.mode("append").parquet(
-            base + "/vectors"
+        t.append(
+            Engine._components(
+                codes=S._pq_assign(sub, cb), vectors=S.with_norm(emb, "embedding")
+            )
         )
-        return base
+        return path.rstrip("/")
 
     @staticmethod
     def pq_index_remove(
         spark: SparkSession, path: str, keys, compact: bool = False
     ) -> str:
-        """Retract vectors from a ``build_pq_ann_index`` layout:
-        tombstone their ids so ``pq_ann_search`` excludes their codes
-        from the ADC scan and their raw vectors from the re-rank.
-        ``compact=True`` physically rewrites codes/vectors minus the
-        tombstones (run per snapshot, with the retrain). Guarantee:
+        """Retract vectors from a ``build_pq_ann_index`` layout: one
+        equality delete of their ids, so ``pq_ann_search`` excludes
+        their codes from the ADC scan and their raw vectors from the
+        re-rank. ``compact=True`` also runs ``pq_index_compact`` (run
+        per snapshot, with the retrain). Guarantee:
         remove(append(build(base), delta), delta) ≡ build(base) —
         the codebook is untouched (it is a trained model, not per-row
         state; retraining is the rebuild verb's job)."""
-        base = path.rstrip("/")
-        ts = base + "/tombstones"
-        Engine._normalize_keys(spark, keys).write.mode("append").parquet(ts)
-        if compact:
-            Engine.pq_index_compact(spark, path)
-        return base
+        Engine._remove(spark, path, keys, "vec_id")
+        return Engine.pq_index_compact(spark, path) if compact else path.rstrip("/")
 
     @staticmethod
     def pq_index_compact(spark: SparkSession, path: str) -> str:
-        """Physically reclaim tombstoned vectors from the codes and
-        vectors partitions, then clear the tombstone set."""
-        import os
-        import shutil
-
-        base = path.rstrip("/")
-        Engine._sweep_compact_debris(base)
-        ts = base + "/tombstones"
-        if not os.path.isdir(ts):
-            return base
-        for sub in ("codes", "vectors"):
-            live = Engine._without_tombstones(
-                spark, spark.read.parquet(f"{base}/{sub}"), ts, "vec_id"
-            )
-            Engine._swap_rewrite(live, f"{base}/{sub}")
-        shutil.rmtree(ts, ignore_errors=True)
-        return base
+        """Physically reclaim removed vectors: rewrite the index
+        without them and expire the older snapshots and their files."""
+        return Engine._compact(spark, path)
 
     @staticmethod
     def ann_index_remove(
         spark: SparkSession, path: str, keys, compact: bool = False
     ) -> str:
-        """Retract vectors from a ``build_ann_index`` (IVF) layout.
-        The tombstone set lives NEXT TO the cluster-partitioned data
-        (``<path>_tombstones``, like ``<path>_centroids``) so the
-        partitioned directory stays a clean parquet dataset;
-        ``ann_search`` anti-joins it after the directory-pruned scan.
-        ``compact=True`` rewrites each AFFECTED cluster partition
-        minus its tombstoned rows — only clusters containing removed
-        vectors are touched, the rest of the layout is not rewritten
-        — then clears the set. Frozen centroids are untouched."""
-        base = path.rstrip("/")
-        ts = base + "_tombstones"
-        Engine._normalize_keys(spark, keys).write.mode("append").parquet(ts)
-        if compact:
-            Engine.ann_index_compact(spark, path)
-        return base
+        """Retract vectors from a ``build_ann_index`` (IVF) layout: one
+        equality delete of their ids, applied after ``ann_search``'s
+        partition-pruned scan. ``compact=True`` also runs
+        ``ann_index_compact``, which rewrites only the files containing
+        removed vectors. Frozen centroids are untouched."""
+        Engine._remove(spark, path, keys, "vec_id")
+        return Engine.ann_index_compact(spark, path) if compact else path.rstrip("/")
 
     @staticmethod
     def ann_index_compact(spark: SparkSession, path: str) -> str:
-        """Physically reclaim tombstoned vectors from the IVF layout,
-        rewriting only the cluster partitions that contain them."""
-        import os
-        import shutil
-
-        base = path.rstrip("/")
-        Engine._sweep_compact_debris(base)
-        ts = base + "_tombstones"
-        if not os.path.isdir(ts):
-            return base
-        keys = spark.read.parquet(ts).select(F.col("key").alias("vec_id"))
-        idx = spark.read.parquet(base)
-        # bounded collect: the distinct clusters holding removed rows
-        hit = [
-            r.cluster
-            for r in idx.join(F.broadcast(keys), "vec_id")
-            .select("cluster").distinct().collect()
-        ]
-        for c in hit:
-            part = os.path.join(base, f"cluster={c}")
-            live = (
-                spark.read.parquet(part)
-                .join(F.broadcast(keys.select(F.col("vec_id"))), "vec_id", "left_anti")
+        """Physically reclaim removed vectors from the IVF layout,
+        rewriting only the files that hold them — the copy-on-write
+        core ``SnapshotTable._rewrite``, whose rewrite applies the
+        pending deletes. The removed rows are no longer live, so the
+        locate pass reads the files with the deletes unapplied. The
+        deletes stay listed while files older than them remain, as in
+        Iceberg; no row of those files matches them."""
+        t = SnapshotTable(spark, path)
+        m = t._head()
+        if m["eq_deletes"]:
+            removed = reduce(DataFrame.unionByName, map(t._read_delete, m["eq_deletes"]))
+            raw = t._read_files({**m, "eq_deletes": []}, list(m["files"]), keep_meta=True)
+            t._rewrite(
+                m, "compact",
+                lambda _live: raw.join(removed, "vec_id", "left_semi"),
+                lambda rows: rows,
             )
-            Engine._swap_rewrite(live, part)
-        shutil.rmtree(ts, ignore_errors=True)
-        return base
+        return path.rstrip("/")
 
     @staticmethod
     def pq_ann_search(
@@ -917,22 +814,16 @@ class Engine:
         from iceberg_twist_spark.common import r4
         from iceberg_twist_spark.llm import similarity as S
 
-        base = path.rstrip("/")
-        cb = spark.read.parquet(base + "/codebook")
-        ts = base + "/tombstones"
-        codes = Engine._without_tombstones(
-            spark, spark.read.parquet(base + "/codes"), ts, "vec_id"
-        )
-        vectors = Engine._without_tombstones(
-            spark, spark.read.parquet(base + "/vectors"), ts, "vec_id"
-        )
+        t = SnapshotTable(spark, path)
+        cb = Engine._component(t, "codebook").select("code", "m", "cw")
+        codes = Engine._component(t, "codes").select("vec_id", "m", "code")
+        vectors = Engine._component(t, "vectors").select("vec_id", "embedding", "nrm")
         p = F.array(*[F.lit(float(x)) for x in probe])
         # recover the index's subspace geometry from the codebook
         # (sub_dim = codeword width) so the LUT matches the encode; a
         # wrong-width probe would be silently sliced into wrong LUT
         # entries, so validate rather than mis-rank
-        sub_dim = len(cb.select("cw").head()[0])
-        n_sub = cb.agg(F.max("m")).head()[0] + 1
+        n_sub, sub_dim = Engine._pq_geometry(cb)
         if len(probe) != n_sub * sub_dim:
             raise ValueError(
                 f"probe dim {len(probe)} does not match the index geometry "
@@ -1026,8 +917,6 @@ class Engine:
         append/overwrite/merge/delete commits, snapshot-id time travel,
         history, and rewrite_data_files compaction
         (sources/snapshots.py)."""
-        from iceberg_twist_spark.sources.snapshots import SnapshotTable
-
         return SnapshotTable(self.spark, path)
 
     # -- warehouse helpers (generic over user DataFrames) ----------------

@@ -347,7 +347,7 @@ class SnapshotTable:
             raise ValueError(f"{name!r} is a tag (immutable); write to a branch")
         head = self._manifest(refs[name]["snapshot_id"])
         snap = self._commit(
-            "append", head, self._write_files(df),
+            "append", head, self._write_files(df, head["partition_spec"]),
             schema_json=df.schema.json(), schema_mode="append", staged=True,
         )
         refs = self.refs()
@@ -725,7 +725,7 @@ class SnapshotTable:
     def _metadata_commit(self, operation: str, schema_meta: list,
                          partition_spec: list[str] | None = None) -> int:
         return self._commit(
-            operation, self._head(),
+            operation, self._current(),
             schema_meta=schema_meta, partition_spec=partition_spec,
         )
 
@@ -805,13 +805,14 @@ class SnapshotTable:
         hidden transforms: ``bucket(N, col)``, ``truncate(W, col)``,
         ``days(col)`` (see ``parse_spec_entry``). At 100 TB this is
         the only affordable way to change partitioning: a spec rewrite
-        would be a full-table rewrite."""
+        would be a full-table rewrite. On an empty table it sets the
+        spec of the first write, whose columns are then not yet known."""
         meta = self.schema_meta()
         names = {f[1] for f in meta}
         missing = [
             c for c in cols if parse_spec_entry(c)[1] not in names
         ]
-        if missing:
+        if meta and missing:
             raise ValueError(f"partition columns not in schema: {missing}")
         return self._metadata_commit("set-partition-spec", meta, list(cols))
 

@@ -5,9 +5,12 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from iceberg_twist_spark.api import Engine
+from iceberg_twist_spark.sources.snapshots import SnapshotTable
 
 
 def _engine(spark, sf_dir):
@@ -270,8 +273,8 @@ def test_profile_table_refuses_non_double_numeric_columns(spark, sf_dir, monkeyp
 
 def test_ann_index_facade_matches_brute_force(spark, sf_dir):
     """build_ann_index + ann_search must return exactly the vectors a
-    brute-force rescan of the probed clusters would — and the index
-    must really be cluster-partitioned on disk."""
+    brute-force rescan of the probed clusters would — and every file
+    of the index must really be partitioned on ``cluster``."""
     import os
     import shutil
     import tempfile
@@ -285,7 +288,8 @@ def test_ann_index_facade_matches_brute_force(spark, sf_dir):
     path = os.path.join(tempfile.mkdtemp(prefix="itws_annidx_"), "idx")
     try:
         Engine.build_ann_index(emb, "embedding", "vec_id", path)
-        assert any(d.startswith("cluster=") for d in os.listdir(path))
+        entries = SnapshotTable(spark, path)._head()["files"].values()
+        assert entries and all(set(e["partition"]) == {"cluster"} for e in entries)
         got = Engine.ann_search(spark, path, probe, k=5, nprobe=16)  # all clusters
         rows = got.collect()
         assert len(rows) == 5
@@ -512,39 +516,6 @@ def test_minhash_index_incremental_dedup(spark, tmp_path):
         for r in Engine.near_dup_pairs_against_index(dfc, "text", "k", path).collect()
     }
     assert (11, 20) in got_c and (12, 20) in got_c
-
-
-def test_minhash_index_without_recorded_schemas_answers_identically(spark, tmp_path):
-    """An index whose meta predates the recorded bands/arrays schemas
-    (readers fall back to inference) answers a lookup exactly like one
-    that has them."""
-    import json
-
-    from iceberg_twist_spark.api import Engine
-
-    base = " ".join(f"w{i}" for i in range(40))
-    near = " ".join(f"w{i}" if i != 20 else "CHANGED" for i in range(40))
-    rows = [(1, base), (2, " ".join(f"z{i}" for i in range(40))), (3, near)]
-    path = Engine.build_minhash_index(
-        spark.createDataFrame(rows, "k long, text string"), "text", "k", str(tmp_path / "mh")
-    )
-    Engine.minhash_index_remove(spark, path, [2])
-    edited = " ".join(f"w{i}" if i != 7 else "EDIT" for i in range(40))
-    dfb = spark.createDataFrame([(10, edited), (11, near)], "k long, text string")
-
-    def lookup():
-        out = Engine.near_dup_pairs_against_index(dfb, "text", "k", path)
-        return out.dtypes, sorted(tuple(r) for r in out.collect())
-
-    want = lookup()
-    assert {(a, b) for a, b, _ in want[1]} >= {(1, 10), (1, 11), (3, 10)}
-    meta = Engine._index_meta(path)
-    assert set(meta.pop("schemas")) == {"bands", "arrays"}
-    spark.createDataFrame([(json.dumps(meta),)], "meta string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path + "/meta")
-    assert "schemas" not in Engine._index_meta(path)
-    assert lookup() == want
 
 
 def test_mixture_sample_facade(spark):
@@ -838,17 +809,17 @@ def test_pq_index_append_serves_new_vectors(spark, tmp_path):
     hits = {r.vec_id for r in got if r.cos_sim == 1.0}
     assert new_rows[7][0] in hits
     # the index now serves both generations
-    n_codes = spark.read.parquet(path + "/codes").select("vec_id").distinct().count()
+    codes = SnapshotTable(spark, path).read().filter("component = 'codes'")
+    n_codes = codes.select("vec_id").distinct().count()
     assert n_codes == 250
 
 
 def test_minhash_index_remove_tombstone_and_compact(spark, tmp_path):
-    """Retraction lifecycle: tombstoned docs vanish from the band
+    """Retraction lifecycle: removed docs vanish from the band
     reader AND from near_dup_pairs_against_index (no pairs against
     removed docs); compaction physically rewrites bands/arrays to the
-    same live rows and clears the tombstone set."""
-    import os
-
+    same live rows, clears the pending delete and expires the older
+    snapshots."""
     from iceberg_twist_spark.api import Engine
 
     base = " ".join(f"w{i}" for i in range(40))
@@ -871,7 +842,7 @@ def test_minhash_index_remove_tombstone_and_compact(spark, tmp_path):
     }
     assert (1, 10) in before
 
-    # ...and not after doc 1 is tombstoned
+    # ...and not after doc 1 is removed
     Engine.minhash_index_remove(spark, path, [1])
     after = {
         (r.doc_a, r.doc_b)
@@ -887,32 +858,30 @@ def test_minhash_index_remove_tombstone_and_compact(spark, tmp_path):
     }
     assert live_ts == {2, 3}
 
-    # compaction: same live rows, physically, tombstones cleared
+    # compaction: same live rows, physically — no delete is left to
+    # apply, and only the compacted snapshot remains
     Engine.minhash_index_compact(spark, path)
-    assert not os.path.isdir(path + "/tombstones")
-    raw = {
-        r.doc_id
-        for r in spark.read.parquet(path + "/bands")
-        .select("doc_id").distinct().collect()
-    }
-    assert raw == {2, 3}
-    raw_arrs = {
-        r.doc_id
-        for r in spark.read.parquet(path + "/arrays")
-        .select("doc_id").distinct().collect()
-    }
-    assert raw_arrs == {2, 3}
-    # compact with no tombstones is a no-op
+    t = SnapshotTable(spark, path)
+    assert t._head()["eq_deletes"] == [] and len(t.snapshots()) == 1
+
+    def stored(component):
+        rows = t.read().filter(f"component = '{component}'").select("doc_id")
+        return {r.doc_id for r in rows.distinct().collect()}
+
+    assert stored("bands") == {2, 3}
+    assert stored("arrays") == {2, 3}
+    # compact with nothing pending is a no-op: no commit
+    sid = t.current_snapshot_id()
     assert Engine.minhash_index_compact(spark, path) == path
+    assert t.current_snapshot_id() == sid
 
 
 def test_pq_index_remove_tombstone_matches_compact(spark, tmp_path):
     """PQ retraction: a removed vector stops being servable (its
     codes leave the ADC scan, its raw vector leaves the re-rank) —
-    identically under the tombstone read path and after physical
+    identically under the merge-on-read delete and after physical
     compaction; the frozen codebook is untouched by either."""
     import math
-    import os
 
     from iceberg_twist_spark.api import Engine
 
@@ -931,7 +900,15 @@ def test_pq_index_remove_tombstone_matches_compact(spark, tmp_path):
         for r in Engine.pq_ann_search(spark, path, probe, k=3).collect()
     )
 
-    cb_before = spark.read.parquet(path + "/codebook").count()
+    t = SnapshotTable(spark, path)
+
+    def stored(component):
+        return t.read().filter(f"component = '{component}'")
+
+    def codebook():
+        return {(r.m, r.code, tuple(r.cw)) for r in stored("codebook").collect()}
+
+    cb_before = codebook()
     Engine.pq_index_remove(spark, path, [7, 11])
     ts_rows = [
         (r.vec_id, r.cos_sim)
@@ -940,25 +917,21 @@ def test_pq_index_remove_tombstone_matches_compact(spark, tmp_path):
     assert all(v not in (7, 11) for v, _ in ts_rows)
 
     Engine.pq_index_compact(spark, path)
-    assert not os.path.isdir(path + "/tombstones")
+    assert t._head()["eq_deletes"] == [] and len(t.snapshots()) == 1
     compact_rows = [
         (r.vec_id, r.cos_sim)
         for r in Engine.pq_ann_search(spark, path, probe, k=120).collect()
     ]
     assert compact_rows == ts_rows
-    assert spark.read.parquet(path + "/codebook").count() == cb_before
-    raw = {r.vec_id for r in spark.read.parquet(path + "/vectors").collect()}
+    assert codebook() == cb_before
+    raw = {r.vec_id for r in stored("vectors").collect()}
     assert 7 not in raw and 11 not in raw and len(raw) == 118
 
 
-def test_ann_index_remove_rewrites_only_hit_clusters(spark, tmp_path):
-    """IVF retraction: tombstoned vectors leave ann_search results;
-    compaction rewrites ONLY the cluster partitions containing them
-    (witnessed by partition file mtimes) and clears the set."""
+def _ivf_index(spark, path):
+    """An 8-cluster IVF index over 200 deterministic 16-dim vectors,
+    and its rows."""
     import math
-    import os
-
-    from iceberg_twist_spark.api import Engine
 
     def vec(i):
         return [
@@ -968,25 +941,27 @@ def test_ann_index_remove_rewrites_only_hit_clusters(spark, tmp_path):
 
     rows = [(i, vec(i)) for i in range(200)]
     df = spark.createDataFrame(rows, "id long, v array<float>")
-    path = Engine.build_ann_index(
-        df, "v", "id", str(tmp_path / "ivfr"), n_clusters=8
-    )
+    return Engine.build_ann_index(df, "v", "id", path, n_clusters=8), rows
+
+
+def test_ann_index_remove_rewrites_only_hit_clusters(spark, tmp_path):
+    """IVF retraction: removed vectors leave ann_search results;
+    compaction rewrites ONLY the file holding them — witnessed by the
+    manifest's data-file paths: every other file is carried verbatim,
+    and the one replacement, in the same cluster partition, holds the
+    hit file's rows minus the removed vector."""
+    path, rows = _ivf_index(spark, str(tmp_path / "ivfr"))
     probe = [float(x) for x in rows[42][1]]
     assert any(
         r.vec_id == 42
         for r in Engine.ann_search(spark, path, probe, k=5, nprobe=8).collect()
     )
-    # the cluster holding vec 42, and a snapshot of every partition's
-    # newest mtime before the compact
-    idx = spark.read.parquet(path)
-    hit_cluster = idx.filter(idx.vec_id == 42).select("cluster").head()[0]
-    parts = [d for d in os.listdir(path) if d.startswith("cluster=")]
-
-    def newest(d):
-        p = os.path.join(path, d)
-        return max(os.path.getmtime(os.path.join(p, f)) for f in os.listdir(p))
-
-    mtimes = {d: newest(d) for d in parts}
+    t = SnapshotTable(spark, path)
+    before = t._head()["files"]
+    (hit,) = {
+        t._norm_uri(r._file_path)
+        for r in t.read(keep_meta=True).filter("vec_id = 42").collect()
+    }
 
     Engine.ann_index_remove(spark, path, [42])
     got = {
@@ -996,17 +971,43 @@ def test_ann_index_remove_rewrites_only_hit_clusters(spark, tmp_path):
     assert 42 not in got and len(got) == 199
 
     Engine.ann_index_compact(spark, path)
-    assert not os.path.isdir(path.rstrip("/") + "_tombstones")
     got2 = {
         r.vec_id
         for r in Engine.ann_search(spark, path, probe, k=200, nprobe=8).collect()
     }
     assert got2 == got
-    for d in parts:
-        changed = newest(d) != mtimes[d]
-        assert changed == (d == f"cluster={hit_cluster}"), (
-            f"{d}: rewritten={changed}, expected only cluster={hit_cluster}"
-        )
+    after = t._head()["files"]
+    assert set(before) - set(after) == {hit}
+    (new,) = set(after) - set(before)
+    assert after[new]["partition"] == before[hit]["partition"]
+    assert after[new]["rows"] == before[hit]["rows"] - 1
+    assert 42 not in {r.vec_id for r in spark.read.parquet(new).collect()}
+
+
+def test_ann_search_scans_only_probed_clusters(spark, tmp_path):
+    """ann_search's IN-list of probed cluster ids reaches the scan's
+    PartitionFilters, and the scan opens only those clusters' data
+    files (the centroid files are pruned by their zone maps)."""
+    import re
+
+    path, rows = _ivf_index(spark, str(tmp_path / "ivfp"))
+    got = Engine.ann_search(spark, path, [float(x) for x in rows[42][1]], k=5, nprobe=2)
+    got.collect()
+    plan = got._jdf.queryExecution().executedPlan()
+    (probed,) = re.findall(r"PartitionFilters: \[cluster#\d+L IN \(([\d,]+)\)\]", plan.toString())
+    probed = {int(c) for c in probed.split(",")}
+    assert len(probed) == 2
+    leaves = plan.collectLeaves()
+    (scan,) = [
+        leaves.apply(i) for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+    entries = SnapshotTable(spark, path)._head()["files"].values()
+    want = [
+        e for e in entries
+        if int(e["partition"]["cluster"]) in probed and e["stats"]["component"][0] == "data"
+    ]
+    assert 0 < scan.metrics().apply("numFiles").value() == len(want) < len(entries)
 
 
 def test_scrub_pii_counts_match_replacements(spark):
@@ -1093,7 +1094,7 @@ def test_readme_daily_ingest_recipe(spark, sf_dir, tmp_path):
     assert kept_ids == {101, 102}
     banded = {
         r.doc_id
-        for r in spark.read.parquet(ns["idx"] + "/bands").select("doc_id").distinct().collect()
+        for r in Engine.read_minhash_bands(spark, ns["idx"]).select("doc_id").distinct().collect()
     }
     assert 101 in banded and 102 in banded
     assert 100 not in banded and 103 not in banded
@@ -1149,70 +1150,68 @@ def test_index_geometry_and_tau_guards(spark, tmp_path):
     Engine.near_dup_pairs_against_index(batch, "text", "doc_id", idx, tau=0.95).collect()
 
 
-def test_compact_staging_is_hidden_and_swept(spark, tmp_path):
-    """r9 advice: _swap_rewrite used to stage 'cluster=N.compact_tmp'
-    INSIDE the partitioned IVF dataset root — a crash mid-compact left
-    a directory parquet partition discovery parsed as a bogus cluster
-    value, breaking every later read. Staging dirs are now DOT-
-    prefixed (ignored by discovery), and the compact entry points
-    sweep any leftover debris before reading."""
+@pytest.mark.parametrize(
+    "verb",
+    ["minhash_index_append", "minhash_index_remove", "minhash_index_compact", "pq_index_append"],
+)
+def test_index_commit_crash_keeps_previous_snapshot(spark, tmp_path, monkeypatch, verb):
+    """A crash after an index verb wrote its files but before its
+    snapshot commit leaves readers on the previous snapshot — the
+    lookup answers exactly as before — and ``remove_orphan_files``
+    deletes the staged files."""
     import math
-    import os
 
-    from iceberg_twist_spark.api import Engine
+    if verb == "pq_index_append":
 
-    def vec(i):
-        return [
-            math.cos(0.13 * d * (1 + i % 7)) + 0.03 * ((i * 17 + d * 5) % 71)
-            for d in range(16)
-        ]
+        def vec(i):
+            return [math.sin(0.17 * d * (1 + i % 5)) + 0.05 * ((i * 31 + d * 7) % 83) for d in range(16)]
 
-    rows = [(i, vec(i)) for i in range(100)]
-    df = spark.createDataFrame(rows, "id long, v array<float>")
-    path = Engine.build_ann_index(
-        df, "v", "id", str(tmp_path / "ivfc"), n_clusters=4
-    )
-    n_before = spark.read.parquet(path).count()
-    # plant crash debris exactly where _swap_rewrite stages it
-    debris = os.path.join(path, ".cluster=0.compact_tmp")
-    df.limit(3).select("id", "v").write.mode("overwrite").parquet(debris)
-    # hidden dir: partition discovery must ignore it entirely
-    assert spark.read.parquet(path).count() == n_before
-    assert "cluster=0.compact_tmp" not in {
-        r.cluster for r in
-        spark.read.parquet(path).select("cluster").distinct().collect()
-    }
-    # a compact pass sweeps the leftover and still works
-    Engine.ann_index_remove(spark, path, [5])
-    Engine.ann_index_compact(spark, path)
-    assert not os.path.isdir(debris)
-    assert spark.read.parquet(path).count() == n_before - 1
+        df = spark.createDataFrame([(i, vec(i)) for i in range(120)], "id long, v array<float>")
+        path = Engine.build_pq_ann_index(df, "v", "id", str(tmp_path / "pq"))
+        new = spark.createDataFrame([(1000, vec(1000))], "id long, v array<float>")
 
+        def answer():
+            return Engine.pq_ann_search(spark, path, vec(1000), k=3).collect()
 
-def test_compact_debris_sweep_recovers_mid_swap_crash(spark, tmp_path):
-    """r10 advice: a crash between _swap_rewrite's two renames leaves
-    the target ABSENT and .compact_old holding the ONLY copy; the
-    debris sweep must RESTORE it (rename back), not rmtree it into
-    permanent data loss. Superseded .compact_old dirs (target present)
-    and .compact_tmp dirs remain plain debris."""
-    import os
+        def run():
+            Engine.pq_index_append(new, "v", "id", path)
+    else:
+        text = " ".join(f"w{i}" for i in range(40))
+        docs = spark.createDataFrame(
+            [(1, text), (2, text.replace("w20", "CHANGED")), (3, " ".join(f"z{i}" for i in range(40)))],
+            "k long, text string",
+        )
+        path = Engine.build_minhash_index(docs, "text", "k", str(tmp_path / "mh"))
+        if verb == "minhash_index_compact":
+            Engine.minhash_index_remove(spark, path, [2])
+        batch = spark.createDataFrame([(10, text.replace("w7", "EDIT"))], "k long, text string")
+        later = spark.createDataFrame([(20, text.replace("w30", "LATER"))], "k long, text string")
 
-    from iceberg_twist_spark.api import Engine
+        def answer():
+            pairs = Engine.near_dup_pairs_against_index(batch, "text", "k", path)
+            return sorted(tuple(r) for r in pairs.collect())
 
-    root = str(tmp_path / "ds")
-    target = os.path.join(root, "part")
-    spark.range(10).write.parquet(target)
-    # simulate the mid-swap crash window: target renamed aside, tmp
-    # (complete but unswapped) still present
-    os.rename(target, os.path.join(root, ".part.compact_old"))
-    os.makedirs(os.path.join(root, ".part.compact_tmp"))
-    Engine._sweep_compact_debris(root)
-    assert os.path.isdir(target), "only copy of the data was swept"
-    assert spark.read.parquet(target).count() == 10
-    assert not os.path.isdir(os.path.join(root, ".part.compact_old"))
-    assert not os.path.isdir(os.path.join(root, ".part.compact_tmp"))
-    # target present → .compact_old is superseded debris, swept clean
-    os.makedirs(os.path.join(root, ".part.compact_old"))
-    Engine._sweep_compact_debris(root)
-    assert not os.path.isdir(os.path.join(root, ".part.compact_old"))
-    assert spark.read.parquet(target).count() == 10
+        run = {
+            "minhash_index_append": lambda: Engine.minhash_index_append(later, "text", "k", path),
+            "minhash_index_remove": lambda: Engine.minhash_index_remove(spark, path, [1]),
+            "minhash_index_compact": lambda: Engine.minhash_index_compact(spark, path),
+        }[verb]
+
+    def files():
+        return {os.path.join(r, n) for r, _, ns in os.walk(path) for n in ns if n.endswith(".parquet")}
+
+    commit = SnapshotTable._commit
+
+    def crash(self, *args, **kwargs):
+        monkeypatch.setattr(SnapshotTable, "_commit", commit)
+        raise RuntimeError("injected crash before the commit")
+
+    want, kept = answer(), files()
+    monkeypatch.setattr(SnapshotTable, "_commit", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run()
+    staged = files() - kept
+    assert staged and kept <= files()
+    assert answer() == want
+    assert SnapshotTable(spark, path).remove_orphan_files() == len(staged)
+    assert files() == kept

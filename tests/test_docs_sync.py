@@ -95,7 +95,7 @@ def test_readme_counts_are_live():
     )
 
 
-def test_no_oracle_emits_hugeint_or_decimal():
+def test_no_oracle_emits_hugeint_or_decimal(sf_dir):
     """Every DuckDB oracle's planned result types must be hashable the
     same way Spark's are. DuckDB widens sum(BIGINT) to HUGEINT (int128)
     — a type the driver's value-hasher serializes differently than the
@@ -110,7 +110,6 @@ def test_no_oracle_emits_hugeint_or_decimal():
     from iceberg_twist_spark.registry import REGISTRY, _load_all_modules
 
     _load_all_modules()
-    sf_dir = "/root/testdata/sf0.001"
     con = duckdb.connect()
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"

@@ -501,6 +501,28 @@ def test_branch_write_isolation_and_merge(spark, tmp_path):
     assert b2 in res["expired"]
 
 
+def test_branch_append_keeps_the_partition_spec(spark, tmp_path):
+    """append_to_branch writes under the branch head's partition spec:
+    the branch files record spec ["g"], so an equality on ``g`` prunes
+    them. The spec is set on the EMPTY table, as the first write's."""
+    from iceberg_twist_spark.sources.snapshots import SnapshotTable
+
+    tbl = SnapshotTable(spark, str(tmp_path / "brp"))
+    tbl.set_partition_spec(["g"])
+    s1 = tbl.create(spark.range(4).selectExpr("id", "id % 2 AS g").coalesce(1))
+    assert all(e["spec"] == ["g"] for e in tbl._manifest(s1)["files"].values())
+    tbl.create_branch("dev")
+    head = tbl.append_to_branch(
+        "dev", spark.range(10, 14).selectExpr("id", "id % 2 AS g").coalesce(1)
+    )
+    entries = tbl._manifest(head)["files"]
+    branch = {p for p, e in entries.items() if e["seq"] == head}
+    assert len(branch) == 2 and all(entries[p]["spec"] == ["g"] for p in branch)
+    assert len(branch & set(tbl.plan_files(head, partition_eq=("g", "1")))) == 1
+    odd = tbl.read(ref="dev", partition_eq=("g", 1)).collect()
+    assert sorted(r.id for r in odd) == [1, 3, 11, 13]
+
+
 def test_mor_delete_lifecycle(spark, tmp_path):
     """Merge-on-read deletes: stack two delete files (different keys),
     appends carry pending deletes forward to old files, incremental
@@ -1503,9 +1525,9 @@ def test_merge_evaluates_its_source_once(spark, tmp_path, verb):
 def test_only_pinned_helpers_read_parquet():
     """Source guard: in snapshots.py every parquet read goes through
     ``SnapshotTable._scan`` (schema pinned; basePath discovery for
-    hive-partitioned groups, typed by the pinned schema), and
-    the MinHash index verbs read their components only through
-    ``Engine._read_component`` (tombstones: a pinned ``key long``)."""
+    hive-partitioned groups, typed by the pinned schema), and api.py
+    has no parquet read of its own: every index verb (MinHash, PQ,
+    IVF) reads its index through the snapshot layer."""
     import ast
     import re
 
@@ -1526,13 +1548,7 @@ def test_only_pinned_helpers_read_parquet():
         return out
 
     assert set(reads_by_function(snap_mod)) == {"_scan"}
-    minhash_verbs = {
-        "build_minhash_index", "minhash_index_append", "minhash_index_remove",
-        "minhash_index_compact", "read_minhash_bands", "near_dup_pairs_against_index",
-        "_index_batch", "_index_meta", "_read_component", "_without_tombstones",
-    }
-    in_verbs = [fn for fn in reads_by_function(api_mod) if fn in minhash_verbs]
-    assert in_verbs == ["_read_component"]
+    assert reads_by_function(api_mod) == []
 
 
 def test_copy_on_write_verbs_share_one_rewrite_core():

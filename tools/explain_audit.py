@@ -422,12 +422,6 @@ ENUM_WINDOW_ALLOWED: dict[str, str] = {}
 # fails, so the list cannot rot.
 BROADCAST_BOUNDED: dict[str, dict[str, str]] = {
     "api.py": {
-        "ts": "index tombstone set (takedown keys — bounded by design: "
-        "the documented contract is that a tombstone set outgrowing a "
-        "broadcast means the compact pass is overdue; "
-        "Engine._without_tombstones)",
-        "keys": "normalized takedown key set (same bound as the "
-        "tombstone set it feeds — ann_index_compact)",
         "bench_grams": "benchmark/eval n-gram set (MBs by design — eval "
         "sets are fixed even when the corpus is 100 TB; documented in "
         "Engine.decontaminate)",

@@ -155,20 +155,19 @@ class Engine:
 
     # -- indexes: one SnapshotTable each ----------------------------------
     # Every Engine index is one SnapshotTable at its path, and every index
-    # verb is one snapshot commit: build is ``create`` (the build
-    # parameters in the commit summary; IVF first sets its ``cluster``
-    # partition spec), append is ``append``, remove is ``delete_keys`` on
-    # the key column (merge-on-read: O(|keys|), no data rewrite,
-    # sequence-scoped like any equality delete) and compaction applies
-    # the pending deletes physically. A crash before the commit leaves
-    # readers on the previous snapshot and the staged files for
-    # ``remove_orphan_files``. The components share the table under a
-    # ``component`` column; a write of their union puts each component in
-    # files of its own, so the manifest's zone maps narrow a read to one
-    # component (a compacted file may mix them; the read's residual
-    # filter then keeps the component's rows). Frozen rows (the MinHash
-    # meta row, PQ codewords, IVF centroids) carry a null key, so no
-    # remove can retract them.
+    # verb is one snapshot commit: build is ``create``, append is
+    # ``append``, remove is ``delete_keys`` on the key column
+    # (merge-on-read: O(|keys|), no data rewrite, sequence-scoped like any
+    # equality delete) and compaction applies the pending deletes
+    # physically, then expires the older snapshots so the removed rows
+    # leave the disk. A crash before the commit leaves readers on the
+    # previous snapshot and the staged files for ``remove_orphan_files``.
+    # The components share the table under a ``component`` column, the
+    # first entry of the partition spec (set on the empty table before
+    # the build), so every write, compaction included, keeps each
+    # component in files of its own and a read of one component opens
+    # only its files. Frozen rows (the MinHash meta row, PQ codewords,
+    # IVF centroids) carry a null key, so no remove can retract them.
 
     @staticmethod
     def _components(**frames: DataFrame) -> DataFrame:
@@ -182,9 +181,16 @@ class Engine:
     @staticmethod
     def _component(t: SnapshotTable, name: str) -> DataFrame:
         """One component of index table ``t``, pending deletes applied;
-        the zone maps on ``component`` prune the other components'
-        files."""
-        return t.read(skip=("component", name, name))
+        partition pruning drops the other components' files."""
+        return t.read(partition_eq=("component", name))
+
+    @staticmethod
+    def _create(spark: SparkSession, path: str, spec: list[str], **frames: DataFrame) -> None:
+        """The build verbs' commit: an index table partitioned by
+        ``spec`` (``component`` first) holding ``frames``."""
+        t = SnapshotTable(spark, path)
+        t.set_partition_spec(spec)
+        t.create(Engine._components(**frames))
 
     @staticmethod
     def _remove(spark: SparkSession, path: str, keys, key_col: str) -> None:
@@ -198,13 +204,14 @@ class Engine:
         SnapshotTable(spark, path).delete_keys(keys, key_col)
 
     @staticmethod
-    def _compact(spark: SparkSession, path: str) -> str:
-        """MinHash and PQ compaction: when removes are pending, rewrite
-        the index without them and expire the older snapshots, so the
-        removed rows leave the disk too."""
+    def _compact(spark: SparkSession, path: str, rewrite) -> str:
+        """The compaction verbs: when removes are pending, ``rewrite``
+        the index without them (one commit) and expire the older
+        snapshots, so the removed rows leave the disk too. With nothing
+        pending nothing is committed."""
         t = SnapshotTable(spark, path)
-        if t._head()["eq_deletes"]:
-            t.rewrite_data_files()
+        if t.pending_deletes():
+            rewrite(t)
             t.expire_snapshots(keep_last=1)
         return path.rstrip("/")
 
@@ -220,8 +227,7 @@ class Engine:
         a new batch's bands join against these stored rows instead of
         re-signing (or re-reading) the corpus. A ``meta`` row keeps the
         banding (n_bands, tau) so queries/appends cannot use a
-        mismatched band count; compaction keeps it, where the build
-        commit's summary would expire."""
+        mismatched band count."""
         from iceberg_twist_spark.llm.dedup import lsh_params
 
         n_bands, _ = lsh_params(tau)
@@ -229,10 +235,7 @@ class Engine:
         meta = df.sparkSession.createDataFrame(
             [(n_bands, float(tau))], "n_bands int, tau double"
         )
-        SnapshotTable(df.sparkSession, path).create(
-            Engine._components(bands=bands, arrays=arrs, meta=meta),
-            summary={"n_bands": n_bands, "tau": tau},
-        )
+        Engine._create(df.sparkSession, path, ["component"], bands=bands, arrays=arrs, meta=meta)
         return path.rstrip("/")
 
     @staticmethod
@@ -252,11 +255,10 @@ class Engine:
 
     @staticmethod
     def _minhash_meta(t: SnapshotTable) -> dict:
-        """A MinHash index's banding, ``{"n_bands", "tau"}``: the zone
-        map of the file holding its meta row (the only row with these
-        columns set), read from the manifest — no Spark job."""
-        stats = next(e["stats"] for e in t._head()["files"].values() if "tau" in e["stats"])
-        return {"n_bands": stats["n_bands"][0], "tau": stats["tau"][0]}
+        """A MinHash index's banding, ``{"n_bands", "tau"}``: the meta
+        row is the only row with these columns set, so their zone-map
+        bounds are its values — read from the manifest, no Spark job."""
+        return {c: t.column_bounds(c)[0] for c in ("n_bands", "tau")}
 
     @staticmethod
     def minhash_index_append(
@@ -293,7 +295,7 @@ class Engine:
         without them (``rewrite_data_files``) and expire the older
         snapshots and their files. Readers before/after see the same
         live rows."""
-        return Engine._compact(spark, path)
+        return Engine._compact(spark, path, SnapshotTable.rewrite_data_files)
 
     @staticmethod
     def read_minhash_bands(spark: SparkSession, path: str) -> DataFrame:
@@ -561,16 +563,10 @@ class Engine:
             "embedding",
         )
         centroids = emb.orderBy("vec_id").limit(n_clusters)
-        t = SnapshotTable(df.sparkSession, path)
-        t.set_partition_spec(["cluster"])
-        t.create(
-            Engine._components(
-                data=ivf_assign(emb, centroids),
-                centroid=centroids.select(
-                    "embedding", "nrm", F.col("vec_id").alias("cluster")
-                ),
-            ),
-            summary={"n_clusters": n_clusters},
+        Engine._create(
+            df.sparkSession, path, ["component", "cluster"],
+            data=ivf_assign(emb, centroids),
+            centroid=centroids.select("embedding", "nrm", F.col("vec_id").alias("cluster")),
         )
         return path
 
@@ -688,13 +684,11 @@ class Engine:
             "code", "m", F.col("sv").alias("cw")
         )
         cb1 = S._lloyd_update(S._pq_assign(sub, cb0, carry_sv=True), sub)
-        SnapshotTable(df.sparkSession, path).create(
-            Engine._components(
-                codes=S._pq_assign(sub, cb1),
-                vectors=S.with_norm(emb, "embedding"),
-                codebook=cb1,
-            ),
-            summary={"n_sub": S.PQ_M, "sub_dim": sub_dim},
+        Engine._create(
+            df.sparkSession, path, ["component"],
+            codes=S._pq_assign(sub, cb1),
+            vectors=S.with_norm(emb, "embedding"),
+            codebook=cb1,
         )
         return path.rstrip("/")
 
@@ -761,7 +755,7 @@ class Engine:
     def pq_index_compact(spark: SparkSession, path: str) -> str:
         """Physically reclaim removed vectors: rewrite the index
         without them and expire the older snapshots and their files."""
-        return Engine._compact(spark, path)
+        return Engine._compact(spark, path, SnapshotTable.rewrite_data_files)
 
     @staticmethod
     def ann_index_remove(
@@ -778,23 +772,10 @@ class Engine:
     @staticmethod
     def ann_index_compact(spark: SparkSession, path: str) -> str:
         """Physically reclaim removed vectors from the IVF layout,
-        rewriting only the files that hold them — the copy-on-write
-        core ``SnapshotTable._rewrite``, whose rewrite applies the
-        pending deletes. The removed rows are no longer live, so the
-        locate pass reads the files with the deletes unapplied. The
-        deletes stay listed while files older than them remain, as in
-        Iceberg; no row of those files matches them."""
-        t = SnapshotTable(spark, path)
-        m = t._head()
-        if m["eq_deletes"]:
-            removed = reduce(DataFrame.unionByName, map(t._read_delete, m["eq_deletes"]))
-            raw = t._read_files({**m, "eq_deletes": []}, list(m["files"]), keep_meta=True)
-            t._rewrite(
-                m, "compact",
-                lambda _live: raw.join(removed, "vec_id", "left_semi"),
-                lambda rows: rows,
-            )
-        return path.rstrip("/")
+        rewriting only the files that hold them
+        (``SnapshotTable.apply_deletes``, which also drops the applied
+        deletes) and expiring the older snapshots and their files."""
+        return Engine._compact(spark, path, SnapshotTable.apply_deletes)
 
     @staticmethod
     def pq_ann_search(

@@ -67,7 +67,7 @@ DELTA_MOD = 5
 # q_llm_minhash_dedup SQL.
 MINHASH_APPEND_TAU = 0.9
 
-_LIFECYCLE_VERSION = 3
+_LIFECYCLE_VERSION = 4
 
 # which source table each lifecycle kind reads — the fingerprint must
 # track THAT table so a documents-only fixture regeneration cannot

@@ -1292,6 +1292,13 @@ class SnapshotTable:
             return p[5:]
         return p
 
+    def _locate(self, rows: DataFrame) -> set[str]:
+        """The data files ``rows`` (read with ``keep_meta``) come from:
+        one job collecting their distinct paths, bounded by the
+        manifest's file count — the locate pass of ``_rewrite`` and
+        ``apply_deletes``."""
+        return {self._norm_uri(r._file_path) for r in rows.select("_file_path").distinct().collect()}
+
     def _rewrite(
         self,
         cur: dict,
@@ -1322,13 +1329,7 @@ class SnapshotTable:
         maps to (MERGE's inserts). Without it, a locate pass that hits
         no file leaves nothing to write, so the write job is skipped;
         the commit still lands, with the same files."""
-        hits = (
-            locate(self.read(snapshot_id=cur["snapshot_id"], keep_meta=True))
-            .select("_file_path")
-            .distinct()
-            .collect()  # bounded by the manifest's file count
-        )
-        hit_paths = {self._norm_uri(r._file_path) for r in hits}
+        hit_paths = self._locate(locate(self.read(snapshot_id=cur["snapshot_id"], keep_meta=True)))
         to_rewrite = [f for f in cur["files"] if f in hit_paths]
         out = rewrite(self._read_files(cur, to_rewrite))
         added = self._write_files(out, cur["partition_spec"]) if to_rewrite or inserts else {}
@@ -1439,6 +1440,24 @@ class SnapshotTable:
             slot["n_files"] += 1
             slot["n_records"] += e["rows"]
         return sorted(agg.values(), key=lambda s: sorted(s["partition"].items()))
+
+    def pending_deletes(self) -> int:
+        """Delete files the current snapshot carries, equality and
+        position: the merge-on-read work every read pays until a
+        compaction applies them."""
+        m = self._head()
+        return len(m["eq_deletes"]) + len(m["pos_deletes"])
+
+    def column_bounds(self, col: str) -> tuple | None:
+        """``(min, max)`` of ``col`` over the current snapshot's data
+        files, from the manifest's zone maps — no data scan (Iceberg's
+        ``files`` metadata table serves the same lower/upper bounds).
+        Pending deletes are not applied; files where ``col`` is all
+        null record no bound, and None means no file records one."""
+        rngs = [e["stats"][col] for e in self._head()["files"].values() if col in e["stats"]]
+        if not rngs:
+            return None
+        return min(r[0] for r in rngs), max(r[1] for r in rngs)
 
     def merge_into(
         self,
@@ -1904,10 +1923,45 @@ class SnapshotTable:
         df = self.read(snapshot_id=cur["snapshot_id"])
         if sort_by:
             df = df.repartitionByRange(int(n_out), *sort_by).sortWithinPartitions(*sort_by)
+        elif n_out <= len(cur["files"]):
+            # binpack into fewer files: merge whole scan partitions, no
+            # shuffle (the writer still splits rows by partition spec)
+            df = df.coalesce(int(n_out))
         else:
             df = df.repartition(int(n_out))
         added = self._write_files(df, cur["partition_spec"])
         return self._commit("rewrite", cur, added, self._paths(cur))
+
+    def apply_deletes(self) -> int:
+        """Targeted compaction: rewrite only the data files a pending
+        delete removes a row from, with the deletes applied, and drop
+        every pending delete in the same commit — the files left
+        untouched hold no deleted row and the replacements are newer
+        than every delete. Unlike ``rewrite_data_files`` no other file
+        is read or merged, so retracting ten rows from a clustered
+        table rewrites the few files holding them. The locate pass
+        reads the files with the deletes unapplied, since the rows they
+        remove are what it looks for: an equality delete's keys
+        semi-join them, a position delete names its files."""
+        cur = self._head()
+        hit = {self._norm_uri(x) for d in cur["pos_deletes"] for x in d["files"]}
+        raw = self._read_files(
+            {**cur, "eq_deletes": [], "pos_deletes": []}, list(cur["files"]), keep_meta=True
+        )
+        located = []
+        for d in cur["eq_deletes"]:
+            key = self._eq_key(cur["schema_meta"], d)
+            if key is not None:
+                dk = self._read_delete(d)
+                dk = dk.select(F.col(dk.columns[0]).alias(key))
+                located.append(raw.join(F.broadcast(dk), key, "left_semi"))
+        if located:
+            hit |= self._locate(reduce(DataFrame.unionByName, located))
+        to_rewrite = [f for f in cur["files"] if f in hit]
+        out = self._read_files(cur, to_rewrite)
+        added = self._write_files(out, cur["partition_spec"]) if to_rewrite else {}
+        deletes = [d["path"] for d in cur["eq_deletes"] + cur["pos_deletes"]]
+        return self._commit("rewrite", cur, added, to_rewrite + deletes)
 
 
 # --------------------------------------------------------------------------

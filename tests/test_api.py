@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -274,7 +275,8 @@ def test_profile_table_refuses_non_double_numeric_columns(spark, sf_dir, monkeyp
 def test_ann_index_facade_matches_brute_force(spark, sf_dir):
     """build_ann_index + ann_search must return exactly the vectors a
     brute-force rescan of the probed clusters would — and every file
-    of the index must really be partitioned on ``cluster``."""
+    of the index must really be partitioned on ``cluster`` (under its
+    ``component``)."""
     import os
     import shutil
     import tempfile
@@ -289,7 +291,7 @@ def test_ann_index_facade_matches_brute_force(spark, sf_dir):
     try:
         Engine.build_ann_index(emb, "embedding", "vec_id", path)
         entries = SnapshotTable(spark, path)._head()["files"].values()
-        assert entries and all(set(e["partition"]) == {"cluster"} for e in entries)
+        assert entries and all(set(e["partition"]) == {"component", "cluster"} for e in entries)
         got = Engine.ann_search(spark, path, probe, k=5, nprobe=16)  # all clusters
         rows = got.collect()
         assert len(rows) == 5
@@ -859,10 +861,13 @@ def test_minhash_index_remove_tombstone_and_compact(spark, tmp_path):
     assert live_ts == {2, 3}
 
     # compaction: same live rows, physically — no delete is left to
-    # apply, and only the compacted snapshot remains
+    # apply, only the compacted snapshot remains, and each component
+    # is binpacked into one file of its own
     Engine.minhash_index_compact(spark, path)
     t = SnapshotTable(spark, path)
-    assert t._head()["eq_deletes"] == [] and len(t.snapshots()) == 1
+    assert t.pending_deletes() == 0 and len(t.snapshots()) == 1
+    parts = sorted(e["partition"]["component"] for e in t._head()["files"].values())
+    assert parts == ["arrays", "bands", "meta"]
 
     def stored(component):
         rows = t.read().filter(f"component = '{component}'").select("doc_id")
@@ -917,7 +922,7 @@ def test_pq_index_remove_tombstone_matches_compact(spark, tmp_path):
     assert all(v not in (7, 11) for v, _ in ts_rows)
 
     Engine.pq_index_compact(spark, path)
-    assert t._head()["eq_deletes"] == [] and len(t.snapshots()) == 1
+    assert t.pending_deletes() == 0 and len(t.snapshots()) == 1
     compact_rows = [
         (r.vec_id, r.cos_sim)
         for r in Engine.pq_ann_search(spark, path, probe, k=120).collect()
@@ -949,7 +954,9 @@ def test_ann_index_remove_rewrites_only_hit_clusters(spark, tmp_path):
     compaction rewrites ONLY the file holding them — witnessed by the
     manifest's data-file paths: every other file is carried verbatim,
     and the one replacement, in the same cluster partition, holds the
-    hit file's rows minus the removed vector."""
+    hit file's rows minus the removed vector. The applied delete is
+    dropped, the hit file leaves the disk with the expired snapshots,
+    and a second compaction commits nothing."""
     path, rows = _ivf_index(spark, str(tmp_path / "ivfr"))
     probe = [float(x) for x in rows[42][1]]
     assert any(
@@ -982,19 +989,29 @@ def test_ann_index_remove_rewrites_only_hit_clusters(spark, tmp_path):
     assert after[new]["partition"] == before[hit]["partition"]
     assert after[new]["rows"] == before[hit]["rows"] - 1
     assert 42 not in {r.vec_id for r in spark.read.parquet(new).collect()}
+    assert t.pending_deletes() == 0 and len(t.snapshots()) == 1
+    assert not os.path.exists(hit)
+    for name in os.listdir(os.path.join(path, "metadata")):
+        if name.startswith("v") and name.endswith(".json"):
+            with open(os.path.join(path, "metadata", name)) as f:
+                assert hit not in json.load(f)["files"]
+    sid = t.current_snapshot_id()
+    Engine.ann_index_compact(spark, path)
+    assert t.current_snapshot_id() == sid
 
 
 def test_ann_search_scans_only_probed_clusters(spark, tmp_path):
     """ann_search's IN-list of probed cluster ids reaches the scan's
     PartitionFilters, and the scan opens only those clusters' data
-    files (the centroid files are pruned by their zone maps)."""
+    files (the centroid files are pruned by their ``component``
+    partition)."""
     import re
 
     path, rows = _ivf_index(spark, str(tmp_path / "ivfp"))
     got = Engine.ann_search(spark, path, [float(x) for x in rows[42][1]], k=5, nprobe=2)
     got.collect()
     plan = got._jdf.queryExecution().executedPlan()
-    (probed,) = re.findall(r"PartitionFilters: \[cluster#\d+L IN \(([\d,]+)\)\]", plan.toString())
+    (probed,) = re.findall(r"PartitionFilters: \[[^\]]*cluster#\d+L IN \(([\d,]+)\)\]", plan.toString())
     probed = {int(c) for c in probed.split(",")}
     assert len(probed) == 2
     leaves = plan.collectLeaves()
@@ -1005,7 +1022,7 @@ def test_ann_search_scans_only_probed_clusters(spark, tmp_path):
     entries = SnapshotTable(spark, path)._head()["files"].values()
     want = [
         e for e in entries
-        if int(e["partition"]["cluster"]) in probed and e["stats"]["component"][0] == "data"
+        if int(e["partition"]["cluster"]) in probed and e["partition"]["component"] == "data"
     ]
     assert 0 < scan.metrics().apply("numFiles").value() == len(want) < len(entries)
 

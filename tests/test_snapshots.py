@@ -1553,8 +1553,10 @@ def test_only_pinned_helpers_read_parquet():
 
 def test_copy_on_write_verbs_share_one_rewrite_core():
     """Source guard: in snapshots.py the ``_file_path`` locate pass
-    (``.distinct().collect()``) lives only in ``SnapshotTable._rewrite``,
-    and no copy-on-write verb writes or commits files on its own."""
+    (``.distinct().collect()``) lives only in ``SnapshotTable._locate``,
+    which the copy-on-write core ``_rewrite`` and ``apply_deletes``
+    share, and no copy-on-write verb writes or commits files on its
+    own."""
     import ast
 
     import iceberg_twist_spark.sources.snapshots as snap_mod
@@ -1568,11 +1570,41 @@ def test_copy_on_write_verbs_share_one_rewrite_core():
         if isinstance(n, ast.FunctionDef)
     }
     locate = ".select('_file_path').distinct().collect()"
-    assert [name for name, src in defs.items() if locate in src] == ["_rewrite"]
+    assert [name for name, src in defs.items() if locate in src] == ["_locate"]
+    for name in ("_rewrite", "apply_deletes"):
+        assert "self._locate(" in defs[name], name
     for verb in ("merge", "update_where", "merge_into", "delete_where"):
         assert "self._rewrite(" in defs[verb], verb
         assert "self._commit(" not in defs[verb], verb
         assert "self._write_files(" not in defs[verb], verb
+
+
+def test_apply_deletes_rewrites_only_hit_files_and_drops_the_deletes(spark, tmp_path):
+    """Targeted compaction: only the files a pending delete removes a
+    row from are rewritten (equality keys found by a semi join of the
+    rows before the delete, position deletes by the files they name),
+    every pending delete leaves the manifest in that one commit, and a
+    key re-inserted after its delete still reads back."""
+    tbl = SnapshotTable(spark, str(tmp_path / "t"))
+    # four files: ids 0-9, 10-19, 20-29, 30-39
+    tbl.create(spark.range(0, 40, 1, 4).selectExpr("id", "id * 10 AS v"))
+    before = tbl._head()["files"]
+    tbl.delete_keys(spark.createDataFrame([(3,), (5,)], "id long"), "id")
+    tbl.delete_where_positional(F.col("id") == 25)
+    tbl.append(spark.createDataFrame([(3, 999)], "id long, v long"))
+    want = sorted(tuple(r) for r in tbl.read().collect())
+    assert (3, 999) in want and (3, 30) not in want and len(want) == 38
+    assert tbl.pending_deletes() == 2
+    tbl.apply_deletes()
+    after = tbl._head()["files"]
+    assert tbl.pending_deletes() == 0
+    assert sorted(tuple(r) for r in tbl.read().collect()) == want
+    # the 10-19 and 30-39 files are carried verbatim
+    assert len(set(before) & set(after)) == 2
+    assert tbl._head()["n_records"] == len(want)
+    # nothing pending: the commit keeps every file
+    sid = tbl.apply_deletes()
+    assert set(tbl._manifest(sid)["files"]) == set(after)
 
 
 def test_copy_on_write_commits_leave_no_empty_files(spark, tmp_path):

@@ -550,8 +550,8 @@ class Engine:
         """Materialize a cluster-partitioned ANN index for ``df``:
         vectors assigned to deterministic IVF centroids (smallest
         ``n_clusters`` keys), written once with precomputed norms under
-        partition spec ``cluster`` — so ``ann_search`` prunes unread
-        partitions via PartitionFilters (same layout as
+        partition spec ``component``, ``cluster`` — so ``ann_search``
+        prunes unread partitions via PartitionFilters (same layout as
         q_llm_ann_ivf_indexed). The centroids ride along as ``centroid``
         rows (their id in ``cluster``), so ``ann_search`` needs only the
         index path. Run it offline per corpus snapshot; at 100 TB every

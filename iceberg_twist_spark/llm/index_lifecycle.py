@@ -23,20 +23,23 @@ The retraction queries below check remove(append(base, delta), delta)
 ≡ build(base) the same way. Every index is one ``SnapshotTable``, so
 each verb the queries run is one snapshot commit, and the stored
 bands are read back only through ``Engine.read_minhash_bands`` (the
-snapshot layer's reader, removes applied). Index directories are
-fingerprint-keyed temp dirs (llm.similarity._source_fingerprint) whose
-name carries the layout version, so a regenerated fixture or an older
-layout can never be served, and a _COMPLETE marker skips the rebuild
-on re-runs.
+snapshot layer's reader, removes applied). Each query builds its
+index once through ``llm.similarity.cached_index``: the directory is
+keyed by the source table's content fingerprint and the layout version,
+so a regenerated fixture or an older layout is never served, and the
+index counts as built only once its table carries the ``built`` tag,
+created after the chain's last commit — a re-run reuses it, a crashed
+chain's directory is removed and rebuilt.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from iceberg_twist_spark.api import Engine
 from iceberg_twist_spark.catalog import load_tables
 from iceberg_twist_spark.llm.dedup import (
     LSH_BANDS,
@@ -55,6 +58,7 @@ from iceberg_twist_spark.llm.similarity import (
     _DUCK_R4COS,
     _PQ_D2,
     _source_fingerprint,
+    cached_index,
 )
 from iceberg_twist_spark.registry import register
 
@@ -67,30 +71,16 @@ DELTA_MOD = 5
 # q_llm_minhash_dedup SQL.
 MINHASH_APPEND_TAU = 0.9
 
-_LIFECYCLE_VERSION = 4
 
-# which source table each lifecycle kind reads — the fingerprint must
-# track THAT table so a documents-only fixture regeneration cannot
-# serve a stale documents-based index (r8 ADVICE item)
-_LIFECYCLE_TABLE = {
-    "minhash": "documents",
-    "minhashq": "documents",
-    "mhremove": "documents",
-    "pq": "embeddings",
-    "pqremove": "embeddings",
-    "ivf": "embeddings",
-    "ivfremove": "embeddings",
-    "pqstream": "embeddings",
-}
+def _split(df: DataFrame, key: str) -> tuple[DataFrame, DataFrame]:
+    """(base, delta): the rows whose ``key`` is not / is a multiple of
+    DELTA_MOD."""
+    return df.filter(F.col(key) % DELTA_MOD != 0), df.filter(F.col(key) % DELTA_MOD == 0)
 
 
-def _lifecycle_dir(kind: str, sf_dir: str) -> str:
-    import tempfile
-
-    key = _source_fingerprint(sf_dir, table=_LIFECYCLE_TABLE[kind])
-    return os.path.join(
-        tempfile.gettempdir(), f"itws_{kind}_append_v{_LIFECYCLE_VERSION}_{key}"
-    )
+def _probe_vec(emb: DataFrame) -> list[float]:
+    """The standard probe (vec_id 0) as a literal vector."""
+    return [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
 
 
 @register(
@@ -107,20 +97,15 @@ def q_llm_minhash_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus from scratch. Exercises the real facade write path; the
     query side reads only the on-disk index (the daily-ingest shape:
     sign the increment, never re-sign the corpus)."""
-    from iceberg_twist_spark.api import Engine
+    base, delta = _split(
+        load_tables(spark, sf_dir)["documents"].select("doc_id", "text"), "doc_id"
+    )
 
-    docs = load_tables(spark, sf_dir)["documents"].select("doc_id", "text")
-    path = _lifecycle_dir("minhash", sf_dir)
-    marker = os.path.join(path, "_COMPLETE")
-    if not os.path.exists(marker):
-        base = docs.filter(F.col("doc_id") % DELTA_MOD != 0)
-        delta = docs.filter(F.col("doc_id") % DELTA_MOD == 0)
-        Engine.build_minhash_index(
-            base, "text", "doc_id", path, tau=MINHASH_APPEND_TAU
-        )
+    def build(path: str) -> None:
+        Engine.build_minhash_index(base, "text", "doc_id", path, tau=MINHASH_APPEND_TAU)
         Engine.minhash_index_append(delta, "text", "doc_id", path)
-        with open(marker, "w") as f:
-            f.write("ok")
+
+    path = cached_index(spark, "mhappend", "documents", sf_dir, build)
     return band_pairs_from_rows(Engine.read_minhash_bands(spark, path))
 
 
@@ -214,20 +199,17 @@ def q_llm_pq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the on-disk index. The oracle trains on the same base and
     encodes everything against it, so any drift in the append path
     (retraining, geometry slip, missed rows) breaks the hash."""
-    from iceberg_twist_spark.api import Engine
-
     emb = load_tables(spark, sf_dir)["embeddings"].select("vec_id", "embedding")
-    path = _lifecycle_dir("pq", sf_dir)
-    marker = os.path.join(path, "_COMPLETE")
-    if not os.path.exists(marker):
-        base = emb.filter(F.col("vec_id") % DELTA_MOD != 0)
-        delta = emb.filter(F.col("vec_id") % DELTA_MOD == 0)
+    base, delta = _split(emb, "vec_id")
+
+    def build(path: str) -> None:
         Engine.build_pq_ann_index(base, "embedding", "vec_id", path)
         Engine.pq_index_append(delta, "embedding", "vec_id", path)
-        with open(marker, "w") as f:
-            f.write("ok")
-    probe = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
-    return Engine.pq_ann_search(spark, path, probe, k=RECALL_K, rerank=PQ_RERANK)
+
+    path = cached_index(spark, "pqappend", "embeddings", sf_dir, build)
+    return Engine.pq_ann_search(
+        spark, path, _probe_vec(emb), k=RECALL_K, rerank=PQ_RERANK
+    )
 
 
 # ------------------------------------------------------------------
@@ -260,21 +242,16 @@ def q_llm_minhash_index_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
     produce the banded pair set of the BASE snapshot alone, which the
     oracle derives from scratch — a band row or shingle array that
     survives retraction breaks the hash."""
-    from iceberg_twist_spark.api import Engine
+    base, delta = _split(
+        load_tables(spark, sf_dir)["documents"].select("doc_id", "text"), "doc_id"
+    )
 
-    docs = load_tables(spark, sf_dir)["documents"].select("doc_id", "text")
-    path = _lifecycle_dir("mhremove", sf_dir)
-    marker = os.path.join(path, "_COMPLETE")
-    if not os.path.exists(marker):
-        base = docs.filter(F.col("doc_id") % DELTA_MOD != 0)
-        delta = docs.filter(F.col("doc_id") % DELTA_MOD == 0)
-        Engine.build_minhash_index(
-            base, "text", "doc_id", path, tau=MINHASH_APPEND_TAU
-        )
+    def build(path: str) -> None:
+        Engine.build_minhash_index(base, "text", "doc_id", path, tau=MINHASH_APPEND_TAU)
         Engine.minhash_index_append(delta, "text", "doc_id", path)
         Engine.minhash_index_remove(spark, path, delta.select("doc_id"))
-        with open(marker, "w") as f:
-            f.write("ok")
+
+    path = cached_index(spark, "mhremove", "documents", sf_dir, build)
     return band_pairs_from_rows(Engine.read_minhash_bands(spark, path))
 
 
@@ -295,23 +272,18 @@ def q_llm_pq_index_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalent to never having appended. The
     probe (vec_id 0, itself retracted) is searched as a literal; the
     oracle trains on base and encodes base only."""
-    from iceberg_twist_spark.api import Engine
-
     emb = load_tables(spark, sf_dir)["embeddings"].select("vec_id", "embedding")
-    path = _lifecycle_dir("pqremove", sf_dir)
-    marker = os.path.join(path, "_COMPLETE")
-    if not os.path.exists(marker):
-        base = emb.filter(F.col("vec_id") % DELTA_MOD != 0)
-        delta = emb.filter(F.col("vec_id") % DELTA_MOD == 0)
+    base, delta = _split(emb, "vec_id")
+
+    def build(path: str) -> None:
         Engine.build_pq_ann_index(base, "embedding", "vec_id", path)
         Engine.pq_index_append(delta, "embedding", "vec_id", path)
-        Engine.pq_index_remove(
-            spark, path, delta.select("vec_id"), compact=True
-        )
-        with open(marker, "w") as f:
-            f.write("ok")
-    probe = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
-    return Engine.pq_ann_search(spark, path, probe, k=RECALL_K, rerank=PQ_RERANK)
+        Engine.pq_index_remove(spark, path, delta.select("vec_id"), compact=True)
+
+    path = cached_index(spark, "pqremove", "embeddings", sf_dir, build)
+    return Engine.pq_ann_search(
+        spark, path, _probe_vec(emb), k=RECALL_K, rerank=PQ_RERANK
+    )
 
 
 # The IVF append oracle with the final scan restricted to the base
@@ -365,23 +337,18 @@ def q_llm_ivf_index_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the rest of the layout is untouched), the frozen centroids stay.
     ``ann_search``'s partition pruning then answers
     the literal probe over exactly the base vectors."""
-    from iceberg_twist_spark.api import Engine
-
     emb = load_tables(spark, sf_dir)["embeddings"].select("vec_id", "embedding")
-    path = _lifecycle_dir("ivfremove", sf_dir)
-    marker = path.rstrip("/") + "_COMPLETE"
-    if not os.path.exists(marker):
-        base = emb.filter(F.col("vec_id") % DELTA_MOD != 0)
-        delta = emb.filter(F.col("vec_id") % DELTA_MOD == 0)
+    base, delta = _split(emb, "vec_id")
+
+    def build(path: str) -> None:
         Engine.build_ann_index(base, "embedding", "vec_id", path)
         Engine.ann_index_append(delta, "embedding", "vec_id", path)
-        Engine.ann_index_remove(
-            spark, path, delta.select("vec_id"), compact=True
-        )
-        with open(marker, "w") as f:
-            f.write("ok")
-    probe = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
-    return Engine.ann_search(spark, path, probe, k=RECALL_K, nprobe=IVF_NPROBE)
+        Engine.ann_index_remove(spark, path, delta.select("vec_id"), compact=True)
+
+    path = cached_index(spark, "ivfremove", "embeddings", sf_dir, build)
+    return Engine.ann_search(
+        spark, path, _probe_vec(emb), k=RECALL_K, nprobe=IVF_NPROBE
+    )
 
 
 # ------------------------------------------------------------------
@@ -440,19 +407,13 @@ def q_llm_minhash_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored corpus is read, never re-signed: candidate and verify work
     is linear in the increment. The oracle is the full-corpus
     verified-pair SQL restricted to pairs touching the delta."""
-    from iceberg_twist_spark.api import Engine
-
-    docs = load_tables(spark, sf_dir)["documents"].select("doc_id", "text")
-    path = _lifecycle_dir("minhashq", sf_dir)
-    marker = os.path.join(path, "_COMPLETE")
-    if not os.path.exists(marker):
-        base = docs.filter(F.col("doc_id") % DELTA_MOD != 0)
-        Engine.build_minhash_index(
-            base, "text", "doc_id", path, tau=MINHASH_QUERY_TAU
-        )
-        with open(marker, "w") as f:
-            f.write("ok")
-    delta = docs.filter(F.col("doc_id") % DELTA_MOD == 0)
+    base, delta = _split(
+        load_tables(spark, sf_dir)["documents"].select("doc_id", "text"), "doc_id"
+    )
+    path = cached_index(
+        spark, "mhquery", "documents", sf_dir,
+        lambda p: Engine.build_minhash_index(base, "text", "doc_id", p, tau=MINHASH_QUERY_TAU),
+    )
     return Engine.near_dup_pairs_against_index(delta, "text", "doc_id", path)
 
 
@@ -512,20 +473,17 @@ def q_llm_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the partition level over the grown corpus. The oracle assigns
     every vector against the base-snapshot centroids — exactly the
     on-disk state the append must produce."""
-    from iceberg_twist_spark.api import Engine
-
     emb = load_tables(spark, sf_dir)["embeddings"].select("vec_id", "embedding")
-    path = _lifecycle_dir("ivf", sf_dir)
-    marker = path.rstrip("/") + "_COMPLETE"
-    if not os.path.exists(marker):
-        base = emb.filter(F.col("vec_id") % DELTA_MOD != 0)
-        delta = emb.filter(F.col("vec_id") % DELTA_MOD == 0)
+    base, delta = _split(emb, "vec_id")
+
+    def build(path: str) -> None:
         Engine.build_ann_index(base, "embedding", "vec_id", path)
         Engine.ann_index_append(delta, "embedding", "vec_id", path)
-        with open(marker, "w") as f:
-            f.write("ok")
-    probe = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
-    return Engine.ann_search(spark, path, probe, k=RECALL_K, nprobe=IVF_NPROBE)
+
+    path = cached_index(spark, "ivfappend", "embeddings", sf_dir, build)
+    return Engine.ann_search(
+        spark, path, _probe_vec(emb), k=RECALL_K, nprobe=IVF_NPROBE
+    )
 
 
 # ------------------------------------------------------------------
@@ -543,43 +501,63 @@ def q_llm_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 # breaks the hash. At scale the same foreachBatch loop runs against a
 # Kafka/files source; only the replay staging is test harness.
 
-_DOCS_REPLAY_CACHE: dict[tuple[str, int], str] = {}
-
 DOC_STREAM_SCHEMA = "doc_id long, text string"
 
+REPLAY_CHUNKS = 4
 
-def stage_docs_replay(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> str:
-    """Stage ``documents`` as ``n_chunks`` parquet files (doc_id mod
-    assignment — deterministic, no sort) with strictly ascending
-    mtimes so the file stream source replays them in the same order
-    every run."""
+# staged replay directories by source fingerprint
+_REPLAY_CACHE: dict[str, str] = {}
+
+
+def stage_replay(df: DataFrame, key: str, chunk: Column) -> str:
+    """Stage ``df`` as REPLAY_CHUNKS parquet files, file k holding the
+    rows where ``chunk`` is k (a deterministic assignment, no sort), with
+    strictly ascending mtimes so the file stream source replays them in
+    the same order every run. Cached by ``key``, the source table's
+    CONTENT fingerprint, not its path: an in-place regenerated fixture
+    must restage, not replay stale chunks (r8 ADVICE item)."""
     import shutil
     import tempfile
     import time
 
-    # keyed by CONTENT fingerprint, not path: an in-place regenerated
-    # fixture must restage, not replay stale chunks (r8 ADVICE item)
-    key = (_source_fingerprint(sf_dir, table="documents"), n_chunks)
-    if key in _DOCS_REPLAY_CACHE and os.path.isdir(_DOCS_REPLAY_CACHE[key]):
-        return _DOCS_REPLAY_CACHE[key]
-    docs = load_tables(spark, sf_dir)["documents"].select("doc_id", "text")
-    out = tempfile.mkdtemp(prefix="itws_docs_replay_")
+    if key in _REPLAY_CACHE and os.path.isdir(_REPLAY_CACHE[key]):
+        return _REPLAY_CACHE[key]
+    out = tempfile.mkdtemp(prefix="itws_replay_")
     base = time.time()
-    for k in range(n_chunks):
+    for k in range(REPLAY_CHUNKS):
         stage = os.path.join(out, f".stage_{k}")
-        (
-            docs.filter(F.col("doc_id") % n_chunks == k)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
+        df.filter(chunk == k).coalesce(1).write.mode("overwrite").parquet(stage)
         part = next(f for f in sorted(os.listdir(stage)) if f.endswith(".parquet"))
         dst = os.path.join(out, f"chunk_{k}.parquet")
         shutil.move(os.path.join(stage, part), dst)
         shutil.rmtree(stage, ignore_errors=True)
         os.utime(dst, (base + k, base + k))
-    _DOCS_REPLAY_CACHE[key] = out
+    _REPLAY_CACHE[key] = out
     return out
+
+
+def _drain_replay(spark: SparkSession, replay: str, schema: str, append_batch) -> None:
+    """Stream the staged ``replay`` files, one per micro-batch, through
+    ``foreachBatch(append_batch)`` until the source drains."""
+    import shutil
+    import tempfile
+    import uuid
+
+    ckpt = tempfile.mkdtemp(prefix="itws_ckpt_")
+    try:
+        (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(replay)
+            .writeStream.foreachBatch(append_batch)
+            .queryName(f"itws_{uuid.uuid4().hex[:12]}")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @register(
@@ -600,40 +578,26 @@ def q_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot leak /tmp (r8 ADVICE item)."""
     import shutil
     import tempfile
-    import uuid
 
-    from iceberg_twist_spark.api import Engine
-
-    replay = stage_docs_replay(spark, sf_dir)
+    docs = load_tables(spark, sf_dir)["documents"].select("doc_id", "text")
+    replay = stage_replay(
+        docs, _source_fingerprint(sf_dir, table="documents"),
+        F.col("doc_id") % REPLAY_CHUNKS,
+    )
     path = tempfile.mkdtemp(prefix="itws_mhstream_")
-    ckpt = tempfile.mkdtemp(prefix="itws_ckpt_")
     try:
         empty = spark.createDataFrame([], DOC_STREAM_SCHEMA)
         Engine.build_minhash_index(
             empty, "text", "doc_id", path, tau=MINHASH_APPEND_TAU
         )
-
-        def append_batch(batch_df: DataFrame, batch_id: int) -> None:
-            Engine.minhash_index_append(batch_df, "text", "doc_id", path)
-
-        s = (
-            spark.readStream.schema(DOC_STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay)
+        _drain_replay(
+            spark, replay, DOC_STREAM_SCHEMA,
+            lambda batch_df, _id: Engine.minhash_index_append(batch_df, "text", "doc_id", path),
         )
-        q = (
-            s.writeStream.foreachBatch(append_batch)
-            .queryName(f"itws_{uuid.uuid4().hex[:12]}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
         # materialize the stored bands NOW — the caller's collect runs
         # after the finally block has removed the index directory
         stored = Engine.read_minhash_bands(spark, path).localCheckpoint(eager=True)
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(path, ignore_errors=True)
     return band_pairs_from_rows(stored)
 
@@ -649,44 +613,7 @@ def q_stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 # if any micro-batch is lost, double-encoded, or drifts from the
 # stored geometry.
 
-_VEC_REPLAY_CACHE: dict[tuple[str, int], str] = {}
-
 VEC_STREAM_SCHEMA = "vec_id long, embedding array<float>"
-
-
-def stage_vecs_replay(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> str:
-    """Stage the DELTA vectors (vec_id ≡ 0 mod DELTA_MOD) as
-    ``n_chunks`` parquet files with ascending mtimes for deterministic
-    file-stream replay."""
-    import shutil
-    import tempfile
-    import time
-
-    key = (_source_fingerprint(sf_dir, table="embeddings"), n_chunks)
-    if key in _VEC_REPLAY_CACHE and os.path.isdir(_VEC_REPLAY_CACHE[key]):
-        return _VEC_REPLAY_CACHE[key]
-    delta = (
-        load_tables(spark, sf_dir)["embeddings"]
-        .select("vec_id", "embedding")
-        .filter(F.col("vec_id") % DELTA_MOD == 0)
-    )
-    out = tempfile.mkdtemp(prefix="itws_vec_replay_")
-    base_t = time.time()
-    for k in range(n_chunks):
-        stage = os.path.join(out, f".stage_{k}")
-        (
-            delta.filter((F.col("vec_id") / DELTA_MOD % n_chunks).cast("int") == k)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        part = next(f for f in sorted(os.listdir(stage)) if f.endswith(".parquet"))
-        dst = os.path.join(out, f"chunk_{k}.parquet")
-        shutil.move(os.path.join(stage, part), dst)
-        shutil.rmtree(stage, ignore_errors=True)
-        os.utime(dst, (base_t + k, base_t + k))
-    _VEC_REPLAY_CACHE[key] = out
-    return out
 
 
 @register(
@@ -702,41 +629,21 @@ def q_stream_vec_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     which itself arrived mid-stream — via ``Engine.pq_ann_search``
     over the grown index. Shares the one-shot append's DuckDB oracle:
     the stream must leave byte-identical codes on disk."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from iceberg_twist_spark.api import Engine
-
     emb = load_tables(spark, sf_dir)["embeddings"].select("vec_id", "embedding")
-    path = _lifecycle_dir("pqstream", sf_dir)
-    marker = os.path.join(path, "_COMPLETE")
-    if not os.path.exists(marker):
-        base = emb.filter(F.col("vec_id") % DELTA_MOD != 0)
+    base, delta = _split(emb, "vec_id")
+
+    def build(path: str) -> None:
         Engine.build_pq_ann_index(base, "embedding", "vec_id", path)
-        replay = stage_vecs_replay(spark, sf_dir)
-
-        def append_batch(batch_df: DataFrame, batch_id: int) -> None:
-            Engine.pq_index_append(batch_df, "embedding", "vec_id", path)
-
-        s = (
-            spark.readStream.schema(VEC_STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(replay)
+        replay = stage_replay(
+            delta, _source_fingerprint(sf_dir, table="embeddings"),
+            (F.col("vec_id") / DELTA_MOD % REPLAY_CHUNKS).cast("int"),
         )
-        ckpt = tempfile.mkdtemp(prefix="itws_ckpt_")
-        q = (
-            s.writeStream.foreachBatch(append_batch)
-            .queryName(f"itws_{uuid.uuid4().hex[:12]}")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _drain_replay(
+            spark, replay, VEC_STREAM_SCHEMA,
+            lambda batch_df, _id: Engine.pq_index_append(batch_df, "embedding", "vec_id", path),
         )
-        try:
-            q.awaitTermination()
-        finally:
-            shutil.rmtree(ckpt, ignore_errors=True)
-        with open(marker, "w") as f:
-            f.write("ok")
-    probe = [float(x) for x in emb.filter(F.col("vec_id") == 0).head()[1]]
-    return Engine.pq_ann_search(spark, path, probe, k=RECALL_K, rerank=PQ_RERANK)
+
+    path = cached_index(spark, "pqstream", "embeddings", sf_dir, build)
+    return Engine.pq_ann_search(
+        spark, path, _probe_vec(emb), k=RECALL_K, rerank=PQ_RERANK
+    )

@@ -12,6 +12,8 @@ An IVF variant would follow the same shape with learned centroids.
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -20,12 +22,14 @@ from pyspark.sql import Window
 from pyspark.sql import types as T
 
 from iceberg_twist_spark import kernels as K
+from iceberg_twist_spark.api import Engine
 from iceberg_twist_spark.catalog import load_tables
 # spread(): the per-row interpreted HOF dot products are the CPU cost
 # here; an under-partitioned corpus scan (single-row-group fixture
 # files) would serialize them on one core. No-op on chunked sources.
 from iceberg_twist_spark.common import r4, spread
 from iceberg_twist_spark.registry import register
+from iceberg_twist_spark.sources.snapshots import SnapshotTable
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -54,6 +58,13 @@ def with_norm(df: DataFrame, vec_col: str, out: str = "nrm") -> DataFrame:
     that turns 3 array-aggregates per pair into 1 (the dot product).
     """
     return df.withColumn(out, _norm(F.col(vec_col)))
+
+
+def _probe(emb: DataFrame) -> DataFrame:
+    """The standard probe (vec_id 0) of a ``with_norm`` frame as (p, pn)."""
+    return emb.filter(F.col("vec_id") == 0).select(
+        F.col("embedding").alias("p"), F.col("nrm").alias("pn")
+    )
 
 
 _DUCK_COS = (
@@ -93,9 +104,7 @@ def q_llm_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     row against ONE probe) is too small for the Python boundary to pay
     for itself; reverted per guide §1 / r11 verdict #9."""
     emb = with_norm(spread(load_tables(spark, sf_dir)["embeddings"], "vec_id"), "embedding")
-    probe = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("p"), F.col("nrm").alias("pn")
-    )
+    probe = _probe(emb)
     pair_sim = _dot(F.col("embedding"), F.col("p")) / (F.col("nrm") * F.col("pn"))
     return (
         emb.filter(F.col("vec_id") != 0)
@@ -409,9 +418,7 @@ def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = emb.filter(F.col("vec_id") < IVF_K)
     clustered = ivf_assign(emb, centroids)
 
-    probe = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("p"), F.col("nrm").alias("pn")
-    )
+    probe = _probe(emb)
     cent = centroids.select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("c"),
         F.col("nrm").alias("cn"),
@@ -437,11 +444,6 @@ def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Bump when the index layout changes so a stale on-disk index from an
-# earlier code version can never satisfy the reuse check.
-_IVF_INDEX_VERSION = 1
-
-
 def _source_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
     """Content fingerprint of the SOURCE TABLE a cached index is built
     from: (relpath, mtime_ns, size) of every parquet part. Folded into
@@ -452,7 +454,6 @@ def _source_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
     embeddings fingerprint would survive a documents-only fixture
     regeneration (the r8 ADVICE hazard)."""
     import hashlib
-    import os
 
     src = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
     h = hashlib.md5(src.encode())
@@ -468,48 +469,87 @@ def _source_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
     return h.hexdigest()[:12]
 
 
-def _ivf_index_dir(sf_dir: str) -> str:
-    import os
+# Bump when any cached index's layout changes, so a directory an older
+# layout wrote is never read as this one (5: every cached index is one
+# SnapshotTable; the plain-parquet directories before it never match).
+_INDEX_LAYOUT_VERSION = 5
+
+# The ref a cached index's table carries once its build chain committed.
+INDEX_BUILT_TAG = "built"
+
+
+def cached_index(
+    spark: SparkSession, kind: str, table: str, sf_dir: str, build
+) -> str:
+    """The directory of the ``kind`` index over ``sf_dir``'s ``table``,
+    built on first use by ``build(path)`` — the index's chain of
+    snapshot commits (Engine verbs or ``Engine._create``).
+
+    The directory is keyed by (kind, the table's content fingerprint,
+    the layout version). An index is complete only once its table
+    carries the ``INDEX_BUILT_TAG`` tag, created after the chain's last
+    commit; a directory without it is a crashed build's debris, removed
+    and rebuilt, so no query ever serves a half-built index. Builders
+    of one key in two processes are not coordinated: the later commit
+    raises the snapshot layer's conflict error."""
+    import shutil
     import tempfile
 
-    key = _source_fingerprint(sf_dir)
-    return os.path.join(
-        tempfile.gettempdir(), f"itws_ivf_index_v{_IVF_INDEX_VERSION}_{key}"
+    key = _source_fingerprint(sf_dir, table=table)
+    path = os.path.join(
+        tempfile.gettempdir(), f"itws_{kind}_index_v{_INDEX_LAYOUT_VERSION}_{key}"
     )
-
-
-def build_ivf_index(spark: SparkSession, sf_dir: str, path: str | None = None) -> str:
-    """Materialize the IVF layout PERF.md promises: embeddings written
-    once, ``partitionBy("cluster")``, with the norm precomputed — so a
-    probe's nprobe-cluster search prunes at the DIRECTORY level
-    (``PartitionFilters`` in the scan) instead of filtering after a
-    full read. This is the offline index build that amortizes
-    assignment: at 100 TB it runs once per corpus snapshot and every
-    subsequent probe reads ~nprobe/K of the files.
-
-    Idempotent per (sf_dir, layout version): the write lands in a
-    unique temp dir and renames into place, so a concurrent builder
-    loses the race harmlessly and reuses the winner's index.
-    """
-    import os
-    import shutil
-    import uuid
-
-    path = path or _ivf_index_dir(sf_dir)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    emb = with_norm(
-        spread(load_tables(spark, sf_dir)["embeddings"], "vec_id"), "embedding"
-    )
-    centroids = emb.filter(F.col("vec_id") < IVF_K)
-    clustered = ivf_assign(emb, centroids)
-    staging = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    clustered.write.mode("overwrite").partitionBy("cluster").parquet(staging)
-    try:
-        os.rename(staging, path)
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)  # lost the race: reuse
+    if os.path.isdir(path):
+        if INDEX_BUILT_TAG in SnapshotTable(spark, path).refs():
+            return path
+        shutil.rmtree(path)
+    build(path)
+    SnapshotTable(spark, path).create_tag(INDEX_BUILT_TAG)
     return path
+
+
+def _probed_cluster_ids(emb: DataFrame, probe: DataFrame, nprobe: int) -> list:
+    """The ids of the ``nprobe`` centroids nearest ``probe``, collected
+    as bounded driver scalars (≤ nprobe rows, the windows bucket-offset
+    convention): the literal IN-list over the ``cluster`` partition
+    column that prunes the indexed queries' scans."""
+    cent = emb.filter(F.col("vec_id") < IVF_K).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("c"),
+        F.col("nrm").alias("cn"),
+    )
+    return [
+        r.cid
+        for r in (
+            probe.crossJoin(F.broadcast(cent))
+            .select(
+                "cid",
+                r4(_dot(F.col("p"), F.col("c")) / (F.col("pn") * F.col("cn"))).alias("csim"),
+            )
+            .orderBy(F.col("csim").desc(), F.col("cid"))
+            .limit(nprobe)
+            .collect()
+        )
+    ]
+
+
+def build_ivf_index(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize the IVF layout PERF.md promises: embeddings written
+    once in one snapshot commit, the ``data`` component partitioned on
+    ``cluster`` and the norm precomputed — so a probe's nprobe-cluster
+    search prunes by partition (``PartitionFilters`` in the scan)
+    instead of filtering after a full read. This is the offline index
+    build that amortizes assignment: at 100 TB it runs once per corpus
+    snapshot and every subsequent probe reads ~nprobe/K of the files.
+    Built once per source fingerprint (``cached_index``)."""
+
+    def build(path: str) -> None:
+        emb = with_norm(
+            spread(load_tables(spark, sf_dir)["embeddings"], "vec_id"), "embedding"
+        )
+        clustered = ivf_assign(emb, emb.filter(F.col("vec_id") < IVF_K))
+        Engine._create(spark, path, ["component", "cluster"], data=clustered)
+
+    return cached_index(spark, "ivf", "embeddings", sf_dir, build)
 
 
 @register("q_llm_ann_ivf_indexed", oracle=_IVF_ORACLE, tags=("llm", "similarity", "sketch", "source"))
@@ -519,42 +559,20 @@ def q_llm_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q_llm_ann_ivf computes the assignment in-plan every time; here the
     assignment is an offline index build (``build_ivf_index``) and the
-    query side is: score the K centroids against the probe (K-row
-    frame), collect the ≤ nprobe winning cluster ids (bounded driver
-    scalars, same convention as the windows bucket offsets), and read
-    ONLY those partition directories — the scan's ``PartitionFilters``
-    prunes before any I/O, which is the whole point of the layout.
-    The exact cosine re-rank then runs over ~nprobe/K of the corpus
-    with norms served from the index, and the plan audit asserts the
+    query side is: collect the probe's nprobe nearest cluster ids
+    (``_probed_cluster_ids``) and read ONLY those partitions of the
+    index's ``data`` component — the manifest supplies the files and
+    their schema, and the IN-list reaches the scan's
+    ``PartitionFilters``, which prune the files before any I/O. The
+    exact cosine re-rank then runs over ~nprobe/K of the corpus with
+    norms served from the index, and the plan audit asserts the
     pruning is really in the scan.
     """
-    idx_path = build_ivf_index(spark, sf_dir)
+    t = SnapshotTable(spark, build_ivf_index(spark, sf_dir))
     emb = with_norm(load_tables(spark, sf_dir)["embeddings"], "embedding")
-    centroids = emb.filter(F.col("vec_id") < IVF_K)
-
-    probe = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("p"), F.col("nrm").alias("pn")
-    )
-    cent = centroids.select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("c"),
-        F.col("nrm").alias("cn"),
-    )
-    probe_cids = [
-        r.cid
-        for r in (
-            probe.crossJoin(F.broadcast(cent))
-            .select(
-                "cid",
-                r4(_dot(F.col("p"), F.col("c")) / (F.col("pn") * F.col("cn"))).alias("csim"),
-            )
-            .orderBy(F.col("csim").desc(), F.col("cid"))
-            .limit(IVF_NPROBE)
-            .collect()
-        )
-    ]
-    # Literal IN-list over the partition column → static partition
-    # pruning: only the nprobe directories are listed, let alone read.
-    idx = spark.read.parquet(idx_path).filter(F.col("cluster").isin(probe_cids))
+    probe = _probe(emb)
+    cids = _probed_cluster_ids(emb, probe, IVF_NPROBE)
+    idx = Engine._component(t, "data").filter(F.col("cluster").isin(cids))
     pair_sim = _dot(F.col("embedding"), F.col("p")) / (F.col("nrm") * F.col("pn"))
     return (
         idx.filter(F.col("vec_id") != 0)
@@ -1250,9 +1268,7 @@ def _pq_adc_topk(
         .limit(PQ_RERANK)
         .select("vec_id")
     )
-    probe = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("p"), F.col("nrm").alias("pn")
-    )
+    probe = _probe(emb)
     pair_sim = _dot(F.col("embedding"), F.col("p")) / (F.col("nrm") * F.col("pn"))
     return (
         emb.join(F.broadcast(shortlist), "vec_id")
@@ -1290,50 +1306,21 @@ def q_llm_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pq_adc_topk(spark, sf_dir, codes, cb)
 
 
-# Bump when the PQ index layout changes (see _IVF_INDEX_VERSION).
-_PQ_INDEX_VERSION = 1
-
-
-def _pq_index_dir(sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    key = _source_fingerprint(sf_dir)
-    return os.path.join(
-        tempfile.gettempdir(), f"itws_pq_index_v{_PQ_INDEX_VERSION}_{key}"
-    )
-
-
-def build_pq_index(spark: SparkSession, sf_dir: str, path: str | None = None) -> str:
+def build_pq_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the PQ index: codes (vec_id, m, code — ~2% of the
     embedding bytes) and the refined codebook (PQ_M×PQ_K rows of
-    array<double>) written ONCE. This is the offline build the r6
+    array<double>) written ONCE, as the ``codes`` and ``codebook``
+    components of one snapshot commit. This is the offline build the r6
     verdict priced: training inside the query costs ~51–79 s per
     lookup at the 1M-vector corpus; amortized here it runs once per
     corpus snapshot and every query pays only LUT + integer-ADC scan.
+    Built once per source fingerprint (``cached_index``)."""
 
-    Idempotent per (sf_dir, layout version): written to a unique
-    staging dir, marker file, rename — a concurrent builder loses the
-    race harmlessly and reuses the winner's index (same discipline as
-    build_ivf_index)."""
-    import os
-    import shutil
-    import uuid
+    def build(path: str) -> None:
+        codes, cb = pq_encode(spark, sf_dir)
+        Engine._create(spark, path, ["component"], codes=codes, codebook=cb)
 
-    path = path or _pq_index_dir(sf_dir)
-    if os.path.exists(os.path.join(path, "_COMPLETE")):
-        return path
-    codes, cb = pq_encode(spark, sf_dir)
-    staging = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    codes.write.mode("overwrite").parquet(os.path.join(staging, "codes"))
-    cb.write.mode("overwrite").parquet(os.path.join(staging, "codebook"))
-    with open(os.path.join(staging, "_COMPLETE"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(staging, path)
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)  # lost the race: reuse
-    return path
+    return cached_index(spark, "pq", "embeddings", sf_dir, build)
 
 
 @register(
@@ -1354,11 +1341,9 @@ def q_llm_ann_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-re-rank only the PQ_RERANK shortlist. At 100 TB the codes
     table is the only corpus-sized input and it is ~2% of the
     embedding bytes."""
-    import os
-
-    idx = build_pq_index(spark, sf_dir)
-    codes = spark.read.parquet(os.path.join(idx, "codes"))
-    cb = spark.read.parquet(os.path.join(idx, "codebook"))
+    t = SnapshotTable(spark, build_pq_index(spark, sf_dir))
+    codes = Engine._component(t, "codes").select("vec_id", "m", "code")
+    cb = Engine._component(t, "codebook").select("m", "code", "cw")
     return _pq_adc_topk(spark, sf_dir, codes, cb)
 
 
@@ -1546,11 +1531,8 @@ def q_llm_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant per-query work, restores recall at corpus scale)."""
     codes, cb, cmean = ivfpq_encode(spark, sf_dir)
     emb = with_norm(load_tables(spark, sf_dir)["embeddings"], "embedding")
-    centroids = emb.filter(F.col("vec_id") < IVF_K)
-    probe = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("p"), F.col("nrm").alias("pn")
-    )
-    cent = centroids.select(
+    probe = _probe(emb)
+    cent = emb.filter(F.col("vec_id") < IVF_K).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("c"),
         F.col("nrm").alias("cn"),
     )
@@ -1562,15 +1544,28 @@ def q_llm_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("csim").desc(), F.col("cid"))
         .limit(IVFPQ_NPROBE)
-        # probe residual vs each probed cluster's MEAN (matches encode)
         .join(F.broadcast(cmean.withColumnRenamed("cluster", "cid")), "cid")
-        .select(
-            "cid",
-            F.zip_with("p", "mu", lambda x, y: x.cast("double") - y).alias("pr"),
-        )
+    )
+    return _ivfpq_adc_topk(emb, probe, probed, codes, cb)
+
+
+def _ivfpq_adc_topk(
+    emb: DataFrame, probe: DataFrame, probed: DataFrame, codes: DataFrame,
+    cb: DataFrame,
+) -> DataFrame:
+    """IVF-PQ top-10 given the probed clusters — ``probed`` carries
+    each probed cluster id ``cid``, its mean ``mu`` and the probe ``p``
+    — and the residual codes + codebook (however sourced): the shared
+    query back half of q_llm_ann_ivfpq (clusters probed in-plan) and
+    q_llm_ann_ivfpq_indexed (clusters collected, codes read from the
+    materialized index). The probe's residual against each probed
+    cluster's mean (as the encode took it) forms one nprobe×M×K ADC
+    table; the ADC shortlist is exact-cosine re-ranked."""
+    pres = probed.select(
+        "cid", F.zip_with("p", "mu", lambda x, y: x.cast("double") - y).alias("pr")
     )
     psub = _pq_subspaces(
-        probed.withColumn("vec_id", F.lit(0)), "pr", extra=("cid",)
+        pres.withColumn("vec_id", F.lit(0)), "pr", extra=("cid",)
     ).select("cid", "m", F.col("sv").alias("psv"))
     dt = (
         cb.join(F.broadcast(psub), "m")
@@ -1603,50 +1598,21 @@ def q_llm_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Bump when the IVF-PQ index layout changes (see _IVF_INDEX_VERSION).
-_IVFPQ_INDEX_VERSION = 1
+def build_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
+    """Materialize the IVFADC index in one snapshot commit: the
+    residual-PQ ``codes`` partitioned on ``cluster`` (so a probe's
+    nprobe-cluster ADC scan prunes by partition, the
+    q_llm_ann_ivf_indexed layout), plus the constant ``codebook`` and
+    the per-cluster means ``cmeans``. Offline build, once per corpus
+    snapshot and source fingerprint (``cached_index``)."""
 
+    def build(path: str) -> None:
+        codes, cb, cmean = ivfpq_encode(spark, sf_dir)
+        Engine._create(
+            spark, path, ["component", "cluster"], codes=codes, codebook=cb, cmeans=cmean
+        )
 
-def _ivfpq_index_dir(sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    key = _source_fingerprint(sf_dir)
-    return os.path.join(
-        tempfile.gettempdir(), f"itws_ivfpq_index_v{_IVFPQ_INDEX_VERSION}_{key}"
-    )
-
-
-def build_ivfpq_index(
-    spark: SparkSession, sf_dir: str, path: str | None = None
-) -> str:
-    """Materialize the IVFADC index: residual-PQ codes written
-    ``partitionBy("cluster")`` (so a probe's nprobe-cluster ADC scan
-    prunes at the DIRECTORY level, the q_llm_ann_ivf_indexed layout),
-    plus the constant codebook and per-cluster means. Offline build,
-    once per corpus snapshot; same staging+rename idempotence as
-    build_pq_index."""
-    import os
-    import shutil
-    import uuid
-
-    path = path or _ivfpq_index_dir(sf_dir)
-    if os.path.exists(os.path.join(path, "_COMPLETE")):
-        return path
-    codes, cb, cmean = ivfpq_encode(spark, sf_dir)
-    staging = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    codes.write.mode("overwrite").partitionBy("cluster").parquet(
-        os.path.join(staging, "codes")
-    )
-    cb.write.mode("overwrite").parquet(os.path.join(staging, "codebook"))
-    cmean.write.mode("overwrite").parquet(os.path.join(staging, "cmeans"))
-    with open(os.path.join(staging, "_COMPLETE"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(staging, path)
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)  # lost the race: reuse
-    return path
+    return cached_index(spark, "ivfpq", "embeddings", sf_dir, build)
 
 
 @register(
@@ -1659,88 +1625,23 @@ def q_llm_ann_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_llm_ann_ivfpq (same answer, same oracle), and the full
     billion-vector architecture: IVF prunes (the probe's nprobe
     cluster ids are collected as bounded driver scalars and become a
-    literal IN-list over the partition column, so only those
-    directories are LISTED, let alone read), PQ compresses (the
-    pruned scan reads integer codes, ~2% of embedding bytes), and the
-    exact re-rank touches float arrays for exactly PQ_RERANK rows."""
-    import os
-
-    idx = build_ivfpq_index(spark, sf_dir)
-    cb = spark.read.parquet(os.path.join(idx, "codebook"))
-    cmean = spark.read.parquet(os.path.join(idx, "cmeans"))
+    literal IN-list over the ``cluster`` partition column, so the
+    scan's PartitionFilters drop the other clusters' code files before
+    any is read), PQ compresses (the pruned scan reads integer codes,
+    ~2% of embedding bytes), and the exact re-rank touches float
+    arrays for exactly PQ_RERANK rows."""
+    t = SnapshotTable(spark, build_ivfpq_index(spark, sf_dir))
     emb = with_norm(load_tables(spark, sf_dir)["embeddings"], "embedding")
-    centroids = emb.filter(F.col("vec_id") < IVF_K)
-    probe = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("p"), F.col("nrm").alias("pn")
+    probe = _probe(emb)
+    cids = _probed_cluster_ids(emb, probe, IVFPQ_NPROBE)
+    codes = Engine._component(t, "codes").filter(F.col("cluster").isin(cids))
+    cmean = Engine._component(t, "cmeans").filter(F.col("cluster").isin(cids))
+    probed = probe.crossJoin(
+        F.broadcast(cmean.select(F.col("cluster").alias("cid"), "mu"))
     )
-    cent = centroids.select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("c"),
-        F.col("nrm").alias("cn"),
-    )
-    # nprobe winning cluster ids as driver scalars (≤ IVFPQ_NPROBE
-    # rows — the q_llm_ann_ivf_indexed convention): a literal IN-list
-    # over the partition column gives static partition pruning.
-    probe_cids = [
-        r.cid
-        for r in (
-            probe.crossJoin(F.broadcast(cent))
-            .select(
-                "cid",
-                r4(_dot(F.col("p"), F.col("c")) / (F.col("pn") * F.col("cn"))).alias("csim"),
-            )
-            .orderBy(F.col("csim").desc(), F.col("cid"))
-            .limit(IVFPQ_NPROBE)
-            .collect()
-        )
-    ]
-    codes = spark.read.parquet(os.path.join(idx, "codes")).filter(
-        F.col("cluster").isin(probe_cids)
-    )
-    # probe residual vs each probed cluster's mean (matches the encode)
-    probed = (
-        probe.crossJoin(
-            F.broadcast(
-                cmean.filter(F.col("cluster").isin(probe_cids)).withColumnRenamed(
-                    "cluster", "cid"
-                )
-            )
-        )
-        .select(
-            "cid",
-            F.zip_with("p", "mu", lambda x, y: x.cast("double") - y).alias("pr"),
-        )
-    )
-    psub = _pq_subspaces(
-        probed.withColumn("vec_id", F.lit(0)), "pr", extra=("cid",)
-    ).select("cid", "m", F.col("sv").alias("psv"))
-    dt = (
-        cb.join(F.broadcast(psub), "m")
-        .select(
-            F.col("cid").alias("cluster"),
-            "m",
-            "code",
-            F.floor(_pq_d2(F.col("psv"), F.col("cw")) * 10000 + F.lit(0.5))
-            .cast("long")
-            .alias("pd2i"),
-        )
-    )
-    shortlist = (
-        codes.join(F.broadcast(dt), ["cluster", "m", "code"])
-        .groupBy("vec_id")
-        .agg((F.sum("pd2i") / 10000.0).alias("adc_dist"))
-        .filter(F.col("vec_id") != 0)
-        .orderBy(F.col("adc_dist"), F.col("vec_id"))
-        .limit(PQ_RERANK)
-        .select("vec_id")
-    )
-    pair_sim = _dot(F.col("embedding"), F.col("p")) / (F.col("nrm") * F.col("pn"))
-    return (
-        spread(emb, "vec_id")
-        .join(F.broadcast(shortlist), "vec_id")
-        .crossJoin(F.broadcast(probe))
-        .select("vec_id", r4(pair_sim).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-        .limit(RECALL_K)
+    return _ivfpq_adc_topk(
+        emb, probe, probed, codes.select("vec_id", "cluster", "m", "code"),
+        Engine._component(t, "codebook").select("m", "code", "cw"),
     )
 
 

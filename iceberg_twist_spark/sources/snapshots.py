@@ -1635,7 +1635,8 @@ class SnapshotTable:
         rows = n_records minus matches) until a compaction, matching
         Iceberg's per-file accounting. Time travel to a pre-delete
         snapshot still shows the rows — deletes are snapshot metadata,
-        not mutations."""
+        not mutations. An empty key set commits nothing and returns the
+        current snapshot id."""
         cur = self._head()
         fid = next(
             (int(f[0]) for f in cur["schema_meta"] if f[1] == key_col), None
@@ -1644,6 +1645,10 @@ class SnapshotTable:
             raise ValueError(f"no such column: {key_col!r}")
         key_df = keys.select(F.col(key_col)).distinct()
         dst = self._write_delete_file(key_df)
+        # the row count from the new file's footer: no Spark job
+        if not self._footer(dst)["rows"]:
+            os.remove(dst)
+            return cur["snapshot_id"]
         # seq stamped by _commit
         entry = {"key": key_col, "fid": fid, "path": dst, "schema": key_df.schema.json()}
         return self._commit("eq-delete", cur, deletes=[entry])

@@ -1167,6 +1167,26 @@ def test_index_geometry_and_tau_guards(spark, tmp_path):
     Engine.near_dup_pairs_against_index(batch, "text", "doc_id", idx, tau=0.95).collect()
 
 
+def test_minhash_index_remove_of_no_keys_commits_nothing(spark, tmp_path):
+    """Removing an empty key set is a no-op: no snapshot, no pending
+    delete file, and the compaction after it has nothing to apply, so
+    it commits nothing either (it used to rewrite every file)."""
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{(i * 7 + j) % 53}" for j in range(12))) for i in range(40)],
+        "doc_id long, text string",
+    )
+    path = Engine.build_minhash_index(docs, "text", "doc_id", str(tmp_path / "mh"))
+    t = SnapshotTable(spark, path)
+    snap = t.current_snapshot_id()
+    Engine.minhash_index_remove(spark, path, [])
+    Engine.minhash_index_remove(spark, path, docs.select("doc_id").limit(0))
+    assert t.current_snapshot_id() == snap
+    assert t.pending_deletes() == 0
+    assert os.listdir(os.path.join(path, "deletes")) == []
+    Engine.minhash_index_compact(spark, path)
+    assert t.current_snapshot_id() == snap
+
+
 @pytest.mark.parametrize(
     "verb",
     ["minhash_index_append", "minhash_index_remove", "minhash_index_compact", "pq_index_append"],

@@ -57,52 +57,69 @@ def test_approx_family_is_value_checked():
         assert 0 < spec.approx_rtol <= 0.05
 
 
+def _cluster_values(spark, path: str, component: str) -> set:
+    """The ``cluster`` partition values the index manifest records for
+    ``component``'s files."""
+    from iceberg_twist_spark.sources.snapshots import SnapshotTable
+
+    return {
+        e["partition"]["cluster"]
+        for e in SnapshotTable(spark, path)._head()["files"].values()
+        if e["partition"]["component"] == component
+    }
+
+
+def _reused(spark, path: str, build) -> bool:
+    """``build()`` returns ``path`` and commits no snapshot: the tagged
+    index is served, not rebuilt."""
+    from iceberg_twist_spark.llm.similarity import INDEX_BUILT_TAG
+    from iceberg_twist_spark.sources.snapshots import SnapshotTable
+
+    t = SnapshotTable(spark, path)
+    before = [m["snapshot_id"] for m in t.snapshots()]
+    return (
+        INDEX_BUILT_TAG in t.refs()
+        and build() == path
+        and [m["snapshot_id"] for m in t.snapshots()] == before
+    )
+
+
 def test_ivf_indexed_matches_inplan_ivf(spark, sf_dir):
     """The materialized cluster-partitioned index must return the exact
     same top-10 as the in-plan IVF (same assignment, same re-rank), and
-    a second call must reuse the on-disk index rather than rebuild."""
-    import os
-
-    from iceberg_twist_spark.llm.similarity import _ivf_index_dir, build_ivf_index
+    a second call must reuse the stored index rather than rebuild."""
+    from iceberg_twist_spark.llm.similarity import build_ivf_index
     from iceberg_twist_spark.registry import REGISTRY, _load_all_modules
 
     _load_all_modules()
     inplan = [tuple(r) for r in REGISTRY["q_llm_ann_ivf"].builder(spark, sf_dir).collect()]
     indexed = [tuple(r) for r in REGISTRY["q_llm_ann_ivf_indexed"].builder(spark, sf_dir).collect()]
     assert indexed == inplan
-    path = _ivf_index_dir(sf_dir)
-    mtime = os.path.getmtime(os.path.join(path, "_SUCCESS"))
-    assert build_ivf_index(spark, sf_dir) == path
-    assert os.path.getmtime(os.path.join(path, "_SUCCESS")) == mtime  # reused
+    path = build_ivf_index(spark, sf_dir)
+    assert _reused(spark, path, lambda: build_ivf_index(spark, sf_dir))
 
 
 def test_pq_indexed_matches_inplan_pq(spark, sf_dir):
     """The materialized PQ index must return the exact same top-10 as
     the in-plan training form (deterministic encode, array<double>
     codewords round-trip parquet exactly), and a second build call
-    must reuse the on-disk index (marker check, no rebuild)."""
-    import os
-
-    from iceberg_twist_spark.llm.similarity import _pq_index_dir, build_pq_index
+    must reuse the stored index (tag check, no new snapshot)."""
+    from iceberg_twist_spark.llm.similarity import build_pq_index
     from iceberg_twist_spark.registry import REGISTRY, _load_all_modules
 
     _load_all_modules()
     inplan = [tuple(r) for r in REGISTRY["q_llm_ann_pq"].builder(spark, sf_dir).collect()]
     indexed = [tuple(r) for r in REGISTRY["q_llm_ann_pq_indexed"].builder(spark, sf_dir).collect()]
     assert indexed == inplan
-    path = _pq_index_dir(sf_dir)
-    mtime = os.path.getmtime(os.path.join(path, "_COMPLETE"))
-    assert build_pq_index(spark, sf_dir) == path
-    assert os.path.getmtime(os.path.join(path, "_COMPLETE")) == mtime  # reused
+    path = build_pq_index(spark, sf_dir)
+    assert _reused(spark, path, lambda: build_pq_index(spark, sf_dir))
 
 
 def test_ivfpq_indexed_matches_inplan_and_prunes(spark, sf_dir):
     """IVFADC over the materialized index: same answer as in-plan
-    training, and the codes layout carries hive-style cluster=N
-    directories — the directory-level pruning mechanism the query's
-    IN-list relies on."""
-    import os
-
+    training, and the manifest records the ``codes`` files under more
+    than one ``cluster`` partition value — the partition pruning the
+    query's IN-list relies on."""
     from iceberg_twist_spark.llm.similarity import build_ivfpq_index
     from iceberg_twist_spark.registry import REGISTRY, _load_all_modules
 
@@ -111,21 +128,53 @@ def test_ivfpq_indexed_matches_inplan_and_prunes(spark, sf_dir):
     indexed = [tuple(r) for r in REGISTRY["q_llm_ann_ivfpq_indexed"].builder(spark, sf_dir).collect()]
     assert indexed == inplan
     path = build_ivfpq_index(spark, sf_dir)
-    parts = [d for d in os.listdir(os.path.join(path, "codes")) if d.startswith("cluster=")]
-    assert len(parts) > 1, f"expected hive partition dirs, got {parts[:5]}"
+    assert _reused(spark, path, lambda: build_ivfpq_index(spark, sf_dir))
+    parts = _cluster_values(spark, path, "codes")
+    assert len(parts) > 1, f"expected several cluster partitions, got {parts}"
 
 
 def test_ivf_index_layout_is_cluster_partitioned(spark, sf_dir):
-    """The index directory layout IS the pruning mechanism — assert the
-    hive-style cluster=N directories exist so PartitionFilters has
-    something to prune."""
-    import os
-
+    """The partition layout IS the pruning mechanism — the manifest
+    must record the ``data`` files under more than one ``cluster``
+    value so PartitionFilters has something to prune."""
     from iceberg_twist_spark.llm.similarity import build_ivf_index
 
-    path = build_ivf_index(spark, sf_dir)
-    parts = [d for d in os.listdir(path) if d.startswith("cluster=")]
-    assert len(parts) > 1, f"expected hive partition dirs, got {os.listdir(path)[:5]}"
+    parts = _cluster_values(spark, build_ivf_index(spark, sf_dir), "data")
+    assert len(parts) > 1, f"expected several cluster partitions, got {parts}"
+
+
+def test_cached_index_rebuilds_after_a_crashed_chain(spark, sf_dir, tmp_path, monkeypatch):
+    """A lifecycle chain whose last verb fails leaves its directory
+    without the built tag: the query raises, and the next call removes
+    that debris, rebuilds and answers exactly as a clean build."""
+    import tempfile
+
+    import pytest
+
+    from iceberg_twist_spark.api import Engine
+    from iceberg_twist_spark.llm.similarity import INDEX_BUILT_TAG
+    from iceberg_twist_spark.registry import REGISTRY, _load_all_modules
+    from iceberg_twist_spark.sources.snapshots import SnapshotTable
+
+    _load_all_modules()
+    query = REGISTRY["q_llm_minhash_index_remove"].builder
+    clean = sorted(tuple(r) for r in query(spark, sf_dir).collect())
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))  # a fresh cache
+    remove, crashed = Engine.minhash_index_remove, []
+
+    def crash(_spark, path, keys, compact=False):
+        monkeypatch.setattr(Engine, "minhash_index_remove", staticmethod(remove))
+        crashed.append(path)
+        raise RuntimeError("injected crash in the chain's last verb")
+
+    monkeypatch.setattr(Engine, "minhash_index_remove", staticmethod(crash))
+    with pytest.raises(RuntimeError, match="injected crash"):
+        query(spark, sf_dir)
+    [path] = crashed
+    assert INDEX_BUILT_TAG not in SnapshotTable(spark, path).refs()
+    assert sorted(tuple(r) for r in query(spark, sf_dir).collect()) == clean
+    assert INDEX_BUILT_TAG in SnapshotTable(spark, path).refs()
 
 
 def test_registry_rotation_covers_driver_blindspot():

@@ -1525,13 +1525,17 @@ def test_merge_evaluates_its_source_once(spark, tmp_path, verb):
 def test_only_pinned_helpers_read_parquet():
     """Source guard: in snapshots.py every parquet read goes through
     ``SnapshotTable._scan`` (schema pinned; basePath discovery for
-    hive-partitioned groups, typed by the pinned schema), and api.py
-    has no parquet read of its own: every index verb (MinHash, PQ,
-    IVF) reads its index through the snapshot layer."""
+    hive-partitioned groups, typed by the pinned schema), and api.py,
+    llm/similarity.py and llm/index_lifecycle.py have no parquet read of
+    their own: every index (the Engine verbs', the materialized ANN
+    indexes and the lifecycle fixtures) is read through the snapshot
+    layer."""
     import ast
     import re
 
     import iceberg_twist_spark.api as api_mod
+    import iceberg_twist_spark.llm.index_lifecycle as lifecycle_mod
+    import iceberg_twist_spark.llm.similarity as sim_mod
     import iceberg_twist_spark.sources.snapshots as snap_mod
 
     bare = re.compile(r"(\.read|\breader)\.parquet\(")
@@ -1548,7 +1552,8 @@ def test_only_pinned_helpers_read_parquet():
         return out
 
     assert set(reads_by_function(snap_mod)) == {"_scan"}
-    assert reads_by_function(api_mod) == []
+    for mod in (api_mod, sim_mod, lifecycle_mod):
+        assert reads_by_function(mod) == [], mod.__name__
 
 
 def test_copy_on_write_verbs_share_one_rewrite_core():

@@ -42,18 +42,23 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from iceberg_twist_spark.registry import REGISTRY, _load_all_modules
 from iceberg_twist_spark.session import get_spark
 
-# name -> (must-contain, must-NOT-contain)
-AUDITS: dict[str, tuple[list[str], list[str]]] = {
-    # the materialized IVF index must prune at the directory level —
-    # the nprobe cluster IN-list has to reach the scan's PartitionFilters
-    "q_llm_ann_ivf_indexed": (["PartitionFilters: [cluster"], ["SortMergeJoin"]),
+# The nprobe ``cluster`` IN-list inside an index scan's PartitionFilters
+# (the index table's ``component`` filter may come first).
+CLUSTER_IN_LIST = re.compile(r"PartitionFilters: \[[^\]]*cluster#\d+L? IN \(")
+
+# name -> (must-contain, must-NOT-contain); a must-contain entry is a
+# substring or a compiled pattern
+AUDITS: dict[str, tuple[list[str | re.Pattern], list[str]]] = {
+    # the materialized IVF index must prune by partition — the nprobe
+    # cluster IN-list has to reach the scan's PartitionFilters
+    "q_llm_ann_ivf_indexed": ([CLUSTER_IN_LIST], ["SortMergeJoin"]),
     # the materialized PQ index: ADC scans the integer codes table and
     # joins the broadcast LUT — never a shuffled join, never a sort
     "q_llm_ann_pq_indexed": (["BroadcastHashJoin"], ["SortMergeJoin", "CartesianProduct"]),
-    # IVF-PQ index: the nprobe IN-list prunes code directories at the
+    # IVF-PQ index: the nprobe IN-list prunes the code files at the
     # scan, ADC is a broadcast join over codes
     "q_llm_ann_ivfpq_indexed": (
-        ["PartitionFilters: [cluster", "BroadcastHashJoin"],
+        [CLUSTER_IN_LIST, "BroadcastHashJoin"],
         ["SortMergeJoin"],
     ),
     "q_scan_projection": (["ReadSchema: struct<l_orderkey:bigint,l_partkey:bigint,l_quantity:double>"], []),
@@ -767,7 +772,10 @@ def main() -> int:
         # layer 1: named plan-shape assertions
         if name in AUDITS:
             wants, rejects = AUDITS[name]
-            missing = [w for w in wants if w not in plan]
+            missing = [
+                w for w in wants
+                if not (w.search(plan) if isinstance(w, re.Pattern) else w in plan)
+            ]
             present = [r for r in rejects if r in plan]
             ok = not missing and not present
             joins = sorted(set(re.findall(

@@ -179,10 +179,12 @@ class Engine:
         )
 
     @staticmethod
-    def _component(t: SnapshotTable, name: str) -> DataFrame:
+    def _component(t: SnapshotTable, name: str, *eq: tuple[str, object]) -> DataFrame:
         """One component of index table ``t``, pending deletes applied;
-        partition pruning drops the other components' files."""
-        return t.read(partition_eq=("component", name))
+        partition pruning drops the other components' files, and the
+        files the further ``(col, value or values)`` partition
+        predicates ``eq`` rule out, before the scan lists any."""
+        return t.read(partition_eq=[("component", name), *eq])
 
     @staticmethod
     def _create(spark: SparkSession, path: str, spec: list[str], **frames: DataFrame) -> None:
@@ -617,8 +619,9 @@ class Engine:
         """Top-k cosine neighbors of a literal probe vector against a
         ``build_ann_index`` layout: score the stored centroids, keep
         the ``nprobe`` best cluster ids (bounded driver scalars), and
-        scan ONLY those partitions — the literal IN-list reaches the
-        scan's PartitionFilters. Returns (vec_id, cos_sim) ordered
+        scan ONLY those partitions — the manifest drops the other
+        clusters' files and the literal IN-list reaches the scan's
+        PartitionFilters. Returns (vec_id, cos_sim) ordered
         best-first."""
         from iceberg_twist_spark.common import r4
         from iceberg_twist_spark.llm.similarity import _dot, _norm
@@ -634,7 +637,7 @@ class Engine:
             .limit(nprobe)
             .collect()
         ]
-        idx = Engine._component(t, "data").filter(F.col("cluster").isin(cids))
+        idx = Engine._component(t, "data", ("cluster", cids))
         sim = r4(_dot(F.col("embedding"), p) / (F.col("nrm") * _norm(p)))
         return (
             idx.select(F.col("vec_id"), sim.alias("cos_sim"))

@@ -415,24 +415,10 @@ def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     and (b) prunes at the directory level.
     """
     emb = with_norm(spread(load_tables(spark, sf_dir)["embeddings"], "vec_id"), "embedding")
-    centroids = emb.filter(F.col("vec_id") < IVF_K)
-    clustered = ivf_assign(emb, centroids)
+    clustered = ivf_assign(emb, emb.filter(F.col("vec_id") < IVF_K))
 
     probe = _probe(emb)
-    cent = centroids.select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("c"),
-        F.col("nrm").alias("cn"),
-    )
-    probe_sims = (
-        probe.crossJoin(F.broadcast(cent))
-        .select(
-            "p", "pn", "cid",
-            r4(_dot(F.col("p"), F.col("c")) / (F.col("pn") * F.col("cn"))).alias("csim"),
-        )
-        .orderBy(F.col("csim").desc(), F.col("cid"))
-        .limit(IVF_NPROBE)
-        .select("cid")
-    )
+    probe_sims = _nearest_clusters(emb, probe, IVF_NPROBE).select("cid")
     pair_sim = _dot(F.col("embedding"), F.col("p")) / (F.col("nrm") * F.col("pn"))
     return (
         clustered.join(F.broadcast(probe_sims), F.col("cluster") == F.col("cid"))
@@ -489,9 +475,11 @@ def cached_index(
     the layout version). An index is complete only once its table
     carries the ``INDEX_BUILT_TAG`` tag, created after the chain's last
     commit; a directory without it is a crashed build's debris, removed
-    and rebuilt, so no query ever serves a half-built index. Builders
-    of one key in two processes are not coordinated: the later commit
-    raises the snapshot layer's conflict error."""
+    and rebuilt, so with builds run one at a time no query ever serves
+    a half-built index. Concurrent builders of one key are unsupported
+    and raise no error: a second builder removes the first one's
+    untagged directory mid-chain, and each verb commits onto whatever
+    head it reads, so the two can corrupt each other's index."""
     import shutil
     import tempfile
 
@@ -508,38 +496,42 @@ def cached_index(
     return path
 
 
-def _probed_cluster_ids(emb: DataFrame, probe: DataFrame, nprobe: int) -> list:
-    """The ids of the ``nprobe`` centroids nearest ``probe``, collected
-    as bounded driver scalars (≤ nprobe rows, the windows bucket-offset
-    convention): the literal IN-list over the ``cluster`` partition
-    column that prunes the indexed queries' scans."""
+def _nearest_clusters(emb: DataFrame, probe: DataFrame, nprobe: int) -> DataFrame:
+    """The ``nprobe`` IVF centroids of ``emb`` (vec_id < IVF_K) nearest
+    ``probe``: the probe's columns plus each centroid's ``cid`` and r4
+    cosine ``csim``, best first (ties by cid). The in-plan IVF forms
+    join it; the indexed forms collect its ``cid``s (≤ nprobe bounded
+    driver scalars) as the literal IN-list over the ``cluster``
+    partition column that prunes their scans."""
     cent = emb.filter(F.col("vec_id") < IVF_K).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("c"),
         F.col("nrm").alias("cn"),
     )
-    return [
-        r.cid
-        for r in (
-            probe.crossJoin(F.broadcast(cent))
-            .select(
-                "cid",
-                r4(_dot(F.col("p"), F.col("c")) / (F.col("pn") * F.col("cn"))).alias("csim"),
-            )
-            .orderBy(F.col("csim").desc(), F.col("cid"))
-            .limit(nprobe)
-            .collect()
+    return (
+        probe.crossJoin(F.broadcast(cent))
+        .select(
+            *probe.columns, "cid",
+            r4(_dot(F.col("p"), F.col("c")) / (F.col("pn") * F.col("cn"))).alias("csim"),
         )
-    ]
+        .orderBy(F.col("csim").desc(), F.col("cid"))
+        .limit(nprobe)
+    )
+
+
+def _probed_cluster_ids(emb: DataFrame, probe: DataFrame, nprobe: int) -> list:
+    """The ``cid``s of ``_nearest_clusters``, collected."""
+    return [r.cid for r in _nearest_clusters(emb, probe, nprobe).select("cid").collect()]
 
 
 def build_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the IVF layout PERF.md promises: embeddings written
     once in one snapshot commit, the ``data`` component partitioned on
     ``cluster`` and the norm precomputed — so a probe's nprobe-cluster
-    search prunes by partition (``PartitionFilters`` in the scan)
-    instead of filtering after a full read. This is the offline index
-    build that amortizes assignment: at 100 TB it runs once per corpus
-    snapshot and every subsequent probe reads ~nprobe/K of the files.
+    search prunes by partition (the manifest's partition values, then
+    ``PartitionFilters`` in the scan) instead of filtering after a
+    full read. This is the offline index build that amortizes
+    assignment: at 100 TB it runs once per corpus snapshot and every
+    subsequent probe reads ~nprobe/K of the files.
     Built once per source fingerprint (``cached_index``)."""
 
     def build(path: str) -> None:
@@ -561,18 +553,18 @@ def q_llm_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment is an offline index build (``build_ivf_index``) and the
     query side is: collect the probe's nprobe nearest cluster ids
     (``_probed_cluster_ids``) and read ONLY those partitions of the
-    index's ``data`` component — the manifest supplies the files and
-    their schema, and the IN-list reaches the scan's
-    ``PartitionFilters``, which prune the files before any I/O. The
-    exact cosine re-rank then runs over ~nprobe/K of the corpus with
-    norms served from the index, and the plan audit asserts the
-    pruning is really in the scan.
+    index's ``data`` component — the manifest supplies their schema
+    and drops the other clusters' files by their recorded partition
+    values before the scan lists any, and the IN-list also reaches the
+    scan's ``PartitionFilters``. The exact cosine re-rank then runs
+    over ~nprobe/K of the corpus with norms served from the index, and
+    the plan audit asserts the pruning is really in the scan.
     """
     t = SnapshotTable(spark, build_ivf_index(spark, sf_dir))
     emb = with_norm(load_tables(spark, sf_dir)["embeddings"], "embedding")
     probe = _probe(emb)
     cids = _probed_cluster_ids(emb, probe, IVF_NPROBE)
-    idx = Engine._component(t, "data").filter(F.col("cluster").isin(cids))
+    idx = Engine._component(t, "data", ("cluster", cids))
     pair_sim = _dot(F.col("embedding"), F.col("p")) / (F.col("nrm") * F.col("pn"))
     return (
         idx.filter(F.col("vec_id") != 0)
@@ -1532,19 +1524,8 @@ def q_llm_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes, cb, cmean = ivfpq_encode(spark, sf_dir)
     emb = with_norm(load_tables(spark, sf_dir)["embeddings"], "embedding")
     probe = _probe(emb)
-    cent = emb.filter(F.col("vec_id") < IVF_K).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("c"),
-        F.col("nrm").alias("cn"),
-    )
-    probed = (
-        probe.crossJoin(F.broadcast(cent))
-        .select(
-            "p", "cid",
-            r4(_dot(F.col("p"), F.col("c")) / (F.col("pn") * F.col("cn"))).alias("csim"),
-        )
-        .orderBy(F.col("csim").desc(), F.col("cid"))
-        .limit(IVFPQ_NPROBE)
-        .join(F.broadcast(cmean.withColumnRenamed("cluster", "cid")), "cid")
+    probed = _nearest_clusters(emb, probe, IVFPQ_NPROBE).join(
+        F.broadcast(cmean.withColumnRenamed("cluster", "cid")), "cid"
     )
     return _ivfpq_adc_topk(emb, probe, probed, codes, cb)
 
@@ -1625,17 +1606,18 @@ def q_llm_ann_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_llm_ann_ivfpq (same answer, same oracle), and the full
     billion-vector architecture: IVF prunes (the probe's nprobe
     cluster ids are collected as bounded driver scalars and become a
-    literal IN-list over the ``cluster`` partition column, so the
-    scan's PartitionFilters drop the other clusters' code files before
-    any is read), PQ compresses (the pruned scan reads integer codes,
-    ~2% of embedding bytes), and the exact re-rank touches float
-    arrays for exactly PQ_RERANK rows."""
+    literal IN-list over the ``cluster`` partition column: the
+    manifest drops the other clusters' code files before the scan
+    lists any, and the IN-list reaches the scan's PartitionFilters),
+    PQ compresses (the pruned scan reads integer codes, ~2% of
+    embedding bytes), and the exact re-rank touches float arrays for
+    exactly PQ_RERANK rows."""
     t = SnapshotTable(spark, build_ivfpq_index(spark, sf_dir))
     emb = with_norm(load_tables(spark, sf_dir)["embeddings"], "embedding")
     probe = _probe(emb)
     cids = _probed_cluster_ids(emb, probe, IVFPQ_NPROBE)
-    codes = Engine._component(t, "codes").filter(F.col("cluster").isin(cids))
-    cmean = Engine._component(t, "cmeans").filter(F.col("cluster").isin(cids))
+    codes = Engine._component(t, "codes", ("cluster", cids))
+    cmean = Engine._component(t, "cmeans", ("cluster", cids))
     probed = probe.crossJoin(
         F.broadcast(cmean.select(F.col("cluster").alias("cid"), "mu"))
     )

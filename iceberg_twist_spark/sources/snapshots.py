@@ -112,6 +112,19 @@ def parse_spec_entry(entry: str) -> tuple[str, str, int | None, str]:
     return kind, col, param, pname
 
 
+def _partition_preds(partition_eq) -> list[tuple[str, list]]:
+    """``partition_eq`` — absent, one ``(col, value)`` pair or a list of
+    them — as ``(col, values)`` pairs, a list/tuple/set value standing
+    for any of its values."""
+    if partition_eq is None:
+        return []
+    pairs = partition_eq if isinstance(partition_eq, list) else [partition_eq]
+    return [
+        (c, list(v) if isinstance(v, (list, tuple, set, frozenset)) else [v])
+        for c, v in pairs
+    ]
+
+
 def transform_expr(kind: str, col: str, param: int | None, dtype):
     """The JVM-side (write-path) expression for a transform."""
     c = F.col(col)
@@ -821,7 +834,7 @@ class SnapshotTable:
         self,
         snapshot_id: int | None = None,
         skip: tuple[str, float, float] | None = None,
-        partition_eq: tuple[str, object] | None = None,
+        partition_eq: tuple[str, object] | list[tuple[str, object]] | None = None,
     ) -> list[str]:
         """The data files a scan must open — after zone-map and
         partition pruning.
@@ -832,8 +845,10 @@ class SnapshotTable:
         drops files whose recorded partition tuple carries a DIFFERENT
         value for ``col``; files written under a spec that did not
         partition on ``col`` are conservatively kept (per-spec
-        pruning). This is Iceberg's manifest-level data skipping: at
-        100 TB a day-range query over a time-sorted table plans
+        pruning). A list/tuple/set ``value`` keeps any of its values
+        (Iceberg's ``in``), and a list of pairs must all hold. This is
+        Iceberg's manifest-level data skipping: at 100 TB a day-range
+        query over a time-sorted table plans
         thousands of files down to the handful that can match, before
         any executor starts.
         """
@@ -851,20 +866,22 @@ class SnapshotTable:
 
             files = [f for f in files if may_contain(f)]
         if partition_eq is not None:
-            pcol, pval = partition_eq
+            preds = _partition_preds(partition_eq)
 
             def part_match(path: str) -> bool:
                 # hidden partitioning: an equality predicate on the
                 # SOURCE column prunes via every transform of that
-                # column in the file's spec — transform(pval) must
-                # equal the file's recorded partition value
+                # column in the file's spec — transform(value) of one
+                # of its values must equal the file's recorded
+                # partition value
                 part = entries[path]["partition"]
                 for entry in entries[path]["spec"]:
                     kind, col, param, pname = parse_spec_entry(entry)
-                    if col != pcol or pname not in part:
-                        continue
-                    if part[pname] != str(transform_value(kind, pval, param)):
-                        return False
+                    for pcol, pvals in preds:
+                        if col == pcol and pname in part and part[pname] not in {
+                            str(transform_value(kind, v, param)) for v in pvals
+                        }:
+                            return False
                 return True
 
             files = [f for f in files if part_match(f)]
@@ -1018,7 +1035,7 @@ class SnapshotTable:
         snapshot_id: int | None = None,
         skip: tuple[str, float, float] | None = None,
         ref: str | None = None,
-        partition_eq: tuple[str, object] | None = None,
+        partition_eq: tuple[str, object] | list[tuple[str, object]] | None = None,
         keep_meta: bool = False,
         as_of: float | None = None,
     ) -> DataFrame:
@@ -1033,9 +1050,10 @@ class SnapshotTable:
         residual ``BETWEEN`` filter is applied row-level — the result
         provably equals the unpruned filtered scan (no false negatives:
         a file is only skipped when its stats PROVE emptiness).
-        ``partition_eq=(col, value)`` likewise prunes via recorded
+        ``partition_eq=(col, value)`` (or a value list, or a list of
+        pairs — see ``plan_files``) likewise prunes via recorded
         partition tuples (files from a pre-evolution spec are kept)
-        and applies the exact residual equality row-level."""
+        and applies the exact residual equality or IN-list row-level."""
         if ref is not None:
             if snapshot_id is not None:
                 raise ValueError("pass snapshot_id or ref, not both")
@@ -1053,9 +1071,9 @@ class SnapshotTable:
         if skip is not None:
             col, lo, hi = skip
             df = df.filter((F.col(col) >= lo) & (F.col(col) <= hi))
-        if partition_eq is not None:
-            pcol, pval = partition_eq
-            df = df.filter(F.col(pcol) == F.lit(pval))
+        for pcol, pvals in _partition_preds(partition_eq):
+            c = F.col(pcol)
+            df = df.filter(c == F.lit(pvals[0]) if len(pvals) == 1 else c.isin(pvals))
         return df
 
     # ---- incremental (changelog) reads ----------------------------------

@@ -69,6 +69,16 @@ def _cluster_values(spark, path: str, component: str) -> set:
     }
 
 
+def _component_files(spark, path: str, component: str) -> int:
+    """How many files the index manifest records for ``component``."""
+    from iceberg_twist_spark.sources.snapshots import SnapshotTable
+
+    return sum(
+        e["partition"]["component"] == component
+        for e in SnapshotTable(spark, path)._head()["files"].values()
+    )
+
+
 def _reused(spark, path: str, build) -> bool:
     """``build()`` returns ``path`` and commits no snapshot: the tagged
     index is served, not rebuilt."""
@@ -117,20 +127,31 @@ def test_pq_indexed_matches_inplan_pq(spark, sf_dir):
 
 def test_ivfpq_indexed_matches_inplan_and_prunes(spark, sf_dir):
     """IVFADC over the materialized index: same answer as in-plan
-    training, and the manifest records the ``codes`` files under more
-    than one ``cluster`` partition value — the partition pruning the
-    query's IN-list relies on."""
-    from iceberg_twist_spark.llm.similarity import build_ivfpq_index
+    training, the manifest records the ``codes`` files under more than
+    one ``cluster`` partition value, and the query's ``codes`` scan is
+    pruned by the probe's IN-list: the manifest hands it only the
+    probed clusters' files, and the IN-list is in its PartitionFilters."""
+    import re
+
+    from iceberg_twist_spark.llm.similarity import IVFPQ_NPROBE, build_ivfpq_index
     from iceberg_twist_spark.registry import REGISTRY, _load_all_modules
 
     _load_all_modules()
     inplan = [tuple(r) for r in REGISTRY["q_llm_ann_ivfpq"].builder(spark, sf_dir).collect()]
-    indexed = [tuple(r) for r in REGISTRY["q_llm_ann_ivfpq_indexed"].builder(spark, sf_dir).collect()]
+    df = REGISTRY["q_llm_ann_ivfpq_indexed"].builder(spark, sf_dir)
+    indexed = [tuple(r) for r in df.collect()]
     assert indexed == inplan
     path = build_ivfpq_index(spark, sf_dir)
     assert _reused(spark, path, lambda: build_ivfpq_index(spark, sf_dir))
     parts = _cluster_values(spark, path, "codes")
-    assert len(parts) > 1, f"expected several cluster partitions, got {parts}"
+    assert len(parts) > IVFPQ_NPROBE, f"expected several cluster partitions, got {parts}"
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    scans = [line for line in plan.splitlines() if re.search(r"\(component#\d+ = codes\)", line)]
+    assert scans
+    for line in scans:
+        assert re.search(r"\(component#\d+ = codes\), cluster#\d+L? IN \(", line), line
+        listed = int(re.search(r"InMemoryFileIndex\((\d+) paths\)", line).group(1))
+        assert listed < _component_files(spark, path, "codes"), line
 
 
 def test_ivf_index_layout_is_cluster_partitioned(spark, sf_dir):

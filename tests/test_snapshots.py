@@ -856,6 +856,27 @@ def test_string_partition_values_read_back_verbatim(spark, tmp_path):
     assert sorted(r.id for r in tbl.read(partition_eq=("g", "01")).collect()) == [1, 3, 4]
 
 
+def test_partition_eq_prunes_by_value_list_and_pairs(spark, tmp_path):
+    """A list ``partition_eq`` value keeps the files of any of its
+    values (Iceberg's ``in``), a list of pairs keeps the files every
+    pair admits, and the read applies the same predicates row-level."""
+    tbl = SnapshotTable(spark, str(tmp_path / "t"))
+    tbl.set_partition_spec(["c", "g"])
+    tbl.create(spark.range(40).selectExpr("id", "IF(id < 20, 'a', 'b') AS c", "id % 4 AS g"))
+    fm = tbl._head()["files"]
+
+    def parts(files):
+        return {(fm[f]["partition"]["c"], fm[f]["partition"]["g"]) for f in files}
+
+    assert parts(tbl.plan_files(partition_eq=("g", [1, 3]))) == {
+        (c, g) for c in "ab" for g in "13"
+    }
+    both = [("c", "a"), ("g", [1, 3])]
+    assert parts(tbl.plan_files(partition_eq=both)) == {("a", "1"), ("a", "3")}
+    got = sorted(r.id for r in tbl.read(partition_eq=both).collect())
+    assert got == [i for i in range(20) if i % 4 in (1, 3)]
+
+
 def test_long_append_history_plans_single_scan(spark, tmp_path):
     """The grouped reader's scale claim: a table built by MANY appends
     with no pending deletes and one schema vintage must plan as ONE

@@ -42,23 +42,31 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from iceberg_twist_spark.registry import REGISTRY, _load_all_modules
 from iceberg_twist_spark.session import get_spark
 
-# The nprobe ``cluster`` IN-list inside an index scan's PartitionFilters
-# (the index table's ``component`` filter may come first).
-CLUSTER_IN_LIST = re.compile(r"PartitionFilters: \[[^\]]*cluster#\d+L? IN \(")
+
+def cluster_in_list(component: str) -> re.Pattern:
+    """The nprobe ``cluster`` IN-list inside the PartitionFilters of the
+    scan of index component ``component`` — right after that scan's
+    own ``component`` filter, so no other component's scan can match."""
+    return re.compile(
+        r"PartitionFilters: \[[^\]\n]*\(component#\d+ = "
+        + re.escape(component)
+        + r"\), cluster#\d+L? IN \("
+    )
+
 
 # name -> (must-contain, must-NOT-contain); a must-contain entry is a
 # substring or a compiled pattern
 AUDITS: dict[str, tuple[list[str | re.Pattern], list[str]]] = {
     # the materialized IVF index must prune by partition — the nprobe
     # cluster IN-list has to reach the scan's PartitionFilters
-    "q_llm_ann_ivf_indexed": ([CLUSTER_IN_LIST], ["SortMergeJoin"]),
+    "q_llm_ann_ivf_indexed": ([cluster_in_list("data")], ["SortMergeJoin"]),
     # the materialized PQ index: ADC scans the integer codes table and
     # joins the broadcast LUT — never a shuffled join, never a sort
     "q_llm_ann_pq_indexed": (["BroadcastHashJoin"], ["SortMergeJoin", "CartesianProduct"]),
     # IVF-PQ index: the nprobe IN-list prunes the code files at the
     # scan, ADC is a broadcast join over codes
     "q_llm_ann_ivfpq_indexed": (
-        [CLUSTER_IN_LIST, "BroadcastHashJoin"],
+        [cluster_in_list("codes"), "BroadcastHashJoin"],
         ["SortMergeJoin"],
     ),
     "q_scan_projection": (["ReadSchema: struct<l_orderkey:bigint,l_partkey:bigint,l_quantity:double>"], []),

@@ -320,6 +320,37 @@ def trips_band_gate(best: float, limit: float, obs: float) -> bool:
     return best > limit * gate_load_factor(obs)
 
 
+def confirm_trip(
+    best: float, limit: float, obs: float, tripped: bool,
+    band: tuple[float, float],
+) -> str | None:
+    """The band-gate failure message after a query's confirming run, or
+    None when it passes. ``best`` is the best-of-N with the confirm run
+    in it, ``obs`` the sentinel read just before that run, ``tripped``
+    the in-loop gate's decision. A quiet machine decides on ``best``
+    against the raw limit; a loaded one keeps the in-loop decision, and
+    a kept trip cites ``best``, not the in-loop time, saying so when
+    ``best`` is now inside the raw limit."""
+    if gate_load_factor(obs) <= QUIET_FACTOR:
+        if best <= limit:
+            return None  # weather, confirmed
+        return (
+            f"quiet confirm run (sentinel {obs}s) still over the raw band "
+            f"limit: best {best}s > {round(limit, 2)}s (observed band {band})"
+        )
+    if not tripped:
+        return None
+    verdict = (
+        f"is now within the raw band limit {round(limit, 2)}s"
+        if best <= limit
+        else f"> raw band limit {round(limit, 2)}s"
+    )
+    return (
+        f"in-loop trip kept, the confirm run ran under load (sentinel "
+        f"{obs}s): best-of-N {best}s {verdict} (observed band {band})"
+    )
+
+
 def _sentinel(spark) -> float:
     best = float("inf")
     for _ in range(2):
@@ -441,7 +472,8 @@ def main() -> int:
             # stages (a ~KB final-agg exchange) to the next query
             factor = gate_load_factor(obs)
             sentinels[name] = {"obs": obs, "factor": round(factor, 2)}
-            if factor > QUIET_FACTOR:
+            tripped = trips_band_gate(timings[name], limit, obs)
+            if factor > QUIET_FACTOR and not tripped:
                 print(
                     f"# WARNING: {name} passed its raw band limit only "
                     f"under load (sentinel {obs}s = {factor:.2f}x quiet "
@@ -449,7 +481,7 @@ def main() -> int:
                     f"{GATE_LOAD_FACTOR_CAP}) — confirming re-run queued",
                     file=sys.stderr,
                 )
-            if trips_band_gate(timings[name], limit, obs):
+            if tripped:
                 time_regressions[name] = (
                     f"best-of-N {timings[name]}s > band limit "
                     f"{round(limit, 2)}s × load factor {round(factor, 2)} "
@@ -493,16 +525,14 @@ def main() -> int:
         timings[name] = round(min(timings[name], confirm), 3)
         sentinels[name]["confirm_obs"] = obs
         sentinels[name]["confirm_s"] = round(confirm, 3)
-        if gate_load_factor(obs) <= QUIET_FACTOR:
-            if timings[name] > limit:
-                time_regressions[name] = (
-                    f"quiet confirm run (sentinel {obs}s) still over the "
-                    f"raw band limit: best {timings[name]}s > "
-                    f"{round(limit, 2)}s "
-                    f"(observed band {TIME_BANDS_SF01[name]})"
-                )
-            else:
-                time_regressions.pop(name, None)  # weather, confirmed
+        trip = confirm_trip(
+            timings[name], limit, obs, name in time_regressions,
+            TIME_BANDS_SF01[name],
+        )
+        if trip is None:
+            time_regressions.pop(name, None)
+        else:
+            time_regressions[name] = trip
         print(
             f"# confirm {name}: {confirm:.3f}s (sentinel {obs}s) -> "
             f"best {timings[name]:.3f}s",

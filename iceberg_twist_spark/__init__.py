@@ -30,9 +30,17 @@ Package layout:
                 dedup, stateful bounded queue w/ TTL + metrics).
     llm/        LLM-data-pipeline operators (dedup family,
                 similarity search, text analysis, multimodal).
+
+Importing the package in a PySpark Python worker (every engine UDF
+imports an engine module when it is unpickled) installs
+``session.skip_unchanged_zip_rereads``, so each later task in that
+worker skips re-reading zip archives that have not changed.
 """
 
 from iceberg_twist_spark.registry import REGISTRY, QuerySpec, all_oracles, all_queries
+from iceberg_twist_spark.session import skip_unchanged_zip_rereads
+
+skip_unchanged_zip_rereads()
 
 __version__ = "0.1.0"
 

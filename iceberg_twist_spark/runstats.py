@@ -9,8 +9,12 @@ threads into groups:
 - ``gc``: G1's parallel and concurrent GC threads;
 - ``task``: the executor's task launch workers (in ``local[N]`` the
   driver JVM runs the tasks);
-- ``other``: every other thread (Py4J, the scheduler, the VM
-  thread, ...);
+- ``py4j``: the threads that serve the driver's Python calls into the
+  JVM, one per Python thread. The JVM gives them its default names,
+  ``Thread-N``; in a ``perfbench`` corpus run every ``Thread-N`` that
+  spent more than 3 ms of CPU was one, and ``Thread-3``, the main
+  Python thread's, spent more than any task thread;
+- ``other``: every other thread (the scheduler, the VM thread, ...);
 - ``exited``: CPU that threads spent after they were last seen; it
   stays in the process total but no longer has a name. While a query
   runs, the threads are sampled every ``_POLL_S`` seconds, so a thread
@@ -37,7 +41,8 @@ import threading
 import time
 from typing import Callable, TypeVar
 
-GROUPS = ("jit_c2", "jit_c1", "gc", "task", "other", "exited", "python_workers")
+GROUPS = ("jit_c2", "jit_c1", "gc", "task", "py4j", "other", "exited", "python_workers")
+_THREAD_GROUPS = GROUPS[:-2]  # the groups a live thread can be in
 
 _POLL_S = 0.2  # thread sampling period while a measured call runs
 
@@ -48,6 +53,7 @@ _PREFIXES = (
     ("GC Thread#", "gc"),
     ("G1 ", "gc"),
     ("Executor task l", "task"),
+    ("Thread-", "py4j"),
 )
 
 T = TypeVar("T")
@@ -133,7 +139,7 @@ def _split(samples: list, workers: int = 0) -> dict[str, float]:
     out = dict.fromkeys(GROUPS, 0)
     for tid, (group, ticks) in last.items():
         out[group] += ticks - th0.get(tid, (group, 0))[1]
-    out["exited"] = (t1 - t0) - sum(out[g] for g in GROUPS[:5])
+    out["exited"] = (t1 - t0) - sum(out[g] for g in _THREAD_GROUPS)
     out["python_workers"] = workers
     hz = os.sysconf("SC_CLK_TCK")
     return {g: v / hz for g, v in out.items()}

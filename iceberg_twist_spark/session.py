@@ -23,6 +23,12 @@ ones that matter identically on a 1000-executor cluster:
   apply. Executors keep the JVM defaults: on a cluster they are
   long-lived and run the hot loops (in ``local[N]`` the driver JVM runs
   the tasks too).
+
+Two functions concern the engine's code on the Python workers:
+``ensure_package_shipped`` puts the package on their import path, and
+``skip_unchanged_zip_rereads`` (installed when a worker first imports
+the package) stops each task from re-parsing every zip archive on that
+path when the archives have not changed.
 """
 
 from __future__ import annotations
@@ -94,6 +100,7 @@ def pin_session_defaults(spark: SparkSession) -> None:
 
 
 _SHIPPED: dict[str, bool] = {}
+_PKG_ZIP: str | None = None
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:
@@ -105,27 +112,88 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     worker's import path. Locally that held accidentally via the
     driver cwd; on a real cluster (or a driver running from another
     directory) it does not. Same mechanism as ``spark-submit
-    --py-files``: zip the package once per process and register it
-    with the SparkContext.
+    --py-files``: zip the package once per process, under a name no
+    other process holds, and register it with the SparkContext.
+    ``addPyFile`` copies the zip into the context's files directory,
+    so it is removed when the interpreter exits.
     """
+    import atexit
+    import pathlib
     import tempfile
     import zipfile
 
+    global _PKG_ZIP
     sc = spark.sparkContext
     key = sc.applicationId
     if _SHIPPED.get(key):
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"itws_pkg_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
+    if _PKG_ZIP is None:
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        fd, path = tempfile.mkstemp(prefix="itws_pkg_", suffix=".zip")
+        with os.fdopen(fd, "wb") as out, zipfile.ZipFile(out, "w") as zf:
             for root, _, files in os.walk(pkg_dir):
                 for f in files:
                     if f.endswith(".py"):
                         full = os.path.join(root, f)
                         rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                         zf.write(full, rel)
-    sc.addPyFile(zip_path)
+        atexit.register(pathlib.Path(path).unlink, missing_ok=True)
+        _PKG_ZIP = path
+    sc.addPyFile(_PKG_ZIP)
     _SHIPPED[key] = True
+
+
+_ZIP_REREAD = None  # zipimporter.invalidate_caches as the stdlib has it
+
+
+def skip_unchanged_zip_rereads() -> None:
+    """In a Python worker, re-read a zip archive's directory on
+    ``importlib.invalidate_caches()`` only when the archive changed.
+
+    PySpark's ``setup_spark_files`` calls ``importlib.invalidate_caches()``
+    at the start of every task. Up to CPython 3.12 that makes every
+    ``zipimporter`` on ``sys.path`` parse its archive's whole directory
+    again (``pyspark.zip`` through a dozen importers, the spark-core
+    jar, py4j, this package's zip): about 0.2 CPU-s per task (PERF.md,
+    "Per-task Python cost"). Here each importer keeps the
+    ``(st_mtime_ns, st_size, st_ino)`` of its archive and calls the
+    stdlib method only when that changed or cannot be read, the
+    freshness rule ``FileFinder`` applies to directories. The
+    importers already cached are stamped as they are: the task's
+    ``setup_spark_files`` re-read them moments ago.
+
+    Inert in the driver and wherever ``zipimporter`` already re-reads
+    lazily (CPython 3.13 has ``_get_files``).
+    """
+    import sys
+    import zipimport
+
+    from pyspark import TaskContext
+
+    global _ZIP_REREAD
+    importer = zipimport.zipimporter
+    if (
+        _ZIP_REREAD is not None
+        or TaskContext.get() is None
+        or hasattr(importer, "_get_files")
+    ):
+        return
+    _ZIP_REREAD = reread = importer.invalidate_caches
+
+    def stamp(archive: str) -> tuple[int, int, int] | None:
+        try:
+            st = os.stat(archive)
+        except OSError:
+            return None
+        return st.st_mtime_ns, st.st_size, st.st_ino
+
+    def invalidate_caches(self) -> None:
+        now = stamp(self.archive)
+        if now is None or now != getattr(self, "_itws_stamp", None):
+            reread(self)
+            self._itws_stamp = now
+
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, importer):
+            finder._itws_stamp = stamp(finder.archive)
+    importer.invalidate_caches = invalidate_caches

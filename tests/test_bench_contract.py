@@ -85,6 +85,22 @@ def test_band_gate_load_factor_is_capped():
     assert bench.trips_band_gate(1.01 * limit, limit, bench.SENTINEL_REF_S)
 
 
+def test_confirm_run_decides_and_cites_the_updated_best():
+    limit, band = 2.0, (0.8, 0.9)
+    quiet = bench.SENTINEL_REF_S
+    loaded = 2 * bench.SENTINEL_REF_S
+    # a quiet confirm decides on the updated best against the raw limit
+    assert bench.confirm_trip(1.9, limit, quiet, True, band) is None
+    assert "best 2.1s > 2.0s" in bench.confirm_trip(2.1, limit, quiet, False, band)
+    # a loaded confirm keeps the in-loop decision...
+    assert bench.confirm_trip(2.5, limit, loaded, False, band) is None
+    over = bench.confirm_trip(2.5, limit, loaded, True, band)
+    assert "in-loop trip kept" in over and "best-of-N 2.5s > raw band limit 2.0s" in over
+    # ...and a kept trip whose updated best is inside the raw limit says so
+    inside = bench.confirm_trip(1.7, limit, loaded, True, band)
+    assert "best-of-N 1.7s is now within the raw band limit 2.0s" in inside
+
+
 def test_headroom_for_future_headline_growth():
     # The contract line must survive a wider headline set than today's:
     # if it only just fits, the next added query breaks the driver again.

@@ -22,7 +22,8 @@ _NAMES = {
     "G1 Service": "gc",
     "Executor task l": "task",
     "VM Thread": "other",
-    "Thread-3": "other",
+    "Thread-3": "py4j",
+    "Thread-17": "py4j",
     "dag-scheduler-e": "other",
     "process reaper": "other",
 }
@@ -37,22 +38,23 @@ def test_split_keeps_an_exited_threads_cpu_in_its_group():
     up to its last sample, in its own group; only the process ticks
     after that land in ``exited``."""
     samples = [
-        (100, {1: ("task", 50), 2: ("gc", 5)}),
+        (100, {1: ("task", 50), 2: ("gc", 5), 4: ("py4j", 20)}),
         # a C2 thread starts; thread 2 is last seen here
-        (130, {1: ("task", 60), 2: ("gc", 9), 3: ("jit_c2", 8)}),
-        (150, {1: ("task", 70), 3: ("jit_c2", 11)}),
+        (130, {1: ("task", 60), 2: ("gc", 9), 3: ("jit_c2", 8), 4: ("py4j", 24)}),
+        (150, {1: ("task", 70), 3: ("jit_c2", 11), 4: ("py4j", 27)}),
         # the C2 thread exits
-        (170, {1: ("task", 75)}),
+        (170, {1: ("task", 75), 4: ("py4j", 30)}),
     ]
     hz = os.sysconf("SC_CLK_TCK")
     split = {g: round(v * hz) for g, v in runstats._split(samples, workers=6).items()}
     assert split == {
-        "jit_c2": 11, "jit_c1": 0, "gc": 4, "task": 25, "other": 0,
-        "exited": 70 - 11 - 4 - 25, "python_workers": 6,
+        "jit_c2": 11, "jit_c1": 0, "gc": 4, "task": 25, "py4j": 10, "other": 0,
+        "exited": 70 - 11 - 4 - 25 - 10, "python_workers": 6,
     }
     # the two end samples alone put both vanished threads in exited
     ends = {g: round(v * hz) for g, v in runstats._split([samples[0], samples[-1]]).items()}
-    assert ends["exited"] == 70 - 25 and ends["gc"] == ends["jit_c2"] == 0
+    assert ends["exited"] == 70 - 25 - 10 and ends["gc"] == ends["jit_c2"] == 0
+    assert ends["py4j"] == 10
 
 
 def test_a_query_spends_task_and_jit_cpu(spark):
@@ -69,6 +71,7 @@ def test_a_query_spends_task_and_jit_cpu(spark):
     assert split["jit_c1"] + split["jit_c2"] > 0
     total = runstats.thread_cpu(spark)
     assert total["task"] >= split["task"] and total["jit_c1"] > 0
+    assert total["py4j"] > 0  # every Python call into the JVM runs there
 
 
 def test_driver_jit_policy_is_in_force(spark):
